@@ -260,9 +260,7 @@ def q_ann_cosine_topk(spark, sf_dir):
     """Similarity search: brute-force cosine top-k against vec_id=0."""
     emb = _load(spark, sf_dir, "embeddings")
     # limit(1) short-circuits the query-vector job (vec_id is unique, so
-    # the result is unchanged); the similarity scan is repartitioned
-    # because the single-row-group embeddings file otherwise pins the
-    # whole scoring pass to one task.
+    # the result is unchanged).
     q = (
         emb.filter(F.col("vec_id") == 0)
         .select(F.col("embedding").alias("q"))

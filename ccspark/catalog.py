@@ -234,9 +234,9 @@ class IcebergCheckpoint:
         ``key`` lets seenstore's per-worker incremental seen cache keep
         accumulating across rounds.
 
-        Returns None when an existing state table is not partitioned by
-        partition_id (no layout to prune on) — the frontier then falls
-        back to the Spark-side gates."""
+        Raises ValueError when an existing state table is not
+        partitioned by partition_id: the storage gate has no layout to
+        prune on, and there is no other gate."""
         from .seenstore import ManifestLocation
 
         files: dict = {}
@@ -267,7 +267,11 @@ class IcebergCheckpoint:
                     continue
                 pid = part.get("partition_id")
                 if pid is None:
-                    return None  # table lacks the partition_id layout
+                    raise ValueError(
+                        f"state table {t} lacks the partition_id partition "
+                        "transform the storage gate prunes on; rewrite it with "
+                        'partition_by=["partition_id"]'
+                    )
                 fresh.setdefault(int(rd), {}).setdefault(int(pid), []).append(
                     (r["file_path"], int(r["file_size_in_bytes"]), 0)
                 )

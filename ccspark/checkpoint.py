@@ -80,6 +80,11 @@ class Checkpoint:
             d = os.path.join(d, f"round={round_no}")
         return d
 
+    def state_location(self) -> str:
+        """Where the worker-side storage gate reads state (seenstore):
+        the root directory itself."""
+        return self.root
+
     def write(self, df: DataFrame, name: str, round_no: int, partition_by: list[str] | None = None) -> str:
         """Idempotent per-round write (overwrite the round directory)."""
         path = self.table_dir(name, round_no)

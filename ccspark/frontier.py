@@ -3,7 +3,7 @@ tables with per-partition lineage and deterministic resume.
 
 Round shape (north_rule; SURVEY.md §7 step 7):
 
-    frontier ──filter_new (bloom/cuckoo + exact confirm)──▶ novel
+    frontier ──gate_new_storage (bloom/cuckoo + exact confirm)──▶ novel
     novel ──robots + crawl-delay budget + salted rank──▶ processed
               (= scheduled rows ∪ robots-retired rows; host_rank NULL
                marks retirement — ONE table, so the seen delta is just
@@ -134,7 +134,6 @@ class FrontierConfig:
         buckets_per_element: int = 10,
         capacity_per_partition: int | None = None,
         max_frontier_per_host: int | None = None,
-        cluster_link_gate: bool | None = None,
         broadcast_robots: bool | None = None,
         revisit_after: int | None = None,
         revisit_decay: float = 0.5,
@@ -153,11 +152,6 @@ class FrontierConfig:
         # down to this size each round (None = unbounded); evicted URLs
         # stay rediscoverable through future links
         self.max_frontier_per_host = max_frontier_per_host
-        # discovered links arrive unclustered; at huge filter state each
-        # gate task should touch ~1 partition's state, so cluster them
-        # (one delta-sized Exchange) first.  None = auto: cluster when
-        # the filter state is past broadcast size (a big crawl).
-        self.cluster_link_gate = cluster_link_gate
         # robots rules ride a broadcast join while the table is small;
         # at web scale (10^8+ hosts) the rules won't fit an executor —
         # auto-switch to the shuffle join (the gate keys on host, so the
@@ -340,20 +334,12 @@ class CrawlFrontier:
         spark, cfg, ckpt = self.spark, self.cfg, self.ckpt
         prev = round_no - 1
         # state location for the storage-partitioned gates (zero
-        # Exchange on any state table).  Filesystem backends expose a
-        # root path; catalog backends (Iceberg) expose state_location()
-        # — a file manifest enumerated from catalog metadata, refreshed
-        # after each state write so later gates see the new files.
-        # Backends with neither fall back to the Spark-side gates.
-        root = getattr(ckpt, "root", None)
-
-        def _loc():
-            if root is not None:
-                return root
-            fn = getattr(ckpt, "state_location", None)
-            return fn() if fn is not None else None
-
-        loc = _loc()
+        # Exchange on any state table): the parquet backend's root, or
+        # the catalog backend's file manifest enumerated from Iceberg
+        # metadata — re-read after each state write so later gates see
+        # the new files.  A catalog table without the partition_id
+        # layout raises here, before the round writes anything.
+        loc = ckpt.state_location()
 
         # empty-frontier check BEFORE the read: a drained frontier's
         # partitioned write has no data files, so the scan can't infer a
@@ -374,7 +360,7 @@ class CrawlFrontier:
         if revisit_due:
             src_round = round_no - cfg.revisit_after
             readable = True
-            if root is not None:  # cheap files-first probe, no JVM exception noise
+            if isinstance(ckpt, Checkpoint):  # cheap files-first probe, no JVM exception noise
                 src_dir = ckpt.table_dir("processed", src_round)
                 readable = os.path.isdir(src_dir) and Checkpoint._has_parquet(src_dir)
             if readable:
@@ -420,38 +406,19 @@ class CrawlFrontier:
         # frontier table is stored partition-clustered, so the storage
         # gate's tasks each touch ~1 partition's filter blob and (for
         # bloom false positives only) that partition's seen arrays —
-        # no Exchange anywhere.  Fixed-capacity bloom state size is
-        # known up-front for the fallback's broadcast-vs-cogroup choice.
-        bloom_bytes = (
-            cfg.num_partitions
-            * seenset.bitset_size(cfg.capacity_per_partition, cfg.buckets_per_element)
-            // 8
-            if cfg.filter_kind == "bloom"
-            else None
-        )
+        # no Exchange anywhere.
         obs_novel = None
         if n_candidates == 0:
             # recrawl-only round: no gate and NO Observation — Catalyst
-            # collapses a pure-Catalyst gate over an empty LocalRelation
-            # and prunes the CollectMetrics node, which would leave
-            # Observation.get blocked forever (the fallback/broadcast
-            # path has no Exchange to stop empty-relation propagation)
+            # collapses a filter over an empty LocalRelation and prunes
+            # the CollectMetrics node, which would leave Observation.get
+            # blocked forever
             novel = frontier.cache()
-            if loc is None:  # the fallback filters update needs these
-                seen = self.read_seen(prev)
-                filters = ckpt.read(spark, "filters", prev)
         else:
             obs_novel = Observation(f"novel_{round_no}")
-            if loc is not None:
-                gated = seenset.gate_new_storage(
-                    frontier.select(*FRONTIER_COLS), loc, prev, prev, cfg.num_partitions
-                )
-            else:
-                seen = self.read_seen(prev)  # None before the first completed round
-                filters = ckpt.read(spark, "filters", prev)
-                gated = seenset.filter_new(
-                    frontier, seen, filters, cfg.num_partitions, broadcast_bytes=bloom_bytes
-                ).select(*FRONTIER_COLS)
+            gated = seenset.gate_new_storage(
+                frontier.select(*FRONTIER_COLS), loc, prev, prev, cfg.num_partitions
+            )
             novel = gated.observe(obs_novel, F.count(F.lit(1)).alias("n")).cache()
 
         # revisit injection (recrawl): the round processed revisit_after
@@ -524,78 +491,6 @@ class CrawlFrontier:
         _mark("processed_write")
 
         scheduled = processed.filter(F.col("host_rank").isNotNull())
-        seen_delta = processed.select("domain_hash", "url_hash")
-
-        # lineage aggregate launched NOW on a driver thread (guide §2.6 —
-        # overlap independent jobs): it reads only the caches action 1
-        # just filled (frontier, novel, processed), so it can run
-        # concurrently with the filters and frontier writes below and its
-        # tasks back-fill their stage tails; the result is joined before
-        # the commit.  Content is unchanged — only the schedule moved.
-        from concurrent.futures import ThreadPoolExecutor
-
-        pid = F.pmod(F.col("domain_hash"), F.lit(cfg.num_partitions)).cast("int")
-        tagged = (
-            frontier.select(pid.alias("partition_id"), F.lit("cand").alias("t"), "domain_hash")
-            .unionByName(novel.select(pid.alias("partition_id"), F.lit("novel").alias("t"), "domain_hash"))
-            .unionByName(scheduled.select(pid.alias("partition_id"), F.lit("sched").alias("t"), "domain_hash"))
-        )
-        lineage_agg = tagged.groupBy("partition_id").agg(
-            F.count(F.when(F.col("t") == "cand", 1)).alias("n_candidates"),
-            F.count(F.when(F.col("t") == "novel", 1)).alias("n_novel"),
-            F.count(F.when(F.col("t") == "sched", 1)).alias("urls_emitted"),
-            F.min(F.when(F.col("t") == "sched", F.col("domain_hash"))).alias("hash_range_start"),
-            F.max(F.when(F.col("t") == "sched", F.col("domain_hash"))).alias("hash_range_end"),
-        )
-        _pool = ThreadPoolExecutor(max_workers=2)
-        lineage_fut = _pool.submit(lineage_agg.collect)  # action 4 (overlapped)
-
-        # filters next (before the frontier write), so the links gate can
-        # probe the JUST-AUGMENTED blobs: one seen-scan per round total.
-        # Storage path: the driving frame is range(P) partition ids; each
-        # task reads its own previous blob + this round's just-written
-        # seen delta file straight from their partition directories and
-        # ORs (bloom) / rebuilds (cuckoo) — the filter state and the
-        # crawl history never enter an Exchange.
-        if loc is not None:
-            filters_new = seenset.update_filters_storage(
-                spark,
-                _loc(),  # refreshed: covers the just-written processed delta
-                round_no,
-                cfg.num_partitions,
-                kind=cfg.filter_kind,
-                buckets_per_element=cfg.buckets_per_element,
-                capacity=cfg.capacity_per_partition if cfg.filter_kind == "bloom" else None,
-            )
-        elif cfg.filter_kind == "bloom":
-            # fused delta-build + OR-merge: one cogrouped pass instead of
-            # build_filters + merge_filters (two shuffles)
-            filters_new = seenset.augment_filters(
-                filters,
-                seen_delta,
-                cfg.num_partitions,
-                cfg.buckets_per_element,
-                capacity=cfg.capacity_per_partition,
-            )
-        else:
-            seen_new = seen.unionByName(seen_delta) if seen is not None else seen_delta
-            filters_new = seenset.build_filters(
-                seen_new, cfg.num_partitions, "cuckoo", cfg.buckets_per_element
-            )
-        _explain(filters_new, "filters")
-        if loc is not None:
-            # the filters write only gates the FINAL frontier gate, not
-            # the links expansion / identity dedup — run it on a driver
-            # thread (guide §2.6) so its tasks overlap the dedup
-            # materialization below; joined before the gated write.
-            filters_fut = _pool.submit(
-                ckpt.write, filters_new, "filters", round_no, ["partition_id"]
-            )
-        else:
-            ckpt.write(
-                filters_new, "filters", round_no, partition_by=["partition_id"]
-            )  # action 2
-            _mark("filters_write")
 
         # link discovery: either the pluggable real pipeline (expand_fn →
         # raw urls → the fused identity kernel) or the deterministic
@@ -603,7 +498,7 @@ class CrawlFrontier:
         # FUSED into one python pass (one Arrow hop; link strings cross
         # the boundary once).  Identity columns WITHOUT the per-links
         # groupBy — the next-frontier aggregation below dedups (min url /
-        # max priority) over leftover ∪ links in ONE shuffle instead of
+        # max priority) over novel ∪ links in ONE shuffle instead of
         # two.
         def _expand_ident(batches):
             from . import urls as urls_mod
@@ -648,27 +543,76 @@ class CrawlFrontier:
             .select(*FRONTIER_COLS)
         )
 
-        # links gate + next frontier, storage path: dedup FIRST, gate
-        # AFTER.  The identity dedup's one Exchange (by partition_id)
-        # already lands rows clustered exactly the way the storage gate
-        # wants them, so gating the DEDUPED union (novel ∪ links) against
-        # the just-augmented round-k filters replaces three operators of
-        # the old shape with zero extra shuffles: the links-clustering
-        # Exchange (the gate now inherits the dedup's clustering), the
-        # leftover anti-join against seen_delta (round-k filters contain
-        # the delta, so the gate itself retires just-processed novel
-        # rows), and the gate runs over post-dedup rows (fewer).
-        # Equivalence: for any identity, either it is seen through round
-        # k (every one of its rows was dropped before — by the anti-join
-        # or the old links gate — and is dropped now by the gate), or it
-        # is unseen (all rows kept in both shapes), so the per-identity
-        # row multiset feeding the max-priority merge is unchanged.
-        obs_frontier = Observation(f"frontier_{round_no}")
-        if loc is not None:
-            # materialize the expansion+dedup NOW (eager localCheckpoint)
-            # — it does not depend on the filters state, so its job runs
-            # CONCURRENTLY with the threaded filters write above; only
-            # the gate must wait for the round-k blobs.
+        # lineage aggregate launched NOW on a driver thread (overlapping
+        # independent jobs): it reads only the caches action 1 just
+        # filled (frontier, novel, processed), so it can run
+        # concurrently with the filters and frontier writes below and its
+        # tasks back-fill their stage tails; the result is joined before
+        # the commit.  Content is unchanged — only the schedule moved.
+        from concurrent.futures import ThreadPoolExecutor
+
+        pid = F.pmod(F.col("domain_hash"), F.lit(cfg.num_partitions)).cast("int")
+        tagged = (
+            frontier.select(pid.alias("partition_id"), F.lit("cand").alias("t"), "domain_hash")
+            .unionByName(novel.select(pid.alias("partition_id"), F.lit("novel").alias("t"), "domain_hash"))
+            .unionByName(scheduled.select(pid.alias("partition_id"), F.lit("sched").alias("t"), "domain_hash"))
+        )
+        lineage_agg = tagged.groupBy("partition_id").agg(
+            F.count(F.when(F.col("t") == "cand", 1)).alias("n_candidates"),
+            F.count(F.when(F.col("t") == "novel", 1)).alias("n_novel"),
+            F.count(F.when(F.col("t") == "sched", 1)).alias("urls_emitted"),
+            F.min(F.when(F.col("t") == "sched", F.col("domain_hash"))).alias("hash_range_start"),
+            F.max(F.when(F.col("t") == "sched", F.col("domain_hash"))).alias("hash_range_end"),
+        )
+        # the pool's exit (shutdown(wait=True)) joins both background
+        # jobs on EVERY path out of the round: a failure in the main
+        # thread re-raises only after the filters write has finished, so
+        # a retried round never rmtrees filters/round=k under a live
+        # writer, and no round thread outlives its round
+        with ThreadPoolExecutor(max_workers=2, thread_name_prefix="ccspark-round") as pool:
+            lineage_fut = pool.submit(lineage_agg.collect)  # action 4 (overlapped)
+
+            # filters next (before the frontier write), so the links gate
+            # can probe the JUST-AUGMENTED blobs: one seen-scan per round
+            # total.  The driving frame is range(P) partition ids; each
+            # task reads its own previous blob + this round's just-written
+            # seen delta file straight from their partition directories
+            # and ORs (bloom) / rebuilds (cuckoo) — the filter state and
+            # the crawl history never enter an Exchange.
+            filters_new = seenset.update_filters_storage(
+                spark,
+                ckpt.state_location(),  # re-read: covers the just-written processed delta
+                round_no,
+                cfg.num_partitions,
+                kind=cfg.filter_kind,
+                buckets_per_element=cfg.buckets_per_element,
+                capacity=cfg.capacity_per_partition if cfg.filter_kind == "bloom" else None,
+            )
+            _explain(filters_new, "filters")
+            # the filters write only gates the FINAL frontier gate, not
+            # the links expansion / identity dedup — run it on a driver
+            # thread so its tasks overlap the dedup materialization
+            # below; joined before the gated write.
+            filters_fut = pool.submit(ckpt.write, filters_new, "filters", round_no, ["partition_id"])
+
+            # links gate + next frontier: dedup FIRST, gate AFTER.  The
+            # identity dedup's one Exchange (by partition_id) already
+            # lands rows clustered exactly the way the storage gate wants
+            # them, so the DEDUPED union (novel ∪ links) is gated against
+            # the just-augmented round-k filters with zero extra shuffles:
+            # round-k filters contain the processed delta, so the gate
+            # itself retires just-processed novel rows, and it runs over
+            # post-dedup rows (fewer).  Equivalence with gating links and
+            # anti-joining the delta before the dedup: for any identity,
+            # either it is seen through round k (every one of its rows is
+            # dropped in both shapes), or it is unseen (all rows kept in
+            # both), so the per-identity row multiset feeding the
+            # max-priority merge is unchanged.
+            #
+            # The expansion+dedup is materialized NOW (eager
+            # localCheckpoint) — it does not depend on the filters state,
+            # so its job runs CONCURRENTLY with the threaded filters write
+            # above; only the gate must wait for the round-k blobs.
             merged = dedup_by_identity(
                 novel.select(*FRONTIER_COLS).unionByName(links.select(*FRONTIER_COLS)),
                 cfg.num_partitions,
@@ -676,80 +620,68 @@ class CrawlFrontier:
             filters_fut.result()  # round-k blobs are on disk past this point
             _mark("filters_write+dedup_overlap")
             next_frontier = seenset.gate_new_storage(
-                merged, _loc(), round_no, round_no, cfg.num_partitions
-            )  # refreshed location: probes the just-written round-k blobs
-        else:
-            seen_new = seen.unionByName(seen_delta) if seen is not None else seen_delta
-            links_new = links.join(seen_new, ["domain_hash", "url_hash"], "left_anti")
-            leftover = novel.join(seen_delta, ["domain_hash", "url_hash"], "left_anti").select(*FRONTIER_COLS)
-            next_frontier = dedup_by_identity(
-                leftover.unionByName(links_new.select(*FRONTIER_COLS)), cfg.num_partitions
-            )
-        if cfg.max_frontier_per_host is not None:
-            # priority-evict hot hosts' queues (domain_hash is the host
-            # fingerprint — no string work); deterministic total order,
-            # so the cap is partition-count invariant like everything else
-            next_frontier = politeness.topk_per_key(
-                next_frontier, "domain_hash", cfg.max_frontier_per_host, cfg.n_salts
-            ).select(*FRONTIER_COLS_PID).repartition(cfg.num_partitions, "partition_id")
-        next_frontier = next_frontier.observe(
-            obs_frontier, F.count(F.lit(1)).alias("n")
-        )
-        _explain(next_frontier, "frontier")
-        ckpt.write(
-            next_frontier, "frontier", round_no, partition_by=["partition_id"]
-        )  # action 3
-        _mark("frontier_write")
+                merged, ckpt.state_location(), round_no, round_no, cfg.num_partitions
+            )  # re-read location: probes the just-written round-k blobs
+            if cfg.max_frontier_per_host is not None:
+                # priority-evict hot hosts' queues (domain_hash is the host
+                # fingerprint — no string work); deterministic total order,
+                # so the cap is partition-count invariant like everything else
+                next_frontier = politeness.topk_per_key(
+                    next_frontier, "domain_hash", cfg.max_frontier_per_host, cfg.n_salts
+                ).select(*FRONTIER_COLS_PID).repartition(cfg.num_partitions, "partition_id")
+            obs_frontier = Observation(f"frontier_{round_no}")
+            next_frontier = next_frontier.observe(obs_frontier, F.count(F.lit(1)).alias("n"))
+            _explain(next_frontier, "frontier")
+            ckpt.write(next_frontier, "frontier", round_no, partition_by=["partition_id"])  # action 3
+            _mark("frontier_write")
 
-        # lineage: per-partition commit record — the tagged-union job was
-        # launched right after action 1 (see above) and has been running
-        # under the filters/frontier writes; join it and write the
-        # ~num_partitions rows driver-side with pyarrow (no committer job)
-        try:
+            # lineage: per-partition commit record — the tagged-union job
+            # was launched right after action 1 (see above) and has been
+            # running under the filters/frontier writes; join it and write
+            # the ~num_partitions rows driver-side with pyarrow (no
+            # committer job)
             lineage_rows = lineage_fut.result()
-        finally:
-            _pool.shutdown(wait=False)
-        lineage_pdf = pd.DataFrame(
-            [
-                {
-                    "round": round_no,
-                    "partition_id": r["partition_id"],
-                    "hash_range_start": r["hash_range_start"],
-                    "hash_range_end": r["hash_range_end"],
-                    "urls_emitted": r["urls_emitted"],
-                    "urls_deduped": r["n_candidates"] - r["n_novel"],
-                    "fetch_budget_consumed": r["urls_emitted"],
-                }
-                for r in sorted(lineage_rows, key=lambda r: r["partition_id"])
-            ],
-            columns=[
-                "round",
-                "partition_id",
-                "hash_range_start",
-                "hash_range_end",
-                "urls_emitted",
-                "urls_deduped",
-                "fetch_budget_consumed",
-            ],
-        )
-        ckpt.write_pdf(lineage_pdf, "lineage", round_no, arrow_schema=_lineage_arrow_schema())
-        _mark("lineage_write")
+            lineage_pdf = pd.DataFrame(
+                [
+                    {
+                        "round": round_no,
+                        "partition_id": r["partition_id"],
+                        "hash_range_start": r["hash_range_start"],
+                        "hash_range_end": r["hash_range_end"],
+                        "urls_emitted": r["urls_emitted"],
+                        "urls_deduped": r["n_candidates"] - r["n_novel"],
+                        "fetch_budget_consumed": r["urls_emitted"],
+                    }
+                    for r in sorted(lineage_rows, key=lambda r: r["partition_id"])
+                ],
+                columns=[
+                    "round",
+                    "partition_id",
+                    "hash_range_start",
+                    "hash_range_end",
+                    "urls_emitted",
+                    "urls_deduped",
+                    "fetch_budget_consumed",
+                ],
+            )
+            ckpt.write_pdf(lineage_pdf, "lineage", round_no, arrow_schema=_lineage_arrow_schema())
+            _mark("lineage_write")
 
-        # counts come from the Observations filled by the write actions —
-        # no extra jobs
-        n_novel = int(obs_novel.get["n"]) if obs_novel is not None else 0
-        n_scheduled = int(obs_proc.get["n_sched"])
-        n_frontier = int(obs_frontier.get["n"])
-        novel.unpersist()
-        if n_candidates > 0:
-            frontier.unpersist()
-        processed.unpersist()
+            # counts come from the Observations filled by the write
+            # actions — no extra jobs
+            n_novel = int(obs_novel.get["n"]) if obs_novel is not None else 0
+            n_scheduled = int(obs_proc.get["n_sched"])
+            n_frontier = int(obs_frontier.get["n"])
+            novel.unpersist()
+            if n_candidates > 0:
+                frontier.unpersist()
+            processed.unpersist()
 
-        ckpt.commit_round(
-            round_no,
-            {t: f"round={round_no}" for t in ("frontier", "filters", "processed", "lineage")},
-            extra={"scheduled": n_scheduled, "frontier_size": n_frontier},
-        )
+            ckpt.commit_round(
+                round_no,
+                {t: f"round={round_no}" for t in ("frontier", "filters", "processed", "lineage")},
+                extra={"scheduled": n_scheduled, "frontier_size": n_frontier},
+            )
         return {
             "round": round_no,
             "candidates": n_candidates,

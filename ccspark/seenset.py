@@ -9,18 +9,21 @@ Design (SURVEY.md §2.3 H4/H5, §4):
   canonical URL) as the reference's long-key bloom path
   (BloomFilter.add(long) → Filter.getHashBuckets(long),
   Filter.java:85-104).
-* One filter per hash-range partition ``pmod(domain_hash, P)``.  Build =
-  ``groupBy(partition_id).applyInPandas``; probe = cogrouped
-  ``applyInPandas`` so filter blobs and candidates meet on the SAME
-  partitioning — no broadcast of multi-GB filter state, no reshuffle of
-  the build side at 10^10 scale.
+* One filter per hash-range partition ``pmod(domain_hash, P)``.  The
+  crawl frontier gates and updates filters worker-side over
+  storage-partitioned state (``gate_new_storage`` /
+  ``update_filters_storage`` via seenstore) — no Exchange on any state
+  table.  The batch pipeline builds with
+  ``groupBy(partition_id).applyInPandas`` and probes with a cogrouped
+  ``applyInPandas`` (``build_filters`` / ``probe_filters``), so filter
+  blobs and candidates meet on the SAME partitioning.
 * Bloom sizing matches BloomCalculations (computeBestK table :37-41,
   bitset size ``n*bucketsPerElement+20`` rounded up to a 64-bit word
   like java.util.BitSet) so false-positive *behavior* equals the
   reference for the same parameters.
-* The probabilistic filter only pre-screens: candidates flagged
-  ``maybe_seen`` are confirmed with an exact left-anti join against the
-  seen table (H5 LongOpenHashSet → built-in dropDuplicates/anti-join).
+* The probabilistic filter only pre-screens: the gate's suspects are
+  confirmed exactly against their partition's seen identities
+  (seenstore.seen_arrays + seenstore.contains — the H5 LongOpenHashSet).
 
 The cuckoo variant (north_star) keeps the same table shape; 16-bit
 fingerprints, 4-slot buckets, partial-key cuckoo hashing.
@@ -317,150 +320,6 @@ def probe_filters(candidates: DataFrame, filters: DataFrame, num_partitions: int
     )
 
 
-def filter_new_cogrouped(
-    candidates: DataFrame,
-    seen: DataFrame | None,
-    filters: DataFrame,
-    num_partitions: int,
-) -> DataFrame:
-    """Bloom/cuckoo pre-screen + exact confirm FUSED into ONE cogrouped
-    pass — the 10^10-scale novelty gate.
-
-    The two-branch formulation (fresh ∪ exact-confirmed suspects)
-    references the probed subtree twice, so a single action computes
-    the probe TWICE (plan-audit finding, BENCH/BASELINE.md R3.6).  Here
-    the per-partition state (the filter blob + that partition's seen
-    identities, tagged rows of one union frame) is cogrouped with the
-    candidates once: inside the task the bloom probe runs, and only the
-    maybe-seen rows are checked against the partition's exact set (a
-    hash-join in pandas).  One shuffle of candidates by pmod
-    (domain_hash), one of seen — strictly fewer passes than
-    probe-twice + suspect SMJ anti-join (which also shuffles seen)."""
-    from pyspark.sql.types import StructField, StructType
-
-    pid = F.pmod(F.col("domain_hash"), F.lit(num_partitions)).cast("int")
-    cand = candidates.withColumn("partition_id", pid)
-    state = filters.select(
-        "partition_id",
-        "kind",
-        "hash_count",
-        "num_buckets",
-        "bits",
-        F.lit(None).cast("long").alias("s_domain_hash"),
-        F.lit(None).cast("long").alias("s_url_hash"),
-    )
-    if seen is not None:
-        state = state.unionByName(
-            seen.select(
-                pid.alias("partition_id"),
-                F.lit(None).cast("string").alias("kind"),
-                F.lit(None).cast("int").alias("hash_count"),
-                F.lit(None).cast("long").alias("num_buckets"),
-                F.lit(None).cast("binary").alias("bits"),
-                F.col("domain_hash").alias("s_domain_hash"),
-                F.col("url_hash").alias("s_url_hash"),
-            )
-        )
-    out_schema = StructType([f for f in cand.schema.fields if f.name != "partition_id"])
-
-    def _gate(key, cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = cand_pdf.drop(columns=["partition_id"])
-        if len(out) == 0:
-            return out
-        keys = cand_pdf["url_hash"].to_numpy(dtype=np.int64)
-        blob = state_pdf[state_pdf["kind"].notna()]
-        if len(blob) == 0:
-            return out  # no filter state: everything is new
-        row = blob.iloc[0]
-        if row["kind"] == "bloom":
-            maybe = bloom_probe(keys, int(row["hash_count"]), int(row["num_buckets"]), row["bits"])
-        else:
-            maybe = cuckoo_probe(keys, int(row["hash_count"]), int(row["num_buckets"]), row["bits"])
-        if not maybe.any():
-            return out
-        seen_rows = state_pdf[state_pdf["kind"].isna()]
-        if len(seen_rows) == 0:
-            return out  # filter false positives only
-        # exact confirm for the (few) maybe-seen rows: vectorized
-        # composite-key membership against this partition's seen set
-        sus_pos = np.flatnonzero(maybe)
-        sus_idx = pd.MultiIndex.from_arrays(
-            [
-                cand_pdf["domain_hash"].to_numpy(np.int64)[sus_pos],
-                keys[sus_pos],
-            ]
-        )
-        seen_idx = pd.MultiIndex.from_arrays(
-            [
-                seen_rows["s_domain_hash"].to_numpy(np.int64),
-                seen_rows["s_url_hash"].to_numpy(np.int64),
-            ]
-        )
-        dup = sus_idx.isin(seen_idx)
-        keep = np.ones(len(cand_pdf), dtype=bool)
-        keep[sus_pos[dup]] = False
-        return out[keep]
-
-    return (
-        cand.groupBy("partition_id")
-        .cogroup(state.groupBy("partition_id"))
-        .applyInPandas(_gate, schema=out_schema)
-    )
-
-
-def augment_filters(
-    old: DataFrame,
-    delta_keys: DataFrame,
-    num_partitions: int,
-    buckets_per_element: int = 10,
-    capacity: int | None = None,
-) -> DataFrame:
-    """Fused bloom delta-build + OR-merge in ONE cogrouped pass: the new
-    keys' buckets are OR-ed straight into the previous filter blob per
-    partition — replaces build_filters(delta)+merge_filters(old, delta)
-    (two shuffles + an extra python stage) with a single cogroup."""
-    keyed = delta_keys.withColumn(
-        "partition_id", F.pmod(F.col("domain_hash"), F.lit(num_partitions)).cast("int")
-    ).select("partition_id", "url_hash")
-
-    k_default = compute_best_k(buckets_per_element)
-    m_default = bitset_size(capacity, buckets_per_element) if capacity else None
-
-    def _augment(key, keys_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        keys = np.unique(keys_pdf["url_hash"].to_numpy(dtype=np.int64)) if len(keys_pdf) else np.array([], dtype=np.int64)
-        if len(filt_pdf):
-            row = filt_pdf.iloc[0]
-            k = int(row["hash_count"])
-            m = int(row["num_buckets"])
-            words = np.frombuffer(row["bits"], dtype=np.uint64).copy()
-            n_prev = int(row["n_keys"])
-        else:
-            assert m_default is not None, "augment_filters without prior filter needs capacity"
-            k, m = k_default, m_default
-            words = np.zeros(m // 64, dtype=np.uint64)
-            n_prev = 0
-        if len(keys):
-            idx = hashing.bloom_buckets_long(keys, k, m).ravel()
-            np.bitwise_or.at(words, idx >> 6, np.uint64(1) << (idx & 63).astype(np.uint64))
-        return pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "kind": ["bloom"],
-                "hash_count": [k],
-                "num_buckets": [m],
-                "n_keys": [n_prev + len(keys)],  # upper bound (dups unknown)
-                "bits": [words.tobytes()],
-            }
-        )
-
-    return (
-        keyed.groupBy("partition_id")
-        .cogroup(old.groupBy("partition_id"))
-        .applyInPandas(_augment, schema=FILTER_SCHEMA)
-    )
-
-
 def empty_filters_pdf(
     num_partitions: int, kind: str = "bloom", buckets_per_element: int = 10, capacity: int | None = None
 ) -> pd.DataFrame:
@@ -480,32 +339,6 @@ def empty_filters_pdf(
         rows.append((pid, kind, k, m, 0, bits))
     return pd.DataFrame(
         rows, columns=["partition_id", "kind", "hash_count", "num_buckets", "n_keys", "bits"]
-    )
-
-
-def merge_filters(old: DataFrame, delta: DataFrame) -> DataFrame:
-    """Bitwise-OR union of equally-sized bloom filters per partition.
-
-    Valid only for bloom filters built with the same fixed ``capacity``
-    (same num_buckets / hash_count).  A missing side passes through."""
-
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 1:
-            return pdf
-        m = int(pdf["num_buckets"].iloc[0])
-        assert (pdf["num_buckets"] == m).all(), "merge_filters: mismatched filter sizes"
-        acc = np.zeros(m // 64, dtype=np.uint64)
-        for b in pdf["bits"]:
-            acc |= np.frombuffer(b, dtype=np.uint64)
-        out = pdf.iloc[[0]].copy()
-        out["bits"] = [acc.tobytes()]
-        out["n_keys"] = [int(pdf["n_keys"].sum())]  # upper bound (dups unknown)
-        return out
-
-    return (
-        old.unionByName(delta)
-        .groupBy("partition_id")
-        .applyInPandas(lambda pdf: _merge(pdf), schema=FILTER_SCHEMA)
     )
 
 
@@ -533,12 +366,9 @@ def gate_new_storage(
     bloom/cuckoo filters here have no false negatives.
 
     Efficiency wants candidates physically clustered by partition_id
-    (the frontier table is written that way → a scan task touches ~1
-    partition); correctness holds for any distribution.  For an
-    UNclustered input at huge state (discovered links at 10^10),
-    repartition by pmod(domain_hash, P) first — one delta-sized
-    Exchange — so each task still touches ~1 partition
-    (frontier.py cluster_link_gate).
+    (the frontier table is written that way, and the links gate runs
+    after dedup_by_identity's Exchange by partition_id → a task touches
+    ~1 partition); correctness holds for any distribution.
 
     ``root`` is any seenstore state location: a filesystem path, an
     FSLocation (object store), or a ManifestLocation (catalog-metadata
@@ -656,92 +486,3 @@ def update_filters_storage(
                 yield _update(int(pid))
 
     return skeleton.mapInPandas(_update_iter, schema=FILTER_SCHEMA)
-
-
-def exact_new_urls(candidates: DataFrame, seen: DataFrame) -> DataFrame:
-    """Exact anti-join on the composite URLFPV2 key (H5 semantics)."""
-    return candidates.join(
-        seen.select("domain_hash", "url_hash"), ["domain_hash", "url_hash"], "left_anti"
-    )
-
-
-def probe_filters_broadcast(candidates: DataFrame, filters: DataFrame) -> DataFrame:
-    """Shuffle-free probe: ship the filter blobs to every task and add
-    ``maybe_seen`` in a pure map stage.
-
-    Correct only while the TOTAL filter state fits comfortably in
-    executor memory — the frontier picks this path when
-    P × bitset_bytes is under its broadcast threshold (small/mid crawls,
-    local bench); at 10^10-key scale the state is tens of GB and the
-    cogrouped ``probe_filters`` is the only sane plan."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    rows = filters.collect()
-    blobs = {
-        int(r["partition_id"]): (r["kind"], int(r["hash_count"]), int(r["num_buckets"]), r["bits"])
-        for r in rows
-    }
-    num_partitions = max(blobs) + 1 if blobs else 1
-    sc = candidates.sparkSession.sparkContext
-    b = sc.broadcast(blobs)
-
-    out_schema = StructType(list(candidates.schema.fields) + [StructField("maybe_seen", BooleanType())])
-
-    def _probe(batches):
-        table = b.value
-        for pdf in batches:
-            keys = pdf["url_hash"].to_numpy(dtype=np.int64)
-            pids = np.mod(pdf["domain_hash"].to_numpy(dtype=np.int64), num_partitions)
-            maybe = np.zeros(len(pdf), dtype=bool)
-            for pid in np.unique(pids):
-                blob = table.get(int(pid))
-                if blob is None:
-                    continue
-                kind, k, m, bits = blob
-                sel = pids == pid
-                if kind == "bloom":
-                    maybe[sel] = bloom_probe(keys[sel], k, m, bits)
-                else:
-                    maybe[sel] = cuckoo_probe(keys[sel], k, m, bits)
-            out = pdf.copy()
-            out["maybe_seen"] = maybe
-            yield out
-
-    return candidates.mapInPandas(_probe, schema=out_schema)
-
-
-def filter_new(
-    candidates: DataFrame,
-    seen: DataFrame,
-    filters: DataFrame,
-    num_partitions: int,
-    broadcast_bytes: int | None = None,
-    broadcast_threshold: int = 128 << 20,
-) -> DataFrame:
-    """Scalable two-stage novelty filter: bloom/cuckoo pre-screen, exact
-    confirm only for the (few) maybe-seen candidates.
-
-    definitely-new (≈90%+ of a growing crawl) skips the join entirely —
-    that is the point of the pre-filter at 10^10 keys.  When the caller
-    knows the total filter state is small (``broadcast_bytes`` under the
-    threshold) the probe runs as a broadcast map stage instead of the
-    cogroup — zero shuffles on the candidate side.  At cogroup scale the
-    probe and exact confirm are FUSED into one pass
-    (filter_new_cogrouped): the union-of-branches formulation would
-    compute the probe twice per action (plan-audit finding)."""
-    if broadcast_bytes is not None and broadcast_bytes <= broadcast_threshold:
-        probed = probe_filters_broadcast(candidates, filters)
-        fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        suspect = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        if seen is None:
-            # nothing crawled yet (round 1): an empty filter can still
-            # flag maybe_seen=false for everything, so suspect is empty —
-            # but keep the plan shape identical for determinism
-            confirmed_new = suspect
-        else:
-            confirmed_new = exact_new_urls(suspect, seen)
-        # NOTE the two branches re-run the probe within one action; the
-        # broadcast probe is a cheap map stage so this is the faster
-        # shape at small/mid state (no candidate shuffle at all)
-        return fresh.unionByName(confirmed_new)
-    return filter_new_cogrouped(candidates, seen, filters, num_partitions)

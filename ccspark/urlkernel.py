@@ -22,10 +22,13 @@ Semantics per reference URLUtils.canonicalizeURL (URLUtils.java:355-434)
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
+
+# rows per canonicalize_matrix call (and per urls.urlfp_batch hash
+# chunk): the matrix pass allocates ~25 n×L temporaries, and chunks of
+# this size keep them LLC-resident
+CHUNK_ROWS = 8192
 
 # flag bits from the classification LUT
 _F_SLOW = 0x01   # % \ # " < > DEL, control/space bytes → scalar path
@@ -357,10 +360,9 @@ def canonicalize_batch_kernel(
         # resource K parallel workers actually contend on (the N→4N
         # scaling criterion).  Chunk-local width also shrinks padding:
         # one 4kB outlier URL no longer widens every row's matrix.
-        chunk = int(os.environ.get("CCSPARK_KERNEL_CHUNK", "8192"))
         rest_parts = []
-        for s in range(0, len(idx_el), chunk):
-            sub = idx_el[s : s + chunk]
+        for s in range(0, len(idx_el), CHUNK_ROWS):
+            sub = idx_el[s : s + CHUNK_ROWS]
             handled, canon, hosts = canonicalize_matrix([vals[i] for i in sub])
             out[sub] = canon
             out_host[sub] = hosts

@@ -23,14 +23,13 @@ Reproduces the crawl-identity semantics of the reference engine:
   url_hash = fp64(canonical); domain_hash = fp64(host minus ``www.`` when
   host != root domain); root_domain_hash = fp64(root domain).
 
-Batch entry points are vectorized: a single compiled-regex fast path
-covers already-canonical URLs (the common case in a steady-state
-frontier), and only the residue goes through the per-string slow path.
+Batch entry points are vectorized: the byte-matrix kernel
+(ccspark.urlkernel) covers link-shaped URLs, and only the residue goes
+through the per-string slow path.
 """
 
 from __future__ import annotations
 
-import os
 import re
 from functools import lru_cache
 
@@ -38,6 +37,7 @@ import numpy as np
 import pandas as pd
 
 from . import hashing
+from .urlkernel import CHUNK_ROWS
 
 # ---------------------------------------------------------------------------
 # Public-suffix list (TLDNamesCollection.java parse: split at LAST dot;
@@ -170,12 +170,6 @@ _HEX_RE = re.compile(r"^[0-9a-fA-F]*$")  # pattern0
 _ALNUM_RE = re.compile(r"^[0-9a-zA-Z]*$")  # pattern0_1
 _NUM_RE = re.compile(r"^[0-9]*$")  # pattern0_2
 _HEXDASH_RE = re.compile(r"^[0-9a-fA-F\-]*$")  # pattern0_3
-
-# quick vectorizable pre-filter: any marker substring present (lowercased)
-SESSION_MARKERS_RE = re.compile(
-    r"phpsessid|oscsid|sid|/sessions/|;\$sessionid\$|/session_id/|--session_id\.|;jsessionid=",
-    re.IGNORECASE,
-)
 
 
 def session_id_normalize(url_orig: str) -> str:
@@ -438,11 +432,9 @@ def canonicalize_ipv4_host(host: str) -> str | None:
     return ".".join(str(b) for b in addr)
 
 
-# vectorized guard: hosts whose last dotted label is numeric (dec/hex) are
-# IPv4-literal candidates and must take the scalar path — EXCEPT hosts that
-# are already a canonical dotted-quad (each octet 0-255, decimal, no
-# leading zeros), which canonicalize to themselves.
-_IP_LAST_LABEL_RE = re.compile(r"(?:^|\.)(?:[0-9]+|0[xX][0-9a-fA-F]*)\.?$")
+# a canonical dotted-quad (each octet 0-255, decimal, no leading zeros)
+# canonicalizes to itself — the URL kernel keeps such IPv4 hosts on the
+# byte-matrix path instead of routing them to the scalar path
 _OCTET_SRC = r"(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9][0-9]|[0-9])"
 _CANON_QUAD_RE = re.compile(r"^%s(?:\.%s){3}$" % (_OCTET_SRC, _OCTET_SRC))
 
@@ -568,96 +560,10 @@ def canonicalize_url(url: str | None, strip_www: bool = True) -> str | None:
     return session_id_normalize("".join(out))
 
 
-# fast path: already-canonical URL shape that canonicalize_url maps to itself
-_FAST_RE = re.compile(
-    r"^https?://"  # scheme
-    r"(?!www\.)[a-z0-9\-_]+(\.[a-z0-9\-_]+)+"  # dotted lowercase host, no trailing dot
-    r"(:[1-9][0-9]{1,4})?"  # explicit non-default-ish port (80/443 excluded below)
-    r"/[A-Za-z0-9\-._~!$&'()*+,/:=@]*"  # path present, no %, ;, ?, space, backslash
-    r"(\?[A-Za-z0-9\-._~!$&'()*+,/:=@]*)?$"  # optional query
-)
-
-
-_FAST_HOST_EX_RE = re.compile(r"^https?://([^/:?#]+)")
-
-
-def _fast_canonical_mask(urls: pd.Series) -> np.ndarray:
-    mask = urls.str.match(_FAST_RE, na=False)
-    # exclude default ports, dot segments and session-id markers
-    mask &= ~urls.str.contains(":80/", regex=False, na=False)
-    mask &= ~urls.str.contains(":443/", regex=False, na=False)
-    mask &= ~urls.str.contains("/./", regex=False, na=False)
-    mask &= ~urls.str.contains("/../", regex=False, na=False)
-    mask &= ~urls.str.contains(SESSION_MARKERS_RE, na=False)
-    # IPv4-literal candidates (numeric last label) take the scalar path
-    # unless already a canonical dotted-quad (self-canonicalizing)
-    if mask.any():
-        host = urls.str.extract(_FAST_HOST_EX_RE, expand=False)
-        ip_cand = host.str.contains(_IP_LAST_LABEL_RE, na=False)
-        mask &= ~ip_cand | host.str.fullmatch(_CANON_QUAD_RE, na=False)
-    return mask.to_numpy()
-
-
-# tier-2: structurally simple URLs normalizable with pandas str ops —
-# lowercase scheme/host, trailing-dot strip, default-port strip, www
-# strip (via per-unique-host PSL lookup) — no percent-escapes, spaces,
-# backslashes, userinfo, dot-segments or session markers
-_TIER2_RE = re.compile(
-    r"^(?P<scheme>[A-Za-z][A-Za-z0-9+.\-]*)://(?P<host>[A-Za-z0-9.\-_]+?)(?::(?P<port>[0-9]+))?"
-    r"(?P<path>/[!$&'()*+,\-./0-9:;=@_~A-Za-z]*)?(?:\?(?P<query>[!$&'()*+,\-./0-9:;=@_~A-Za-z]*))?$"
-)
-_TIER2_BAD = re.compile(r"%|\\|\.\.|/\./|#| ")
-
-
-def _canonicalize_tier2(urls: pd.Series) -> pd.Series:
-    """Vectorized canonicalization of the tier-2 shape (including
-    session-id variants — path ';' truncation and the session
-    normalizer run after structural normalization, exactly as
-    URLUtils.canonicalizeURL does); NaN where the row needs the full
-    per-string path."""
-    ex = urls.str.extract(_TIER2_RE)
-    bad = urls.str.contains(_TIER2_BAD, na=True)
-    scheme = ex["scheme"].str.lower()
-    ok = ~bad & scheme.isin(["http", "https", "ftp"]) & ex["host"].notna()
-    host = ex["host"].str.lower().str.rstrip(".")
-    ok &= host.str.match(r"^[a-z0-9.\-_]+$", na=False)
-    # IPv4-literal candidates → scalar path (googleurl truncating canon)
-    ip_cand = host.str.contains(_IP_LAST_LABEL_RE, na=False)
-    ok &= ~ip_cand | host.str.fullmatch(_CANON_QUAD_RE, na=False)
-    # strip default port; also a literal '80' on ANY scheme, matching the
-    # scalar path (canonicalize_url skips port=="80" unconditionally, per
-    # URLUtils.canonicalizeURL:404-410 which only appends port != "80")
-    defaults = scheme.map({"http": "80", "https": "443", "ftp": "21"})
-    port = ex["port"].str.lstrip("0")
-    port = port.where(
-        port.ne("") & port.ne(defaults) & port.ne("80") & port.notna(), None
-    )
-    # www strip via PSL over the *unique* hosts only
-    www = host.str.startswith("www.", na=False) & ok
-    if www.any():
-        uniq = host[www].unique()
-        strip_map = {}
-        for h in uniq:
-            root = extract_root_domain_name(h)
-            strip_map[h] = h[4:] if (root is None or root != h) else h
-        host = host.where(~www, host.map(strip_map))
-    # path truncates at the first ';' (URLUtils.canonicalizeURL:415-422)
-    path = ex["path"].fillna("/").str.split(";", n=1).str[0]
-    out = scheme + "://" + host + np.where(port.notna(), ":" + port.fillna(""), "")
-    out = out + path + np.where(ex["query"].notna(), "?" + ex["query"].fillna(""), "")
-    result = pd.Series(np.where(ok, out, None), index=urls.index, dtype="object")
-    # phase 2: session-id normalization, only where a marker survives
-    sess = result.str.contains(SESSION_MARKERS_RE, na=False)
-    if sess.any():
-        result[sess] = result[sess].map(session_id_normalize)
-    return result
-
-
 def canonicalize_batch(urls: pd.Series, strip_www: bool = True) -> pd.Series:
     """Vectorized canonicalization via the numpy byte-matrix kernel
     (ccspark.urlkernel), per-string scalar residue for rows the kernel
-    routes out.  The legacy pandas tiers (_fast_canonical_mask /
-    _canonicalize_tier2) remain for parity testing only."""
+    routes out."""
     from . import urlkernel
 
     canon, _hosts = urlkernel.canonicalize_batch_kernel(urls.astype("object"), strip_www)
@@ -712,10 +618,9 @@ def urlfp_batch(canonical: pd.Series, hosts: pd.Series | None = None) -> pd.Data
     # an 8-byte state per row maxlen times — LLC-resident chunks keep
     # that traffic off the shared memory bus (and per-chunk max length
     # shrinks the padded matrix)
-    _ch = int(os.environ.get("CCSPARK_KERNEL_CHUNK", "8192"))
-    if len(vals) > _ch:
+    if len(vals) > CHUNK_ROWS:
         url_hash = np.concatenate(
-            [hashing.fp64_utf16(vals[s : s + _ch]) for s in range(0, len(vals), _ch)]
+            [hashing.fp64_utf16(vals[s : s + CHUNK_ROWS]) for s in range(0, len(vals), CHUNK_ROWS)]
         )
     else:
         url_hash = hashing.fp64_utf16(vals)

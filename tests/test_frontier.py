@@ -201,17 +201,40 @@ def test_frontier_against_iceberg_catalog(tmp_path):
         pass  # session shared-ish; leave running
 
 
-def test_clustered_link_gate_trace_invariant(spark, tmp_path, crawl):
-    """cluster_link_gate=True (the 10^10-state path: links repartition
-    by partition_id before the storage gate) must not change the trace."""
-    cfg = _cfg()
-    cfg.cluster_link_gate = True
-    ckpt_c = str(tmp_path / "ckpt_clustered")
-    fr = CrawlFrontier(spark, ckpt_c, cfg)
-    fr.run(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED), ROUNDS)
-    got = _spark_trace(spark, ckpt_c, ROUNDS)
-    base = _spark_trace(spark, crawl[0], ROUNDS)
-    assert got == base
+def test_failed_round_joins_threads_and_resumes(spark, tmp_path, monkeypatch):
+    """A failure inside round 2, raised while the overlapped lineage and
+    filters writes run on the round's thread pool, must join those
+    threads before it propagates; resuming must then reproduce the
+    replay oracle exactly."""
+    import threading
+
+    import ccspark.frontier as frontier_mod
+
+    ckpt = str(tmp_path / "ckpt_fail")
+    fr = CrawlFrontier(spark, ckpt, _cfg())
+    fr.run(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED), 1)
+
+    real_dedup = frontier_mod.dedup_by_identity
+    failed = []
+
+    def _fail_once(*args, **kwargs):
+        if not failed:
+            failed.append(True)
+            raise RuntimeError("injected dedup failure")
+        return real_dedup(*args, **kwargs)
+
+    monkeypatch.setattr(frontier_mod, "dedup_by_identity", _fail_once)
+    with pytest.raises(RuntimeError, match="injected dedup failure"):
+        fr.run(None, ROUNDS - 1)
+    assert failed
+    assert not [t.name for t in threading.enumerate() if t.name.startswith("ccspark-round")]
+    assert fr.ckpt.last_committed_round() == 1
+
+    fr.run(None, ROUNDS - 1)
+    got_trace, got_seen = _spark_trace(spark, ckpt, ROUNDS)
+    exp_trace, exp_seen = replay(UNIVERSE, N_HOSTS, SEED, ROUNDS, BUDGET, ROUND_MS, LINKS)
+    assert got_trace == exp_trace
+    assert got_seen == exp_seen
 
 
 def test_revisit_scheduling(spark, tmp_path):

@@ -96,10 +96,10 @@ def test_resume_deletes_crash_debris(spark, monkeypatch):
 
 def test_drained_recrawl_over_stub_catalog(spark, monkeypatch):
     """The recrawl-only round (empty frontier + due revisit) on the
-    CATALOG backend takes the Spark-side gates over empty relations —
-    the path where a pruned CollectMetrics would hang Observation.get
-    if the gate were observed.  links_per_fetch=0 drains after the seed
-    crawl; cycles must keep scheduling."""
+    CATALOG backend runs over empty relations — the path where a pruned
+    CollectMetrics would hang Observation.get if the gate were
+    observed.  links_per_fetch=0 drains after the seed crawl; cycles
+    must keep scheduling."""
     install(monkeypatch, spark, "stubcat")
     cfg = _cfg()
     cfg.links_per_fetch = 0
@@ -173,21 +173,31 @@ def test_write_pdf_pins_physical_types(spark, monkeypatch):
     assert types["bits"] == "binary"
 
 
+def test_legacy_layout_state_table_raises(spark, monkeypatch):
+    """A state table without the partition_id partition transform gives
+    the storage gate nothing to prune on: state_location() must fail
+    with a fix-it error naming the table, not degrade silently."""
+    from ccspark import seenset
+
+    install(monkeypatch, spark, "stubcat")
+    ck = make_checkpoint(spark, "iceberg:stubcat.legacy")
+    pdf = seenset.empty_filters_pdf(4, "bloom", 10, capacity=256)
+    ck.write_pdf(pdf, "filters", 0, arrow_schema=seenset.filter_arrow_schema())
+    with pytest.raises(ValueError, match=r'stubcat\.legacy\.filters.*partition_by=\["partition_id"\]'):
+        ck.state_location()
+
+
 def test_catalog_backend_takes_storage_gate(spark, monkeypatch):
-    """The catalog backend must run the ZERO-EXCHANGE storage gate (the
-    r4 design's one remaining O(history) fallback, VERDICT r4 #2): the
-    Spark-side filter_new fallback must never be touched, and
+    """The catalog backend must run the ZERO-EXCHANGE storage gate: the
+    O(history) Spark-side gate no longer exists to fall back to, and
     state_location() must enumerate per-(round, partition) data files
     from catalog metadata."""
     import ccspark.seenset as seenset
     from ccspark.seenstore import ManifestLocation
 
     install(monkeypatch, spark, "stubcat")
-
-    def _boom(*a, **kw):  # the O(history) shuffle gate
-        raise AssertionError("Spark-side filter_new fallback used on catalog backend")
-
-    monkeypatch.setattr(seenset, "filter_new", _boom)
+    # the storage gate is the only novelty gate left to take
+    assert {n for n in vars(seenset) if "new" in n} == {"gate_new_storage"}
 
     fr = CrawlFrontier(spark, "iceberg:stubcat.zx", _cfg())
     metrics = fr.run(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED), 2)

@@ -1,10 +1,10 @@
 """Seen-set tests: reference bloom semantics, cuckoo variant, and the
-two-stage novelty filter on Spark."""
+Spark build/probe operators the batch pipeline uses.  The frontier's
+storage gate is covered by test_seenstore.py and the frontier replay
+tests."""
 
 import numpy as np
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 from ccspark import seenset
 
@@ -38,39 +38,6 @@ def test_cuckoo_membership():
     assert seenset.cuckoo_probe(other, slots, nb, bits).mean() < 0.01
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_filter_new_on_spark(spark, kind):
-    P = 8
-    seen_pdf = pd.DataFrame(
-        {
-            "domain_hash": np.arange(1000, dtype=np.int64) % 37,
-            "url_hash": np.arange(1000, dtype=np.int64) * 7919 + 13,
-        }
-    )
-    seen = spark.createDataFrame(seen_pdf)
-    filters = seenset.build_filters(seen, P, kind=kind).cache()
-    assert filters.count() == filters.select("partition_id").distinct().count()
-
-    # candidates: 500 seen + 500 brand-new
-    cand_pdf = pd.DataFrame(
-        {
-            "domain_hash": np.concatenate(
-                [seen_pdf["domain_hash"][:500], np.arange(500, dtype=np.int64) % 41]
-            ),
-            "url_hash": np.concatenate(
-                [seen_pdf["url_hash"][:500], np.arange(500, dtype=np.int64) * 104729 + 999999]
-            ),
-            "tag": ["seen"] * 500 + ["new"] * 500,
-        }
-    )
-    cand = spark.createDataFrame(cand_pdf)
-    out = seenset.filter_new(cand, seen, filters, P).toPandas()
-    # every truly-new candidate survives; every seen candidate is dropped
-    assert sorted(out["tag"].unique()) in (["new"], ["new"])
-    assert (out["tag"] == "new").sum() == 500
-    assert len(out) == 500
-
-
 def test_probe_missing_partition_defaults_unseen(spark):
     seen = spark.createDataFrame(
         pd.DataFrame({"domain_hash": np.array([0], dtype=np.int64), "url_hash": np.array([1], dtype=np.int64)})
@@ -81,28 +48,6 @@ def test_probe_missing_partition_defaults_unseen(spark):
     )
     probed = seenset.probe_filters(cand, filters, 4).toPandas()
     assert (~probed["maybe_seen"]).all()
-
-
-def test_augment_filters_equals_build_plus_merge(spark):
-    import numpy as np
-    from pyspark.sql import functions as F
-    from ccspark import seenset
-
-    P, cap = 4, 4096
-    base_keys = spark.range(0, 3000).select(
-        (F.col("id") * 37 + 5).alias("domain_hash"), (F.col("id") * 7919 + 13).alias("url_hash")
-    )
-    delta_keys = spark.range(3000, 5000).select(
-        (F.col("id") * 37 + 5).alias("domain_hash"), (F.col("id") * 7919 + 13).alias("url_hash")
-    )
-    base = seenset.build_filters(base_keys, P, "bloom", capacity=cap)
-    via_merge = seenset.merge_filters(
-        base, seenset.build_filters(delta_keys, P, "bloom", capacity=cap)
-    )
-    via_augment = seenset.augment_filters(base, delta_keys, P, capacity=cap)
-    a = {r["partition_id"]: bytes(r["bits"]) for r in via_merge.collect()}
-    b = {r["partition_id"]: bytes(r["bits"]) for r in via_augment.collect()}
-    assert a == b
 
 
 def test_empty_filters_pdf_matches_zero_build(spark):
@@ -120,51 +65,3 @@ def test_empty_filters_pdf_matches_zero_build(spark):
     assert not seenset.bloom_probe(
         np.array([1, 2, 3], dtype=np.int64), int(row["hash_count"]), int(row["num_buckets"]), row["bits"]
     ).any()
-
-
-def test_filter_new_cogrouped_equals_branch_formulation(spark):
-    """The fused cogroup novelty gate (one pass: bloom probe + exact
-    confirm) must return exactly the same rows as the two-branch
-    broadcast formulation, including bloom false positives that the
-    exact confirm must keep."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from ccspark import seenset
-
-    P = 4
-    rng = np.random.default_rng(17)
-    all_ids = rng.choice(10_000_000, size=3000, replace=False).astype(np.int64)
-    seen_ids = all_ids[:1200]
-    cand_ids = np.concatenate([all_ids[800:2400], all_ids[:100]])  # overlap
-    seen = spark.createDataFrame(
-        [(int(x) % 1000, int(x)) for x in seen_ids], "domain_hash long, url_hash long"
-    )
-    cands = spark.createDataFrame(
-        [(int(x) % 1000, int(x), float(x % 97)) for x in cand_ids],
-        "domain_hash long, url_hash long, priority double",
-    )
-    filters = seenset.build_filters(seen, P, "bloom", buckets_per_element=4)
-    # force both paths explicitly
-    fused = seenset.filter_new_cogrouped(cands, seen, filters, P)
-    branch = seenset.filter_new(
-        cands, seen, filters, P, broadcast_bytes=1, broadcast_threshold=10**9
-    )
-    got = {(r["domain_hash"], r["url_hash"]) for r in fused.collect()}
-    want = {(r["domain_hash"], r["url_hash"]) for r in branch.collect()}
-    assert got == want
-    # and equals the plain anti-join ground truth
-    truth = {
-        (r["domain_hash"], r["url_hash"])
-        for r in cands.join(seen, ["domain_hash", "url_hash"], "left_anti").collect()
-    }
-    assert got == truth
-    # seen=None: no exact set to confirm against -> everything passes
-    fused0 = seenset.filter_new_cogrouped(cands, None, filters, P)
-    assert fused0.count() == cands.count()
-    empty_filters = spark.createDataFrame(
-        seenset.empty_filters_pdf(P, "bloom", 4, capacity=4096),
-        schema=seenset.FILTER_SCHEMA,
-    )
-    fused_empty = seenset.filter_new_cogrouped(cands, None, empty_filters, P)
-    assert fused_empty.count() == cands.count()

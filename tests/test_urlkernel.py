@@ -79,7 +79,10 @@ def test_kernel_parity_random_fuzz():
 
 
 def test_kernel_matches_legacy_tiers():
-    # the legacy pandas tiers must agree with the kernel on their own turf
+    # plain link-shaped URLs (www / default port / session-id variants):
+    # the kernel must equal the scalar reference AND handle every row on
+    # the byte-matrix path — a silent scalar fallback is the "dead
+    # kernel" regression
     ids = np.arange(2000)
     src = np.char.add("src", (ids % 20).astype(str))
     url = np.where(ids % 3 == 0, "http://www.", "http://")
@@ -92,11 +95,9 @@ def test_kernel_matches_legacy_tiers():
         url, np.where(ids % 7 == 0, ";jsessionid=abcdef0123456789abcdef0123456789", "")
     )
     s = pd.Series(url.astype(object))
-    tier2 = U._canonicalize_tier2(s)
     canon, _ = K.canonicalize_batch_kernel(s)
-    both = tier2.notna()
-    assert both.any()
-    assert tier2[both].tolist() == canon[both].tolist()
+    assert canon.tolist() == [U.canonicalize_url(u) for u in s]
+    assert K.canonicalize_matrix(s.tolist())[0].all()
 
 
 def test_kernel_host_byproduct_matches_urlfp_extraction():

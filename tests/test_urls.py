@@ -8,7 +8,7 @@ test vectors :356-397) with Java 17.
 import pandas as pd
 import pytest
 
-from ccspark import urls
+from ccspark import urlkernel, urls
 
 SESSION_VECTORS = [
     ('http://www.bearcountryuk.com/images/bc0059.jpg/osCsid/96a7bddc9c8a4249dbabd862f859e9e1',
@@ -155,9 +155,9 @@ def test_canonicalize_batch_fast_path_matches_slow_path():
     fast = urls.canonicalize_batch(s)
     slow = pd.Series([urls.canonicalize_url(u) for u in raw])
     assert fast.fillna("<null>").tolist() == slow.fillna("<null>").tolist()
-    # fast path must actually trigger for the plain rows
-    assert urls._fast_canonical_mask(s)[0]
-    assert urls._fast_canonical_mask(s)[1]
+    # the byte-matrix path must actually handle the plain rows
+    handled, _canon, _hosts = urlkernel.canonicalize_matrix(raw[:2])
+    assert handled.all()
 
 
 IPV4_CASES = [
