@@ -1014,7 +1014,8 @@ def q_schedule_round(spark, sf_dir):
     crawl-delay budget + W4 two-stage salted rank) oracled end to end:
     derived candidates over 40 hosts with a 10-host robots table
     (disallow prefix + binding crawl-delay), scheduled by
-    politeness.schedule_round; the oracle REIMPLEMENTS the whole gate
+    politeness.process_round (its host_rank IS NOT NULL rows); the
+    oracle REIMPLEMENTS the whole gate
     in SQL (LIKE prefix filter, CASE budget, ROW_NUMBER window) — the
     salted rank provably equals the unsalted one."""
     from ccspark import politeness
@@ -1037,10 +1038,12 @@ def q_schedule_round(spark, sf_dir):
         [(f"h{i}.com", ["/private"], 20000, None) for i in range(0, 40, 4)],
         "host string, disallow_prefixes array<string>, crawl_delay_ms long, max_fetches_per_round int",
     )
-    sched = politeness.schedule_round(
+    proc = politeness.process_round(
         cands, robots, default_budget=5, round_duration_ms=60_000, n_salts=4
     )
-    return sched.select("host", "host_rank", "url_hash", "priority")
+    return proc.filter(F.col("host_rank").isNotNull()).select(
+        "host", "host_rank", "url_hash", "priority"
+    )
 
 
 def q_link_extract(spark, sf_dir):
@@ -1410,7 +1413,7 @@ def q_robots_rfc(spark, sf_dir):
     """W3 robots gating oracled directly: a fixed RFC 9309 rules file
     (Allow precedence, '*' and '$' patterns, longest-match ties) is
     parsed into the rules table and evaluated over 14 path families by
-    the pure-Catalyst longest-match fold (politeness.robots_gate_rfc)
+    the pure-Catalyst longest-match fold (politeness.robots_gate)
     — plus the crawl-delay-derived per-round budget.  The oracle states
     the per-family decisions as literals fixed by the RFC itself."""
     from ccspark import politeness
@@ -1425,7 +1428,7 @@ def q_robots_rfc(spark, sf_dir):
         [("site.example.com", _ROBOTS_RFC_TXT)], "host string, robots_txt string"
     )
     rules = politeness.robots_rules_table(robots_src)
-    gated = politeness.robots_gate_rfc(cand, rules)
+    gated = politeness.robots_gate(cand, rules)
     budgeted = politeness.with_budget(gated, default_budget=100, round_duration_ms=60_000)
     return budgeted.select("event_id", "path", "robots_allowed", "budget")
 

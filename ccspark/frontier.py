@@ -23,7 +23,7 @@ reference-oracle replay comparable (same seeds + budgets → same trace,
 BASELINE.json north_star).
 
 Scale notes: per-host ranks come from the two-stage salted window
-(politeness.rank_per_host) — no global window; link expansion is a
+(politeness.salted_topk) — no global window; link expansion is a
 mapInPandas over scheduled rows — no driver participation.  Priorities
 decay per hop (0.8) so the frontier drains.
 
@@ -626,8 +626,8 @@ class CrawlFrontier:
                 # priority-evict hot hosts' queues (domain_hash is the host
                 # fingerprint — no string work); deterministic total order,
                 # so the cap is partition-count invariant like everything else
-                next_frontier = politeness.topk_per_key(
-                    next_frontier, "domain_hash", cfg.max_frontier_per_host, cfg.n_salts
+                next_frontier = politeness.salted_topk(
+                    next_frontier, ["domain_hash"], cfg.max_frontier_per_host, cfg.n_salts
                 ).select(*FRONTIER_COLS_PID).repartition(cfg.num_partitions, "partition_id")
             obs_frontier = Observation(f"frontier_{round_no}")
             next_frontier = next_frontier.observe(obs_frontier, F.count(F.lit(1)).alias("n"))

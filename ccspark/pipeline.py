@@ -1,10 +1,10 @@
-"""Single-action crawl-scheduling pipeline — the scaling benchmark unit.
+"""Crawl-scheduling pipeline — the scaling benchmark unit.
 
-One Spark action covering the full per-URL work of a crawl round:
+The full per-URL work of a crawl round in two timed Spark actions:
 
-    raw urls → canonicalize (Arrow UDF, tiered vectorization)
-             → URLFPV2 fingerprints
-             → exact identity dedup (shuffle on domain_hash/url_hash)
+    raw urls → canonicalize + URLFPV2 fingerprints (one fused kernel pass)
+             → identified-candidates parquet (the shape of a stored frontier)
+    stored   → exact identity dedup (shuffle on domain_hash/url_hash)
              → bloom-filter novelty probe (partition-local cogroup)
              → robots gate + crawl-delay budget
              → salted per-host priority rank
@@ -21,27 +21,15 @@ scale — same plan shape the loop runs.
 
 from __future__ import annotations
 
+import shutil
+import time
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import functions as CF
 from . import politeness, seenset, synth
-
-
-def raw_candidate_urls(spark: SparkSession, universe_n: int, n_hosts: int | None = None, seed: int = 42) -> DataFrame:
-    """Deterministic messy candidate URLs (every id) with priorities."""
-    n_hosts = n_hosts or synth.default_n_hosts(universe_n)
-
-    def _gen(batches):
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            urls, _ = synth.gen_urls_pdf(ids, n_hosts, seed)
-            pri = (synth._rand(ids, 9, seed) % np.uint64(1000)).astype(np.float64) / 1000.0
-            yield pd.DataFrame({"url": urls.to_numpy(), "priority": pri})
-
-    return spark.range(universe_n).mapInPandas(_gen, schema="url string, priority double")
 
 
 def identified_candidates(spark: SparkSession, universe_n: int, n_hosts: int | None = None, seed: int = 42) -> DataFrame:
@@ -76,41 +64,6 @@ def identified_candidates(spark: SparkSession, universe_n: int, n_hosts: int | N
     )
 
 
-def schedule_pipeline(
-    spark: SparkSession,
-    candidates: DataFrame,
-    robots: DataFrame,
-    seen_filters: DataFrame | None,
-    num_partitions: int = 32,
-    default_budget: int = 50,
-    n_salts: int = 8,
-) -> DataFrame:
-    """The full scheduling plan as one lazy DataFrame (no intermediate
-    materialization)."""
-    if "url_valid" not in candidates.columns:
-        candidates = CF.with_canonical_urlfp(candidates)
-    df = candidates.filter("url_valid")
-    # single linear chain (no plan branches): identity dedup → probe →
-    # robots/budget → salted rank.  A branched late-materialization
-    # variant was measured slower under local-mode AQE (independent
-    # branches recompute the python stage or pay cache serialization).
-    df = df.groupBy("domain_hash", "url_hash").agg(
-        F.min("url").alias("url"),
-        F.min("canonical_url").alias("canonical_url"),
-        F.max("priority").alias("priority"),
-    )
-    if seen_filters is not None:
-        df = (
-            seenset.probe_filters(df, seen_filters, num_partitions)
-            .filter(~F.col("maybe_seen"))
-            .drop("maybe_seen")
-        )
-    ranked = politeness.schedule_round(df, robots, default_budget=default_budget, n_salts=n_salts)
-    return ranked.select(
-        "host", "host_rank", "url", "canonical_url", "domain_hash", "url_hash", "priority"
-    )
-
-
 def schedule_from_identified(
     spark: SparkSession,
     ident_path: str,
@@ -142,7 +95,7 @@ def schedule_from_identified(
             .drop("maybe_seen")
         )
     gated = politeness.with_budget(politeness.robots_allow(dedup, robots), default_budget)
-    ranked = politeness.rank_per_host(gated, n_salts).select(
+    ranked = politeness.salted_topk(gated, ["host"], F.col("budget"), n_salts).select(
         "domain_hash", "url_hash", "host", "host_rank", "priority"
     )
     strings = (
@@ -163,15 +116,12 @@ def run_schedule_bench(
     num_partitions: int = 32,
     seed: int = 42,
     with_seen_filter: bool = True,
-    two_phase: bool = True,
 ) -> dict:
     """Generate → schedule → write, timed end to end.
 
-    ``two_phase`` (default): identification is written to an
-    intermediate columnar table first (the shape of a stored frontier),
-    then scheduling runs over it — both actions timed."""
-    import time
-
+    Identification is written to an intermediate columnar table first
+    (the shape of a stored frontier), then scheduling runs over it —
+    both actions timed."""
     n_hosts = synth.default_n_hosts(universe_n)
     robots = synth.gen_robots(spark, n_hosts, seed)
     filters = None
@@ -185,21 +135,13 @@ def run_schedule_bench(
         ).cache()
         filters.count()  # materialize outside the timed region
     cands = identified_candidates(spark, universe_n, n_hosts, seed)
-    if two_phase:
-        ident_path = out_path + "_ident"
-        t0 = time.time()
-        cands.write.mode("overwrite").parquet(ident_path)
-        plan = schedule_from_identified(spark, ident_path, robots, filters, num_partitions)
-        plan.write.mode("overwrite").parquet(out_path)
-        wall = time.time() - t0
-        import shutil as _sh
-
-        _sh.rmtree(ident_path, ignore_errors=True)
-    else:
-        plan = schedule_pipeline(spark, cands, robots, filters, num_partitions)
-        t0 = time.time()
-        plan.write.mode("overwrite").parquet(out_path)
-        wall = time.time() - t0
+    ident_path = out_path + "_ident"
+    t0 = time.time()
+    cands.write.mode("overwrite").parquet(ident_path)
+    plan = schedule_from_identified(spark, ident_path, robots, filters, num_partitions)
+    plan.write.mode("overwrite").parquet(out_path)
+    wall = time.time() - t0
+    shutil.rmtree(ident_path, ignore_errors=True)
     n = spark.read.parquet(out_path).count()
     return {
         "universe": universe_n,

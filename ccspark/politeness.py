@@ -1,87 +1,55 @@
 """Per-host politeness scheduling: robots gating + crawl-delay budgets +
-salted window/rank priority queue.
+salted window/rank priority queue, as ONE batch plan (``process_round``).
 
 The reference has no robots parser (grep: only meta-robots flag bits,
 protocol.jr:31-38) and rate-limits at fetch time
 (BandwidthUtils.java:158-207); per the north_rule this module lifts both
 into the batch plan:
 
-* robots gate — join the per-host rules table, drop candidates whose
-  path matches a disallow prefix (pure Catalyst: ``exists(startswith)``);
+* robots gate — broadcast-join the per-host rules table and flag each
+  candidate; the predicate follows the table's shape (``robots_gate``):
+  a ``disallow_prefixes`` table gets the conservative prefix subset
+  (pure Catalyst ``exists(startswith)``), a ``rules`` table
+  (``robots_rules_table``) gets RFC 9309 longest-match semantics;
 * budget — ``max_fetches_per_round`` capped by
   ``round_duration_ms / crawl_delay_ms`` (the 1-second-window token
   budget of BandwidthUtils.checkRateLimit, generalized to a round);
 * priority queue — deterministic total order
   ``(priority DESC, domain_hash, url_hash)`` ranked per host with
-  **two-stage salted top-k**: stage 1 ranks within ``(host, salt)`` and
-  keeps at most ``budget`` rows per salt, stage 2 ranks the survivors
-  exactly per host.  Hot hosts (zipf head) therefore never serialize a
-  single window partition; the result is identical to the unsalted rank
-  because stage 1 only discards rows that could never make the top-k.
+  **two-stage salted top-k** (``salted_topk``): stage 1 ranks within
+  ``(host, salt)`` and keeps at most ``budget`` rows per salt, stage 2
+  ranks the survivors exactly per host.  Hot hosts (zipf head) therefore
+  never serialize a single window partition; the result is identical to
+  the unsalted rank because stage 1 only discards rows that could never
+  make the top-k.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_BUDGET = 10
 DEFAULT_ROUND_MS = 60_000
 PATH_RE = r"^[a-z]+://[^/]+(/.*)?$"
+# rules-table columns the gate joins in; dropped from process_round output
+_RULE_COLS = ("disallow_prefixes", "rules", "crawl_delay_ms", "max_fetches_per_round")
 
 
 def parse_robots_txt(text: str | None, agent: str = "*") -> tuple[list[str], int | None]:
-    """Minimal robots.txt parser → (disallow_prefixes, crawl_delay_ms).
+    """robots.txt → (disallow_prefixes, crawl_delay_ms): the disallow-only
+    projection of ``parse_robots_rules`` (same group selection, same
+    crawl-delay), feeding a ``disallow_prefixes`` rules table.
 
-    Honors the most-specific matching user-agent group (exact agent
-    name beats ``*``), Disallow path prefixes (empty Disallow = allow
-    all), and Crawl-delay seconds.  Feeds the per-host rules table.
-
-    NOTE: this is the conservative *prefix-only* subset (no Allow, no
-    '*'/'$' patterns) used by the synthetic frontier and its pure-Python
-    replay oracle; hosts using Allow-exceptions or wildcards are
-    over-blocked here.  For RFC 9309 semantics (Allow with
-    longest-match precedence, '*' and '$' patterns) use
-    ``parse_robots_rules`` + ``robots_rules_table`` + ``robots_allow_rfc``."""
-    if not text:
-        return [], None
-    groups: dict[str, tuple[list[str], float | None]] = {}
-    current: list[str] = []
-    collecting = False
-    for raw_line in text.splitlines():
-        line = raw_line.split("#", 1)[0].strip()
-        if not line or ":" not in line:
-            continue
-        key, _, value = line.partition(":")
-        key = key.strip().lower()
-        value = value.strip()
-        if key == "user-agent":
-            ua = value.lower()
-            if not collecting:
-                current = []
-            current.append(ua)
-            collecting = True
-            for u in current:
-                groups.setdefault(u, ([], None))
-        elif key in ("disallow", "crawl-delay"):
-            collecting = False
-            for u in current:
-                dis, delay = groups.get(u, ([], None))
-                if key == "disallow":
-                    if value:
-                        dis = dis + [value]
-                else:
-                    try:
-                        delay = float(value)
-                    except ValueError:
-                        pass
-                groups[u] = (dis, delay)
-    pick = groups.get(agent.lower()) or groups.get("*")
-    if pick is None:
-        return [], None
-    dis, delay = pick
-    return dis, int(delay * 1000) if delay is not None else None
+    NOTE: this is the conservative *prefix-only* subset (Allow lines
+    dropped, '*'/'$' taken literally) used by the synthetic frontier and
+    its pure-Python replay oracle; hosts using Allow-exceptions or
+    wildcards are over-blocked here.  For RFC 9309 semantics (Allow with
+    longest-match precedence, '*' and '$' patterns) build the table with
+    ``robots_rules_table`` instead — ``robots_gate`` accepts both."""
+    rules, delay = parse_robots_rules(text, agent)
+    return [p for p, is_allow in rules if not is_allow], delay
 
 
 def parse_robots_rules(
@@ -92,8 +60,9 @@ def parse_robots_rules(
     Both Allow and Disallow lines are kept, in file order, with their raw
     path patterns ('*' any-sequence wildcard, '$' end anchor).  Matching
     precedence (longest pattern wins, tie → Allow) is applied at
-    evaluation time by ``robots_allow_rfc`` / ``robots_decision``.
-    Group selection matches parse_robots_txt: exact agent beats '*'."""
+    evaluation time by ``robots_gate`` / ``robots_decision``.
+    Group selection: the exact agent name beats '*'; consecutive
+    User-agent lines share one group."""
     if not text:
         return [], None
     groups: dict[str, tuple[list[tuple[str, bool]], float | None]] = {}
@@ -207,56 +176,13 @@ def robots_rules_table(
             {"rules": out_rules, "crawl_delay_ms": pd.array(out_delay, dtype="Int64")}
         )
 
-    # one row per host is a hard invariant downstream: schedule_round's
+    # one row per host is a hard invariant downstream: process_round's
     # gate join would fan candidates out (duplicate seen identities,
     # double-counted budgets) on a duplicate host row
     parsed = df.dropDuplicates([host_col]).withColumn("_r", _parse(F.col(body_col)))
     return parsed.select(
         F.col(host_col).alias("host"),
         F.col("_r.rules").alias("rules"),
-        F.col("_r.crawl_delay_ms").alias("crawl_delay_ms"),
-        F.lit(None).cast("int").alias("max_fetches_per_round"),
-    )
-
-
-def robots_allow_rfc(df: DataFrame, robots: DataFrame, broadcast_robots: bool = True) -> DataFrame:
-    """RFC 9309 gate as a pure Catalyst higher-order-function fold:
-    keep rows whose path's longest matching rule allows (tie → Allow;
-    no rules / no match → allow)."""
-    return (
-        robots_gate_rfc(df, robots, broadcast_robots)
-        .filter("robots_allowed")
-        .drop("robots_allowed")
-    )
-
-
-def robots_table_from_fetches(df: DataFrame, host_col: str = "host", body_col: str = "robots_txt", agent: str = "*") -> DataFrame:
-    """(host, robots_txt) rows → the politeness rules table shape."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType, LongType, StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("disallow_prefixes", ArrayType(StringType())),
-            StructField("crawl_delay_ms", LongType()),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _parse(bodies: pd.Series) -> pd.DataFrame:
-        rows = [parse_robots_txt(b, agent) for b in bodies]
-        return pd.DataFrame(
-            {
-                "disallow_prefixes": [r[0] for r in rows],
-                "crawl_delay_ms": pd.array([r[1] for r in rows], dtype="Int64"),
-            }
-        )
-
-    # same one-row-per-host invariant as robots_rules_table
-    parsed = df.dropDuplicates([host_col]).withColumn("_r", _parse(F.col(body_col)))
-    return parsed.select(
-        F.col(host_col).alias("host"),
-        F.col("_r.disallow_prefixes").alias("disallow_prefixes"),
         F.col("_r.crawl_delay_ms").alias("crawl_delay_ms"),
         F.lit(None).cast("int").alias("max_fetches_per_round"),
     )
@@ -285,19 +211,41 @@ def with_host_and_path(df: DataFrame, canonical_col: str = "canonical_url") -> D
 
 
 def robots_gate(df: DataFrame, robots: DataFrame, broadcast_robots: bool = True) -> DataFrame:
-    """Join the rules table and add a ``robots_allowed`` flag (prefix
-    subset; hosts without rules default-allow).  Callers split on the
-    flag: allowed rows go to ranking, disallowed rows to the excluded
-    set so they drain from the frontier."""
-    r = robots.select("host", "disallow_prefixes", "crawl_delay_ms", "max_fetches_per_round")
+    """Join the rules table and add a ``robots_allowed`` flag (hosts
+    without rules default-allow).  The predicate follows the table:
+
+    * ``disallow_prefixes`` (``synth.gen_robots`` / ``parse_robots_txt``)
+      → disallowed iff the path starts with any prefix;
+    * ``rules`` (``robots_rules_table``) → RFC 9309 as a Catalyst fold:
+      the longest matching pattern wins, tie → Allow, no match → allow.
+
+    INVARIANT: one row per host (the constructors enforce it) — the join
+    would otherwise fan candidates out into duplicate identities."""
+    if "disallow_prefixes" in robots.columns:
+        rule_col = "disallow_prefixes"
+        allowed = ~F.when(
+            F.col("disallow_prefixes").isNotNull(),
+            F.exists("disallow_prefixes", lambda p: F.col("path").startswith(p)),
+        ).otherwise(F.lit(False))
+    elif "rules" in robots.columns:
+        rule_col = "rules"
+        allowed = F.expr(
+            "rules IS NULL OR aggregate("
+            "  filter(rules, x -> path rlike x.rx),"
+            "  named_struct('len', -1, 'allow', true),"
+            "  (acc, x) -> IF(x.len > acc.len OR (x.len = acc.len AND x.allow AND NOT acc.allow),"
+            "               named_struct('len', x.len, 'allow', x.allow), acc)"
+            ").allow"
+        )
+    else:
+        raise ValueError(
+            "robots table needs a 'disallow_prefixes' (prefix subset) or a 'rules' "
+            f"(RFC 9309, see robots_rules_table) column; got {robots.columns}"
+        )
+    r = robots.select("host", rule_col, "crawl_delay_ms", "max_fetches_per_round")
     if broadcast_robots:
         r = F.broadcast(r)
-    joined = df.join(r, "host", "left")
-    disallowed = F.when(
-        F.col("disallow_prefixes").isNotNull(),
-        F.exists("disallow_prefixes", lambda p: F.col("path").startswith(p)),
-    ).otherwise(F.lit(False))
-    return joined.withColumn("robots_allowed", ~disallowed)
+    return df.join(r, "host", "left").withColumn("robots_allowed", allowed)
 
 
 def robots_allow(df: DataFrame, robots: DataFrame, broadcast_robots: bool = True) -> DataFrame:
@@ -319,64 +267,51 @@ def with_budget(
     return df.withColumn("budget", F.least(base, F.coalesce(delay_cap, base)))
 
 
-def rank_per_host(df: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Two-stage salted priority rank; output keeps rows with
-    ``host_rank <= budget`` and carries the deterministic rank."""
-    order = [F.desc("priority"), F.asc("domain_hash"), F.asc("url_hash")]
-    salted = df.withColumn("salt", F.pmod(F.col("url_hash"), F.lit(n_salts)).cast("int"))
-    w1 = Window.partitionBy("host", "salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("salt_rank", F.row_number().over(w1))
-        .filter(F.col("salt_rank") <= F.col("budget"))
-        .drop("salt_rank", "salt")
-    )
-    w2 = Window.partitionBy("host").orderBy(*order)
-    return (
-        pruned.withColumn("host_rank", F.row_number().over(w2))
-        .filter(F.col("host_rank") <= F.col("budget"))
-    )
-
-
-def topk_per_key(df: DataFrame, key_col: str, k: int, n_salts: int = 16) -> DataFrame:
+def salted_topk(
+    df: DataFrame,
+    keys: list[str],
+    k: int | Column,
+    n_salts: int = 16,
+    keep_all: Column | None = None,
+    layout_partitions: int | None = None,
+) -> DataFrame:
     """Deterministic per-key top-k by the frontier total order
-    (priority DESC, domain_hash, url_hash) using the same two-stage
-    salted window as rank_per_host — hot keys never serialize one
-    window partition, and the result equals the unsalted top-k.  Used
-    for per-host frontier capping (priority eviction of queue
-    blowups)."""
+    (priority DESC, domain_hash, url_hash) as a two-stage salted window:
+    stage 1 ranks within ``(keys, salt)`` and keeps at most ``k`` rows
+    per salt, stage 2 ranks the survivors exactly per key into
+    ``host_rank`` (1..k; every caller keys on the host or its
+    fingerprint).  Hot keys never serialize one window partition, and
+    the result equals the unsalted top-k because stage 1 only discards
+    rows that could never make it.
+
+    ``k``: an int or a per-row column (e.g. the host budget).
+    ``keep_all``: rows where it holds are never cut — they are ranked
+    but kept whatever their rank (put the flag in ``keys`` so they rank
+    among themselves).
+
+    ``layout_partitions``: when set, the stage-2 exchange hash-partitions
+    by ``pmod(domain_hash, P)`` and the window keys gain that prefix.
+    domain_hash must then be constant per key, so the rank groups (and
+    every output row) are unchanged, while the output lands already
+    clustered for a one-file-per-partition write.  The stage-1 window
+    keeps its own (keys, salt) exchange, so hot keys still spread."""
     order = [F.desc("priority"), F.asc("domain_hash"), F.asc("url_hash")]
+    k = F.lit(k) if isinstance(k, int) else k
+
+    def _top(ranked: DataFrame) -> DataFrame:
+        within = F.col("host_rank") <= k
+        return ranked.filter(within if keep_all is None else keep_all | within)
+
     salted = df.withColumn("_salt", F.pmod(F.col("url_hash"), F.lit(n_salts)).cast("int"))
-    w1 = Window.partitionBy(key_col, "_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_sr", F.row_number().over(w1))
-        .filter(F.col("_sr") <= k)
-        .drop("_sr", "_salt")
-    )
-    w2 = Window.partitionBy(key_col).orderBy(*order)
-    return (
-        pruned.withColumn("_r", F.row_number().over(w2))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
-    )
-
-
-def robots_gate_rfc(df: DataFrame, robots: DataFrame, broadcast_robots: bool = True) -> DataFrame:
-    """RFC 9309 flag variant of ``robots_gate`` over a ``rules`` table
-    (see robots_rules_table): adds ``robots_allowed`` via the
-    longest-match Catalyst fold."""
-    r = robots.select("host", "rules", "crawl_delay_ms", "max_fetches_per_round")
-    if broadcast_robots:
-        r = F.broadcast(r)
-    joined = df.join(r, "host", "left")
-    allowed = F.expr(
-        "rules IS NULL OR aggregate("
-        "  filter(rules, x -> path rlike x.rx),"
-        "  named_struct('len', -1, 'allow', true),"
-        "  (acc, x) -> IF(x.len > acc.len OR (x.len = acc.len AND x.allow AND NOT acc.allow),"
-        "               named_struct('len', x.len, 'allow', x.allow), acc)"
-        ").allow"
-    )
-    return joined.withColumn("robots_allowed", allowed)
+    w1 = Window.partitionBy(*keys, "_salt").orderBy(*order)
+    pruned = _top(salted.withColumn("host_rank", F.row_number().over(w1))).drop("host_rank", "_salt")
+    if layout_partitions is not None:
+        pid = F.pmod(F.col("domain_hash"), F.lit(layout_partitions)).cast("int")
+        pruned = pruned.withColumn("_pid", pid).repartition(layout_partitions, "_pid")
+        keys = ["_pid", *keys]
+    w2 = Window.partitionBy(*keys).orderBy(*order)
+    ranked = _top(pruned.withColumn("host_rank", F.row_number().over(w2)))
+    return ranked.drop("_pid") if layout_partitions is not None else ranked
 
 
 def process_round(
@@ -386,106 +321,35 @@ def process_round(
     round_duration_ms: int = DEFAULT_ROUND_MS,
     n_salts: int = 16,
     broadcast_robots: bool = True,
-    robots_mode: str = "prefix",
     layout_partitions: int | None = None,
 ) -> DataFrame:
-    """schedule_round + robots retirement as ONE linear plan.
+    """Full politeness gate as ONE linear plan: host/path → robots →
+    budget → salted rank.
 
-    Returns every candidate row DISPOSED this round: scheduled rows
-    carry ``host_rank`` 1..budget, robots-retired rows carry
-    ``host_rank`` NULL.  Allowed-but-over-budget rows are absent (they
-    stay in the frontier).  Semantically identical to
-    ``schedule_round(..., return_disallowed=True)`` followed by a
-    union — but as a single pass: the two-branch union recomputes the
-    whole gate+rank subtree per branch when its input isn't already
-    materialized (the branches race the cache within one action).
+    Input needs (canonical_url, priority, domain_hash, url_hash); output
+    adds host, path, budget, host_rank and holds every candidate row
+    DISPOSED this round: scheduled rows carry ``host_rank`` 1..budget,
+    robots-retired rows carry ``host_rank`` NULL (so the frontier drains
+    of them instead of re-probing every round).  Allowed-but-over-budget
+    rows are absent (they stay in the frontier).  Callers split on
+    ``host_rank IS NOT NULL``.
+
     The trick is ranking within ``(host, robots_allowed)`` window
-    partitions: allowed rows rank among themselves exactly as in
-    rank_per_host, disallowed rows ride along and get their rank
-    nulled at the end.  Same robots-table one-row-per-host invariant
-    as schedule_round.
+    partitions: allowed rows rank among themselves exactly as an
+    allowed-only rank would, disallowed rows ride along uncut and get
+    their rank nulled at the end — one pass, where a scheduled ∪ retired
+    union would recompute the whole gate+rank subtree per branch.
 
-    ``layout_partitions``: when set (the frontier passes its partition
-    count P), the FINAL rank's exchange hash-partitions by
-    ``pmod(domain_hash, P)`` instead of by host — domain_hash is
-    constant per host, so prefixing the window keys with the partition
-    id leaves the rank groups (and therefore every output row)
-    unchanged, while the output lands already clustered for the
-    one-file-per-partition checkpoint write: the caller's separate
-    layout Exchange disappears.  The salted stage-1 window keeps its
-    own host/salt exchange, so hot hosts still spread across tasks."""
-    df = with_host_and_path(candidates)
-    if robots_mode == "rfc":
-        gated = robots_gate_rfc(df, robots, broadcast_robots)
-        rule_cols = ("rules", "crawl_delay_ms", "max_fetches_per_round")
-    else:
-        gated = robots_gate(df, robots, broadcast_robots)
-        rule_cols = ("disallow_prefixes", "crawl_delay_ms", "max_fetches_per_round")
+    ``layout_partitions``: the frontier passes its partition count P so
+    the final rank's exchange doubles as the checkpoint layout exchange
+    (see ``salted_topk``; domain_hash is constant per host)."""
+    gated = robots_gate(with_host_and_path(candidates), robots, broadcast_robots)
     budgeted = with_budget(gated, default_budget, round_duration_ms)
     allowed = F.col("robots_allowed")
-    order = [F.desc("priority"), F.asc("domain_hash"), F.asc("url_hash")]
-    salted = budgeted.withColumn(
-        "salt", F.pmod(F.col("url_hash"), F.lit(n_salts)).cast("int")
+    ranked = salted_topk(
+        budgeted, ["host", "robots_allowed"], F.col("budget"), n_salts,
+        keep_all=~allowed, layout_partitions=layout_partitions,
     )
-    w1 = Window.partitionBy("host", "robots_allowed", "salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("salt_rank", F.row_number().over(w1))
-        .filter(~allowed | (F.col("salt_rank") <= F.col("budget")))
-        .drop("salt_rank", "salt")
+    return ranked.withColumn("host_rank", F.when(allowed, F.col("host_rank"))).drop(
+        "robots_allowed", *_RULE_COLS
     )
-    if layout_partitions is not None:
-        pid = F.pmod(F.col("domain_hash"), F.lit(layout_partitions)).cast("int")
-        pruned = pruned.withColumn("_pid", pid).repartition(layout_partitions, "_pid")
-        w2 = Window.partitionBy("_pid", "host", "robots_allowed").orderBy(*order)
-    else:
-        w2 = Window.partitionBy("host", "robots_allowed").orderBy(*order)
-    ranked = (
-        pruned.withColumn("rk", F.row_number().over(w2))
-        .filter(~allowed | (F.col("rk") <= F.col("budget")))
-    )
-    if layout_partitions is not None:
-        ranked = ranked.drop("_pid")
-    return (
-        ranked.withColumn("host_rank", F.when(allowed, F.col("rk")))
-        .drop("rk", "robots_allowed", *rule_cols)
-    )
-
-
-def schedule_round(
-    candidates: DataFrame,
-    robots: DataFrame,
-    default_budget: int = DEFAULT_BUDGET,
-    round_duration_ms: int = DEFAULT_ROUND_MS,
-    n_salts: int = 16,
-    broadcast_robots: bool = True,
-    return_disallowed: bool = False,
-    robots_mode: str = "prefix",
-) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Full politeness gate: host/path → robots → budget → salted rank.
-
-    Input needs (canonical_url, priority, domain_hash, url_hash);
-    output adds host, path, budget, host_rank (the per-host fetch order).
-    With ``return_disallowed`` also returns the robots-rejected rows so
-    the frontier can retire them (they would otherwise be re-probed
-    every round forever).  ``robots_mode``: "prefix" expects a
-    disallow_prefixes table (the synthetic frontier's conservative
-    subset), "rfc" expects a robots_rules_table (RFC 9309 Allow +
-    wildcard semantics) — the rest of the plan is identical.
-
-    INVARIANT: ``robots`` must have exactly one row per host (the
-    constructors enforce this) — the gate join would otherwise fan out
-    candidates into duplicate identities downstream."""
-    df = with_host_and_path(candidates)
-    if robots_mode == "rfc":
-        gated = robots_gate_rfc(df, robots, broadcast_robots)
-        rule_cols = ("rules", "crawl_delay_ms", "max_fetches_per_round")
-    else:
-        gated = robots_gate(df, robots, broadcast_robots)
-        rule_cols = ("disallow_prefixes", "crawl_delay_ms", "max_fetches_per_round")
-    allowed = gated.filter("robots_allowed").drop("robots_allowed")
-    allowed = with_budget(allowed, default_budget, round_duration_ms)
-    sched = rank_per_host(allowed, n_salts).drop(*rule_cols)
-    if return_disallowed:
-        disallowed = gated.filter(~F.col("robots_allowed")).drop("robots_allowed", *rule_cols)
-        return sched, disallowed
-    return sched

@@ -232,20 +232,14 @@ def frontier_process_batch(
     else:
         novel = ident
     novel = novel.cache()
-    sched, disallowed = politeness.schedule_round(
-        novel,
-        robots,
-        default_budget=default_budget,
-        n_salts=n_salts,
-        return_disallowed=True,
-    )
-    sched = sched.cache()
+    # processed = scheduled (host_rank 1..budget) ∪ robots-retired
+    # (host_rank NULL); both leave the backlog and enter the seen set
+    processed = politeness.process_round(
+        novel, robots, default_budget=default_budget, n_salts=n_salts
+    ).cache()
+    sched = processed.filter(F.col("host_rank").isNotNull())
     ckpt.write(sched, "scheduled", batch_id)
-    handled = (
-        sched.select("domain_hash", "url_hash")
-        .unionByName(disallowed.select("domain_hash", "url_hash"))
-        .cache()
-    )
+    handled = processed.select("domain_hash", "url_hash")
     compacting = compact_every > 0 and batch_id > 0 and batch_id % compact_every == 0
     if compacting and seen is not None:
         # fold the whole history into this round's seen table; older
@@ -260,8 +254,7 @@ def frontier_process_batch(
     )
     ckpt.write(leftover, "carryover", batch_id)
     n_sched = sched.count()
-    handled.unpersist()
-    sched.unpersist()
+    processed.unpersist()
     novel.unpersist()
     if _die_before_marker:
         raise RuntimeError("simulated kill before commit marker")

@@ -281,7 +281,7 @@ def gen_robots_pdf(n_hosts: int, seed: int = 42) -> pd.DataFrame:
 
 def gen_robots(spark, n_hosts: int, seed: int = 42):
     pdf = gen_robots_pdf(n_hosts, seed)
-    # schedule_round's gate join requires one row per host (a duplicate
+    # process_round's gate join requires one row per host (a duplicate
     # would fan out candidates into duplicate seen identities)
     assert pdf["host"].is_unique, "robots table must have one row per host"
     # nullable Int64 → object ints/None: Spark's NON-arrow fallback

@@ -1,6 +1,6 @@
 """robots.txt parsing and rules-table construction."""
 
-import pandas as pd
+import pytest
 
 from ccspark import politeness
 
@@ -38,21 +38,15 @@ def test_parse_robots_edge_cases():
     assert dis == ["/x"]
 
 
-def test_robots_table_from_fetches(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "host": ["a.com", "b.com", "c.com"],
-                "robots_txt": [ROBOTS, "User-agent: *\nDisallow: /q\n", None],
-            }
-        )
-    )
-    out = politeness.robots_table_from_fetches(df).toPandas().set_index("host")
-    assert list(out.loc["a.com", "disallow_prefixes"]) == ["/private", "/tmp/"]
-    assert out.loc["a.com", "crawl_delay_ms"] == 2000
-    assert list(out.loc["b.com", "disallow_prefixes"]) == ["/q"]
-    assert pd.isna(out.loc["b.com", "crawl_delay_ms"])
-    assert list(out.loc["c.com", "disallow_prefixes"]) == []
+def test_parse_robots_allow_line_closes_group():
+    # an Allow line ends the user-agent group like any rule line: the
+    # next User-agent starts a new group instead of joining this one
+    allow_us = "User-agent: ccspark\nAllow: /\n\nUser-agent: *\nDisallow: /\n"
+    assert politeness.parse_robots_txt(allow_us, "ccspark") == ([], None)
+    assert politeness.parse_robots_txt(allow_us, "other") == (["/"], None)
+    two = "User-agent: a\nAllow: /x\nUser-agent: b\nDisallow: /y\n"
+    assert politeness.parse_robots_txt(two, "a") == ([], None)
+    assert politeness.parse_robots_txt(two, "b") == (["/y"], None)
 
 
 # ---------------------------------------------------------------------------
@@ -121,7 +115,7 @@ def test_robots_allow_rfc_catalyst(spark):
     df = spark.createDataFrame(
         [(h, p) for h, p, _ in paths], "host string, path string"
     )
-    out = politeness.robots_allow_rfc(df, rules)
+    out = politeness.robots_allow(df, rules)
     got = {(r["host"], r["path"]) for r in out.select("host", "path").collect()}
     for h, p, want in paths:
         assert ((h, p) in got) == want, (h, p)
@@ -132,9 +126,18 @@ def test_robots_allow_rfc_catalyst(spark):
             assert politeness.robots_decision(p, rules_scalar) == want, p
 
 
-def test_schedule_round_rfc_mode(spark):
-    from pyspark.sql import functions as F
+def test_robots_gate_rejects_unknown_table(spark):
+    df = spark.createDataFrame([("a.com", "/x")], "host string, path string")
+    bad = spark.createDataFrame(
+        [("a.com", 1000, None)], "host string, crawl_delay_ms long, max_fetches_per_round int"
+    )
+    with pytest.raises(ValueError, match="disallow_prefixes.*rules"):
+        politeness.robots_gate(df, bad)
 
+
+def test_process_round_rules_table(spark):
+    """process_round over an RFC 9309 rules table: the gate follows the
+    table's columns, no mode argument."""
     robots_src = spark.createDataFrame(
         [("a.com", RFC_ROBOTS), ("b.com", None)], "host string, robots_txt string"
     )
@@ -149,37 +152,30 @@ def test_schedule_round_rfc_mode(spark):
         ],
         "canonical_url string, priority double, domain_hash long, url_hash long",
     )
-    sched, disallowed = politeness.schedule_round(
-        cands, rules, default_budget=10, n_salts=4,
-        return_disallowed=True, robots_mode="rfc",
-    )
-    got = {r["canonical_url"] for r in sched.collect()}
+    proc = politeness.process_round(cands, rules, default_budget=10, n_salts=4).collect()
+    sched = [r for r in proc if r["host_rank"] is not None]
+    got = {r["canonical_url"] for r in sched}
     assert got == {
         "http://a.com/private/public/x",   # longer Allow wins
         "http://a.com/downloads/ok.pdf",   # longer Allow wins
         "http://b.com/anything",           # no rules -> allow
     }
-    dis = {r["canonical_url"] for r in disallowed.collect()}
+    dis = {r["canonical_url"] for r in proc if r["host_rank"] is None}
     assert dis == {"http://a.com/private/x", "http://a.com/doc.pdf"}
     # per-host ranks are dense from 1
-    ranks = [(r["host"], r["host_rank"]) for r in sched.collect()]
+    ranks = [(r["host"], r["host_rank"]) for r in sched]
     assert ("b.com", 1) in ranks
+    assert sorted(rk for h, rk in ranks if h == "a.com") == [1, 2]
 
 
-def test_process_round_equals_schedule_round_union(spark):
-    """process_round (single-pass) ≡ schedule_round + disallowed union:
-    same scheduled rows and ranks, same retired identities, and
-    allowed-but-over-budget rows absent from both."""
-    import numpy as np
-
-    from ccspark import synth
-    from ccspark import functions as CF
+def _seed_candidates(spark, n_seeds: int, n_hosts: int):
     from pyspark.sql import functions as F
 
-    n_hosts = 40
-    robots = synth.gen_robots(spark, n_hosts, 42)
-    raw = synth.gen_seeds(spark, 3000, n_hosts, 42)
-    cands = (
+    from ccspark import functions as CF
+    from ccspark import synth
+
+    raw = synth.gen_seeds(spark, n_seeds, n_hosts, 42)
+    return (
         CF.with_canonical_urlfp(raw)
         .filter("url_valid")
         .groupBy("domain_hash", "url_hash")
@@ -189,27 +185,71 @@ def test_process_round_equals_schedule_round_union(spark):
             F.max("priority").alias("priority"),
         )
     )
-    sched, disallowed = politeness.schedule_round(
-        cands, robots, default_budget=3, n_salts=4, return_disallowed=True
+
+
+def test_process_round_layout_equals_plain(spark):
+    """The frontier's layout_partitions form of process_round and the
+    plain form (streaming, pipeline, q_schedule_round) dispose of the
+    same rows: same scheduled (host, host_rank, url) and same retired
+    identities, with allowed-but-over-budget rows absent from both."""
+    from ccspark import synth
+
+    n_hosts = 40
+    robots = synth.gen_robots(spark, n_hosts, 42)
+    cands = _seed_candidates(spark, 3000, n_hosts)
+
+    def _split(proc):
+        rows = proc.collect()
+        sched = {
+            (r["host"], r["host_rank"], r["canonical_url"]) for r in rows if r["host_rank"] is not None
+        }
+        retired = {(r["domain_hash"], r["url_hash"]) for r in rows if r["host_rank"] is None}
+        return sched, retired, len(rows)
+
+    plain = _split(politeness.process_round(cands, robots, default_budget=3, n_salts=4))
+    laid = _split(
+        politeness.process_round(cands, robots, default_budget=3, n_salts=4, layout_partitions=7)
     )
-    proc = politeness.process_round(cands, robots, default_budget=3, n_salts=4)
-
-    want_sched = {
-        (r["host"], r["host_rank"], r["canonical_url"]) for r in sched.collect()
-    }
-    got_sched = {
-        (r["host"], r["host_rank"], r["canonical_url"])
-        for r in proc.filter(F.col("host_rank").isNotNull()).collect()
-    }
-    assert got_sched == want_sched and len(want_sched) > 0
-
-    want_retired = {(r["domain_hash"], r["url_hash"]) for r in disallowed.collect()}
-    got_retired = {
-        (r["domain_hash"], r["url_hash"])
-        for r in proc.filter(F.col("host_rank").isNull()).collect()
-    }
-    assert got_retired == want_retired and len(want_retired) > 0
-
+    assert laid[0] == plain[0] and len(plain[0]) > 0
+    assert laid[1] == plain[1] and len(plain[1]) > 0
     # over-budget rows are in neither output
-    n_cands = cands.count()
-    assert proc.count() < n_cands
+    assert laid[2] == plain[2] < cands.count()
+    # scheduled ranks are dense 1..n per host
+    per_host: dict = {}
+    for host, rank, _ in plain[0]:
+        per_host.setdefault(host, []).append(rank)
+    assert all(sorted(r) == list(range(1, len(r) + 1)) for r in per_host.values())
+
+
+def test_process_round_plan_shape(spark):
+    """The crawl_recrawl hot path's executed plan: robots broadcast to
+    the candidates (1 BroadcastExchange, no join shuffle), one exchange
+    per salted-rank stage, the second doubling as the checkpoint layout
+    (2 shuffle Exchanges, 2 Windows)."""
+    from pyspark.sql import functions as F
+
+    from ccspark import synth
+
+    parts = 4
+    robots = synth.gen_robots(spark, 20, 42)
+    hosts = [r["host"] for r in robots.select("host").collect()]
+    host_ix = (F.col("id") % len(hosts)).cast("int")
+    cands = spark.range(2000).select(
+        F.concat(
+            F.lit("http://"), F.element_at(F.array(*map(F.lit, hosts)), host_ix + 1),
+            F.when(F.col("id") % 3 == 0, F.lit("/private/p")).otherwise(F.lit("/p")),
+            F.col("id").cast("string"),
+        ).alias("canonical_url"),
+        ((F.col("id") * 37 % 100) / 100.0).alias("priority"),
+        host_ix.cast("long").alias("domain_hash"),
+        (F.col("id") * 7919).alias("url_hash"),
+    )
+    df = politeness.process_round(
+        cands, robots, 3, 60_000, 4, broadcast_robots=True, layout_partitions=parts
+    )
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # AQE prints both
+    ops = [line.lstrip(" :+-*()0123456789") for line in final.splitlines()]
+    count = {k: sum(o.startswith(k) for o in ops) for k in ("Exchange ", "BroadcastExchange ", "Window [")}
+    assert count == {"Exchange ": 2, "BroadcastExchange ": 1, "Window [": 2}, final
