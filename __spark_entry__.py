@@ -26,16 +26,22 @@ _LOAD_CACHE: dict = {}
 
 
 def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet relation per (session, sf_dir, table), memoized.
+    """Parquet relation per (application, sf_dir, table), memoized.
 
     spark.read.parquet() pays ~70-95 ms of file listing + footer schema
     inference PER CALL; across a 12-query bench pass that metadata work
     alone is >1 s.  The memo returns the same DataFrame (metadata only —
     every action still scans the parquet; no data or results are
-    cached), which is what a catalog table would give for free."""
-    key = (spark, sf_dir, name)
+    cached), which is what a catalog table would give for free.  It is
+    keyed on the Spark application id, and a miss drops every other
+    application's entries, so a stopped session's DataFrames are not
+    kept alive."""
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, sf_dir, name)
     df = _LOAD_CACHE.get(key)
     if df is None:
+        for stale in [k for k in _LOAD_CACHE if k[0] != app_id]:
+            del _LOAD_CACHE[stale]
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         _LOAD_CACHE[key] = df
     return df

@@ -359,17 +359,17 @@ class CrawlFrontier:
         revisit_src = None
         if revisit_due:
             src_round = round_no - cfg.revisit_after
-            readable = True
-            if isinstance(ckpt, Checkpoint):  # cheap files-first probe, no JVM exception noise
+            # explicit existence probes: a source that exists but fails to
+            # read must fail the round, not silently drop its revisits
+            if isinstance(ckpt, Checkpoint):
                 src_dir = ckpt.table_dir("processed", src_round)
                 readable = os.path.isdir(src_dir) and Checkpoint._has_parquet(src_dir)
+            else:
+                readable = spark.catalog.tableExists(ckpt.table_dir("processed"))
             if readable:
-                try:
-                    df_src = ckpt.read(spark, "processed", src_round)
-                    if "root_domain_hash" in df_src.columns:
-                        revisit_src = df_src.filter(F.col("host_rank").isNotNull())
-                except Exception:  # noqa: BLE001 — missing/file-less round
-                    revisit_src = None
+                df_src = ckpt.read(spark, "processed", src_round)
+                if "root_domain_hash" in df_src.columns:
+                    revisit_src = df_src.filter(F.col("host_rank").isNotNull())
         if n_candidates == 0 and revisit_src is not None:
             # cheap probe (tiny job, only on drained rounds): a source
             # with zero scheduled rows means nothing to revisit either

@@ -3,6 +3,7 @@ must match DuckDB on the same parquet (row count + order-insensitive
 values), mirroring the external driver's CORRECTNESS gate at sf0.01."""
 
 import math
+from types import SimpleNamespace
 
 import duckdb
 import pytest
@@ -70,3 +71,27 @@ def test_entry_runs(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert {"host", "n_urls", "n_rows"} <= set(df.columns)
+
+
+class _FakeSession:
+    """Just what ``_load`` touches: the application id and a parquet reader."""
+
+    def __init__(self, app_id):
+        self.sparkContext = SimpleNamespace(applicationId=app_id)
+        self.read = SimpleNamespace(parquet=lambda path: SimpleNamespace(path=path))
+
+
+def test_load_cache_keyed_on_application_and_drops_stale(monkeypatch):
+    monkeypatch.setattr(entry_mod, "_LOAD_CACHE", {})
+    first = _FakeSession("app-1")
+    df = entry_mod._load(first, "/sf", "orders")
+    assert entry_mod._load(first, "/sf", "orders") is df
+    # a second session object of the same application shares the memo
+    assert entry_mod._load(_FakeSession("app-1"), "/sf", "orders") is df
+    entry_mod._load(first, "/sf", "lineitem")
+    assert len(entry_mod._LOAD_CACHE) == 2
+
+    # a new application's first miss evicts every entry of the old one
+    fresh = entry_mod._load(_FakeSession("app-2"), "/sf", "orders")
+    assert fresh is not df
+    assert set(entry_mod._LOAD_CACHE) == {("app-2", "/sf", "orders")}

@@ -298,6 +298,27 @@ def test_revisit_trace_matches_oracle(spark, tmp_path):
     )
 
 
+def test_revisit_source_read_error_fails_the_round(spark, tmp_path, monkeypatch):
+    """A due revisit round whose processed source exists but cannot be
+    read must raise and commit nothing, not run without its revisits."""
+    cfg = _cfg()
+    cfg.revisit_after = 2
+    fr = CrawlFrontier(spark, str(tmp_path / "ckpt_rv_err"), cfg)
+    fr.run(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED), 2)
+
+    real_read = fr.ckpt.read
+
+    def _read(spark_, name, round_no):
+        if name == "processed":
+            raise OSError(f"injected read failure: processed round {round_no}")
+        return real_read(spark_, name, round_no)
+
+    monkeypatch.setattr(fr.ckpt, "read", _read)
+    with pytest.raises(OSError, match="processed round 1"):
+        fr.run(None, 1)
+    assert fr.ckpt.last_committed_round() == 2
+
+
 def test_drained_frontier_recrawl_matches_oracle(spark, tmp_path):
     """links_per_fetch=0 drains the frontier after round 1; with
     revisit_after=2 the engine idles through the gap round and re-runs
