@@ -4,9 +4,8 @@
     python BENCH/worker_tax_ab.py --parent <checkout> --change <checkout> \\
         --seeds 701 702 703 --out BENCH/worker_tax_ab.json
 
-For every seed and workload it runs ``crawlbench/run.py`` once in each
-checkout, alternating which side goes first, and records the end-to-end
-metrics.  Before and after those runs it times, in each checkout, a
+The interleaved crawlbench pairs and their summary come from
+``ab_pairs.py``.  Before and after those runs it times, in each checkout, a
 10-row ``mapInPandas`` job on a warm session whose UDF imports ccspark:
 ``job_s`` is launch to result, ``udf_start_s`` is launch to the UDF's
 first line, both medians over REPS jobs on the same worker processes.
@@ -23,8 +22,8 @@ import statistics
 import subprocess
 import sys
 
-WORKLOADS = ("crawl_recrawl", "corpus_queries")
-METRICS = ("setup_s", "op_s", "rows_per_s")
+import ab_pairs
+
 REPS = 15
 
 
@@ -72,27 +71,6 @@ def _micro_in(root: str) -> dict:
     return json.loads(res.stdout.strip().splitlines()[-1])
 
 
-def _bench_in(root: str, workload: str, seed: int) -> dict:
-    res = subprocess.run([sys.executable, "crawlbench/run.py", "--workload", workload, "--seed", str(seed),
-                          "--seconds", "10", "--trace", "0"], cwd=root, capture_output=True, text=True, check=True)
-    out = json.loads(res.stdout.strip().splitlines()[-1])
-    row = {k: out[k] for k in ("correct", "attempted", "failed")}
-    row.update({m: round(out["metrics"][m]["value"], 4) for m in METRICS})
-    return row
-
-
-def _summary(runs: list[dict]) -> dict:
-    out = {}
-    for wl in WORKLOADS:
-        for m in METRICS:
-            side = {s: [r[m] for r in runs if r["workload"] == wl and r["side"] == s] for s in ("parent", "change")}
-            p, c = statistics.median(side["parent"]), statistics.median(side["change"])
-            q = statistics.quantiles(side["parent"], n=4) if len(side["parent"]) > 1 else [p, p, p]
-            out[f"{wl}.{m}"] = {"parent_median": round(p, 4), "change_median": round(c, 4),
-                                "rel": round(c / p - 1, 4), "parent_iqr": round(q[2] - q[0], 4)}
-    return out
-
-
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--micro")
@@ -106,17 +84,11 @@ def main() -> int:
         print(json.dumps(micro()))
         return 0
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
-    record = {"micro": {s: [_micro_in(r)] for s, r in sides.items()}, "runs": []}
-    for i, seed in enumerate(args.seeds):
-        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        for wl in WORKLOADS:
-            for s in order:
-                row = {"side": s, "workload": wl, "seed": seed, **_bench_in(sides[s], wl, seed)}
-                print(json.dumps(row), file=sys.stderr)
-                record["runs"].append(row)
+    record = {"micro": {s: [_micro_in(r)] for s, r in sides.items()}}
+    record["runs"] = ab_pairs.run_pairs(sides, args.seeds)
     for s in ("change", "parent"):
         record["micro"][s].append(_micro_in(sides[s]))
-    record["summary"] = _summary(record["runs"])
+    record["summary"] = ab_pairs.summary(record["runs"])
     text = json.dumps(record, indent=1)
     if args.out:
         with open(args.out, "w") as fh:

@@ -3,17 +3,24 @@ tables with per-partition lineage and deterministic resume.
 
 Round shape (north_rule; SURVEY.md §7 step 7):
 
-    frontier ──gate_new_storage (bloom/cuckoo + exact confirm)──▶ novel
-    novel ──robots + crawl-delay budget + salted rank──▶ processed
+    frontier (∪ due revisits) ──robots + crawl-delay budget + salted
+              rank──▶ processed
               (= scheduled rows ∪ robots-retired rows; host_rank NULL
                marks retirement — ONE table, so the seen delta is just
                its identity columns and needs no write of its own)
     scheduled ──deterministic fetch simulation──▶ discovered links
     seen     = processed identities across rounds (derived, not stored)
-    frontier' = (novel − processed) ∪ (links − seen), max-priority merge
-    lineage  += per-partition row (emitted / deduped / budget),
+    frontier' = gate_new_storage(dedup(frontier ∪ links)) against the
+               round's filters + seen set (bloom/cuckoo + exact confirm),
+               max-priority merge, optional per-host cap
+    lineage  += per-partition row (emitted / budget),
                collected to the driver and written with pyarrow
     checkpoint all tables, commit manifest atomically
+
+Gate once: the links gate is the only gate.  It writes frontier/round=k
+against filters/round=k and the seen set through k, and round k+1
+reads that table as its candidates without re-gating them — they are
+novel by construction (ARCHITECTURE §1 lists the write paths).
 
 Determinism: every ordering is total — (priority DESC, domain_hash,
 url_hash) — so the scheduled trace is invariant to partition count and
@@ -30,17 +37,16 @@ decay per hop (0.8) so the frontier drains.
 STORAGE-PARTITIONED STATE (the 100×-scale design): every state table
 (frontier, processed, filters) is written Hive-partitioned by
 ``partition_id = pmod(domain_hash, P)`` — one file per partition per
-round — and the novelty gate, the links gate, and the per-round filter
-update all read their state WORKER-SIDE with partition pruning
-(seenstore.py).  The crawl history and the filter blobs therefore
-never enter a Spark Exchange: per round the only shuffles are
-delta-sized (politeness windows, the leftover anti-join, the
-next-frontier identity dedup, one repartition that keeps the
-one-file-per-partition layout).  The r3 design re-shuffled the full
-seen set into the gate every round (cogroup state side + the links
-anti-join) — at 10^10 URLs that one history-sized shuffle per round
-dominates everything; here it is gone, and the per-round seen-set I/O
-is O(delta) thanks to seenstore's incremental per-worker cache.
+round — and the links gate and the per-round filter update read their
+state WORKER-SIDE with partition pruning (seenstore.py).  The crawl
+history and the filter blobs therefore never enter a Spark Exchange:
+per round the only shuffles are delta-sized (politeness windows, the
+next-frontier identity dedup, the optional per-host cap).  The r3
+design re-shuffled the full seen set into the gate every round (cogroup
+state side + the links anti-join) — at 10^10 URLs that one
+history-sized shuffle per round dominates everything; here it is gone,
+and the per-round seen-set I/O is O(delta) thanks to seenstore's
+incremental per-worker cache.
 Reference analog: shard-stable part files keyed by shard id
 (Query.java:1080-1082).
 """
@@ -104,6 +110,10 @@ def dedup_by_identity(df: DataFrame, num_partitions: int) -> DataFrame:
 
 
 def _lineage_arrow_schema():
+    """One row per partition with scheduled rows.  ``urls_deduped`` is
+    written as 0: the round's candidates are never re-gated (they passed
+    the previous round's links gate), and the column is reserved for
+    the links gate's per-partition drop count."""
     import pyarrow as pa
 
     return pa.schema(
@@ -161,8 +171,8 @@ class FrontierConfig:
         )
         # revisit scheduling (recrawl): URLs scheduled in round r re-enter
         # the candidate stream at round r + revisit_after with decayed
-        # priority, INJECTED AFTER the novelty gate (they are in the seen
-        # set by design — the gate's semantics stay exact for discovery).
+        # priority.  No gate runs on the candidates: revisits are in the
+        # seen set by design, and only new links pass the (links) gate.
         # Revisits compete under the same robots/budget politeness; a
         # revisit squeezed out by budget skips that cycle (each processed
         # round is re-offered exactly once).  None = no recrawl.
@@ -301,13 +311,15 @@ class CrawlFrontier:
     def run_round(self, round_no: int) -> dict:
         """Execute one crawl round (round_no >= 1); returns metrics.
 
-        Action budget (the per-round fixed cost at production scale):
-        exactly THREE write jobs — processed (scheduled ∪ robots-retired,
-        one table so the seen delta needs no write of its own), frontier,
-        filters — plus one tiny collect for the per-partition lineage
-        rows, which land via a driver-side pyarrow write.  All row
-        counts come from Observations attached to those same actions; no
-        separate .count()/.toPandas() jobs and no post-write re-reads."""
+        Actions: three writes — processed (scheduled ∪ robots-retired,
+        one table so the seen delta needs no write of its own), filters,
+        frontier — plus the dedup's eager localCheckpoint and one small
+        collect for the per-partition lineage rows, which land via a
+        driver-side pyarrow write.  With AQE's per-stage jobs and the
+        checkpoint reads' schema inference a steady round runs about
+        13.5 Spark jobs (ARCHITECTURE §1).  All row counts come from
+        Observations attached to those same actions; no separate
+        .count()/.toPandas() jobs and no post-write re-reads."""
         import os
         import time as _time
 
@@ -333,13 +345,12 @@ class CrawlFrontier:
 
         spark, cfg, ckpt = self.spark, self.cfg, self.ckpt
         prev = round_no - 1
-        # state location for the storage-partitioned gates (zero
-        # Exchange on any state table): the parquet backend's root, or
-        # the catalog backend's file manifest enumerated from Iceberg
-        # metadata — re-read after each state write so later gates see
-        # the new files.  A catalog table without the partition_id
-        # layout raises here, before the round writes anything.
-        loc = ckpt.state_location()
+        # the state location (parquet root, or the catalog backend's file
+        # manifest) is read where the filters update and the links gate
+        # need it, after the state writes they depend on; this first read
+        # only validates the layout: a catalog table without the
+        # partition_id layout raises here, before the round writes anything
+        ckpt.state_location()
 
         # empty-frontier check BEFORE the read: a drained frontier's
         # partitioned write has no data files, so the scan can't infer a
@@ -384,7 +395,6 @@ class CrawlFrontier:
             return {
                 "round": round_no,
                 "candidates": 0,
-                "novel": 0,
                 "scheduled": 0,
                 "frontier_size": 0,
             }
@@ -397,35 +407,18 @@ class CrawlFrontier:
                 "root_domain_hash long, priority double, discovered_round int",
             )
         else:
-            # cached: the candidate table feeds both the novelty gate and
-            # the lineage tagged-union — without the cache the lineage job
-            # re-scans the parquet (one extra full read per round)
-            frontier = ckpt.read(spark, "frontier", prev).cache()
-
-        # novelty gate: bloom/cuckoo pre-screen + exact confirm.  The
-        # frontier table is stored partition-clustered, so the storage
-        # gate's tasks each touch ~1 partition's filter blob and (for
-        # bloom false positives only) that partition's seen arrays —
-        # no Exchange anywhere.
-        obs_novel = None
-        if n_candidates == 0:
-            # recrawl-only round: no gate and NO Observation — Catalyst
-            # collapses a filter over an empty LocalRelation and prunes
-            # the CollectMetrics node, which would leave Observation.get
-            # blocked forever
-            novel = frontier.cache()
-        else:
-            obs_novel = Observation(f"novel_{round_no}")
-            gated = seenset.gate_new_storage(
-                frontier.select(*FRONTIER_COLS), loc, prev, prev, cfg.num_partitions
-            )
-            novel = gated.observe(obs_novel, F.count(F.lit(1)).alias("n")).cache()
+            # no gate here: round k-1's links gate already wrote this table
+            # against filters/round=k-1 and the seen set through k-1, the
+            # same state a round-start gate would probe, so every row is
+            # novel (the gate-once invariant, ARCHITECTURE §1).  Cached:
+            # it feeds both the processed write and the next-frontier dedup
+            frontier = ckpt.read(spark, "frontier", prev).select(*FRONTIER_COLS).cache()
 
         # revisit injection (recrawl): the round processed revisit_after
-        # rounds ago re-enters the candidate stream AFTER the gate (those
-        # identities are seen — bypassing the gate is the point), with
-        # decayed priority, under the same politeness as everything else.
-        candidates_in = novel
+        # rounds ago re-enters the candidate stream (those identities are
+        # seen; the candidates are not gated, so they pass), with decayed
+        # priority, under the same politeness as everything else.
+        candidates_in = frontier
         if revisit_src is not None:
             revisit = revisit_src.select(
                 "url",
@@ -436,7 +429,7 @@ class CrawlFrontier:
                 (F.col("priority") * cfg.revisit_decay).alias("priority"),
                 F.lit(round_no).alias("discovered_round"),
             )
-            candidates_in = novel.unionByName(revisit.select(*FRONTIER_COLS))
+            candidates_in = frontier.unionByName(revisit.select(*FRONTIER_COLS))
 
         # politeness: robots + budgets + salted per-host rank, ONE linear
         # plan producing the round's processed table = scheduled rows
@@ -498,7 +491,7 @@ class CrawlFrontier:
         # FUSED into one python pass (one Arrow hop; link strings cross
         # the boundary once).  Identity columns WITHOUT the per-links
         # groupBy — the next-frontier aggregation below dedups (min url /
-        # max priority) over novel ∪ links in ONE shuffle instead of
+        # max priority) over frontier ∪ links in ONE shuffle instead of
         # two.
         def _expand_ident(batches):
             from . import urls as urls_mod
@@ -544,25 +537,16 @@ class CrawlFrontier:
         )
 
         # lineage aggregate launched NOW on a driver thread (overlapping
-        # independent jobs): it reads only the caches action 1 just
-        # filled (frontier, novel, processed), so it can run
-        # concurrently with the filters and frontier writes below and its
-        # tasks back-fill their stage tails; the result is joined before
-        # the commit.  Content is unchanged — only the schedule moved.
+        # independent jobs): it reads only the processed cache action 1
+        # just filled, so it can run concurrently with the filters and
+        # frontier writes below and its tasks back-fill their stage
+        # tails; the result is joined before the commit.
         from concurrent.futures import ThreadPoolExecutor
 
-        pid = F.pmod(F.col("domain_hash"), F.lit(cfg.num_partitions)).cast("int")
-        tagged = (
-            frontier.select(pid.alias("partition_id"), F.lit("cand").alias("t"), "domain_hash")
-            .unionByName(novel.select(pid.alias("partition_id"), F.lit("novel").alias("t"), "domain_hash"))
-            .unionByName(scheduled.select(pid.alias("partition_id"), F.lit("sched").alias("t"), "domain_hash"))
-        )
-        lineage_agg = tagged.groupBy("partition_id").agg(
-            F.count(F.when(F.col("t") == "cand", 1)).alias("n_candidates"),
-            F.count(F.when(F.col("t") == "novel", 1)).alias("n_novel"),
-            F.count(F.when(F.col("t") == "sched", 1)).alias("urls_emitted"),
-            F.min(F.when(F.col("t") == "sched", F.col("domain_hash"))).alias("hash_range_start"),
-            F.max(F.when(F.col("t") == "sched", F.col("domain_hash"))).alias("hash_range_end"),
+        lineage_agg = scheduled.groupBy("partition_id").agg(
+            F.count(F.lit(1)).alias("urls_emitted"),
+            F.min("domain_hash").alias("hash_range_start"),
+            F.max("domain_hash").alias("hash_range_end"),
         )
         # the pool's exit (shutdown(wait=True)) joins both background
         # jobs on EVERY path out of the round: a failure in the main
@@ -598,10 +582,10 @@ class CrawlFrontier:
             # links gate + next frontier: dedup FIRST, gate AFTER.  The
             # identity dedup's one Exchange (by partition_id) already
             # lands rows clustered exactly the way the storage gate wants
-            # them, so the DEDUPED union (novel ∪ links) is gated against
+            # them, so the DEDUPED union (frontier ∪ links) is gated against
             # the just-augmented round-k filters with zero extra shuffles:
             # round-k filters contain the processed delta, so the gate
-            # itself retires just-processed novel rows, and it runs over
+            # itself retires just-processed frontier rows, and it runs over
             # post-dedup rows (fewer).  Equivalence with gating links and
             # anti-joining the delta before the dedup: for any identity,
             # either it is seen through round k (every one of its rows is
@@ -614,7 +598,7 @@ class CrawlFrontier:
             # so its job runs CONCURRENTLY with the threaded filters write
             # above; only the gate must wait for the round-k blobs.
             merged = dedup_by_identity(
-                novel.select(*FRONTIER_COLS).unionByName(links.select(*FRONTIER_COLS)),
+                frontier.unionByName(links),
                 cfg.num_partitions,
             ).localCheckpoint()
             filters_fut.result()  # round-k blobs are on disk past this point
@@ -635,7 +619,7 @@ class CrawlFrontier:
             ckpt.write(next_frontier, "frontier", round_no, partition_by=["partition_id"])  # action 3
             _mark("frontier_write")
 
-            # lineage: per-partition commit record — the tagged-union job
+            # lineage: per-partition commit record — the aggregate job
             # was launched right after action 1 (see above) and has been
             # running under the filters/frontier writes; join it and write
             # the ~num_partitions rows driver-side with pyarrow (no
@@ -649,7 +633,7 @@ class CrawlFrontier:
                         "hash_range_start": r["hash_range_start"],
                         "hash_range_end": r["hash_range_end"],
                         "urls_emitted": r["urls_emitted"],
-                        "urls_deduped": r["n_candidates"] - r["n_novel"],
+                        "urls_deduped": 0,  # reserved: see _lineage_arrow_schema
                         "fetch_budget_consumed": r["urls_emitted"],
                     }
                     for r in sorted(lineage_rows, key=lambda r: r["partition_id"])
@@ -669,12 +653,9 @@ class CrawlFrontier:
 
             # counts come from the Observations filled by the write
             # actions — no extra jobs
-            n_novel = int(obs_novel.get["n"]) if obs_novel is not None else 0
             n_scheduled = int(obs_proc.get["n_sched"])
             n_frontier = int(obs_frontier.get["n"])
-            novel.unpersist()
-            if n_candidates > 0:
-                frontier.unpersist()
+            frontier.unpersist()
             processed.unpersist()
 
             ckpt.commit_round(
@@ -685,7 +666,6 @@ class CrawlFrontier:
         return {
             "round": round_no,
             "candidates": n_candidates,
-            "novel": n_novel,
             "scheduled": n_scheduled,
             "frontier_size": n_frontier,
         }

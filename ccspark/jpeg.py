@@ -109,13 +109,6 @@ def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]
     return codes
 
 
-def _extend(v: int, t: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map t-bit amplitude to signed value."""
-    if t == 0:
-        return 0
-    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
 def _build_lut16(bits: list[int], vals: list[int]) -> list[int]:
     """(BITS, HUFFVAL) → flat 2^16 lookup: entry = (codelen << 8) | symbol
     for every 16-bit word starting with that code; 0 = invalid.  One

@@ -96,13 +96,6 @@ def encode_png(arr: np.ndarray, row_filters=None) -> bytes:
     )
 
 
-def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    p = a.astype(np.int32) + b.astype(np.int32) - c.astype(np.int32)
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    out = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-    return out.astype(np.uint8)
-
-
 def _reconstruct_filters(
     lines: np.ndarray, ftypes: np.ndarray, width: int, bpp: int
 ) -> np.ndarray:

@@ -103,10 +103,6 @@ def truncate_mime_type(content_type: str | None) -> str:
     return m.group(2)
 
 
-def normalize_mime_type(mime: str | None) -> str:
-    return truncate_mime_type(mime).lower()
-
-
 def _html_or_text_from_parts(sub: str) -> str | None:
     m = _LEFT_RIGHT_RE.fullmatch(sub)
     if m is None:

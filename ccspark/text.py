@@ -79,12 +79,6 @@ def sniff_charset(content: bytes) -> str | None:
     return None
 
 
-def detect_charset(content: bytes) -> str | None:
-    """Faithful jchardet-backed detector — port of
-    CharsetUtils.detectCharacterEncoding (see ccspark.chardet)."""
-    return chardet.detect_character_encoding(content)
-
-
 def decode_html(raw: bytes | None) -> tuple[str | None, bool]:
     """Full decode pipeline → (unicode_html, was_truncated).
 

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StringType
 
-from . import hashing
 
 # ---------------------------------------------------------------------------
 # language id — deterministic charset/stopword heuristic
@@ -92,25 +91,6 @@ def quality_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE-ish token estimate — regex word/number/punct split, pure Catalyst
-# ---------------------------------------------------------------------------
-
-_BPE_RE = r"[A-Za-z]+|[0-9]{1,3}|[^A-Za-z0-9\s]"
-
-
-def bpe_token_estimate(text_col: str | Column) -> Column:
-    """Approximate subword count: words cost ceil(len/4), numbers and
-    punctuation 1 each (a BPE-shaped estimator in pure SQL functions)."""
-    words = F.expr(f"regexp_extract_all({text_col if isinstance(text_col, str) else '___'}, '{_BPE_RE}', 0)")
-    return F.aggregate(
-        words,
-        F.lit(0),
-        lambda acc, w: acc
-        + F.when(w.rlike("^[A-Za-z]+$"), F.ceil(F.length(w) / 4)).otherwise(F.lit(1)).cast("int"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # winnowing fingerprint — rolling Rabin-style hash + window minima
 # ---------------------------------------------------------------------------
 
@@ -141,12 +121,6 @@ def winnow_fingerprints(text: str | None, k: int = 8, window: int = 16) -> list[
 @pandas_udf(ArrayType(LongType()))
 def doc_fingerprints(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: winnow_fingerprints(t))
-
-
-@pandas_udf(LongType())
-def fp64_text(texts: pd.Series) -> pd.Series:
-    """Whole-document Rabin FP64 (content signature, MD5Signature analog)."""
-    return pd.Series(hashing.fp64_utf16(texts.tolist()), index=texts.index)
 
 
 def repetition_stats(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:

@@ -57,13 +57,17 @@ def replay(
     revisit_after=None,
     revisit_decay=0.5,
     robots=None,
+    max_frontier_per_host=None,
 ):
     """Returns (trace, seen): trace = set of (round, host, host_rank,
     canonical_url); seen = set of (domain_hash, url_hash).
 
     ``revisit_after`` mirrors FrontierConfig: round r's scheduled rows
     re-enter the candidate pool at round r+revisit_after with decayed
-    priority, competing under the same robots/budget politeness."""
+    priority, competing under the same robots/budget politeness.
+    ``max_frontier_per_host`` mirrors the FrontierConfig cap: each
+    host's next-frontier queue keeps its first rows in the frontier
+    total order (priority DESC, domain_hash, url_hash)."""
     import pandas as pd
 
     # seeds: ids % 23 == 0, urls + priorities as in synth.gen_seeds
@@ -155,7 +159,15 @@ def replay(
                 merged[k] = (min(mu, u), mc, max(mp, p), min(mr, r))
             else:
                 merged[k] = (u, c, p, r)
-        frontier = merged
+        if max_frontier_per_host is not None:
+            queued: dict[int, int] = {}
+            frontier = {}
+            for k in sorted(merged, key=lambda k: (-merged[k][2], k[0], k[1])):
+                if queued.get(k[0], 0) < max_frontier_per_host:
+                    queued[k[0]] = queued.get(k[0], 0) + 1
+                    frontier[k] = merged[k]
+        else:
+            frontier = merged
         if scheduled:
             last_sched_round = rnd
         # same idle rule as CrawlFrontier.run: a drained round only ends

@@ -201,18 +201,11 @@ def test_frontier_against_iceberg_catalog(tmp_path):
         pass  # session shared-ish; leave running
 
 
-def test_failed_round_joins_threads_and_resumes(spark, tmp_path, monkeypatch):
-    """A failure inside round 2, raised while the overlapped lineage and
-    filters writes run on the round's thread pool, must join those
-    threads before it propagates; resuming must then reproduce the
-    replay oracle exactly."""
-    import threading
-
+def _fail_next_dedup(monkeypatch) -> list:
+    """Make the next dedup_by_identity call raise (inside a round, while
+    the overlapped lineage and filters jobs run); later calls pass.
+    Returns a list that is non-empty once the failure fired."""
     import ccspark.frontier as frontier_mod
-
-    ckpt = str(tmp_path / "ckpt_fail")
-    fr = CrawlFrontier(spark, ckpt, _cfg())
-    fr.run(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED), 1)
 
     real_dedup = frontier_mod.dedup_by_identity
     failed = []
@@ -224,6 +217,21 @@ def test_failed_round_joins_threads_and_resumes(spark, tmp_path, monkeypatch):
         return real_dedup(*args, **kwargs)
 
     monkeypatch.setattr(frontier_mod, "dedup_by_identity", _fail_once)
+    return failed
+
+
+def test_failed_round_joins_threads_and_resumes(spark, tmp_path, monkeypatch):
+    """A failure inside round 2, raised while the overlapped lineage and
+    filters writes run on the round's thread pool, must join those
+    threads before it propagates; resuming must then reproduce the
+    replay oracle exactly."""
+    import threading
+
+    ckpt = str(tmp_path / "ckpt_fail")
+    fr = CrawlFrontier(spark, ckpt, _cfg())
+    fr.run(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED), 1)
+
+    failed = _fail_next_dedup(monkeypatch)
     with pytest.raises(RuntimeError, match="injected dedup failure"):
         fr.run(None, ROUNDS - 1)
     assert failed
@@ -474,3 +482,123 @@ def test_frontier_with_real_link_extraction(spark, tmp_path):
     # and the children resolved RELATIVE to their parent pages
     child = r2[r2["canonical_url"].str.contains("/child/2", regex=False)].iloc[0]
     assert child["canonical_url"].endswith("child/2?x=1&y=2")
+
+
+_EMPTY_ROBOTS = (
+    "host string, disallow_prefixes array<string>, crawl_delay_ms long, "
+    "max_fetches_per_round int"
+)
+
+# name → (FrontierConfig overrides, rounds, run with an empty robots table)
+_GATE_ONCE_CASES = {
+    "bootstrap": ({}, 0, False),
+    "bloom": ({}, ROUNDS, False),
+    "cuckoo": ({"filter_kind": "cuckoo"}, ROUNDS, False),
+    "per_host_cap": ({"max_frontier_per_host": 5}, ROUNDS, False),
+    "revisit": ({"revisit_after": 2}, 4, False),
+    # links_per_fetch=0 drains after round 1: rounds 2 and 4 copy the
+    # frontier forward, rounds 3 and 5 are recrawl-only
+    "drained_recrawl": (
+        {"revisit_after": 2, "links_per_fetch": 0, "default_budget": 500}, 5, True
+    ),
+    "resume_after_failure": ({}, ROUNDS, False),
+}
+
+
+@pytest.mark.parametrize("backend", ["parquet", "iceberg_stub"])
+@pytest.mark.parametrize("case", sorted(_GATE_ONCE_CASES))
+def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, case, backend):
+    """The gate-once invariant: every committed frontier/round=k already
+    excludes everything filters/round=k and the seen set through k
+    know, so re-gating it (what a round-start novelty gate would do at
+    round k+1) keeps every row.  Holds for the four ways a frontier
+    table is written: bootstrap, the links gate (with the optional
+    per-host cap, which only evicts) and the empty-round copy-forward;
+    revisits join after the gate and never land in the frontier.  The
+    crawl must also equal the replay oracle, which computes novelty on
+    its own."""
+    from ccspark import seenset
+
+    overrides, rounds, empty_robots = _GATE_ONCE_CASES[case]
+    cfg = _cfg()
+    for k, v in overrides.items():
+        setattr(cfg, k, v)
+    if backend == "iceberg_stub":
+        from iceberg_stub import install
+
+        install(monkeypatch, spark, "stubcat")
+        where = f"iceberg:stubcat.gate_once_{case}"
+    else:
+        where = str(tmp_path / case)
+    robots = spark.createDataFrame([], _EMPTY_ROBOTS) if empty_robots else None
+    fr = CrawlFrontier(spark, where, cfg, robots_df=robots)
+    sizes = {}
+
+    def on_round(m):
+        sizes[m["round"]] = m["frontier_size"]
+
+    seeds = synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED)
+    if case == "resume_after_failure":
+        fr.run(seeds, 1, on_round=on_round)
+        _fail_next_dedup(monkeypatch)
+        with pytest.raises(RuntimeError, match="injected dedup failure"):
+            fr.run(None, rounds - 1, on_round=on_round)
+        assert fr.ckpt.last_committed_round() == 1
+        fr.run(None, rounds - 1, on_round=on_round)
+    else:
+        fr.run(seeds, rounds, on_round=on_round)
+
+    upto = fr.ckpt.last_committed_round()
+    assert upto == rounds
+    loc = fr.ckpt.state_location()
+    for k in range(upto + 1):
+        if k > 0 and sizes[k] == 0:
+            continue  # a drained frontier has no rows (nor files) to re-gate
+        frame = fr.ckpt.read(spark, "frontier", k)
+        n = frame.count()
+        assert n > 0
+        kept = seenset.gate_new_storage(frame, loc, k, k, cfg.num_partitions).count()
+        assert kept == n, f"round {k}: re-gating dropped {n - kept} of {n} frontier rows"
+
+    exp_trace, exp_seen = replay(
+        UNIVERSE, N_HOSTS, SEED, upto, cfg.default_budget, ROUND_MS, cfg.links_per_fetch,
+        revisit_after=cfg.revisit_after,
+        robots={} if empty_robots else None,
+        max_frontier_per_host=cfg.max_frontier_per_host,
+    )
+    if upto == 0:
+        assert not exp_trace and not exp_seen
+        return
+    got_trace = {
+        (r["round"], r["host"], r["host_rank"], r["canonical_url"])
+        for r in fr.read_trace(upto).collect()
+    }
+    got_seen = {(r["domain_hash"], r["url_hash"]) for r in fr.read_seen(upto).collect()}
+    assert got_trace == exp_trace
+    assert got_seen == exp_seen
+
+
+def test_one_gate_call_per_round(spark, tmp_path, monkeypatch):
+    """Each URL identity is gated once: a non-empty round runs the
+    storage gate exactly once (the links gate), never again over the
+    frontier it reads."""
+    from ccspark import seenset
+
+    real_gate = seenset.gate_new_storage
+    calls = []
+
+    def _counting_gate(*args, **kwargs):
+        calls.append(args[2:4])  # (filters_round, seen_upto)
+        return real_gate(*args, **kwargs)
+
+    monkeypatch.setattr(seenset, "gate_new_storage", _counting_gate)
+    per_round = []
+    fr = CrawlFrontier(spark, str(tmp_path / "gate_calls"), _cfg())
+    metrics = fr.run(
+        synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED),
+        2,
+        on_round=lambda m: per_round.append(list(calls)),
+    )
+    assert all(m["candidates"] > 0 for m in metrics)
+    assert per_round == [[(1, 1)], [(1, 1), (2, 2)]]
+    assert all("novel" not in m for m in metrics)
