@@ -35,7 +35,6 @@ from datetime import datetime, timezone
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 ARC_GZIP_EXTRA_FIELD = bytes([8, 0, ord("L"), ord("X"), 4, 0, 0, 0, 0, 0])
 ARC_MAGIC = "filedesc://"
@@ -313,24 +312,3 @@ def scan_arc_stream(
         chunk_bytes=chunk_bytes,
         max_batch_rows=max_batch_rows,
     )
-
-
-def with_decoded_text(df: DataFrame) -> DataFrame:
-    """ARC records → + ``text`` column via the header-driven decode path
-    (CharsetUtils.bestEffortDecodeBytes semantics — header charset,
-    text/html meta-sniff override, jchardet detector fallback, full
-    aliasTable, U+FFFD-replacement decode; see ccspark.httpheaders).
-    Arrow-batched; per-record work is codec-level C calls."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from . import httpheaders as HH
-
-    def _decode_fn(headers, payload):
-        out = []
-        for h, p in zip(headers, payload):
-            out.append(HH.best_effort_decode_bytes(h, p))
-        return pd.Series(out, dtype=object)
-
-    _decode_text = pandas_udf(_decode_fn, "string")
-    return df.withColumn("text", _decode_text(F.col("headers"), F.col("payload")))

@@ -76,6 +76,20 @@ LINK_DECAY = 0.8
 
 FRONTIER_COLS_PID = FRONTIER_COLS + ["partition_id"]
 
+# the processed table (scheduled ∪ robots-retired rows) of the batch
+# round and of the streaming micro-batch; partition_id is the layout column
+PROCESSED_COLS = [
+    "round",
+    "host",
+    "host_rank",
+    "url",
+    "canonical_url",
+    "domain_hash",
+    "url_hash",
+    "root_domain_hash",  # keeps processed rows frontier-shaped (revisit source)
+    "priority",
+]
+
 
 def _pid_col(num_partitions: int):
     return F.pmod(F.col("domain_hash"), F.lit(num_partitions)).cast("int")
@@ -446,22 +460,11 @@ class CrawlFrontier:
             broadcast_robots=cfg.broadcast_robots,
             layout_partitions=cfg.num_partitions,
         )
-        sched_cols = [
-            "round",
-            "host",
-            "host_rank",
-            "url",
-            "canonical_url",
-            "domain_hash",
-            "url_hash",
-            "root_domain_hash",  # keeps processed rows frontier-shaped (revisit source)
-            "priority",
-        ]
         obs_proc = Observation(f"proc_{round_no}")
         processed = (
             proc_df.withColumn("round", F.lit(round_no))
             .withColumn("partition_id", _pid_col(cfg.num_partitions))
-            .select(*sched_cols, "partition_id")
+            .select(*PROCESSED_COLS, "partition_id")
             .observe(
                 obs_proc,
                 F.count(F.lit(1)).alias("n"),

@@ -1,11 +1,15 @@
 """Structured Streaming surface: streaming page ingest, watermarked
-de-duplication, windowed per-host counts, and a custom stateful
-per-host budget operator.
+de-duplication, windowed per-host counts, a custom stateful per-host
+budget operator, and the streaming crawl frontier.
 
 The reference is batch-only over immutable archives (SURVEY.md §2.7);
 the crawl loop becomes micro-batches here.  Late/re-discovered URLs are
 made idempotent exactly like the batch seen-set: ``dropDuplicates`` on
-the URLFPV2 composite key under a watermark, mirroring H4/H5.
+the URLFPV2 composite key under a watermark, mirroring H4/H5.  The
+streaming frontier makes the batch loop's seen-set decision with the
+batch loop's gate: every micro-batch passes ``seenset.gate_new_storage``
+(bloom pre-screen + exact confirm) against the stream's own processed
+and filters tables; there is no other gate.
 """
 
 from __future__ import annotations
@@ -135,49 +139,32 @@ def streaming_frontier(
     out_dir: str,
     default_budget: int = 10,
     n_salts: int = 8,
-    checkpoint_dir: str | None = None,
-    compact_every: int = 16,
+    *,
+    checkpoint_dir: str,
 ):
-    """Micro-batch crawl scheduler: the batch politeness pipeline run per
-    trigger with a PERSISTENT seen set, via foreachBatch.
-
-    Each micro-batch: canonicalize+fingerprint → union the carry-over
-    backlog from the previous batch → identity dedup → anti-join the
-    accumulated seen table → robots + budget + salted rank →
-    scheduled + seen delta + new backlog.  Allowed-but-over-budget novel
-    rows (host_rank > budget) are NOT lost: they land in the carry-over
-    backlog and re-enter the next trigger, matching the batch frontier
-    loop's leftover-returns-to-frontier semantics, so the stream's
-    output equals the batch loop's over the same drops even when
-    budgets bind.
-
-    State goes through the same Checkpoint backends as the batch loop
-    (``out_dir`` is a filesystem path → partitioned-parquet emulation,
-    or ``iceberg:<cat>.<ns>`` → catalog tables): per-batch table rounds
-    ``<table>/round=<batch_id>`` plus ONE atomic manifest commit per
-    batch carrying the batch lineage counts.  Delivery is exactly-once:
-    a batch is skipped iff the manifest already covers it; a retry of a
-    half-written batch overwrites its own partial rounds (deterministic
-    plans → identical output).
-
-    Every ``compact_every`` batches the seen deltas are folded into one
-    full-set round and older rounds pruned, so listing cost and
-    small-file count stay bounded on a long-running stream (Iceberg
-    backends skip the prune — compaction there is native table
-    maintenance)."""
+    """Micro-batch crawl scheduler: ``frontier_process_batch`` per
+    trigger, via foreachBatch, with its state under ``out_dir`` (a path
+    or ``iceberg:<cat>.<ns>``).  ``checkpoint_dir`` is required: on
+    Spark's temporary checkpoint a restarted query numbers its batches
+    from 0 again, and the exactly-once skip would drop the new data."""
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        frontier_process_batch(
-            batch_df, batch_id, robots, out_dir, default_budget, n_salts,
-            compact_every=compact_every,
-        )
+        frontier_process_batch(batch_df, batch_id, robots, out_dir, default_budget, n_salts)
 
-    writer = candidates.writeStream.foreachBatch(_process).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return (
+        candidates.writeStream.foreachBatch(_process)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
 
 
-_IDENT_COLS = ["url", "canonical_url", "priority", "domain_hash", "url_hash"]
+# Bloom capacity (keys per partition) of the stream's first filter
+# blobs; later batches OR into the blob they inherit, which carries its
+# own (k, m), so this fixes the geometry for the stream's life.  It only
+# sets the false-positive rate, i.e. how many candidates reach the exact
+# confirm: the gate stays exact at any fill.  2^16 keys at 10 bits per
+# key is an 80 KiB blob per partition.
+STREAM_BLOOM_CAPACITY = 1 << 16
 
 
 def frontier_process_batch(
@@ -188,92 +175,86 @@ def frontier_process_batch(
     default_budget: int = 10,
     n_salts: int = 8,
     _die_before_marker: bool = False,
-    compact_every: int = 16,
 ) -> None:
-    """One micro-batch of the streaming frontier (module-level so tests
-    can simulate retries and mid-batch kills directly).
-    ``_die_before_marker`` is a test hook: crash after the data writes
-    but before the manifest commit, as a killed executor would.
+    """One micro-batch of the streaming frontier, from the batch round's
+    pieces: identify (∪ the last committed carry-over) →
+    ``dedup_by_identity`` → ``gate_new_storage`` against the last
+    committed filters and processed rounds → ``process_round`` →
+    ``processed`` write (the seen delta) → filters update → carry-over
+    write (allowed-but-over-budget rows re-enter the next trigger, as the
+    batch loop's leftovers stay in its frontier) → one manifest commit.
 
-    Crash-safety of compaction: a compaction batch writes the FULL seen
-    set (prev ∪ delta) as its own seen round BEFORE the commit, and only
-    prunes older rounds AFTER the commit — a crash mid-prune leaves
-    subset-duplicate rounds behind, which is harmless (seen is a set)
-    and cleaned by the next compaction."""
-    import os
-    import shutil
+    Exactly-once: a committed batch is skipped; a retried batch reads
+    only committed state and overwrites its own partial rounds with
+    identical output.  Batch ids run 0, 1, 2, ... (the filter update ORs
+    into the previous batch's blobs); any other id raises ValueError.
+    The partition count P is the default parallelism at batch 0, kept in
+    the manifest for the life of the stream.  ``_die_before_marker`` is
+    a test hook: crash after the data writes, before the commit."""
+    from pyspark.sql import Observation
 
-    from . import politeness
+    from . import politeness, seenset
     from .catalog import make_checkpoint
+    from .frontier import FRONTIER_COLS, PROCESSED_COLS, dedup_by_identity
 
-    spark_l = batch_df.sparkSession
-    ckpt = make_checkpoint(spark_l, out_dir)
-    last = ckpt.last_committed_round()
+    spark = batch_df.sparkSession
+    ckpt = make_checkpoint(spark, out_dir)
+    manifest = ckpt.read_manifest()
+    last = None if manifest is None else int(manifest["round"])
     if last is not None and last >= batch_id:
-        return  # retried but fully committed batch → exactly-once skip
-
-    ident = CF.with_canonical_urlfp(batch_df).filter("url_valid").select(*_IDENT_COLS)
-    # backlog of the most recent COMMITTED batch (a retried batch must
-    # not read its own partial output — `last` can never be batch_id here)
-    if last is not None:
-        carry = ckpt.read(spark_l, "carryover", last)
-        ident = ident.unionByName(carry.select(*_IDENT_COLS))
-    ident = ident.groupBy("domain_hash", "url_hash").agg(
-        F.min("url").alias("url"),
-        F.min("canonical_url").alias("canonical_url"),
-        F.max("priority").alias("priority"),
-    )
-    # seen = rounds strictly before this batch (same retry argument)
-    seen = ckpt.read_all_rounds(spark_l, "seen", batch_id - 1) if batch_id > 0 else None
-    if seen is not None:
-        novel = ident.join(
-            seen.select("domain_hash", "url_hash"), ["domain_hash", "url_hash"], "left_anti"
+        return  # redelivered committed batch → exactly-once skip
+    expected = 0 if last is None else last + 1
+    if batch_id != expected:
+        prev = "an empty checkpoint" if last is None else f"committed batch {last}"
+        raise ValueError(
+            f"micro-batch {batch_id} cannot follow {prev} in {out_dir}; expected "
+            f"batch {expected}: the filter update ORs into the previous batch's blobs"
         )
-    else:
-        novel = ident
-    novel = novel.cache()
-    # processed = scheduled (host_rank 1..budget) ∪ robots-retired
-    # (host_rank NULL); both leave the backlog and enter the seen set
-    processed = politeness.process_round(
-        novel, robots, default_budget=default_budget, n_salts=n_salts
-    ).cache()
-    sched = processed.filter(F.col("host_rank").isNotNull())
-    ckpt.write(sched, "scheduled", batch_id)
-    handled = processed.select("domain_hash", "url_hash")
-    compacting = compact_every > 0 and batch_id > 0 and batch_id % compact_every == 0
-    if compacting and seen is not None:
-        # fold the whole history into this round's seen table; older
-        # rounds become redundant and are pruned after the commit
-        seen_out = handled.unionByName(seen.select("domain_hash", "url_hash")).distinct()
-    else:
-        seen_out = handled
-    ckpt.write(seen_out, "seen", batch_id)
-    # allowed-but-over-budget novel rows → next trigger's backlog
-    leftover = novel.join(handled, ["domain_hash", "url_hash"], "left_anti").select(
-        *_IDENT_COLS
+    P = spark.sparkContext.defaultParallelism if last is None else int(manifest["num_partitions"])
+
+    ident = (
+        CF.with_canonical_urlfp(batch_df)
+        .filter("url_valid")
+        .withColumn("discovered_round", F.lit(batch_id))
+        .select(*FRONTIER_COLS)
     )
+    if last is not None:
+        ident = ident.unionByName(ckpt.read(spark, "carryover", last))
+    # dedup first, gate after (the links gate's shape): the dedup lands
+    # rows partition-clustered, and the gate reads committed state only
+    novel = dedup_by_identity(ident, P)
+    if last is not None:
+        novel = seenset.gate_new_storage(novel, ckpt.state_location(), last, last, P)
+    novel = novel.cache()
+
+    obs = Observation(f"stream_proc_{batch_id}")
+    processed = (
+        politeness.process_round(
+            novel, robots, default_budget=default_budget, n_salts=n_salts, layout_partitions=P
+        )
+        .withColumn("round", F.lit(batch_id))
+        .select(*PROCESSED_COLS, "partition_id")
+        .observe(obs, F.count(F.when(F.col("host_rank").isNotNull(), F.lit(1))).alias("n_sched"))
+        .cache()
+    )
+    ckpt.write(processed, "processed", batch_id, partition_by=["partition_id"])
+    filters = seenset.update_filters_storage(
+        spark, ckpt.state_location(), batch_id, P, capacity=STREAM_BLOOM_CAPACITY
+    )  # re-read location: covers the just-written processed delta
+    ckpt.write(filters, "filters", batch_id, partition_by=["partition_id"])
+    leftover = novel.join(
+        processed.select("domain_hash", "url_hash"), ["domain_hash", "url_hash"], "left_anti"
+    ).select(*FRONTIER_COLS)
     ckpt.write(leftover, "carryover", batch_id)
-    n_sched = sched.count()
+    # a batch Catalyst proves empty (an empty local relation) collapses
+    # the plan and prunes the Observation: its row comes back field-less
+    n_sched = int(obs.get["n_sched"]) if obs._jo.getRow().length() else 0
     processed.unpersist()
     novel.unpersist()
     if _die_before_marker:
         raise RuntimeError("simulated kill before commit marker")
     ckpt.commit_round(
         batch_id,
-        {t: f"round={batch_id}" for t in ("scheduled", "seen", "carryover")},
-        extra={"scheduled": n_sched},
+        {t: f"round={batch_id}" for t in ("processed", "filters", "carryover")},
+        extra={"scheduled": n_sched, "num_partitions": P},
     )
-    # post-commit maintenance (parquet emulation only; Iceberg has native
-    # table maintenance): prune seen rounds folded into this one and all
-    # superseded carryover rounds
-    root = getattr(ckpt, "root", None)
-    if root is not None:
-        for table, horizon in (("seen", batch_id if compacting else -1), ("carryover", batch_id)):
-            tdir = os.path.join(root, table)
-            if horizon < 0 or not os.path.isdir(tdir):
-                continue
-            for d in os.listdir(tdir):
-                if d.startswith("round="):
-                    r = int(d.split("=", 1)[1])
-                    if r < horizon:
-                        shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)

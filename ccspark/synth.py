@@ -209,23 +209,8 @@ def gen_pages_pdf(ids: np.ndarray, n_hosts: int, seed: int = 42) -> pd.DataFrame
     )
 
 
-_PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-
 def default_n_hosts(n: int) -> int:
     return max(100, n // 100)
-
-
-def gen_pages(spark, n: int, n_hosts: int | None = None, seed: int = 42, partitions: int | None = None):
-    """Distributed deterministic pages table."""
-    n_hosts = n_hosts or default_n_hosts(n)
-    rng = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
-
-    def _gen(batches):
-        for pdf in batches:
-            yield gen_pages_pdf(pdf["id"].to_numpy(), n_hosts, seed)
-
-    return rng.mapInPandas(_gen, schema=_PAGES_SCHEMA)
 
 
 def gen_seeds(spark, n: int, n_hosts: int | None = None, seed: int = 42):

@@ -75,32 +75,6 @@ def test_scan_arc_spark(spark, tmp_path):
             assert hd[k] == v
 
 
-def test_with_decoded_text_end_to_end(spark, tmp_path):
-    """ARC scan → header-driven decode (bestEffortDecodeBytes path)."""
-    from ccspark import arc
-
-    body_jp = "<html><body>日本語のページ</body></html>".encode("shift_jis")
-    body_en = b"<html><body>plain english</body></html>"
-    body_png = b"\x89PNG\r\n\x1a\nfakebinary"
-    records = [
-        dict(url="http://a.example.com/jp", payload=body_jp,
-             headers=[("Content-Type", "text/html; charset=shift_jis")],
-             mime="text/html"),
-        dict(url="http://a.example.com/en", payload=body_en,
-             headers=[("Content-Type", "text/plain")], mime="text/plain"),
-        dict(url="http://a.example.com/img", payload=body_png,
-             headers=[("Content-Type", "image/png")], mime="image/png"),
-    ]
-    data = arc.write_arc_bytes(records, "t.arc.gz")
-    p = tmp_path / "t.arc.gz"
-    p.write_bytes(data)
-    df = arc.scan_arc(spark, str(tmp_path / "*.arc.gz"))
-    out = {r["url"]: r["text"] for r in arc.with_decoded_text(df).collect()}
-    assert "日本語のページ" in out["http://a.example.com/jp"]
-    assert out["http://a.example.com/en"] == body_en.decode("ascii")
-    assert out["http://a.example.com/img"] is None  # binary type -> null
-
-
 # -- streamed (chunked) scan ---------------------------------------------------
 
 

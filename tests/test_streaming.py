@@ -1,10 +1,13 @@
 """Structured Streaming tests: streaming dedup idempotence, windowed
-counts, stateful budget operator across micro-batches."""
+counts, stateful budget operator across micro-batches, and the
+streaming frontier on the storage gate."""
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from ccspark import streaming, synth
+from ccspark.checkpoint import Checkpoint
 
 
 @pytest.fixture(scope="module")
@@ -74,11 +77,39 @@ def test_stateful_budget(spark, staged_pages):
     assert out["over_budget"].any()
 
 
-def test_streaming_frontier_end_to_end(spark, tmp_path):
-    """Micro-batch scheduler: cross-batch dedup via the persistent seen
-    set, robots gating, per-host budget — equals the batch semantics."""
-    import time
+def _scheduled(spark, out, upto):
+    """Scheduled rows of batches 0..upto: the scheduled half of the
+    processed table, the batch loop's read_trace surface."""
+    proc = Checkpoint(str(out)).read_all_rounds(spark, "processed", upto)
+    return proc.filter(F.col("host_rank").isNotNull())
 
+
+def _scheduled_at(spark, ckpt, b):
+    return ckpt.read(spark, "processed", b).filter(F.col("host_rank").isNotNull())
+
+
+_ROBOTS_SCHEMA = (
+    "host string, disallow_prefixes array<string>, crawl_delay_ms long, max_fetches_per_round int"
+)
+
+
+def _drop(spark, tmp_path, src, name, rows):
+    """Write one candidates drop: via Spark (Spark-compatible
+    timestamps), then move the single part file into the flat
+    stream-source directory."""
+    import glob
+    import shutil
+
+    stage = tmp_path / ("stage_" + name)
+    spark.createDataFrame(rows, "url string, priority double, ts timestamp") \
+        .coalesce(1).write.mode("overwrite").parquet(str(stage))
+    part = glob.glob(str(stage / "part-*.parquet"))[0]
+    shutil.copy(part, src / (name + ".parquet"))
+
+
+def test_streaming_frontier_end_to_end(spark, tmp_path):
+    """Micro-batch scheduler: cross-batch dedup via the storage gate,
+    robots gating, per-host budget — equals the batch semantics."""
     import pandas as pd
 
     from ccspark import streaming as ST
@@ -89,24 +120,10 @@ def test_streaming_frontier_end_to_end(spark, tmp_path):
     src.mkdir()
 
     robots = spark.createDataFrame(
-        [("a.com", ["/private"], None, None), ("b.com", [], None, None)],
-        "host string, disallow_prefixes array<string>, crawl_delay_ms long, max_fetches_per_round int",
+        [("a.com", ["/private"], None, None), ("b.com", [], None, None)], _ROBOTS_SCHEMA
     )
-
-    def drop(name, rows):
-        # write via Spark (Spark-compatible timestamps), then move the
-        # single part file into the flat stream-source directory
-        import glob as _glob
-        import shutil as _sh
-
-        stage = tmp_path / ("stage_" + name)
-        spark.createDataFrame(rows, "url string, priority double, ts timestamp") \
-            .coalesce(1).write.mode("overwrite").parquet(str(stage))
-        part = _glob.glob(str(stage / "part-*.parquet"))[0]
-        _sh.copy(part, src / (name + ".parquet"))
-
     ts = pd.Timestamp("2024-01-01").to_pydatetime()
-    drop("d1", [
+    _drop(spark, tmp_path, src, "d1", [
         ("http://a.com/x", 0.9, ts),
         ("http://a.com/private/no", 0.8, ts),
         ("http://b.com/y", 0.7, ts),
@@ -119,7 +136,7 @@ def test_streaming_frontier_end_to_end(spark, tmp_path):
     try:
         q.processAllAvailable()
         # second drop: one repeat (must be suppressed), one new
-        drop("d2", [
+        _drop(spark, tmp_path, src, "d2", [
             ("http://a.com/x", 0.95, ts),       # already seen
             ("http://a.com/private/no", 0.9, ts),  # already retired
             ("http://b.com/z", 0.6, ts),
@@ -128,20 +145,57 @@ def test_streaming_frontier_end_to_end(spark, tmp_path):
     finally:
         q.stop()
 
-    sched = spark.read.parquet(str(out / "scheduled"))
-    got = {(r["canonical_url"], r["round"]) for r in sched.collect()}
+    got = {(r["canonical_url"], r["round"]) for r in _scheduled(spark, out, 1).collect()}
     urls = {u for u, _ in got}
     assert urls == {"http://a.com/x", "http://b.com/y", "http://b.com/z"}
     # the repeat was NOT rescheduled in the second batch
     assert ("http://a.com/x", 1) not in got
-    seen = spark.read.parquet(str(out / "seen"))
+    seen = Checkpoint(str(out)).read_all_rounds(spark, "processed", 1)
     # scheduled (3) + robots-retired (1)
-    assert seen.distinct().count() == 4
+    assert seen.select("domain_hash", "url_hash").distinct().count() == 4
     # the stream commits through the same manifest protocol as the batch loop
-    from ccspark.checkpoint import Checkpoint
-
     m = Checkpoint(str(out)).read_manifest()
-    assert m["round"] == 1 and "scheduled" in m["tables"]
+    assert m["round"] == 1 and "processed" in m["tables"]
+
+
+def test_streaming_frontier_restart_on_checkpoint_dir(spark, tmp_path):
+    """A query stopped and restarted on the same checkpoint_dir resumes
+    its batch numbering: a drop that lands between the runs is
+    scheduled, and every dropped URL is scheduled exactly once.  (On a
+    temporary query checkpoint the restart would redeliver everything
+    as batch 0, which the exactly-once skip drops.)"""
+    import pandas as pd
+
+    from ccspark import streaming as ST
+
+    src = tmp_path / "drops"
+    out = tmp_path / "out"
+    ckpt = tmp_path / "ckpt"
+    src.mkdir()
+    robots = spark.createDataFrame([("a.com", [], None, None)], _ROBOTS_SCHEMA)
+    ts = pd.Timestamp("2024-01-01").to_pydatetime()
+    _drop(spark, tmp_path, src, "d1", [("http://a.com/x", 0.9, ts), ("http://b.com/y", 0.8, ts)])
+    _drop(spark, tmp_path, src, "d2", [("http://a.com/x", 0.7, ts), ("http://b.com/w", 0.6, ts)])
+
+    def run():
+        cands = ST.stream_candidates(spark, str(src), max_files_per_trigger=8)
+        q = ST.streaming_frontier(
+            cands, robots, str(out), default_budget=5, n_salts=2, checkpoint_dir=str(ckpt)
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    with pytest.raises(TypeError, match="checkpoint_dir"):
+        ST.streaming_frontier(ST.stream_candidates(spark, str(src)), robots, str(out))
+    run()
+    assert Checkpoint(str(out)).last_committed_round() == 0
+    _drop(spark, tmp_path, src, "d3", [("http://a.com/z", 0.5, ts), ("http://b.com/y", 0.4, ts)])
+    run()
+    assert Checkpoint(str(out)).last_committed_round() == 1
+    got = sorted(r["canonical_url"] for r in _scheduled(spark, out, 1).collect())
+    assert got == ["http://a.com/x", "http://a.com/z", "http://b.com/w", "http://b.com/y"]
 
 
 def _mk_batch(spark, rows):
@@ -156,24 +210,20 @@ def test_streaming_frontier_overbudget_carryover(spark, tmp_path):
     from ccspark import streaming as ST
 
     out = tmp_path / "out"
-    robots = spark.createDataFrame(
-        [("a.com", [], None, None)],
-        "host string, disallow_prefixes array<string>, crawl_delay_ms long, max_fetches_per_round int",
-    )
+    ckpt = Checkpoint(str(out))
+    robots = spark.createDataFrame([("a.com", [], None, None)], _ROBOTS_SCHEMA)
     ts = pd.Timestamp("2024-01-01").to_pydatetime()
     # 5 URLs on one host, budget 2 → 2 scheduled, 3 carried over
     b0 = _mk_batch(spark, [(f"http://a.com/p{i}", 0.9 - i * 0.1, ts) for i in range(5)])
     ST.frontier_process_batch(b0, 0, robots, str(out), default_budget=2, n_salts=2)
-    sched0 = spark.read.parquet(str(out / "scheduled" / "round=0"))
-    assert sched0.count() == 2
+    assert _scheduled_at(spark, ckpt, 0).count() == 2
     carry0 = spark.read.parquet(str(out / "carryover" / "round=0"))
     assert carry0.count() == 3
     # next trigger brings ONE new URL; the 3 carried rows re-enter and
     # compete: 2 scheduled again (highest priority of the 4)
     b1 = _mk_batch(spark, [("http://a.com/new", 0.95, ts)])
     ST.frontier_process_batch(b1, 1, robots, str(out), default_budget=2, n_salts=2)
-    sched1 = spark.read.parquet(str(out / "scheduled" / "round=1"))
-    got1 = {r["canonical_url"] for r in sched1.collect()}
+    got1 = {r["canonical_url"] for r in _scheduled_at(spark, ckpt, 1).collect()}
     # priorities: new=0.95, p2=0.7, p3=0.6, p4=0.5 → top-2
     assert got1 == {"http://a.com/new", "http://a.com/p2"}
     carry1 = spark.read.parquet(str(out / "carryover" / "round=1"))
@@ -182,8 +232,7 @@ def test_streaming_frontier_overbudget_carryover(spark, tmp_path):
         "http://a.com/p4",
     }
     # nothing was ever lost: scheduled ∪ backlog covers every input URL
-    all_sched = spark.read.parquet(str(out / "scheduled"))
-    assert all_sched.count() + carry1.count() == 6
+    assert _scheduled(spark, out, 1).count() + carry1.count() == 6
 
 
 def test_streaming_frontier_exactly_once(spark, tmp_path):
@@ -195,12 +244,8 @@ def test_streaming_frontier_exactly_once(spark, tmp_path):
     from ccspark import streaming as ST
 
     out = tmp_path / "out"
-    robots = spark.createDataFrame(
-        [("a.com", [], None, None)],
-        "host string, disallow_prefixes array<string>, crawl_delay_ms long, max_fetches_per_round int",
-    )
+    robots = spark.createDataFrame([("a.com", [], None, None)], _ROBOTS_SCHEMA)
     ts = pd.Timestamp("2024-01-01").to_pydatetime()
-    from ccspark.checkpoint import Checkpoint
 
     b0 = _mk_batch(spark, [(f"http://a.com/p{i}", 0.5, ts) for i in range(4)])
     # first attempt dies after the data writes but before the commit
@@ -213,59 +258,123 @@ def test_streaming_frontier_exactly_once(spark, tmp_path):
     def read_bytes(p):
         import glob
 
-        return b"".join(
-            open(f, "rb").read() for f in sorted(glob.glob(str(p / "part-*.parquet")))
-        )
+        files = sorted(glob.glob(str(p / "**" / "part-*.parquet"), recursive=True))
+        assert files
+        return b"".join(open(f, "rb").read() for f in files)
 
-    partial = read_bytes(out / "scheduled" / "round=0")
+    partial = read_bytes(out / "processed" / "round=0")
     # retry overwrites its own partial output deterministically
     ST.frontier_process_batch(b0, 0, robots, str(out), default_budget=10)
     assert Checkpoint(str(out)).last_committed_round() == 0
-    committed = read_bytes(out / "scheduled" / "round=0")
+    committed = read_bytes(out / "processed" / "round=0")
     assert committed == partial  # byte-identical re-run
-    sched = spark.read.parquet(str(out / "scheduled"))
-    assert sched.count() == 4
+    assert _scheduled(spark, out, 0).count() == 4
     # spurious redelivery of the committed batch: skipped entirely
-    before = read_bytes(out / "scheduled" / "round=0")
+    before = read_bytes(out / "processed" / "round=0")
     ST.frontier_process_batch(b0, 0, robots, str(out), default_budget=10)
-    assert read_bytes(out / "scheduled" / "round=0") == before
-    assert spark.read.parquet(str(out / "scheduled")).count() == 4
+    assert read_bytes(out / "processed" / "round=0") == before
+    assert _scheduled(spark, out, 0).count() == 4
 
 
-def test_streaming_frontier_compaction_bounds_state(spark, tmp_path):
-    """With compact_every=2, seen deltas fold into one round and older
-    rounds + stale carryover dirs are pruned — dedup still exact."""
-    import os
-
+def test_streaming_frontier_batch_id_guard(spark, tmp_path):
+    """Batch ids must run 0, 1, 2, ... (the filter update ORs into the
+    previous batch's blobs): a gap raises, a redelivered committed
+    batch is a no-op, and an empty batch still commits."""
     import pandas as pd
 
     from ccspark import streaming as ST
 
     out = tmp_path / "out"
-    robots = spark.createDataFrame(
-        [("a.com", [], None, None)],
-        "host string, disallow_prefixes array<string>, crawl_delay_ms long, max_fetches_per_round int",
-    )
+    robots = spark.createDataFrame([("a.com", [], None, None)], _ROBOTS_SCHEMA)
+    ts = pd.Timestamp("2024-01-01").to_pydatetime()
+    b = _mk_batch(spark, [("http://a.com/x", 0.5, ts)])
+    with pytest.raises(ValueError, match="micro-batch 1 cannot follow an empty checkpoint .*expected batch 0"):
+        ST.frontier_process_batch(b, 1, robots, str(out))
+    assert Checkpoint(str(out)).last_committed_round() is None
+    ST.frontier_process_batch(b, 0, robots, str(out))
+    m0 = Checkpoint(str(out)).read_manifest()
+    with pytest.raises(ValueError, match="micro-batch 2 cannot follow committed batch 0 .*expected batch 1"):
+        ST.frontier_process_batch(b, 2, robots, str(out))
+    ST.frontier_process_batch(b, 0, robots, str(out))  # redelivery: skipped
+    assert Checkpoint(str(out)).read_manifest() == m0
+    ST.frontier_process_batch(_mk_batch(spark, []), 1, robots, str(out))
+    m1 = Checkpoint(str(out)).read_manifest()
+    assert (m1["round"], m1["scheduled"]) == (1, 0)
+    assert m1["num_partitions"] == m0["num_partitions"] == spark.sparkContext.defaultParallelism
+    assert _scheduled(spark, out, 1).count() == 1
+
+
+def test_streaming_frontier_repeats_scheduled_once(spark, tmp_path):
+    """Five batches, each repeating a URL of the previous one: every
+    URL is scheduled exactly once."""
+    import pandas as pd
+
+    from ccspark import streaming as ST
+
+    out = tmp_path / "out"
+    robots = spark.createDataFrame([("a.com", [], None, None)], _ROBOTS_SCHEMA)
     ts = pd.Timestamp("2024-01-01").to_pydatetime()
     for b in range(5):
         rows = [(f"http://a.com/b{b}p{i}", 0.5, ts) for i in range(3)]
         if b > 0:  # one repeat from the previous batch, must stay deduped
             rows.append((f"http://a.com/b{b-1}p0", 0.9, ts))
         ST.frontier_process_batch(
-            _mk_batch(spark, rows), b, robots, str(out), default_budget=10,
-            n_salts=2, compact_every=2,
+            _mk_batch(spark, rows), b, robots, str(out), default_budget=10, n_salts=2
         )
-    sched = spark.read.parquet(str(out / "scheduled"))
+    sched = _scheduled(spark, out, 4)
     # 15 unique URLs scheduled exactly once each (repeats suppressed)
     assert sched.count() == 15
     assert sched.select("domain_hash", "url_hash").distinct().count() == 15
-    # last compaction at batch 4: seen rounds < 4 pruned
-    seen_rounds = sorted(os.listdir(out / "seen"))
-    assert [d for d in seen_rounds if d.startswith("round=")] == ["round=4"]
-    carry_rounds = [d for d in os.listdir(out / "carryover") if d.startswith("round=")]
-    assert carry_rounds == ["round=4"]
-    # compacted seen holds the full history
-    assert spark.read.parquet(str(out / "seen")).distinct().count() == 15
+
+
+def test_streaming_frontier_constant_jobs_per_batch(spark, tmp_path, monkeypatch):
+    """A micro-batch's Spark job count does not grow with the stream's
+    age (batches 2-5 run the same number of jobs, read from the status
+    store), it calls the storage gate once per batch after the first,
+    and it never reads a table's whole history."""
+    import pandas as pd
+
+    from ccspark import seenset
+    from ccspark import streaming as ST
+
+    def no_history(*a, **k):
+        raise AssertionError("frontier_process_batch read a table's whole history")
+
+    monkeypatch.setattr(Checkpoint, "read_all_rounds", no_history)
+    gate_calls = []
+    real_gate = seenset.gate_new_storage
+
+    def counting_gate(*a, **k):
+        gate_calls.append(a[2:4])
+        return real_gate(*a, **k)
+
+    monkeypatch.setattr(seenset, "gate_new_storage", counting_gate)
+
+    jsc = spark.sparkContext._jsc.sc()
+    store, bus = jsc.statusStore(), jsc.listenerBus()
+
+    def last_job_id():
+        bus.waitUntilEmpty()
+        it = store.jobsList(None).iterator()
+        top = -1
+        while it.hasNext():
+            top = max(top, it.next().jobId())
+        return top
+
+    out = tmp_path / "out"
+    robots = spark.createDataFrame([("h0.com", ["/p1"], None, None)], _ROBOTS_SCHEMA)
+    ts = pd.Timestamp("2024-01-01").to_pydatetime()
+    jobs = []
+    for b in range(5):
+        # 200 URLs on 20 hosts, half of them repeats of the previous batch
+        rows = [(f"http://h{i % 20}.com/p{i}", 0.5, ts) for i in range(100 * b, 100 * b + 200)]
+        j0 = last_job_id()
+        ST.frontier_process_batch(
+            _mk_batch(spark, rows), b, robots, str(out), default_budget=5, n_salts=2
+        )
+        jobs.append(last_job_id() - j0)
+    assert len(set(jobs[1:])) == 1, jobs
+    assert gate_calls == [(b - 1, b - 1) for b in range(1, 5)]
 
 
 def test_streaming_frontier_over_iceberg_stub(spark, tmp_path, monkeypatch):
@@ -278,10 +387,7 @@ def test_streaming_frontier_over_iceberg_stub(spark, tmp_path, monkeypatch):
     from iceberg_stub import install
 
     install(monkeypatch, spark, "stubcat")
-    robots = spark.createDataFrame(
-        [("a.com", [], None, None)],
-        "host string, disallow_prefixes array<string>, crawl_delay_ms long, max_fetches_per_round int",
-    )
+    robots = spark.createDataFrame([("a.com", [], None, None)], _ROBOTS_SCHEMA)
     ts = pd.Timestamp("2024-01-01").to_pydatetime()
     batches = [
         [("http://a.com/x", 0.9, ts), ("http://a.com/y", 0.8, ts)],
@@ -297,7 +403,7 @@ def test_streaming_frontier_over_iceberg_stub(spark, tmp_path, monkeypatch):
     ice = make_checkpoint(spark, "iceberg:stubcat.stream")
     pq = make_checkpoint(spark, str(tmp_path / "pq"))
     for b in range(2):
-        gi = {r["canonical_url"] for r in ice.read(spark, "scheduled", b).collect()}
-        gp = {r["canonical_url"] for r in pq.read(spark, "scheduled", b).collect()}
+        gi = {r["canonical_url"] for r in _scheduled_at(spark, ice, b).collect()}
+        gp = {r["canonical_url"] for r in _scheduled_at(spark, pq, b).collect()}
         assert gi == gp
     assert ice.last_committed_round() == 1
