@@ -177,6 +177,16 @@ class IcebergCheckpoint:
             .drop("_ckpt_round")
         )
 
+    def has_data(self, name: str, round_no: int) -> bool:
+        """True when the round of the table holds data files (catalog
+        metadata only); an absent table or round and a zero-row round
+        write have none."""
+        t = self._qualified(name)
+        if not self.spark.catalog.tableExists(t):
+            return False
+        files = self.spark.read.table(t + ".files").filter(F.col("partition._ckpt_round") == round_no)
+        return bool(files.limit(1).collect())
+
     def read_all_rounds(self, spark: SparkSession, name: str, upto_round: int) -> DataFrame | None:
         t = self._qualified(name)
         if not spark.catalog.tableExists(t):
@@ -209,11 +219,6 @@ class IcebergCheckpoint:
             self._files_dirty.get(name, set()).difference_update(
                 {rd for rd in self._files_dirty.get(name, set()) if rd > int(round_no)}
             )
-
-    def table_dir(self, name: str, round_no: int | None = None) -> str:
-        # identifier, not a path — kept for interface compatibility
-        t = self._qualified(name)
-        return t if round_no is None else f"{t}/_ckpt_round={round_no}"
 
     # -- storage-partitioned gate support ------------------------------------
 

@@ -145,23 +145,18 @@ class Checkpoint:
     def read(self, spark: SparkSession, name: str, round_no: int) -> DataFrame:
         return spark.read.parquet(self.table_dir(name, round_no))
 
-    @staticmethod
-    def _has_parquet(d: str) -> bool:
-        # a zero-row partitionBy write leaves only _SUCCESS — no files to
-        # infer a schema from, so such rounds must be skipped, not read
-        for root, _dirs, files in os.walk(d):
+    def has_data(self, name: str, round_no: int) -> bool:
+        """True when the round of the table holds data files.  An absent
+        round has none, and neither has a zero-row partitionBy write (it
+        leaves only _SUCCESS, no file to infer a schema from)."""
+        for _root, _dirs, files in os.walk(self.table_dir(name, round_no)):
             if any(f.endswith(".parquet") for f in files):
                 return True
         return False
 
     def read_all_rounds(self, spark: SparkSession, name: str, upto_round: int) -> DataFrame | None:
         """Union of a table across rounds 0..upto_round (append-style)."""
-        paths = [
-            self.table_dir(name, r)
-            for r in range(upto_round + 1)
-            if os.path.exists(self.table_dir(name, r))
-            and self._has_parquet(self.table_dir(name, r))
-        ]
+        paths = [self.table_dir(name, r) for r in range(upto_round + 1) if self.has_data(name, r)]
         if not paths:
             return None
         # one read per round dir, unioned: a multi-path read would run

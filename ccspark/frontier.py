@@ -53,14 +53,17 @@ Reference analog: shard-stable part files keyed by shard id
 
 from __future__ import annotations
 
+import functools
+import time
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import politeness, seenset, synth
 from . import functions as CF
-from .checkpoint import Checkpoint
 
 FRONTIER_COLS = [
     "url",
@@ -123,6 +126,39 @@ def dedup_by_identity(df: DataFrame, num_partitions: int) -> DataFrame:
     )
 
 
+def write_processed(
+    ckpt, candidates: DataFrame, robots: DataFrame, round_no: int, num_partitions: int, **politeness_kw
+) -> tuple[DataFrame, int]:
+    """Processed-write phase of a batch round and of a streaming
+    micro-batch: ``politeness.process_round`` (``politeness_kw`` are its
+    budget/salt/broadcast arguments) → ``round`` column →
+    ``PROCESSED_COLS`` + ``partition_id`` → scheduled-count Observation
+    → cache → ``processed/round=<round_no>`` write.
+
+    One table holds the round's scheduled rows (host_rank 1..budget) and
+    its robots-retired rows (host_rank NULL, so the frontier drains of
+    them), which makes the seen delta just its identity columns.  No
+    layout Exchange: process_round's final rank already hash-partitions
+    by pmod(domain_hash, P), so the Hive-partitioned write produces one
+    file per partition — the layout every storage-gate read prunes on.
+    Returns the cached frame (the caller unpersists it) and the
+    scheduled-row count."""
+    obs = Observation(f"proc_{round_no}")
+    processed = (
+        politeness.process_round(candidates, robots, layout_partitions=num_partitions, **politeness_kw)
+        .withColumn("round", F.lit(round_no))
+        .withColumn("partition_id", _pid_col(num_partitions))
+        .select(*PROCESSED_COLS, "partition_id")
+        .observe(obs, F.count(F.when(F.col("host_rank").isNotNull(), F.lit(1))).alias("n_sched"))
+        .cache()
+    )
+    ckpt.write(processed, "processed", round_no, partition_by=["partition_id"])
+    # a round Catalyst proves empty (an empty local relation) collapses
+    # the plan and prunes the Observation: its row comes back field-less
+    n_sched = int(obs.get["n_sched"]) if obs._jo.getRow().length() else 0
+    return processed, n_sched
+
+
 def _lineage_arrow_schema():
     """One row per partition with scheduled rows.  ``urls_deduped`` is
     written as 0: the round's candidates are never re-gated (they passed
@@ -141,6 +177,23 @@ def _lineage_arrow_schema():
             ("fetch_budget_consumed", pa.int64()),
         ]
     )
+
+
+def _lineage_agg(scheduled: DataFrame) -> DataFrame:
+    """Per-partition counts of the scheduled rows: the lineage phase's
+    input, collected on the round pool."""
+    return scheduled.groupBy("partition_id").agg(
+        F.count(F.lit(1)).alias("urls_emitted"),
+        F.min("domain_hash").alias("hash_range_start"),
+        F.max("domain_hash").alias("hash_range_end"),
+    )
+
+
+def _lap(phase_s: dict, name: str, t0: float) -> float:
+    """Record the wall since ``t0`` as ``phase_s[name]``; returns now."""
+    now = time.perf_counter()
+    phase_s[name] = round(now - t0, 3)
+    return now
 
 
 class FrontierConfig:
@@ -214,6 +267,34 @@ def expand_links_pdf(url_hashes: np.ndarray, cfg: FrontierConfig) -> pd.DataFram
     return pd.DataFrame({"parent_url_hash": parents, "url": urls.to_numpy()})
 
 
+def _expand_ident(batches, cfg: FrontierConfig):
+    """mapInPandas body of the simulated fetch: scheduled (url_hash,
+    priority) batches → their out-links with canonical identity.
+    Expansion, canonicalize and fingerprint are FUSED into one Python
+    pass (one Arrow hop; link strings cross the boundary once), and
+    there is no per-links groupBy: the next-frontier dedup merges (min
+    url / max priority) over frontier ∪ links in one shuffle."""
+    from . import urls as urls_mod
+
+    for pdf in batches:
+        raw = expand_links_pdf(pdf["url_hash"].to_numpy(), cfg)
+        pri = np.repeat(pdf["priority"].to_numpy() * LINK_DECAY, cfg.links_per_fetch)
+        u = raw["url"]
+        canon, hosts = urls_mod.canonicalize_batch_with_host(u)
+        fp = urls_mod.urlfp_batch(canon, hosts=hosts)
+        yield pd.DataFrame(
+            {
+                "url": u.to_numpy(),
+                "canonical_url": canon.to_numpy(),
+                "domain_hash": fp["domain_hash"],
+                "url_hash": fp["url_hash"],
+                "root_domain_hash": fp["root_domain_hash"],
+                "priority": pri,
+                "url_valid": fp["valid"],
+            }
+        )
+
+
 class CrawlFrontier:
     """Checkpointed crawl-frontier driver."""
 
@@ -267,7 +348,7 @@ class CrawlFrontier:
     def _robots(self) -> DataFrame:
         # memoized: the rules table is immutable across rounds — rebuilding
         # the local relation every round re-ships n_hosts rows to the JVM
-        if getattr(self, "_robots_df", None) is None:
+        if self._robots_df is None:
             self._robots_df = synth.gen_robots(self.spark, self.cfg.n_hosts, self.cfg.seed)
         return self._robots_df
 
@@ -297,8 +378,6 @@ class CrawlFrontier:
         count job.  The empty filter table is deterministic driver-side
         data — written with pyarrow directly, no job; the seen set
         starts absent (read_all_rounds returns None for round 0)."""
-        from pyspark.sql import Observation
-
         obs = Observation("bootstrap_n")
         frontier = self._identify(seeds, 0).observe(obs, F.count(F.lit(1)).alias("n"))
         self.ckpt.write(frontier, "frontier", 0, partition_by=["partition_id"])
@@ -323,7 +402,15 @@ class CrawlFrontier:
         )
 
     def run_round(self, round_no: int) -> dict:
-        """Execute one crawl round (round_no >= 1); returns metrics.
+        """Execute one crawl round (round_no = last committed round + 1);
+        returns metrics.
+
+        The round is seven phases, called in this order (ARCHITECTURE §1):
+        ``_candidates`` → ``write_processed`` → ``_update_filters`` →
+        ``_expand_dedup`` → ``_write_frontier`` → ``_write_lineage`` →
+        ``_commit``.  The lineage collect and the filters write run on the
+        round's thread pool, overlapping the expansion+dedup and the
+        frontier write.
 
         Actions: three writes — processed (scheduled ∪ robots-retired,
         one table so the seen delta needs no write of its own), filters,
@@ -333,200 +420,177 @@ class CrawlFrontier:
         checkpoint reads' schema inference a steady round runs about
         13.5 Spark jobs (ARCHITECTURE §1).  All row counts come from
         Observations attached to those same actions; no separate
-        .count()/.toPandas() jobs and no post-write re-reads."""
-        import os
-        import time as _time
+        .count()/.toPandas() jobs and no post-write re-reads.
 
-        from pyspark.sql import Observation
+        ``phase_s`` in the metrics holds the driver-side wall of four
+        consecutive stretches: processed_write (from the round's start),
+        filters_write+dedup_overlap, frontier_write and lineage_write."""
+        t = time.perf_counter()
+        cand = self._candidates(round_no)
+        if cand is None:  # empty round, already carried forward and committed
+            return {"round": round_no, "candidates": 0, "scheduled": 0, "frontier_size": 0, "phase_s": {}}
+        n_candidates, frontier, candidates = cand
+        cfg, ckpt = self.cfg, self.ckpt
+        phase_s: dict[str, float] = {}
+        processed, n_scheduled = write_processed(
+            ckpt,
+            candidates,
+            self._robots(),
+            round_no,
+            cfg.num_partitions,
+            default_budget=cfg.default_budget,
+            round_duration_ms=cfg.round_duration_ms,
+            n_salts=cfg.n_salts,
+            broadcast_robots=cfg.broadcast_robots,
+        )  # action 1 (fills the processed cache)
+        t = _lap(phase_s, "processed_write", t)
+        scheduled = processed.filter(F.col("host_rank").isNotNull())
 
-        _prof = os.environ.get("CCSPARK_PROFILE") == "1"
-        _expl = os.environ.get("CCSPARK_EXPLAIN") == "1"
-        _t0 = _time.time()
+        # the pool's exit (shutdown(wait=True)) joins both background
+        # jobs on EVERY path out of the round: a failure in the main
+        # thread re-raises only after the filters write has finished, so
+        # a retried round never rmtrees filters/round=k under a live
+        # writer, and no round thread outlives its round
+        with ThreadPoolExecutor(max_workers=2, thread_name_prefix="ccspark-round") as pool:
+            # lineage aggregate launched NOW: it reads only the processed
+            # cache action 1 just filled, so its tasks back-fill the stage
+            # tails of the writes below; joined before the commit
+            lineage_fut = pool.submit(_lineage_agg(scheduled).collect)
+            # the filters write gates only the links gate, not the
+            # expansion+dedup: its tasks overlap that materialization
+            filters_fut = pool.submit(
+                ckpt.write, self._update_filters(round_no), "filters", round_no, ["partition_id"]
+            )
+            merged = self._expand_dedup(frontier, scheduled, round_no)
+            filters_fut.result()  # round-k blobs are on disk past this point
+            t = _lap(phase_s, "filters_write+dedup_overlap", t)
+            n_frontier = self._write_frontier(merged, round_no)  # action 3
+            t = _lap(phase_s, "frontier_write", t)
+            self._write_lineage(lineage_fut.result(), round_no)
+            _lap(phase_s, "lineage_write", t)
+            frontier.unpersist()
+            processed.unpersist()
+            self._commit(round_no, n_scheduled, n_frontier)
+        return {
+            "round": round_no,
+            "candidates": n_candidates,
+            "scheduled": n_scheduled,
+            "frontier_size": n_frontier,
+            "phase_s": phase_s,
+        }
 
-        def _mark(label):
-            nonlocal _t0
-            if _prof:
-                now = _time.time()
-                print(f"[frontier r{round_no}] {label}: {now - _t0:.2f}s", flush=True)
-                _t0 = now
+    # -- round phases -----------------------------------------------------
 
-        def _explain(df, label):
-            # plan-audit hook: `CCSPARK_EXPLAIN=1` prints each write
-            # frame's physical plan (the BENCH Exchange audits)
-            if _expl:
-                print(f"==== r{round_no} {label} ====", flush=True)
-                df.explain("formatted")
+    def _candidates(self, round_no: int) -> tuple[int, DataFrame, DataFrame] | None:
+        """Candidates phase: frontier/round=k-1 ∪ the due revisits.
 
+        Returns ``(n_candidates, frontier, candidates)`` with the frontier
+        cached (it feeds both the processed write and the next-frontier
+        dedup), or None for an empty round: no frontier and nothing to
+        revisit, which this phase carries forward and commits with no
+        Spark job.  The frontier is not re-gated: round k-1's links gate
+        wrote it against filters/round=k-1 and the seen set through k-1,
+        so every row is novel (the gate-once invariant, ARCHITECTURE §1).
+        Its size comes from the last manifest, which is why round k must
+        follow committed round k-1."""
         spark, cfg, ckpt = self.spark, self.cfg, self.ckpt
-        prev = round_no - 1
-        # the state location (parquet root, or the catalog backend's file
-        # manifest) is read where the filters update and the links gate
-        # need it, after the state writes they depend on; this first read
-        # only validates the layout: a catalog table without the
-        # partition_id layout raises here, before the round writes anything
+        # layout check before the round writes anything: a catalog table
+        # without the partition_id layout raises here
         ckpt.state_location()
+        manifest = ckpt.read_manifest()
+        last = None if manifest is None else int(manifest["round"])
+        prev = round_no - 1
+        if last != prev:
+            after = "an empty checkpoint" if last is None else f"committed round {last}"
+            expected = "a bootstrap (round 0)" if last is None else f"round {last + 1}"
+            raise ValueError(
+                f"round {round_no} cannot follow {after}; expected {expected}: a round "
+                "reads the frontier, filters and frontier_size of the round before it"
+            )
+        n_candidates = int(manifest["frontier_size"])
 
-        # empty-frontier check BEFORE the read: a drained frontier's
-        # partitioned write has no data files, so the scan can't infer a
-        # schema — and the manifest already carries the count anyway
-        prev_manifest = ckpt.read_manifest() or {}
-        if prev_manifest.get("round") == prev and "frontier_size" in prev_manifest:
-            n_candidates = int(prev_manifest["frontier_size"])
-        else:
-            n_candidates = ckpt.read(spark, "frontier", prev).count()
-        # a drained frontier still runs the round when a recrawl cycle is
-        # due AND its source round actually has scheduled rows — an
+        # revisit injection (recrawl): the round processed revisit_after
+        # rounds ago re-enters the candidate stream with decayed priority,
+        # under the same politeness as everything else.  Empty rounds
+        # write no processed data; a source that has data but fails to
+        # read fails the round
+        revisit_src = None
+        if cfg.revisit_after and round_no > cfg.revisit_after:
+            src_round = round_no - cfg.revisit_after
+            if ckpt.has_data("processed", src_round):
+                revisit_src = ckpt.read(spark, "processed", src_round).filter(
+                    F.col("host_rank").isNotNull()
+                )
+        # cheap probe (tiny job, only on drained rounds): a source with
+        # zero scheduled rows means nothing to revisit either — an
         # all-empty round must take the copy-forward path (an empty
         # LocalRelation collapses the plan and prunes the CollectMetrics
-        # nodes the Observations hang off), and the source may be absent
-        # entirely (empty rounds write no processed table)
-        revisit_due = bool(cfg.revisit_after) and round_no - cfg.revisit_after >= 1
-        revisit_src = None
-        if revisit_due:
-            src_round = round_no - cfg.revisit_after
-            # explicit existence probes: a source that exists but fails to
-            # read must fail the round, not silently drop its revisits
-            if isinstance(ckpt, Checkpoint):
-                src_dir = ckpt.table_dir("processed", src_round)
-                readable = os.path.isdir(src_dir) and Checkpoint._has_parquet(src_dir)
-            else:
-                readable = spark.catalog.tableExists(ckpt.table_dir("processed"))
-            if readable:
-                df_src = ckpt.read(spark, "processed", src_round)
-                if "root_domain_hash" in df_src.columns:
-                    revisit_src = df_src.filter(F.col("host_rank").isNotNull())
-        if n_candidates == 0 and revisit_src is not None:
-            # cheap probe (tiny job, only on drained rounds): a source
-            # with zero scheduled rows means nothing to revisit either
-            if revisit_src.limit(1).count() == 0:
-                revisit_src = None
+        # nodes the Observations hang off)
+        if n_candidates == 0 and revisit_src is not None and revisit_src.limit(1).count() == 0:
+            revisit_src = None
         if n_candidates == 0 and revisit_src is None:
-            # nothing to do: carry frontier+filters forward driver-side
-            # (byte-identical copies — no Spark jobs at all)
+            # byte-identical driver-side copies: no Spark jobs at all
             ckpt.copy_round("frontier", prev, round_no)
             ckpt.copy_round("filters", prev, round_no)
             ckpt.commit_round(round_no, {"empty": "true"}, extra={"frontier_size": 0})
-            return {
-                "round": round_no,
-                "candidates": 0,
-                "scheduled": 0,
-                "frontier_size": 0,
-            }
+            return None
         if n_candidates == 0:
-            # recrawl-only round: an empty partitioned write has no data
-            # files to infer a schema from — build the empty frame directly
+            # recrawl-only round: a drained frontier's partitioned write
+            # has no data files to infer a schema from
             frontier = spark.createDataFrame(
                 [],
                 "url string, canonical_url string, domain_hash long, url_hash long, "
                 "root_domain_hash long, priority double, discovered_round int",
             )
         else:
-            # no gate here: round k-1's links gate already wrote this table
-            # against filters/round=k-1 and the seen set through k-1, the
-            # same state a round-start gate would probe, so every row is
-            # novel (the gate-once invariant, ARCHITECTURE §1).  Cached:
-            # it feeds both the processed write and the next-frontier dedup
             frontier = ckpt.read(spark, "frontier", prev).select(*FRONTIER_COLS).cache()
-
-        # revisit injection (recrawl): the round processed revisit_after
-        # rounds ago re-enters the candidate stream (those identities are
-        # seen; the candidates are not gated, so they pass), with decayed
-        # priority, under the same politeness as everything else.
-        candidates_in = frontier
-        if revisit_src is not None:
-            revisit = revisit_src.select(
-                "url",
-                "canonical_url",
-                "domain_hash",
-                "url_hash",
-                "root_domain_hash",
-                (F.col("priority") * cfg.revisit_decay).alias("priority"),
-                F.lit(round_no).alias("discovered_round"),
-            )
-            candidates_in = frontier.unionByName(revisit.select(*FRONTIER_COLS))
-
-        # politeness: robots + budgets + salted per-host rank, ONE linear
-        # plan producing the round's processed table = scheduled rows
-        # (host_rank 1..budget) ∪ robots-retired rows (host_rank NULL,
-        # so the frontier drains of them instead of re-probing every
-        # round).  The seen delta is exactly this table's identity
-        # columns, so it needs no write of its own.
-        proc_df = politeness.process_round(
-            candidates_in,
-            self._robots(),
-            cfg.default_budget,
-            cfg.round_duration_ms,
-            cfg.n_salts,
-            broadcast_robots=cfg.broadcast_robots,
-            layout_partitions=cfg.num_partitions,
+        if revisit_src is None:
+            return n_candidates, frontier, frontier
+        revisit = revisit_src.select(
+            "url",
+            "canonical_url",
+            "domain_hash",
+            "url_hash",
+            "root_domain_hash",
+            (F.col("priority") * cfg.revisit_decay).alias("priority"),
+            F.lit(round_no).alias("discovered_round"),
         )
-        obs_proc = Observation(f"proc_{round_no}")
-        processed = (
-            proc_df.withColumn("round", F.lit(round_no))
-            .withColumn("partition_id", _pid_col(cfg.num_partitions))
-            .select(*PROCESSED_COLS, "partition_id")
-            .observe(
-                obs_proc,
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.when(F.col("host_rank").isNotNull(), F.lit(1))).alias("n_sched"),
-            )
-            .cache()
-        )
-        # no layout Exchange here: process_round's final rank already
-        # hash-partitioned by pmod(domain_hash, P) (layout_partitions),
-        # so the window output lands pre-clustered and the Hive-
-        # partitioned write still produces one file per partition per
-        # round — the layout every storage-gate read prunes on
-        _explain(processed, "processed")
-        ckpt.write(
-            processed,
-            "processed",
+        return n_candidates, frontier, frontier.unionByName(revisit)
+
+    def _update_filters(self, round_no: int) -> DataFrame:
+        """Filters-update phase: filters/round=k = filters/round=k-1 plus
+        this round's processed delta, built before the frontier write so
+        the links gate probes the just-augmented blobs (one seen-scan per
+        round).  The driving frame is range(P) partition ids; each task
+        reads its own previous blob and this round's delta file straight
+        from their partition directories and ORs (bloom) / rebuilds
+        (cuckoo) — the filter state and the crawl history never enter an
+        Exchange.  ``run_round`` writes it on the round pool."""
+        cfg = self.cfg
+        return seenset.update_filters_storage(
+            self.spark,
+            self.ckpt.state_location(),  # re-read: covers the just-written processed delta
             round_no,
-            partition_by=["partition_id"],
-        )  # action 1 (fills caches)
-        _mark("processed_write")
+            cfg.num_partitions,
+            kind=cfg.filter_kind,
+            buckets_per_element=cfg.buckets_per_element,
+            capacity=cfg.capacity_per_partition if cfg.filter_kind == "bloom" else None,
+        )
 
-        scheduled = processed.filter(F.col("host_rank").isNotNull())
-
-        # link discovery: either the pluggable real pipeline (expand_fn →
-        # raw urls → the fused identity kernel) or the deterministic
-        # fetch simulation with expansion + canonicalize + fingerprint
-        # FUSED into one python pass (one Arrow hop; link strings cross
-        # the boundary once).  Identity columns WITHOUT the per-links
-        # groupBy — the next-frontier aggregation below dedups (min url /
-        # max priority) over frontier ∪ links in ONE shuffle instead of
-        # two.
-        def _expand_ident(batches):
-            from . import urls as urls_mod
-
-            for pdf in batches:
-                raw = expand_links_pdf(pdf["url_hash"].to_numpy(), cfg)
-                pri = np.repeat(
-                    pdf["priority"].to_numpy() * LINK_DECAY, cfg.links_per_fetch
-                )
-                u = raw["url"]
-                canon, hosts = urls_mod.canonicalize_batch_with_host(u)
-                fp = urls_mod.urlfp_batch(canon, hosts=hosts)
-                yield pd.DataFrame(
-                    {
-                        "url": u.to_numpy(),
-                        "canonical_url": canon.to_numpy(),
-                        "domain_hash": fp["domain_hash"],
-                        "url_hash": fp["url_hash"],
-                        "root_domain_hash": fp["root_domain_hash"],
-                        "priority": pri,
-                        "url_valid": fp["valid"],
-                    }
-                )
-
+    def _expand_dedup(self, frontier: DataFrame, scheduled: DataFrame, round_no: int) -> DataFrame:
+        """Link expansion + dedup phase: the scheduled rows' out-links —
+        from the pluggable real pipeline (``expand_fn`` → raw urls → the
+        fused identity kernel) or the deterministic fetch simulation
+        (``_expand_ident``) — unioned with the frontier and max-priority
+        deduped by identity in ONE shuffle.  Materialized now (eager
+        localCheckpoint): it does not depend on the filters state, so its
+        job runs while the pool writes the filters."""
+        cfg = self.cfg
         if self.expand_fn is not None:
-            # real pipeline: expand_fn yields raw (url, priority); the
-            # fused kernel assigns the same canonical identity as
-            # everything else in the engine
             links_raw = CF.with_canonical_urlfp(self.expand_fn(scheduled))
         else:
             links_raw = scheduled.select("url_hash", "priority").mapInPandas(
-                _expand_ident,
+                functools.partial(_expand_ident, cfg=cfg),
                 schema=(
                     "url string, canonical_url string, domain_hash long, "
                     "url_hash long, root_domain_hash long, priority double, "
@@ -538,140 +602,65 @@ class CrawlFrontier:
             .withColumn("discovered_round", F.lit(round_no))
             .select(*FRONTIER_COLS)
         )
+        return dedup_by_identity(frontier.unionByName(links), cfg.num_partitions).localCheckpoint()
 
-        # lineage aggregate launched NOW on a driver thread (overlapping
-        # independent jobs): it reads only the processed cache action 1
-        # just filled, so it can run concurrently with the filters and
-        # frontier writes below and its tasks back-fill their stage
-        # tails; the result is joined before the commit.
-        from concurrent.futures import ThreadPoolExecutor
+    def _write_frontier(self, merged: DataFrame, round_no: int) -> int:
+        """Links gate + frontier write phase; returns the frontier size.
 
-        lineage_agg = scheduled.groupBy("partition_id").agg(
-            F.count(F.lit(1)).alias("urls_emitted"),
-            F.min("domain_hash").alias("hash_range_start"),
-            F.max("domain_hash").alias("hash_range_end"),
+        Dedup first, gate after: the identity dedup's one Exchange (by
+        partition_id) lands rows clustered the way the storage gate wants
+        them, so the deduped frontier ∪ links is gated against the round-k
+        filters with no extra shuffle.  Those filters contain the
+        processed delta, so the gate itself retires just-processed
+        frontier rows.  Equivalence with gating links and anti-joining
+        the delta before the dedup: an identity is either seen through
+        round k (all its rows dropped in both shapes) or unseen (all
+        kept), so the rows feeding the max-priority merge are unchanged."""
+        cfg = self.cfg
+        gated = seenset.gate_new_storage(
+            merged, self.ckpt.state_location(), round_no, round_no, cfg.num_partitions
+        )  # re-read location: probes the just-written round-k blobs
+        if cfg.max_frontier_per_host is not None:
+            # priority-evict hot hosts' queues (domain_hash is the host
+            # fingerprint — no string work); deterministic total order,
+            # so the cap is partition-count invariant like everything else
+            gated = politeness.salted_topk(
+                gated, ["domain_hash"], cfg.max_frontier_per_host, cfg.n_salts
+            ).select(*FRONTIER_COLS_PID).repartition(cfg.num_partitions, "partition_id")
+        obs = Observation(f"frontier_{round_no}")
+        gated = gated.observe(obs, F.count(F.lit(1)).alias("n"))
+        self.ckpt.write(gated, "frontier", round_no, partition_by=["partition_id"])
+        return int(obs.get["n"])
+
+    def _write_lineage(self, rows: list, round_no: int) -> None:
+        """Lineage phase: the per-partition commit record.  ``rows`` is
+        the collected ``_lineage_agg``; its ~P rows are written
+        driver-side with pyarrow (no committer job)."""
+        schema = _lineage_arrow_schema()
+        pdf = pd.DataFrame(
+            [
+                {
+                    "round": round_no,
+                    "partition_id": r["partition_id"],
+                    "hash_range_start": r["hash_range_start"],
+                    "hash_range_end": r["hash_range_end"],
+                    "urls_emitted": r["urls_emitted"],
+                    "urls_deduped": 0,  # reserved: see _lineage_arrow_schema
+                    "fetch_budget_consumed": r["urls_emitted"],
+                }
+                for r in sorted(rows, key=lambda r: r["partition_id"])
+            ],
+            columns=schema.names,
         )
-        # the pool's exit (shutdown(wait=True)) joins both background
-        # jobs on EVERY path out of the round: a failure in the main
-        # thread re-raises only after the filters write has finished, so
-        # a retried round never rmtrees filters/round=k under a live
-        # writer, and no round thread outlives its round
-        with ThreadPoolExecutor(max_workers=2, thread_name_prefix="ccspark-round") as pool:
-            lineage_fut = pool.submit(lineage_agg.collect)  # action 4 (overlapped)
+        self.ckpt.write_pdf(pdf, "lineage", round_no, arrow_schema=schema)
 
-            # filters next (before the frontier write), so the links gate
-            # can probe the JUST-AUGMENTED blobs: one seen-scan per round
-            # total.  The driving frame is range(P) partition ids; each
-            # task reads its own previous blob + this round's just-written
-            # seen delta file straight from their partition directories
-            # and ORs (bloom) / rebuilds (cuckoo) — the filter state and
-            # the crawl history never enter an Exchange.
-            filters_new = seenset.update_filters_storage(
-                spark,
-                ckpt.state_location(),  # re-read: covers the just-written processed delta
-                round_no,
-                cfg.num_partitions,
-                kind=cfg.filter_kind,
-                buckets_per_element=cfg.buckets_per_element,
-                capacity=cfg.capacity_per_partition if cfg.filter_kind == "bloom" else None,
-            )
-            _explain(filters_new, "filters")
-            # the filters write only gates the FINAL frontier gate, not
-            # the links expansion / identity dedup — run it on a driver
-            # thread so its tasks overlap the dedup materialization
-            # below; joined before the gated write.
-            filters_fut = pool.submit(ckpt.write, filters_new, "filters", round_no, ["partition_id"])
-
-            # links gate + next frontier: dedup FIRST, gate AFTER.  The
-            # identity dedup's one Exchange (by partition_id) already
-            # lands rows clustered exactly the way the storage gate wants
-            # them, so the DEDUPED union (frontier ∪ links) is gated against
-            # the just-augmented round-k filters with zero extra shuffles:
-            # round-k filters contain the processed delta, so the gate
-            # itself retires just-processed frontier rows, and it runs over
-            # post-dedup rows (fewer).  Equivalence with gating links and
-            # anti-joining the delta before the dedup: for any identity,
-            # either it is seen through round k (every one of its rows is
-            # dropped in both shapes), or it is unseen (all rows kept in
-            # both), so the per-identity row multiset feeding the
-            # max-priority merge is unchanged.
-            #
-            # The expansion+dedup is materialized NOW (eager
-            # localCheckpoint) — it does not depend on the filters state,
-            # so its job runs CONCURRENTLY with the threaded filters write
-            # above; only the gate must wait for the round-k blobs.
-            merged = dedup_by_identity(
-                frontier.unionByName(links),
-                cfg.num_partitions,
-            ).localCheckpoint()
-            filters_fut.result()  # round-k blobs are on disk past this point
-            _mark("filters_write+dedup_overlap")
-            next_frontier = seenset.gate_new_storage(
-                merged, ckpt.state_location(), round_no, round_no, cfg.num_partitions
-            )  # re-read location: probes the just-written round-k blobs
-            if cfg.max_frontier_per_host is not None:
-                # priority-evict hot hosts' queues (domain_hash is the host
-                # fingerprint — no string work); deterministic total order,
-                # so the cap is partition-count invariant like everything else
-                next_frontier = politeness.salted_topk(
-                    next_frontier, ["domain_hash"], cfg.max_frontier_per_host, cfg.n_salts
-                ).select(*FRONTIER_COLS_PID).repartition(cfg.num_partitions, "partition_id")
-            obs_frontier = Observation(f"frontier_{round_no}")
-            next_frontier = next_frontier.observe(obs_frontier, F.count(F.lit(1)).alias("n"))
-            _explain(next_frontier, "frontier")
-            ckpt.write(next_frontier, "frontier", round_no, partition_by=["partition_id"])  # action 3
-            _mark("frontier_write")
-
-            # lineage: per-partition commit record — the aggregate job
-            # was launched right after action 1 (see above) and has been
-            # running under the filters/frontier writes; join it and write
-            # the ~num_partitions rows driver-side with pyarrow (no
-            # committer job)
-            lineage_rows = lineage_fut.result()
-            lineage_pdf = pd.DataFrame(
-                [
-                    {
-                        "round": round_no,
-                        "partition_id": r["partition_id"],
-                        "hash_range_start": r["hash_range_start"],
-                        "hash_range_end": r["hash_range_end"],
-                        "urls_emitted": r["urls_emitted"],
-                        "urls_deduped": 0,  # reserved: see _lineage_arrow_schema
-                        "fetch_budget_consumed": r["urls_emitted"],
-                    }
-                    for r in sorted(lineage_rows, key=lambda r: r["partition_id"])
-                ],
-                columns=[
-                    "round",
-                    "partition_id",
-                    "hash_range_start",
-                    "hash_range_end",
-                    "urls_emitted",
-                    "urls_deduped",
-                    "fetch_budget_consumed",
-                ],
-            )
-            ckpt.write_pdf(lineage_pdf, "lineage", round_no, arrow_schema=_lineage_arrow_schema())
-            _mark("lineage_write")
-
-            # counts come from the Observations filled by the write
-            # actions — no extra jobs
-            n_scheduled = int(obs_proc.get["n_sched"])
-            n_frontier = int(obs_frontier.get["n"])
-            frontier.unpersist()
-            processed.unpersist()
-
-            ckpt.commit_round(
-                round_no,
-                {t: f"round={round_no}" for t in ("frontier", "filters", "processed", "lineage")},
-                extra={"scheduled": n_scheduled, "frontier_size": n_frontier},
-            )
-        return {
-            "round": round_no,
-            "candidates": n_candidates,
-            "scheduled": n_scheduled,
-            "frontier_size": n_frontier,
-        }
+    def _commit(self, round_no: int, n_scheduled: int, n_frontier: int) -> None:
+        """Commit phase: publish the round's four tables atomically."""
+        self.ckpt.commit_round(
+            round_no,
+            {t: f"round={round_no}" for t in ("frontier", "filters", "processed", "lineage")},
+            extra={"scheduled": n_scheduled, "frontier_size": n_frontier},
+        )
 
     def run(self, seeds: DataFrame | None, num_rounds: int, on_round=None) -> list[dict]:
         """Run/resume the crawl.  If a committed manifest exists, resume
@@ -684,8 +673,6 @@ class CrawlFrontier:
         ends the crawl UNLESS a future revisit cycle can still produce
         work — with revisit_after=k the loop idles forward until k
         rounds past the last round that scheduled anything."""
-        import time as _time
-
         last = self.ckpt.last_committed_round()
         if last is None:
             assert seeds is not None, "first run needs a seed list"
@@ -698,9 +685,9 @@ class CrawlFrontier:
         # scheduled work, so revisit idling extends k rounds past it
         last_sched = last
         for r in range(last + 1, last + 1 + num_rounds):
-            t0 = _time.time()
+            t0 = time.time()
             m = self.run_round(r)
-            m["wall_s"] = round(_time.time() - t0, 2)
+            m["wall_s"] = round(time.time() - t0, 2)
             metrics.append(m)
             if on_round is not None:
                 on_round(m)

@@ -174,28 +174,25 @@ def frontier_process_batch(
     out_dir: str,
     default_budget: int = 10,
     n_salts: int = 8,
-    _die_before_marker: bool = False,
 ) -> None:
     """One micro-batch of the streaming frontier, from the batch round's
     pieces: identify (∪ the last committed carry-over) →
     ``dedup_by_identity`` → ``gate_new_storage`` against the last
-    committed filters and processed rounds → ``process_round`` →
-    ``processed`` write (the seen delta) → filters update → carry-over
-    write (allowed-but-over-budget rows re-enter the next trigger, as the
-    batch loop's leftovers stay in its frontier) → one manifest commit.
+    committed filters and processed rounds → ``write_processed`` (the
+    batch round's processed-write phase; the seen delta) → filters
+    update → carry-over write (allowed-but-over-budget rows re-enter the
+    next trigger, as the batch loop's leftovers stay in its frontier) →
+    one manifest commit.
 
     Exactly-once: a committed batch is skipped; a retried batch reads
     only committed state and overwrites its own partial rounds with
     identical output.  Batch ids run 0, 1, 2, ... (the filter update ORs
     into the previous batch's blobs); any other id raises ValueError.
     The partition count P is the default parallelism at batch 0, kept in
-    the manifest for the life of the stream.  ``_die_before_marker`` is
-    a test hook: crash after the data writes, before the commit."""
-    from pyspark.sql import Observation
-
-    from . import politeness, seenset
+    the manifest for the life of the stream."""
+    from . import seenset
     from .catalog import make_checkpoint
-    from .frontier import FRONTIER_COLS, PROCESSED_COLS, dedup_by_identity
+    from .frontier import FRONTIER_COLS, dedup_by_identity, write_processed
 
     spark = batch_df.sparkSession
     ckpt = make_checkpoint(spark, out_dir)
@@ -227,17 +224,9 @@ def frontier_process_batch(
         novel = seenset.gate_new_storage(novel, ckpt.state_location(), last, last, P)
     novel = novel.cache()
 
-    obs = Observation(f"stream_proc_{batch_id}")
-    processed = (
-        politeness.process_round(
-            novel, robots, default_budget=default_budget, n_salts=n_salts, layout_partitions=P
-        )
-        .withColumn("round", F.lit(batch_id))
-        .select(*PROCESSED_COLS, "partition_id")
-        .observe(obs, F.count(F.when(F.col("host_rank").isNotNull(), F.lit(1))).alias("n_sched"))
-        .cache()
+    processed, n_sched = write_processed(
+        ckpt, novel, robots, batch_id, P, default_budget=default_budget, n_salts=n_salts
     )
-    ckpt.write(processed, "processed", batch_id, partition_by=["partition_id"])
     filters = seenset.update_filters_storage(
         spark, ckpt.state_location(), batch_id, P, capacity=STREAM_BLOOM_CAPACITY
     )  # re-read location: covers the just-written processed delta
@@ -246,13 +235,8 @@ def frontier_process_batch(
         processed.select("domain_hash", "url_hash"), ["domain_hash", "url_hash"], "left_anti"
     ).select(*FRONTIER_COLS)
     ckpt.write(leftover, "carryover", batch_id)
-    # a batch Catalyst proves empty (an empty local relation) collapses
-    # the plan and prunes the Observation: its row comes back field-less
-    n_sched = int(obs.get["n_sched"]) if obs._jo.getRow().length() else 0
     processed.unpersist()
     novel.unpersist()
-    if _die_before_marker:
-        raise RuntimeError("simulated kill before commit marker")
     ckpt.commit_round(
         batch_id,
         {t: f"round={batch_id}" for t in ("processed", "filters", "carryover")},

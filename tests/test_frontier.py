@@ -201,23 +201,55 @@ def test_frontier_against_iceberg_catalog(tmp_path):
         pass  # session shared-ish; leave running
 
 
-def _fail_next_dedup(monkeypatch) -> list:
-    """Make the next dedup_by_identity call raise (inside a round, while
-    the overlapped lineage and filters jobs run); later calls pass.
-    Returns a list that is non-empty once the failure fired."""
+# the round phases in call order (CrawlFrontier methods, except the
+# module-level write_processed shared with the streaming micro-batch)
+_PHASES = (
+    "_candidates",
+    "write_processed",
+    "_update_filters",
+    "_expand_dedup",
+    "_write_frontier",
+    "_write_lineage",
+    "_commit",
+)
+
+
+def _fail_next(monkeypatch, phase) -> list:
+    """Make the next call of round phase ``phase`` raise before it runs
+    (a failure at the boundary just before that phase); later calls
+    pass.  Returns a list that is non-empty once the failure fired."""
     import ccspark.frontier as frontier_mod
 
-    real_dedup = frontier_mod.dedup_by_identity
+    owner = frontier_mod if phase == "write_processed" else CrawlFrontier
+    real = getattr(owner, phase)
     failed = []
 
     def _fail_once(*args, **kwargs):
         if not failed:
             failed.append(True)
-            raise RuntimeError("injected dedup failure")
-        return real_dedup(*args, **kwargs)
+            raise RuntimeError(f"injected {phase} failure")
+        return real(*args, **kwargs)
 
-    monkeypatch.setattr(frontier_mod, "dedup_by_identity", _fail_once)
+    monkeypatch.setattr(owner, phase, _fail_once)
     return failed
+
+
+def _fail_next_filters_write(monkeypatch, fr) -> list:
+    """Make the next filters write raise inside the write itself, on the
+    thread that runs it; returns the names of the threads it failed on."""
+    import threading
+
+    real_write = fr.ckpt.write
+    failed_on = []
+
+    def _write(df, name, round_no, partition_by=None):
+        if name == "filters" and not failed_on:
+            failed_on.append(threading.current_thread().name)
+            raise RuntimeError("injected filters_write failure")
+        return real_write(df, name, round_no, partition_by)
+
+    monkeypatch.setattr(fr.ckpt, "write", _write)
+    return failed_on
 
 
 def test_failed_round_joins_threads_and_resumes(spark, tmp_path, monkeypatch):
@@ -231,8 +263,8 @@ def test_failed_round_joins_threads_and_resumes(spark, tmp_path, monkeypatch):
     fr = CrawlFrontier(spark, ckpt, _cfg())
     fr.run(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED), 1)
 
-    failed = _fail_next_dedup(monkeypatch)
-    with pytest.raises(RuntimeError, match="injected dedup failure"):
+    failed = _fail_next(monkeypatch, "_expand_dedup")
+    with pytest.raises(RuntimeError, match="injected _expand_dedup failure"):
         fr.run(None, ROUNDS - 1)
     assert failed
     assert not [t.name for t in threading.enumerate() if t.name.startswith("ccspark-round")]
@@ -325,6 +357,43 @@ def test_revisit_source_read_error_fails_the_round(spark, tmp_path, monkeypatch)
     with pytest.raises(OSError, match="processed round 1"):
         fr.run(None, 1)
     assert fr.ckpt.last_committed_round() == 2
+
+
+def test_revisit_source_without_root_domain_hash_fails_the_round(spark, tmp_path):
+    """A revisit source missing a frontier column must fail the round,
+    not run it without its revisits."""
+    from pyspark.errors import AnalysisException
+
+    cfg = _cfg()
+    cfg.revisit_after = 2
+    fr = CrawlFrontier(spark, str(tmp_path / "ckpt_rv_cols"), cfg)
+    fr.run(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED), 2)
+    src = fr.ckpt.table_dir("processed", 1)
+    stripped = str(tmp_path / "processed_r1")
+    spark.read.parquet(src).drop("root_domain_hash").write.partitionBy("partition_id").parquet(stripped)
+    shutil.rmtree(src)
+    shutil.move(stripped, src)
+    with pytest.raises(AnalysisException, match="root_domain_hash"):
+        fr.run(None, 1)
+    assert fr.ckpt.last_committed_round() == 2
+
+
+def test_run_round_out_of_order_raises(spark, tmp_path):
+    """run_round(k) must follow committed round k-1: it reads that
+    round's frontier size from the manifest.  A skipped round raises
+    before anything is written."""
+    import os
+
+    ckpt = str(tmp_path / "ckpt_order")
+    fr = CrawlFrontier(spark, ckpt, _cfg())
+    fr.run(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED), 1)
+    before = sorted(os.listdir(ckpt)), fr.ckpt.read_manifest()
+    with pytest.raises(ValueError, match="round 3 cannot follow committed round 1; expected round 2"):
+        fr.run_round(3)
+    assert (sorted(os.listdir(ckpt)), fr.ckpt.read_manifest()) == before
+    assert not any(os.path.exists(fr.ckpt.table_dir(t, 3)) for t in os.listdir(ckpt))
+    with pytest.raises(ValueError, match="round 1 cannot follow an empty checkpoint"):
+        CrawlFrontier(spark, str(tmp_path / "ckpt_empty"), _cfg()).run_round(1)
 
 
 def test_drained_frontier_recrawl_matches_oracle(spark, tmp_path):
@@ -501,8 +570,12 @@ _GATE_ONCE_CASES = {
     "drained_recrawl": (
         {"revisit_after": 2, "links_per_fetch": 0, "default_budget": 500}, 5, True
     ),
-    "resume_after_failure": ({}, ROUNDS, False),
 }
+# fault-injection resume matrix: round 2 fails at each phase boundary, or
+# inside the filters write on the round pool; the crawl then resumes
+_FAIL_CASES = {"fail_at_" + p.lstrip("_"): p for p in _PHASES}
+_FAIL_CASES["fail_in_filters_write"] = "filters_write"
+_GATE_ONCE_CASES.update({case: ({}, ROUNDS, False) for case in _FAIL_CASES})
 
 
 @pytest.mark.parametrize("backend", ["parquet", "iceberg_stub"])
@@ -538,12 +611,22 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, ca
         sizes[m["round"]] = m["frontier_size"]
 
     seeds = synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED)
-    if case == "resume_after_failure":
+    if case in _FAIL_CASES:
+        import threading
+
+        phase = _FAIL_CASES[case]
         fr.run(seeds, 1, on_round=on_round)
-        _fail_next_dedup(monkeypatch)
-        with pytest.raises(RuntimeError, match="injected dedup failure"):
+        if phase == "filters_write":
+            failed = _fail_next_filters_write(monkeypatch, fr)
+        else:
+            failed = _fail_next(monkeypatch, phase)
+        with pytest.raises(RuntimeError, match=f"injected {phase} failure"):
             fr.run(None, rounds - 1, on_round=on_round)
+        assert failed
+        if phase == "filters_write":
+            assert failed[0].startswith("ccspark-round")  # raised on the round pool
         assert fr.ckpt.last_committed_round() == 1
+        assert not [t.name for t in threading.enumerate() if t.name.startswith("ccspark-round")]
         fr.run(None, rounds - 1, on_round=on_round)
     else:
         fr.run(seeds, rounds, on_round=on_round)

@@ -120,6 +120,50 @@ def test_cache_invalidation_on_round_overwrite(spark, state):
     assert len(after) == 40  # 90..119 no longer in history
 
 
+def test_seen_cache_lru_eviction_under_budget(spark, state, monkeypatch):
+    """A 1-byte CCSPARK_SEEN_CACHE_BYTES budget keeps only the most
+    recently loaded partition in the seen cache: querying 3 partitions
+    evicts the older two, and re-querying an evicted partition equals a
+    cold read.  The storage gate's results are unchanged when its
+    workers run under the same budget."""
+    from pyspark.sql.functions import pandas_udf
+
+    cold = {}
+    for pid in range(3):
+        seenstore.clear_caches()
+        cold[pid] = seenstore.seen_arrays(state, pid, 3)
+        assert len(cold[pid][0]) > 0
+    cand = spark.createDataFrame(_identity_pdf(range(100, 160)))
+    unbounded = seenset.gate_new_storage(cand, state, 3, 3, P).toPandas()
+
+    seenstore.clear_caches()
+    monkeypatch.setenv("CCSPARK_SEEN_CACHE_BYTES", "1")
+    for pid in range(3):
+        seenstore.seen_arrays(state, pid, 3)
+    assert [key[2] for key in seenstore._SEEN_CACHE] == [2]
+    for pid in (0, 1):  # evicted: a re-query reads the partition again
+        url, dom = seenstore.seen_arrays(state, pid, 3)
+        assert [key[2] for key in seenstore._SEEN_CACHE] == [pid]
+        np.testing.assert_array_equal(url, cold[pid][0])
+        np.testing.assert_array_equal(dom, cold[pid][1])
+
+    # Python workers take their environment from the SparkContext's
+    monkeypatch.setitem(spark.sparkContext.environment, "CCSPARK_SEEN_CACHE_BYTES", "1")
+
+    @pandas_udf("long")
+    def _worker_budget(x: pd.Series) -> pd.Series:
+        return pd.Series([seenstore._cache_budget()] * len(x))
+
+    assert spark.range(1).select(_worker_budget("id")).first()[0] == 1
+    bounded = seenset.gate_new_storage(cand, state, 3, 3, P).toPandas()
+    key = ["domain_hash", "url_hash"]
+    assert len(bounded) == len(unbounded) == 40
+    pd.testing.assert_frame_equal(
+        bounded.sort_values(key).reset_index(drop=True),
+        unbounded.sort_values(key).reset_index(drop=True),
+    )
+
+
 def test_cuckoo_storage_update_and_gate(spark, tmp_path):
     seenstore.clear_caches()
     ckpt = Checkpoint(str(tmp_path))

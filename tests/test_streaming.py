@@ -235,11 +235,10 @@ def test_streaming_frontier_overbudget_carryover(spark, tmp_path):
     assert _scheduled(spark, out, 1).count() + carry1.count() == 6
 
 
-def test_streaming_frontier_exactly_once(spark, tmp_path):
+def test_streaming_frontier_exactly_once(spark, tmp_path, monkeypatch):
     """Kill mid-batch (before the commit marker), re-run → scheduled
     output byte-identical; re-run of a COMMITTED batch is a no-op."""
     import pandas as pd
-    import pytest as _pytest
 
     from ccspark import streaming as ST
 
@@ -249,10 +248,18 @@ def test_streaming_frontier_exactly_once(spark, tmp_path):
 
     b0 = _mk_batch(spark, [(f"http://a.com/p{i}", 0.5, ts) for i in range(4)])
     # first attempt dies after the data writes but before the commit
-    with _pytest.raises(RuntimeError):
-        ST.frontier_process_batch(
-            b0, 0, robots, str(out), default_budget=10, _die_before_marker=True
-        )
+    real_commit = Checkpoint.commit_round
+    killed = []
+
+    def _commit_once(self, *args, **kwargs):
+        if not killed:
+            killed.append(True)
+            raise RuntimeError("simulated kill before commit marker")
+        return real_commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(Checkpoint, "commit_round", _commit_once)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        ST.frontier_process_batch(b0, 0, robots, str(out), default_budget=10)
     assert Checkpoint(str(out)).last_committed_round() is None
 
     def read_bytes(p):
