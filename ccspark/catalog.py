@@ -170,7 +170,9 @@ class IcebergCheckpoint:
         self._files_dirty.setdefault(name, set()).add(int(to_round))
         return t
 
-    def read(self, spark: SparkSession, name: str, round_no: int) -> DataFrame:
+    def read(self, spark: SparkSession, name: str, round_no: int, schema: str | None = None) -> DataFrame:
+        """One round of a table; ``schema`` is ignored, the catalog
+        already holds it (and reading it starts no job)."""
         return (
             spark.read.table(self._qualified(name))
             .filter(F.col("_ckpt_round") == round_no)

@@ -31,6 +31,7 @@ import os
 import shutil
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "_manifest.json"
@@ -142,17 +143,44 @@ class Checkpoint:
         shutil.copytree(src, dst)
         return dst
 
-    def read(self, spark: SparkSession, name: str, round_no: int) -> DataFrame:
-        return spark.read.parquet(self.table_dir(name, round_no))
+    def read(self, spark: SparkSession, name: str, round_no: int, schema: str | None = None) -> DataFrame:
+        """One round of a table.  ``schema`` (DDL, partition columns
+        included) is the table's fixed schema: the read then launches no
+        schema-inference job, and a round with no data files reads as an
+        empty frame.  A fixed schema would read a column the files lack
+        as NULL, so one footer is checked driver-side (every file of a
+        round comes from one write): a missing column raises
+        AnalysisException, as an inferring read's first select would."""
+        path = self.table_dir(name, round_no)
+        if schema is None:
+            return spark.read.parquet(path)
+        df = spark.read.schema(schema).parquet(path)
+        first = self._first_data_file(name, round_no)
+        if first is not None:
+            import pyarrow.parquet as pq
+
+            layout = os.path.relpath(os.path.dirname(first), path).split(os.sep)
+            partition_cols = {d.split("=", 1)[0] for d in layout if "=" in d}
+            missing = set(df.columns) - partition_cols - set(pq.read_schema(first).names)
+            if missing:
+                raise AnalysisException(
+                    message=f"{name}/round={round_no} was written without column(s) "
+                    f"{sorted(missing)} of its fixed schema ({first})"
+                )
+        return df
+
+    def _first_data_file(self, name: str, round_no: int) -> str | None:
+        for root, _dirs, files in os.walk(self.table_dir(name, round_no)):
+            for f in files:
+                if f.endswith(".parquet"):
+                    return os.path.join(root, f)
+        return None
 
     def has_data(self, name: str, round_no: int) -> bool:
         """True when the round of the table holds data files.  An absent
         round has none, and neither has a zero-row partitionBy write (it
         leaves only _SUCCESS, no file to infer a schema from)."""
-        for _root, _dirs, files in os.walk(self.table_dir(name, round_no)):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        return self._first_data_file(name, round_no) is not None
 
     def read_all_rounds(self, spark: SparkSession, name: str, upto_round: int) -> DataFrame | None:
         """Union of a table across rounds 0..upto_round (append-style)."""

@@ -34,6 +34,13 @@ Scale notes: per-host ranks come from the two-stage salted window
 mapInPandas over scheduled rows — no driver participation.  Priorities
 decay per hop (0.8) so the frontier drains.
 
+Fixed cost: each Spark job is a driver round trip, so a round runs six
+(ARCHITECTURE §1 names them; test_round_job_budget pins the count).
+Its plans run with AQE off (``adaptive_off``: AQE would submit every
+shuffle and broadcast stage as a job of its own and buys these plans
+nothing), and every checkpoint read passes its table's fixed schema
+(no schema-inference job).
+
 STORAGE-PARTITIONED STATE (the 100×-scale design): every state table
 (frontier, processed, filters) is written Hive-partitioned by
 ``partition_id = pmod(domain_hash, P)`` — one file per partition per
@@ -53,6 +60,7 @@ Reference analog: shard-stable part files keyed by shard id
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -65,33 +73,63 @@ from pyspark.sql import functions as F
 from . import politeness, seenset, synth
 from . import functions as CF
 
-FRONTIER_COLS = [
-    "url",
-    "canonical_url",
-    "domain_hash",
-    "url_hash",
-    "root_domain_hash",
-    "priority",
-    "discovered_round",
-]
+# Fixed table schemas (DDL).  The checkpoint reads of a round and of a
+# micro-batch pass them, so none of them launches a schema-inference job.
+FRONTIER_SCHEMA = (
+    "url string, canonical_url string, domain_hash long, url_hash long, "
+    "root_domain_hash long, priority double, discovered_round int"
+)
+# the processed table (scheduled ∪ robots-retired rows) of the batch
+# round and of the streaming micro-batch; root_domain_hash keeps its rows
+# frontier-shaped (the revisit source)
+PROCESSED_SCHEMA = (
+    "round int, host string, host_rank int, url string, canonical_url string, "
+    "domain_hash long, url_hash long, root_domain_hash long, priority double"
+)
+# the layout column of the partitionBy("partition_id") tables
+_PID_SCHEMA = ", partition_id int"
+
+
+def _cols(ddl: str) -> list[str]:
+    return [field.split()[0] for field in ddl.split(", ")]
+
+
+FRONTIER_COLS = _cols(FRONTIER_SCHEMA)
+FRONTIER_COLS_PID = FRONTIER_COLS + ["partition_id"]
+PROCESSED_COLS = _cols(PROCESSED_SCHEMA)
 
 LINK_DECAY = 0.8
 
-FRONTIER_COLS_PID = FRONTIER_COLS + ["partition_id"]
+_AQE = "spark.sql.adaptive.enabled"
 
-# the processed table (scheduled ∪ robots-retired rows) of the batch
-# round and of the streaming micro-batch; partition_id is the layout column
-PROCESSED_COLS = [
-    "round",
-    "host",
-    "host_rank",
-    "url",
-    "canonical_url",
-    "domain_hash",
-    "url_hash",
-    "root_domain_hash",  # keeps processed rows frontier-shaped (revisit source)
-    "priority",
-]
+
+@contextlib.contextmanager
+def adaptive_off(spark: SparkSession):
+    """Run the block with AQE off on ``spark``; the caller's setting is
+    restored on every exit path.  A round's (and a micro-batch's) plans
+    gain nothing from AQE: the one join (robots) carries a broadcast
+    hint, per-host skew is salted, and every layout exchange is an
+    explicit repartition(P), which AQE does not coalesce.  With AQE on,
+    each shuffle and broadcast stage runs as a Spark job of its own and
+    the plan is re-optimized after it (ARCHITECTURE §2)."""
+    prev = spark.conf.get(_AQE)
+    spark.conf.set(_AQE, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(_AQE, prev)
+
+
+def _cache_filled(df: DataFrame, action) -> DataFrame:
+    """``df`` cached and filled by ``action(df)``; if the action fails,
+    the cache is released before the error propagates."""
+    df = df.cache()
+    try:
+        action(df)
+    except BaseException:
+        df.unpersist()
+        raise
+    return df
 
 
 def _pid_col(num_partitions: int):
@@ -141,18 +179,17 @@ def write_processed(
     layout Exchange: process_round's final rank already hash-partitions
     by pmod(domain_hash, P), so the Hive-partitioned write produces one
     file per partition — the layout every storage-gate read prunes on.
-    Returns the cached frame (the caller unpersists it) and the
-    scheduled-row count."""
+    Returns the cached frame (the caller unpersists it; a failed write
+    releases it here) and the scheduled-row count."""
     obs = Observation(f"proc_{round_no}")
-    processed = (
+    processed = _cache_filled(
         politeness.process_round(candidates, robots, layout_partitions=num_partitions, **politeness_kw)
         .withColumn("round", F.lit(round_no))
         .withColumn("partition_id", _pid_col(num_partitions))
         .select(*PROCESSED_COLS, "partition_id")
-        .observe(obs, F.count(F.when(F.col("host_rank").isNotNull(), F.lit(1))).alias("n_sched"))
-        .cache()
+        .observe(obs, F.count(F.when(F.col("host_rank").isNotNull(), F.lit(1))).alias("n_sched")),
+        lambda df: ckpt.write(df, "processed", round_no, partition_by=["partition_id"]),
     )
-    ckpt.write(processed, "processed", round_no, partition_by=["partition_id"])
     # a round Catalyst proves empty (an empty local relation) collapses
     # the plan and prunes the Observation: its row comes back field-less
     n_sched = int(obs.get["n_sched"]) if obs._jo.getRow().length() else 0
@@ -412,65 +449,73 @@ class CrawlFrontier:
         round's thread pool, overlapping the expansion+dedup and the
         frontier write.
 
-        Actions: three writes — processed (scheduled ∪ robots-retired,
-        one table so the seen delta needs no write of its own), filters,
-        frontier — plus the dedup's eager localCheckpoint and one small
-        collect for the per-partition lineage rows, which land via a
-        driver-side pyarrow write.  With AQE's per-stage jobs and the
-        checkpoint reads' schema inference a steady round runs about
-        13.5 Spark jobs (ARCHITECTURE §1).  All row counts come from
+        A round runs six Spark jobs, revisit rounds too (ARCHITECTURE §1):
+        the robots broadcast, the processed write (scheduled ∪
+        robots-retired, one table so the seen delta needs no write of its
+        own), the lineage collect, the filters write, the noop write that
+        fills the dedup's cache, and the frontier write.  The lineage rows
+        land via a driver-side pyarrow write.  The round's plans run with
+        AQE off (``adaptive_off``) and its checkpoint reads pass fixed
+        schemas, so neither adds jobs.  All row counts come from
         Observations attached to those same actions; no separate
-        .count()/.toPandas() jobs and no post-write re-reads.
+        .count()/.toPandas() jobs and no post-write re-reads.  On every
+        exit path the round releases the frames it cached and restores
+        the session's AQE setting, after the pool has joined.
 
         ``phase_s`` in the metrics holds the driver-side wall of four
         consecutive stretches: processed_write (from the round's start),
         filters_write+dedup_overlap, frontier_write and lineage_write."""
         t = time.perf_counter()
-        cand = self._candidates(round_no)
-        if cand is None:  # empty round, already carried forward and committed
-            return {"round": round_no, "candidates": 0, "scheduled": 0, "frontier_size": 0, "phase_s": {}}
-        n_candidates, frontier, candidates = cand
         cfg, ckpt = self.cfg, self.ckpt
         phase_s: dict[str, float] = {}
-        processed, n_scheduled = write_processed(
-            ckpt,
-            candidates,
-            self._robots(),
-            round_no,
-            cfg.num_partitions,
-            default_budget=cfg.default_budget,
-            round_duration_ms=cfg.round_duration_ms,
-            n_salts=cfg.n_salts,
-            broadcast_robots=cfg.broadcast_robots,
-        )  # action 1 (fills the processed cache)
-        t = _lap(phase_s, "processed_write", t)
-        scheduled = processed.filter(F.col("host_rank").isNotNull())
+        # ``release`` unpersists the cached frames last-cached first, so
+        # no frame is released before one cached over it
+        with adaptive_off(self.spark), contextlib.ExitStack() as release:
+            cand = self._candidates(round_no)
+            if cand is None:  # empty round, already carried forward and committed
+                return {"round": round_no, "candidates": 0, "scheduled": 0, "frontier_size": 0, "phase_s": {}}
+            n_candidates, frontier, candidates = cand
+            release.callback(frontier.unpersist)
+            processed, n_scheduled = write_processed(
+                ckpt,
+                candidates,
+                self._robots(),
+                round_no,
+                cfg.num_partitions,
+                default_budget=cfg.default_budget,
+                round_duration_ms=cfg.round_duration_ms,
+                n_salts=cfg.n_salts,
+                broadcast_robots=cfg.broadcast_robots,
+            )  # fills the processed cache
+            release.callback(processed.unpersist)
+            t = _lap(phase_s, "processed_write", t)
+            scheduled = processed.filter(F.col("host_rank").isNotNull())
 
-        # the pool's exit (shutdown(wait=True)) joins both background
-        # jobs on EVERY path out of the round: a failure in the main
-        # thread re-raises only after the filters write has finished, so
-        # a retried round never rmtrees filters/round=k under a live
-        # writer, and no round thread outlives its round
-        with ThreadPoolExecutor(max_workers=2, thread_name_prefix="ccspark-round") as pool:
-            # lineage aggregate launched NOW: it reads only the processed
-            # cache action 1 just filled, so its tasks back-fill the stage
-            # tails of the writes below; joined before the commit
-            lineage_fut = pool.submit(_lineage_agg(scheduled).collect)
-            # the filters write gates only the links gate, not the
-            # expansion+dedup: its tasks overlap that materialization
-            filters_fut = pool.submit(
-                ckpt.write, self._update_filters(round_no), "filters", round_no, ["partition_id"]
-            )
-            merged = self._expand_dedup(frontier, scheduled, round_no)
-            filters_fut.result()  # round-k blobs are on disk past this point
-            t = _lap(phase_s, "filters_write+dedup_overlap", t)
-            n_frontier = self._write_frontier(merged, round_no)  # action 3
-            t = _lap(phase_s, "frontier_write", t)
-            self._write_lineage(lineage_fut.result(), round_no)
-            _lap(phase_s, "lineage_write", t)
-            frontier.unpersist()
-            processed.unpersist()
-            self._commit(round_no, n_scheduled, n_frontier)
+            # the pool's exit (shutdown(wait=True)) joins both background
+            # jobs on EVERY path out of the round: a failure in the main
+            # thread re-raises only after the filters write has finished, so
+            # a retried round never rmtrees filters/round=k under a live
+            # writer, and no round thread outlives its round
+            with ThreadPoolExecutor(max_workers=2, thread_name_prefix="ccspark-round") as pool:
+                # lineage aggregate launched NOW: it reads only the processed
+                # cache the processed write just filled, so its tasks
+                # back-fill the stage tails of the writes below; joined
+                # before the commit
+                lineage_fut = pool.submit(_lineage_agg(scheduled).collect)
+                # the filters write gates only the links gate, not the
+                # expansion+dedup: its tasks overlap that materialization
+                filters_fut = pool.submit(
+                    ckpt.write, self._update_filters(round_no), "filters", round_no, ["partition_id"]
+                )
+                merged = self._expand_dedup(frontier, scheduled, round_no)
+                release.callback(merged.unpersist)
+                filters_fut.result()  # round-k blobs are on disk past this point
+                t = _lap(phase_s, "filters_write+dedup_overlap", t)
+                n_frontier = self._write_frontier(merged, round_no)
+                t = _lap(phase_s, "frontier_write", t)
+                self._write_lineage(lineage_fut.result(), round_no)
+                _lap(phase_s, "lineage_write", t)
+                self._commit(round_no, n_scheduled, n_frontier)
         return {
             "round": round_no,
             "candidates": n_candidates,
@@ -492,7 +537,9 @@ class CrawlFrontier:
         wrote it against filters/round=k-1 and the seen set through k-1,
         so every row is novel (the gate-once invariant, ARCHITECTURE §1).
         Its size comes from the last manifest, which is why round k must
-        follow committed round k-1."""
+        follow committed round k-1.  Both reads pass their table's fixed
+        schema: no schema-inference job, and a drained frontier (a round
+        directory without data files) reads as an empty frame."""
         spark, cfg, ckpt = self.spark, self.cfg, self.ckpt
         # layout check before the round writes anything: a catalog table
         # without the partition_id layout raises here
@@ -518,7 +565,7 @@ class CrawlFrontier:
         if cfg.revisit_after and round_no > cfg.revisit_after:
             src_round = round_no - cfg.revisit_after
             if ckpt.has_data("processed", src_round):
-                revisit_src = ckpt.read(spark, "processed", src_round).filter(
+                revisit_src = ckpt.read(spark, "processed", src_round, PROCESSED_SCHEMA + _PID_SCHEMA).filter(
                     F.col("host_rank").isNotNull()
                 )
         # cheap probe (tiny job, only on drained rounds): a source with
@@ -534,28 +581,24 @@ class CrawlFrontier:
             ckpt.copy_round("filters", prev, round_no)
             ckpt.commit_round(round_no, {"empty": "true"}, extra={"frontier_size": 0})
             return None
-        if n_candidates == 0:
-            # recrawl-only round: a drained frontier's partitioned write
-            # has no data files to infer a schema from
-            frontier = spark.createDataFrame(
-                [],
-                "url string, canonical_url string, domain_hash long, url_hash long, "
-                "root_domain_hash long, priority double, discovered_round int",
+        frontier = ckpt.read(spark, "frontier", prev, FRONTIER_SCHEMA + _PID_SCHEMA).select(*FRONTIER_COLS)
+        candidates = frontier
+        if revisit_src is not None:
+            candidates = frontier.unionByName(
+                revisit_src.select(
+                    "url",
+                    "canonical_url",
+                    "domain_hash",
+                    "url_hash",
+                    "root_domain_hash",
+                    (F.col("priority") * cfg.revisit_decay).alias("priority"),
+                    F.lit(round_no).alias("discovered_round"),
+                )
             )
-        else:
-            frontier = ckpt.read(spark, "frontier", prev).select(*FRONTIER_COLS).cache()
-        if revisit_src is None:
-            return n_candidates, frontier, frontier
-        revisit = revisit_src.select(
-            "url",
-            "canonical_url",
-            "domain_hash",
-            "url_hash",
-            "root_domain_hash",
-            (F.col("priority") * cfg.revisit_decay).alias("priority"),
-            F.lit(round_no).alias("discovered_round"),
-        )
-        return n_candidates, frontier, frontier.unionByName(revisit)
+        # cached last, when nothing in this phase can raise any more:
+        # run_round releases it from here on (the candidates plan picks
+        # the cache up when it runs)
+        return n_candidates, frontier.cache(), candidates
 
     def _update_filters(self, round_no: int) -> DataFrame:
         """Filters-update phase: filters/round=k = filters/round=k-1 plus
@@ -582,9 +625,12 @@ class CrawlFrontier:
         from the pluggable real pipeline (``expand_fn`` → raw urls → the
         fused identity kernel) or the deterministic fetch simulation
         (``_expand_ident``) — unioned with the frontier and max-priority
-        deduped by identity in ONE shuffle.  Materialized now (eager
-        localCheckpoint): it does not depend on the filters state, so its
-        job runs while the pool writes the filters."""
+        deduped by identity in ONE shuffle.  Materialized now, cached and
+        filled by a noop write: it does not depend on the filters state,
+        so its job runs while the pool writes the filters.  Unlike a
+        localCheckpoint, the cache is released by ``unpersist`` (the
+        caller does) and is recomputed from its lineage if an executor
+        holding its blocks is lost."""
         cfg = self.cfg
         if self.expand_fn is not None:
             links_raw = CF.with_canonical_urlfp(self.expand_fn(scheduled))
@@ -602,7 +648,10 @@ class CrawlFrontier:
             .withColumn("discovered_round", F.lit(round_no))
             .select(*FRONTIER_COLS)
         )
-        return dedup_by_identity(frontier.unionByName(links), cfg.num_partitions).localCheckpoint()
+        return _cache_filled(
+            dedup_by_identity(frontier.unionByName(links), cfg.num_partitions),
+            lambda df: df.write.format("noop").mode("overwrite").save(),
+        )
 
     def _write_frontier(self, merged: DataFrame, round_no: int) -> int:
         """Links gate + frontier write phase; returns the frontier size.

@@ -14,6 +14,7 @@ and filters tables; there is no other gate.
 
 from __future__ import annotations
 
+import contextlib
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -189,10 +190,14 @@ def frontier_process_batch(
     identical output.  Batch ids run 0, 1, 2, ... (the filter update ORs
     into the previous batch's blobs); any other id raises ValueError.
     The partition count P is the default parallelism at batch 0, kept in
-    the manifest for the life of the stream."""
+    the manifest for the life of the stream.
+
+    Like a batch round, the micro-batch runs with AQE off
+    (``frontier.adaptive_off``), reads its carry-over with the frontier's
+    fixed schema, and releases the frames it cached on every exit path."""
     from . import seenset
     from .catalog import make_checkpoint
-    from .frontier import FRONTIER_COLS, dedup_by_identity, write_processed
+    from .frontier import FRONTIER_COLS, FRONTIER_SCHEMA, adaptive_off, dedup_by_identity, write_processed
 
     spark = batch_df.sparkSession
     ckpt = make_checkpoint(spark, out_dir)
@@ -209,36 +214,39 @@ def frontier_process_batch(
         )
     P = spark.sparkContext.defaultParallelism if last is None else int(manifest["num_partitions"])
 
-    ident = (
-        CF.with_canonical_urlfp(batch_df)
-        .filter("url_valid")
-        .withColumn("discovered_round", F.lit(batch_id))
-        .select(*FRONTIER_COLS)
-    )
-    if last is not None:
-        ident = ident.unionByName(ckpt.read(spark, "carryover", last))
-    # dedup first, gate after (the links gate's shape): the dedup lands
-    # rows partition-clustered, and the gate reads committed state only
-    novel = dedup_by_identity(ident, P)
-    if last is not None:
-        novel = seenset.gate_new_storage(novel, ckpt.state_location(), last, last, P)
-    novel = novel.cache()
+    # ``release`` unpersists processed before novel, the frame it was
+    # cached over
+    with adaptive_off(spark), contextlib.ExitStack() as release:
+        ident = (
+            CF.with_canonical_urlfp(batch_df)
+            .filter("url_valid")
+            .withColumn("discovered_round", F.lit(batch_id))
+            .select(*FRONTIER_COLS)
+        )
+        if last is not None:
+            ident = ident.unionByName(ckpt.read(spark, "carryover", last, FRONTIER_SCHEMA))
+        # dedup first, gate after (the links gate's shape): the dedup lands
+        # rows partition-clustered, and the gate reads committed state only
+        novel = dedup_by_identity(ident, P)
+        if last is not None:
+            novel = seenset.gate_new_storage(novel, ckpt.state_location(), last, last, P)
+        novel = novel.cache()
+        release.callback(novel.unpersist)
 
-    processed, n_sched = write_processed(
-        ckpt, novel, robots, batch_id, P, default_budget=default_budget, n_salts=n_salts
-    )
-    filters = seenset.update_filters_storage(
-        spark, ckpt.state_location(), batch_id, P, capacity=STREAM_BLOOM_CAPACITY
-    )  # re-read location: covers the just-written processed delta
-    ckpt.write(filters, "filters", batch_id, partition_by=["partition_id"])
-    leftover = novel.join(
-        processed.select("domain_hash", "url_hash"), ["domain_hash", "url_hash"], "left_anti"
-    ).select(*FRONTIER_COLS)
-    ckpt.write(leftover, "carryover", batch_id)
-    processed.unpersist()
-    novel.unpersist()
-    ckpt.commit_round(
-        batch_id,
-        {t: f"round={batch_id}" for t in ("processed", "filters", "carryover")},
-        extra={"scheduled": n_sched, "num_partitions": P},
-    )
+        processed, n_sched = write_processed(
+            ckpt, novel, robots, batch_id, P, default_budget=default_budget, n_salts=n_salts
+        )
+        release.callback(processed.unpersist)
+        filters = seenset.update_filters_storage(
+            spark, ckpt.state_location(), batch_id, P, capacity=STREAM_BLOOM_CAPACITY
+        )  # re-read location: covers the just-written processed delta
+        ckpt.write(filters, "filters", batch_id, partition_by=["partition_id"])
+        leftover = novel.join(
+            processed.select("domain_hash", "url_hash"), ["domain_hash", "url_hash"], "left_anti"
+        ).select(*FRONTIER_COLS)
+        ckpt.write(leftover, "carryover", batch_id)
+        ckpt.commit_round(
+            batch_id,
+            {t: f"round={batch_id}" for t in ("processed", "filters", "carryover")},
+            extra={"scheduled": n_sched, "num_partitions": P},
+        )

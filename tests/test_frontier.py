@@ -348,10 +348,10 @@ def test_revisit_source_read_error_fails_the_round(spark, tmp_path, monkeypatch)
 
     real_read = fr.ckpt.read
 
-    def _read(spark_, name, round_no):
+    def _read(spark_, name, round_no, schema=None):
         if name == "processed":
             raise OSError(f"injected read failure: processed round {round_no}")
-        return real_read(spark_, name, round_no)
+        return real_read(spark_, name, round_no, schema)
 
     monkeypatch.setattr(fr.ckpt, "read", _read)
     with pytest.raises(OSError, match="processed round 1"):
@@ -580,7 +580,7 @@ _GATE_ONCE_CASES.update({case: ({}, ROUNDS, False) for case in _FAIL_CASES})
 
 @pytest.mark.parametrize("backend", ["parquet", "iceberg_stub"])
 @pytest.mark.parametrize("case", sorted(_GATE_ONCE_CASES))
-def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, case, backend):
+def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, spark_state, case, backend):
     """The gate-once invariant: every committed frontier/round=k already
     excludes everything filters/round=k and the seen set through k
     know, so re-gating it (what a round-start novelty gate would do at
@@ -589,7 +589,8 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, ca
     per-host cap, which only evicts) and the empty-round copy-forward;
     revisits join after the gate and never land in the frontier.  The
     crawl must also equal the replay oracle, which computes novelty on
-    its own."""
+    its own.  A failed round leaves the session's AQE setting, cache and
+    persistent RDDs as they were before it."""
     from ccspark import seenset
 
     overrides, rounds, empty_robots = _GATE_ONCE_CASES[case]
@@ -616,6 +617,7 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, ca
 
         phase = _FAIL_CASES[case]
         fr.run(seeds, 1, on_round=on_round)
+        state = spark_state()
         if phase == "filters_write":
             failed = _fail_next_filters_write(monkeypatch, fr)
         else:
@@ -627,6 +629,7 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, ca
             assert failed[0].startswith("ccspark-round")  # raised on the round pool
         assert fr.ckpt.last_committed_round() == 1
         assert not [t.name for t in threading.enumerate() if t.name.startswith("ccspark-round")]
+        assert spark_state() == state
         fr.run(None, rounds - 1, on_round=on_round)
     else:
         fr.run(seeds, rounds, on_round=on_round)
@@ -685,3 +688,23 @@ def test_one_gate_call_per_round(spark, tmp_path, monkeypatch):
     assert all(m["candidates"] > 0 for m in metrics)
     assert per_round == [[(1, 1)], [(1, 1), (2, 2)]]
     assert all("novel" not in m for m in metrics)
+
+
+def test_round_job_budget(spark, tmp_path, last_job_id, spark_state):
+    """A steady round (2) and a revisit round (4, revisit_after=3) each
+    run six Spark jobs on the parquet backend, read from the status
+    store: the robots broadcast, the processed write, the lineage
+    collect, the filters write, the dedup's cache-filling noop write and
+    the frontier write (ARCHITECTURE §1).  Every round leaves the
+    session's AQE setting and cache as it found them."""
+    cfg = _cfg()
+    cfg.revisit_after = 3
+    fr = CrawlFrontier(spark, str(tmp_path / "budget"), cfg)
+    fr.bootstrap(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED))
+    jobs = {}
+    for r in range(1, 5):
+        state, j0 = spark_state(), last_job_id()
+        fr.run_round(r)
+        jobs[r] = last_job_id() - j0
+        assert spark_state() == state
+    assert (jobs[2], jobs[4]) == (6, 6), jobs

@@ -235,9 +235,11 @@ def test_streaming_frontier_overbudget_carryover(spark, tmp_path):
     assert _scheduled(spark, out, 1).count() + carry1.count() == 6
 
 
-def test_streaming_frontier_exactly_once(spark, tmp_path, monkeypatch):
+def test_streaming_frontier_exactly_once(spark, tmp_path, monkeypatch, spark_state):
     """Kill mid-batch (before the commit marker), re-run → scheduled
-    output byte-identical; re-run of a COMMITTED batch is a no-op."""
+    output byte-identical; re-run of a COMMITTED batch is a no-op.  The
+    killed batch leaves the session's AQE setting and cache as it found
+    them."""
     import pandas as pd
 
     from ccspark import streaming as ST
@@ -258,9 +260,11 @@ def test_streaming_frontier_exactly_once(spark, tmp_path, monkeypatch):
         return real_commit(self, *args, **kwargs)
 
     monkeypatch.setattr(Checkpoint, "commit_round", _commit_once)
+    state = spark_state()
     with pytest.raises(RuntimeError, match="simulated kill"):
         ST.frontier_process_batch(b0, 0, robots, str(out), default_budget=10)
     assert Checkpoint(str(out)).last_committed_round() is None
+    assert spark_state() == state
 
     def read_bytes(p):
         import glob
@@ -334,11 +338,12 @@ def test_streaming_frontier_repeats_scheduled_once(spark, tmp_path):
     assert sched.select("domain_hash", "url_hash").distinct().count() == 15
 
 
-def test_streaming_frontier_constant_jobs_per_batch(spark, tmp_path, monkeypatch):
+def test_streaming_frontier_constant_jobs_per_batch(spark, tmp_path, monkeypatch, last_job_id, spark_state):
     """A micro-batch's Spark job count does not grow with the stream's
     age (batches 2-5 run the same number of jobs, read from the status
     store), it calls the storage gate once per batch after the first,
-    and it never reads a table's whole history."""
+    it never reads a table's whole history, and it leaves the session's
+    AQE setting and cache as it found them."""
     import pandas as pd
 
     from ccspark import seenset
@@ -357,17 +362,6 @@ def test_streaming_frontier_constant_jobs_per_batch(spark, tmp_path, monkeypatch
 
     monkeypatch.setattr(seenset, "gate_new_storage", counting_gate)
 
-    jsc = spark.sparkContext._jsc.sc()
-    store, bus = jsc.statusStore(), jsc.listenerBus()
-
-    def last_job_id():
-        bus.waitUntilEmpty()
-        it = store.jobsList(None).iterator()
-        top = -1
-        while it.hasNext():
-            top = max(top, it.next().jobId())
-        return top
-
     out = tmp_path / "out"
     robots = spark.createDataFrame([("h0.com", ["/p1"], None, None)], _ROBOTS_SCHEMA)
     ts = pd.Timestamp("2024-01-01").to_pydatetime()
@@ -375,11 +369,11 @@ def test_streaming_frontier_constant_jobs_per_batch(spark, tmp_path, monkeypatch
     for b in range(5):
         # 200 URLs on 20 hosts, half of them repeats of the previous batch
         rows = [(f"http://h{i % 20}.com/p{i}", 0.5, ts) for i in range(100 * b, 100 * b + 200)]
-        j0 = last_job_id()
-        ST.frontier_process_batch(
-            _mk_batch(spark, rows), b, robots, str(out), default_budget=5, n_salts=2
-        )
+        batch = _mk_batch(spark, rows)
+        state, j0 = spark_state(), last_job_id()
+        ST.frontier_process_batch(batch, b, robots, str(out), default_budget=5, n_salts=2)
         jobs.append(last_job_id() - j0)
+        assert spark_state() == state
     assert len(set(jobs[1:])) == 1, jobs
     assert gate_calls == [(b - 1, b - 1) for b in range(1, 5)]
 
