@@ -146,7 +146,7 @@ class IcebergCheckpoint:
         """``arrow_schema`` pins the physical column types (createDataFrame
         alone would infer long for int32 columns like partition_id /
         hash_count, breaking type parity with Spark-written rounds —
-        the cogroup/union key-type invariant filter_arrow_schema
+        the type parity that filter_arrow_schema
         documents).  ``partition_col`` becomes an Iceberg partition
         transform at table creation (exactly like ``partition_by`` on a
         Spark write), so driver-built tables land with the same
@@ -189,7 +189,11 @@ class IcebergCheckpoint:
         files = self.spark.read.table(t + ".files").filter(F.col("partition._ckpt_round") == round_no)
         return bool(files.limit(1).collect())
 
-    def read_all_rounds(self, spark: SparkSession, name: str, upto_round: int) -> DataFrame | None:
+    def read_all_rounds(
+        self, spark: SparkSession, name: str, upto_round: int, schema: str | None = None
+    ) -> DataFrame | None:
+        """Rounds 0..upto_round of a table; ``schema`` is ignored, as in
+        ``read``."""
         t = self._qualified(name)
         if not spark.catalog.tableExists(t):
             return None

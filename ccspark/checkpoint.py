@@ -182,10 +182,14 @@ class Checkpoint:
         leaves only _SUCCESS, no file to infer a schema from)."""
         return self._first_data_file(name, round_no) is not None
 
-    def read_all_rounds(self, spark: SparkSession, name: str, upto_round: int) -> DataFrame | None:
-        """Union of a table across rounds 0..upto_round (append-style)."""
-        paths = [self.table_dir(name, r) for r in range(upto_round + 1) if self.has_data(name, r)]
-        if not paths:
+    def read_all_rounds(
+        self, spark: SparkSession, name: str, upto_round: int, schema: str | None = None
+    ) -> DataFrame | None:
+        """Union of a table across rounds 0..upto_round (append-style).
+        Each round is a ``read`` with ``schema``: a fixed schema launches
+        no schema-inference job and keeps its missing-column check."""
+        rounds = [r for r in range(upto_round + 1) if self.has_data(name, r)]
+        if not rounds:
             return None
         # one read per round dir, unioned: a multi-path read would run
         # partition discovery across conflicting roots (each round dir is
@@ -194,7 +198,7 @@ class Checkpoint:
 
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
-            (spark.read.parquet(p) for p in paths),
+            (self.read(spark, name, r, schema) for r in rounds),
         )
 
     def drop_rounds_after(self, round_no: int) -> None:

@@ -394,30 +394,35 @@ class CrawlFrontier:
     def read_trace(self, upto_round: int) -> DataFrame:
         """Scheduled trace rows across rounds 1..upto (the crawl
         ordering): the scheduled half of the per-round processed table."""
-        return (
-            self.ckpt.read_all_rounds(self.spark, "processed", upto_round)
-            .filter(F.col("host_rank").isNotNull())
-        )
+        return self._read_processed(upto_round).filter(F.col("host_rank").isNotNull())
 
     def read_seen(self, upto_round: int) -> DataFrame | None:
         """Seen-set membership = every identity the crawl has disposed of
         (scheduled or robots-retired) across rounds 1..upto."""
-        proc = self.ckpt.read_all_rounds(self.spark, "processed", upto_round)
+        proc = self._read_processed(upto_round)
         return None if proc is None else proc.select("domain_hash", "url_hash")
+
+    def _read_processed(self, upto_round: int) -> DataFrame | None:
+        return self.ckpt.read_all_rounds(
+            self.spark, "processed", upto_round, PROCESSED_SCHEMA + _PID_SCHEMA
+        )
 
     # -- lifecycle --------------------------------------------------------
 
     def bootstrap(self, seeds: DataFrame) -> None:
         """Round 0: establish the frontier from the seed list.
 
-        ONE Spark action: the identified-seeds write, with the row count
-        read off an Observation instead of a second (full-recompute)
-        count job.  The empty filter table is deterministic driver-side
-        data — written with pyarrow directly, no job; the seen set
-        starts absent (read_all_rounds returns None for round 0)."""
+        ONE Spark job: the identified-seeds write, run with AQE off
+        (``adaptive_off``, so the dedup's shuffle stage is not a job of
+        its own), with the row count read off an Observation instead of
+        a second (full-recompute) count job.  The empty filter table is
+        deterministic driver-side data — written with pyarrow directly,
+        no job; the seen set starts absent (read_all_rounds returns None
+        for round 0)."""
         obs = Observation("bootstrap_n")
         frontier = self._identify(seeds, 0).observe(obs, F.count(F.lit(1)).alias("n"))
-        self.ckpt.write(frontier, "frontier", 0, partition_by=["partition_id"])
+        with adaptive_off(self.spark):
+            self.ckpt.write(frontier, "frontier", 0, partition_by=["partition_id"])
         self.ckpt.write_pdf(
             seenset.empty_filters_pdf(
                 self.cfg.num_partitions,

@@ -28,7 +28,10 @@ equi-shuffles on int64 node ids (uniform when ids are hashes; AQE's
 skew-join split handles the hot-component groupBy tail).  The iteration
 materializes each round via localCheckpoint so the plan does not grow
 with the round count (lineage depth, not data, is the local hazard; on
-a cluster a checkpoint dir gives the fault-tolerant variant).
+a cluster a checkpoint dir gives the fault-tolerant variant).  A
+checkpoint's RDD is released as soon as its successor is materialized,
+so a call leaves only the RDDs its result reads, however many rounds
+it ran.
 
 Reference scope note: the reference engine deduplicates URLs by exact
 fingerprint only (URLFPV2, Query.java's uniqueValues path) — document
@@ -55,6 +58,13 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
         F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
     ).collect()[0]
     return int(row["n"]), int(row["h"])
+
+
+def _release(*dfs: DataFrame) -> None:
+    """Unpersist the localCheckpoint RDDs behind ``dfs``; nothing reads
+    them once their successors are materialized."""
+    for df in dfs:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -132,6 +142,7 @@ def connected_components(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
+    _release(raw)
 
     prev_fp = _fingerprint(cur)
     converged = prev_fp[0] == 0
@@ -141,6 +152,7 @@ def connected_components(
             break
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         fp = _fingerprint(nxt)
+        _release(cur)
         cur = nxt
         iters += 1
         if fp == prev_fp:
@@ -205,15 +217,17 @@ def pagerank(
     )
     n = nodes.count()
     if n == 0:
+        _release(e)
         return nodes.select("node", F.lit(0.0).alias("rank"))
     outdeg = e.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).alias("outdeg"))
     # static per-node frame: (node, outdeg) — outdeg 0 marks dangling
     base = nodes.join(outdeg, "node", "left").select(
         "node", F.coalesce("outdeg", F.lit(0)).alias("outdeg")
     ).localCheckpoint(eager=True)
+    _release(nodes)
 
     ranks = base.select("node", "outdeg", F.lit(1.0 / n).alias("rank"))
-    for _ in range(iters):
+    for i in range(iters):
         dangling = (
             ranks.where(F.col("outdeg") == 0)
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass"))
@@ -228,7 +242,7 @@ def pagerank(
             .groupBy(F.col("d").alias("node"))
             .agg(F.sum("c").alias("inflow"))
         )
-        ranks = (
+        nxt = (
             base.join(contribs, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -242,4 +256,11 @@ def pagerank(
             )
             .localCheckpoint(eager=True)
         )
+        if i:  # iteration 0 replaces base's projection, not a checkpoint
+            _release(ranks)
+        ranks = nxt
+    # the result reads the last ranks alone, or base when iters is 0
+    _release(e)
+    if iters:
+        _release(base)
     return ranks.select("node", F.round("rank", 10).alias("rank"))

@@ -1,22 +1,24 @@
 """Crawl-scheduling pipeline — the scaling benchmark unit.
 
-The full per-URL work of a crawl round in two timed Spark actions:
+The per-URL work of a crawl round in two timed Spark actions, built
+from the round's own pieces:
 
     raw urls → canonicalize + URLFPV2 fingerprints (one fused kernel pass)
-             → identified-candidates parquet (the shape of a stored frontier)
-    stored   → exact identity dedup (shuffle on domain_hash/url_hash)
-             → bloom-filter novelty probe (partition-local cogroup)
-             → robots gate + crawl-delay budget
-             → salted per-host priority rank
+             → identified-candidates parquet (frontier-shaped rows)
+    stored   → frontier.dedup_by_identity (one Exchange, by partition_id)
+             → seenset.gate_new_storage against a pre-seeded crawl state
+               (bloom pre-filter + exact confirm, worker-side)
+             → politeness.process_round (robots gate + crawl-delay
+               budget + salted per-host priority rank)
              → scheduled parquet
 
-The multi-round loop (ccspark.frontier) adds checkpoint/manifest
-bookkeeping whose fixed cost is a local-mode artifact (~a dozen tiny
-jobs per round); on a real cluster each round processes billions of
-rows and that overhead vanishes.  The scaling criterion (N → 4N
-executors at ≥0.8 efficiency) is therefore evidenced on this pipeline,
-whose wall time is dominated by the actual per-URL compute at any
-scale — same plan shape the loop runs.
+The schedule plan runs under ``frontier.adaptive_off``, as a round's
+plans do, so it is the same plan shape the loop runs: the loop's links
+gate is dedup → gate, its processed phase is process_round.  What the
+unit leaves out is the loop's per-round bookkeeping (link expansion,
+filter update, lineage, manifest), so its wall time is dominated by the
+per-URL compute at any scale; the scaling criterion (N → 4N executors
+at ≥0.8 efficiency) is evidenced on it.
 """
 
 from __future__ import annotations
@@ -30,15 +32,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import politeness, seenset, synth
+from .checkpoint import Checkpoint
+from .frontier import _pid_col, adaptive_off, dedup_by_identity
+
+_IDENT_SCHEMA = (
+    "url string, canonical_url string, domain_hash long, url_hash long, "
+    "root_domain_hash long, priority double, url_valid boolean"
+)
+_SCHEDULE_COLS = ["host", "host_rank", "url", "canonical_url", "domain_hash", "url_hash", "priority"]
 
 
-def identified_candidates(spark: SparkSession, universe_n: int, n_hosts: int | None = None, seed: int = 42) -> DataFrame:
-    """Generation + canonicalize + URLFPV2 fused into ONE python pass —
-    the bench generator (a real deployment reads raw urls from a table
-    and uses functions.with_canonical_urlfp, the same fused kernel)."""
+def _identified(ids: DataFrame, n_hosts: int, seed: int) -> DataFrame:
+    """Identified rows for the universe ids in ``ids`` (a range frame)."""
     from . import urls as urls_mod
-
-    n_hosts = n_hosts or synth.default_n_hosts(universe_n)
 
     def _gen(batches):
         for pdf in batches:
@@ -53,60 +59,42 @@ def identified_candidates(spark: SparkSession, universe_n: int, n_hosts: int | N
                     "canonical_url": canon.to_numpy(),
                     "domain_hash": fp["domain_hash"].astype("int64"),
                     "url_hash": fp["url_hash"].astype("int64"),
+                    "root_domain_hash": fp["root_domain_hash"].astype("int64"),
                     "priority": pri,
                     "url_valid": fp["valid"],
                 }
             )
 
-    return spark.range(universe_n).mapInPandas(
-        _gen,
-        schema="url string, canonical_url string, domain_hash long, url_hash long, priority double, url_valid boolean",
-    )
+    return ids.mapInPandas(_gen, schema=_IDENT_SCHEMA)
 
 
-def schedule_from_identified(
-    spark: SparkSession,
-    ident_path: str,
-    robots: DataFrame,
-    seen_filters: DataFrame | None,
-    num_partitions: int = 32,
-    default_budget: int = 50,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Scheduling plan over a *stored* identified-candidates table.
+def identified_candidates(spark: SparkSession, universe_n: int, n_hosts: int | None = None, seed: int = 42) -> DataFrame:
+    """Generation + canonicalize + URLFPV2 fused into ONE python pass —
+    the bench generator (a real deployment reads raw urls from a table
+    and uses functions.with_canonical_urlfp, the same fused kernel).
+    Rows are frontier-shaped (``FRONTIER_COLS`` less
+    ``discovered_round``) plus ``url_valid``."""
+    return _identified(spark.range(universe_n), n_hosts or synth.default_n_hosts(universe_n), seed)
 
-    Because the source is columnar parquet, the narrow rank path and the
-    final string resolution each read only the columns they need
-    (column pruning) — the python identification is never recomputed and
-    url strings never ride through the rank shuffles."""
-    ident = spark.read.parquet(ident_path).filter("url_valid")
-    narrow = politeness.with_host_and_path(
-        ident.select("canonical_url", "domain_hash", "url_hash", "priority")
-    ).drop("canonical_url")
-    dedup = narrow.groupBy("domain_hash", "url_hash").agg(
-        F.max("priority").alias("priority"),
-        F.min("host").alias("host"),
-        F.min("path").alias("path"),
+
+def _seed_state(spark: SparkSession, state: str, universe_n: int, n_hosts: int, seed: int, num_partitions: int) -> None:
+    """A crawl state at ``state`` whose round 1 disposed of every 10th id
+    of the universe: their identities as ``processed/round=1`` and the
+    bloom filters over them as ``filters/round=1``, written by the
+    round's own writers."""
+    seen = (
+        _identified(spark.range(0, universe_n, 10), n_hosts, seed)
+        .filter("url_valid")
+        .select("domain_hash", "url_hash")
+        .withColumn("partition_id", _pid_col(num_partitions))
+        .repartition(num_partitions, "partition_id")
     )
-    if seen_filters is not None:
-        dedup = (
-            seenset.probe_filters(dedup, seen_filters, num_partitions)
-            .filter(~F.col("maybe_seen"))
-            .drop("maybe_seen")
-        )
-    gated = politeness.with_budget(politeness.robots_allow(dedup, robots), default_budget)
-    ranked = politeness.salted_topk(gated, ["host"], F.col("budget"), n_salts).select(
-        "domain_hash", "url_hash", "host", "host_rank", "priority"
+    ckpt = Checkpoint(state)
+    ckpt.write(seen, "processed", 1, partition_by=["partition_id"])
+    filters = seenset.update_filters_storage(
+        spark, state, 1, num_partitions, capacity=max(universe_n // num_partitions, 1024)
     )
-    strings = (
-        ident.select("domain_hash", "url_hash", "url", "canonical_url")
-        .join(ranked.select("domain_hash", "url_hash"), ["domain_hash", "url_hash"], "left_semi")
-        .groupBy("domain_hash", "url_hash")
-        .agg(F.min("url").alias("url"), F.min("canonical_url").alias("canonical_url"))
-    )
-    return ranked.join(strings, ["domain_hash", "url_hash"]).select(
-        "host", "host_rank", "url", "canonical_url", "domain_hash", "url_hash", "priority"
-    )
+    ckpt.write(filters, "filters", 1, partition_by=["partition_id"])
 
 
 def run_schedule_bench(
@@ -121,27 +109,35 @@ def run_schedule_bench(
 
     Identification is written to an intermediate columnar table first
     (the shape of a stored frontier), then scheduling runs over it —
-    both actions timed."""
+    both actions timed.  ``with_seen_filter`` gates the candidates
+    against a crawl state seeded (untimed) with every 10th id."""
     n_hosts = synth.default_n_hosts(universe_n)
     robots = synth.gen_robots(spark, n_hosts, seed)
-    filters = None
+    state = out_path + "_state"
     if with_seen_filter:
-        # pre-seeded filter state (10% of the universe already seen)
-        pre = spark.range(0, universe_n, 10).select(
-            (F.col("id") * 7919 + 13).alias("url_hash"), (F.col("id") % 1000).alias("domain_hash")
-        )
-        filters = seenset.build_filters(
-            pre, num_partitions, "bloom", capacity=max(universe_n // num_partitions, 1024)
-        ).cache()
-        filters.count()  # materialize outside the timed region
+        _seed_state(spark, state, universe_n, n_hosts, seed, num_partitions)
     cands = identified_candidates(spark, universe_n, n_hosts, seed)
     ident_path = out_path + "_ident"
     t0 = time.time()
     cands.write.mode("overwrite").parquet(ident_path)
-    plan = schedule_from_identified(spark, ident_path, robots, filters, num_partitions)
-    plan.write.mode("overwrite").parquet(out_path)
+    with adaptive_off(spark):
+        cand = dedup_by_identity(
+            spark.read.schema(_IDENT_SCHEMA)
+            .parquet(ident_path)
+            .filter("url_valid")
+            .withColumn("discovered_round", F.lit(1)),
+            num_partitions,
+        )
+        if with_seen_filter:
+            cand = seenset.gate_new_storage(cand, state, 1, 1, num_partitions)
+        politeness.process_round(
+            cand, robots, default_budget=50, n_salts=8, layout_partitions=num_partitions
+        ).filter(F.col("host_rank").isNotNull()).select(*_SCHEDULE_COLS).write.mode(
+            "overwrite"
+        ).parquet(out_path)
     wall = time.time() - t0
     shutil.rmtree(ident_path, ignore_errors=True)
+    shutil.rmtree(state, ignore_errors=True)
     n = spark.read.parquet(out_path).count()
     return {
         "universe": universe_n,

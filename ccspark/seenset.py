@@ -13,10 +13,7 @@ Design (SURVEY.md §2.3 H4/H5, §4):
   crawl frontier gates and updates filters worker-side over
   storage-partitioned state (``gate_new_storage`` /
   ``update_filters_storage`` via seenstore) — no Exchange on any state
-  table.  The batch pipeline builds with
-  ``groupBy(partition_id).applyInPandas`` and probes with a cogrouped
-  ``applyInPandas`` (``build_filters`` / ``probe_filters``), so filter
-  blobs and candidates meet on the SAME partitioning.
+  table.
 * Bloom sizing matches BloomCalculations (computeBestK table :37-41,
   bitset size ``n*bucketsPerElement+20`` rounded up to a 64-bit word
   like java.util.BitSet) so false-positive *behavior* equals the
@@ -50,7 +47,7 @@ FILTER_SCHEMA = (
 def filter_arrow_schema():
     """pyarrow schema physically identical to FILTER_SCHEMA, so a
     driver-side pyarrow write reads back indistinguishable from a
-    Spark-written filter table (cogroup keys must type-match)."""
+    Spark-written filter table."""
     import pyarrow as pa
 
     return pa.schema(
@@ -82,15 +79,26 @@ def bitset_size(num_elements: int, buckets_per_element: int) -> int:
 # ---------------------------------------------------------------------------
 
 
-def bloom_build(keys: np.ndarray, buckets_per_element: int = 10) -> tuple[int, int, bytes]:
-    """Build one bloom bitset over int64 keys → (k, m, bits)."""
-    n = max(len(keys), 1)
-    k = compute_best_k(buckets_per_element)
-    m = bitset_size(n, buckets_per_element)
-    words = np.zeros(m // 64, dtype=np.uint64)
+def _bloom_add(words: np.ndarray, keys: np.ndarray, k: int, m: int) -> None:
+    """Set the k bucket bits of every key in the bitset ``words``."""
     if len(keys):
         idx = hashing.bloom_buckets_long(np.asarray(keys, dtype=np.int64), k, m).ravel()
         np.bitwise_or.at(words, idx >> 6, np.uint64(1) << (idx & 63).astype(np.uint64))
+
+
+def bloom_build(
+    keys: np.ndarray, buckets_per_element: int = 10, capacity: int | None = None
+) -> tuple[int, int, bytes]:
+    """Build one bloom bitset over int64 keys → (k, m, bits).
+
+    ``capacity`` fixes the bitset size to ``bitset_size(capacity, b)``
+    whatever the key count, so filters built over different key sets
+    are bitwise-OR mergeable (the per-round delta update)."""
+    n = capacity if capacity is not None else max(len(keys), 1)
+    k = compute_best_k(buckets_per_element)
+    m = bitset_size(n, buckets_per_element)
+    words = np.zeros(m // 64, dtype=np.uint64)
+    _bloom_add(words, keys, k, m)
     return k, m, words.tobytes()
 
 
@@ -238,88 +246,6 @@ def cuckoo_probe(keys: np.ndarray, slots: int, nb: int, bits: bytes) -> np.ndarr
 # ---------------------------------------------------------------------------
 
 
-def build_filters(
-    seen: DataFrame,
-    num_partitions: int,
-    kind: str = "bloom",
-    buckets_per_element: int = 10,
-    capacity: int | None = None,
-) -> DataFrame:
-    """seen(domain_hash, url_hash, ...) → one filter row per partition.
-
-    ``capacity`` (bloom only) fixes the bitset size to
-    ``bitset_size(capacity, b)`` regardless of the actual key count, so
-    filters built over different key sets are bitwise-OR mergeable
-    (incremental per-round delta builds instead of full rebuilds)."""
-    assert kind in ("bloom", "cuckoo")
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(pdf["partition_id"].iloc[0])
-        keys = pdf["url_hash"].to_numpy(dtype=np.int64)
-        keys = np.unique(keys)
-        if kind == "bloom":
-            if capacity is not None:
-                k = compute_best_k(buckets_per_element)
-                m = bitset_size(capacity, buckets_per_element)
-                words = np.zeros(m // 64, dtype=np.uint64)
-                if len(keys):
-                    idx = hashing.bloom_buckets_long(keys, k, m).ravel()
-                    np.bitwise_or.at(words, idx >> 6, np.uint64(1) << (idx & 63).astype(np.uint64))
-                bits = words.tobytes()
-            else:
-                k, m, bits = bloom_build(keys, buckets_per_element)
-        else:
-            k, m, bits = cuckoo_build(keys)
-        return pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "kind": [kind],
-                "hash_count": [k],
-                "num_buckets": [m],
-                "n_keys": [len(keys)],
-                "bits": [bits],
-            }
-        )
-
-    with_pid = seen.withColumn(
-        "partition_id", F.pmod(F.col("domain_hash"), F.lit(num_partitions)).cast("int")
-    )
-    return with_pid.groupBy("partition_id").applyInPandas(_build, schema=FILTER_SCHEMA)
-
-
-def probe_filters(candidates: DataFrame, filters: DataFrame, num_partitions: int) -> DataFrame:
-    """candidates(domain_hash, url_hash, ...) × filters → + maybe_seen.
-
-    Cogrouped on partition_id: each task sees one partition's candidates
-    and that partition's single filter blob."""
-    cand = candidates.withColumn(
-        "partition_id", F.pmod(F.col("domain_hash"), F.lit(num_partitions)).cast("int")
-    )
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    out_schema = StructType(list(cand.schema.fields) + [StructField("maybe_seen", BooleanType())])
-
-    def _probe(key, cand_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = cand_pdf["url_hash"].to_numpy(dtype=np.int64)
-        if len(filt_pdf) == 0:
-            maybe = np.zeros(len(cand_pdf), dtype=bool)
-        else:
-            row = filt_pdf.iloc[0]
-            if row["kind"] == "bloom":
-                maybe = bloom_probe(keys, int(row["hash_count"]), int(row["num_buckets"]), row["bits"])
-            else:
-                maybe = cuckoo_probe(keys, int(row["hash_count"]), int(row["num_buckets"]), row["bits"])
-        out = cand_pdf.copy()
-        out["maybe_seen"] = maybe
-        return out
-
-    return (
-        cand.groupBy("partition_id")
-        .cogroup(filters.groupBy("partition_id"))
-        .applyInPandas(_probe, schema=out_schema)
-    )
-
-
 def empty_filters_pdf(
     num_partitions: int, kind: str = "bloom", buckets_per_element: int = 10, capacity: int | None = None
 ) -> pd.DataFrame:
@@ -328,12 +254,7 @@ def empty_filters_pdf(
     rows = []
     for pid in range(num_partitions):
         if kind == "bloom":
-            if capacity is not None:
-                k = compute_best_k(buckets_per_element)
-                m = bitset_size(capacity, buckets_per_element)
-                bits = bytes(m // 8)
-            else:
-                k, m, bits = bloom_build(np.array([], dtype=np.int64), buckets_per_element)
+            k, m, bits = bloom_build(np.array([], dtype=np.int64), buckets_per_element, capacity)
         else:
             k, m, bits = cuckoo_build(np.array([], dtype=np.int64))
         rows.append((pid, kind, k, m, 0, bits))
@@ -383,8 +304,6 @@ def gate_new_storage(
     function needs").  Marked non-deterministic so the optimizer cannot
     push the filter below the identity dedup's aggregate (re-gating
     pre-dedup, pre-clustering rows) or duplicate it."""
-    import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("boolean")
@@ -450,26 +369,21 @@ def update_filters_storage(
     skeleton = spark.range(0, num_partitions, 1, num_partitions).select(
         F.col("id").cast("int").alias("partition_id")
     )
-    k_default = compute_best_k(buckets_per_element)
-    m_default = bitset_size(capacity, buckets_per_element) if capacity else None
 
     def _update(pid: int) -> pd.DataFrame:
         from . import seenstore
 
         if kind == "bloom":
             prev = seenstore.filter_blob(root, pid, round_no - 1)
-            if prev is not None:
-                _kind, k, m, n_prev, bits = prev
-                words = np.frombuffer(bits, dtype=np.uint64).copy()
-            else:
-                assert m_default is not None, "first bloom update needs capacity"
-                k, m, n_prev = k_default, m_default, 0
-                words = np.zeros(m // 64, dtype=np.uint64)
+            if prev is None:
+                assert capacity, "first bloom update needs capacity"
+                k, m, bits = bloom_build(np.array([], dtype=np.int64), buckets_per_element, capacity)
+                prev = ("bloom", k, m, 0, bits)
+            _kind, k, m, n_prev, bits = prev
+            words = np.frombuffer(bits, dtype=np.uint64).copy()
             delta_u, _ = seenstore.round_pairs(root, pid, round_no)
             keys = np.unique(delta_u)
-            if len(keys):
-                idx = hashing.bloom_buckets_long(keys, k, m).ravel()
-                np.bitwise_or.at(words, idx >> 6, np.uint64(1) << (idx & 63).astype(np.uint64))
+            _bloom_add(words, keys, k, m)
             row = (pid, "bloom", k, m, n_prev + len(keys), words.tobytes())
         else:
             u_s, _ = seenstore.seen_arrays(root, pid, round_no)

@@ -708,3 +708,26 @@ def test_round_job_budget(spark, tmp_path, last_job_id, spark_state):
         jobs[r] = last_job_id() - j0
         assert spark_state() == state
     assert (jobs[2], jobs[4]) == (6, 6), jobs
+
+
+def test_bootstrap_runs_one_job(spark, tmp_path, last_job_id, spark_state):
+    """Bootstrap is one Spark job, the identified-seeds write (its plan
+    runs with AQE off), and leaves the session's AQE setting and cache
+    as it found them."""
+    fr = CrawlFrontier(spark, str(tmp_path / "boot"), _cfg())
+    seeds = synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED)
+    state, j0 = spark_state(), last_job_id()
+    fr.bootstrap(seeds)
+    assert last_job_id() - j0 == 1
+    assert spark_state() == state
+
+
+def test_read_trace_launches_no_job(spark, crawl, last_job_id):
+    """Every round of the trace and the seen set is read with the
+    processed table's fixed schema: no job runs before an action."""
+    ckpt, _ = crawl
+    fr = CrawlFrontier(spark, ckpt)
+    j0 = last_job_id()
+    trace, seen = fr.read_trace(ROUNDS), fr.read_seen(ROUNDS)
+    assert last_job_id() == j0
+    assert trace.count() > 0 and seen.count() >= trace.count()

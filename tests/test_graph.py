@@ -228,3 +228,43 @@ def test_pagerank_empty(spark):
 
     df = spark.createDataFrame([], "src long, dst long")
     assert pagerank(df).count() == 0
+
+
+def _new_persistent_rdds(spark, op):
+    """Runs ``op()``; returns its result and how many of the persistent
+    RDDs it created are still persisted when it returns."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = op()
+    return out, len(set(jsc.getPersistentRDDs().keySet()) - before)
+
+
+def test_pagerank_releases_superseded_checkpoints(spark):
+    """pagerank leaves only the checkpoint its result reads, whatever
+    the iteration count, and the result stays readable."""
+    from ccspark.graph import pagerank
+
+    edges = [(i, (i * 7 + 3) % 30) for i in range(30)] + [(1, 31)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    left = {}
+    for iters in (1, 5):
+        out, left[iters] = _new_persistent_rdds(spark, lambda: pagerank(df, iters=iters))
+        assert abs(sum(r["rank"] for r in out.collect()) - 1.0) < 1e-8
+    assert left[1] == left[5] == 1, left
+
+
+def test_connected_components_releases_superseded_checkpoints(spark):
+    """Inputs of different diameter take different iteration counts and
+    leave the same persistent RDDs (the node set and the final edges)."""
+    left, iters = {}, {}
+    for n in (3, 65):
+        edges = [(i, i + 1) for i in range(n - 1)]
+        df = spark.createDataFrame(edges, "src long, dst long")
+        stats = {}
+        out, left[n] = _new_persistent_rdds(
+            spark, lambda: connected_components(df, "src", "dst", stats=stats)
+        )
+        iters[n] = stats["iterations"]
+        assert {r["node"]: r["component"] for r in out.collect()} == {i: 0 for i in range(n)}
+    assert iters[3] < iters[65], iters
+    assert left[3] == left[65] == 2, left

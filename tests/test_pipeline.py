@@ -1,28 +1,25 @@
-"""Schedule pipeline tests: equivalence with process_round, budget
-conformance, determinism."""
+"""Scaling-unit tests: the stored schedule equals process_round over the
+deduplicated candidates, less the seeded identities when the seen gate
+runs; budget conformance."""
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from ccspark import pipeline, politeness, synth
+from ccspark import urls as urls_mod
 
 UNIVERSE = 100_000
 OUT_COLS = ["host", "host_rank", "url", "canonical_url", "domain_hash", "url_hash", "priority"]
 
 
-@pytest.fixture(scope="module")
-def outputs(spark, tmp_path_factory):
-    """The stored bench schedule (a) and process_round's scheduled rows
-    over the same deduplicated identified candidates (b), no seen filter
-    on either side."""
-    d = tmp_path_factory.mktemp("pipe")
-    a = pipeline.run_schedule_bench(
-        spark, UNIVERSE, str(d / "a"), num_partitions=16, with_seen_filter=False
-    )
-    n_hosts = synth.default_n_hosts(UNIVERSE)
+def _oracle(spark, universe, exclude=None):
+    """process_round's scheduled rows over the deduplicated identified
+    candidates, less the identities in ``exclude``."""
+    n_hosts = synth.default_n_hosts(universe)
     cands = (
-        pipeline.identified_candidates(spark, UNIVERSE, n_hosts, 42)
+        pipeline.identified_candidates(spark, universe, n_hosts, 42)
         .filter("url_valid")
         .groupBy("domain_hash", "url_hash")
         .agg(
@@ -31,16 +28,51 @@ def outputs(spark, tmp_path_factory):
             F.max("priority").alias("priority"),
         )
     )
+    if exclude is not None:
+        cands = cands.join(exclude, ["domain_hash", "url_hash"], "left_anti")
     proc = politeness.process_round(
         cands, synth.gen_robots(spark, n_hosts, 42), default_budget=50, n_salts=8
     )
-    sched = proc.filter(F.col("host_rank").isNotNull()).select(*OUT_COLS)
-    pa = spark.read.parquet(str(d / "a")).select(*OUT_COLS).toPandas()
-    pb = sched.toPandas().astype(pa.dtypes.to_dict())
-    b = {"scheduled": len(pb)}
+    return proc.filter(F.col("host_rank").isNotNull()).select(*OUT_COLS)
+
+
+def _same_rows(spark, out_path, oracle):
+    """The stored schedule and the oracle, both sorted by (host, rank)."""
+    pa = spark.read.parquet(out_path).select(*OUT_COLS).toPandas()
+    pb = oracle.toPandas().astype(pa.dtypes.to_dict())
     pa = pa.sort_values(["host", "host_rank"]).reset_index(drop=True)
     pb = pb.sort_values(["host", "host_rank"]).reset_index(drop=True)
-    return a, b, pa, pb
+    return pa, pb
+
+
+def _seeded_identities(spark, universe):
+    """The identities the unit's seen state holds: every 10th id of the
+    universe, identified driver-side with the URL kernel."""
+    u, _ = synth.gen_urls_pdf(np.arange(0, universe, 10), synth.default_n_hosts(universe), 42)
+    canon, hosts = urls_mod.canonicalize_batch_with_host(u)
+    fp = urls_mod.urlfp_batch(canon, hosts=hosts)
+    ok = fp["valid"].to_numpy(dtype=bool)
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "domain_hash": fp["domain_hash"].to_numpy(dtype=np.int64)[ok],
+                "url_hash": fp["url_hash"].to_numpy(dtype=np.int64)[ok],
+            }
+        )
+    )
+
+
+@pytest.fixture(scope="module")
+def outputs(spark, tmp_path_factory):
+    """The stored bench schedule (a) and process_round's scheduled rows
+    over the same deduplicated identified candidates (b), no seen gate
+    on either side."""
+    d = tmp_path_factory.mktemp("pipe")
+    a = pipeline.run_schedule_bench(
+        spark, UNIVERSE, str(d / "a"), num_partitions=16, with_seen_filter=False
+    )
+    pa, pb = _same_rows(spark, str(d / "a"), _oracle(spark, UNIVERSE))
+    return a, {"scheduled": len(pb)}, pa, pb
 
 
 def test_two_phase_equals_single_phase(outputs):
@@ -67,11 +99,14 @@ def test_budget_and_ranks(outputs):
 
 
 def test_seen_filter_excludes(spark, tmp_path):
-    stats_with = pipeline.run_schedule_bench(
-        spark, 50_000, str(tmp_path / "w"), num_partitions=8, with_seen_filter=True
+    """With the seen gate, the unit schedules exactly what process_round
+    schedules over the deduplicated candidates less the seeded
+    identities, and the gate drops rows."""
+    n = 50_000
+    stats = pipeline.run_schedule_bench(
+        spark, n, str(tmp_path / "w"), num_partitions=8, with_seen_filter=True
     )
-    stats_without = pipeline.run_schedule_bench(
-        spark, 50_000, str(tmp_path / "wo"), num_partitions=8, with_seen_filter=False
-    )
-    # the pre-seeded filter removes some candidates (or at worst none)
-    assert stats_with["scheduled"] <= stats_without["scheduled"]
+    pa, pb = _same_rows(spark, str(tmp_path / "w"), _oracle(spark, n, _seeded_identities(spark, n)))
+    assert stats["scheduled"] == len(pb) > 0
+    assert pa.equals(pb)
+    assert stats["scheduled"] < _oracle(spark, n).count()

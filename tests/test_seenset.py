@@ -1,10 +1,8 @@
-"""Seen-set tests: reference bloom semantics, cuckoo variant, and the
-Spark build/probe operators the batch pipeline uses.  The frontier's
-storage gate is covered by test_seenstore.py and the frontier replay
-tests."""
+"""Seen-set tests: reference bloom semantics, cuckoo variant and the
+driver-side empty filter table.  The storage gate is covered by
+test_seenstore.py and the frontier replay tests."""
 
 import numpy as np
-import pandas as pd
 
 from ccspark import seenset
 
@@ -36,18 +34,6 @@ def test_cuckoo_membership():
     other = rng.randint(-(2**62), 2**62, size=20000).astype(np.int64)
     other = other[~np.isin(other, keys)]
     assert seenset.cuckoo_probe(other, slots, nb, bits).mean() < 0.01
-
-
-def test_probe_missing_partition_defaults_unseen(spark):
-    seen = spark.createDataFrame(
-        pd.DataFrame({"domain_hash": np.array([0], dtype=np.int64), "url_hash": np.array([1], dtype=np.int64)})
-    )
-    filters = seenset.build_filters(seen, 4, kind="bloom")
-    cand = spark.createDataFrame(
-        pd.DataFrame({"domain_hash": np.array([1, 2, 3], dtype=np.int64), "url_hash": np.array([10, 11, 12], dtype=np.int64)})
-    )
-    probed = seenset.probe_filters(cand, filters, 4).toPandas()
-    assert (~probed["maybe_seen"]).all()
 
 
 def test_empty_filters_pdf_matches_zero_build(spark):

@@ -84,24 +84,21 @@ def test_gate_at_earlier_round_sees_less_history(spark, state):
 
 
 def test_update_filters_storage_equals_full_rebuild(spark, state):
-    """OR of per-round delta blooms == one bloom built over the union
-    (bit-identical, fixed capacity)."""
+    """OR of per-round delta blooms == one fixed-capacity bloom_build
+    per partition over the union (bit-identical)."""
     incremental = {
         r["partition_id"]: r["bits"]
         for r in Checkpoint(state).read(spark, "filters", 3).collect()
     }
-    full = seenset.build_filters(
-        spark.createDataFrame(_identity_pdf(range(0, 120))).withColumn(
-            "partition_id", F.pmod(F.col("domain_hash"), F.lit(P)).cast("int")
-        ),
-        P,
-        "bloom",
-        10,
-        capacity=CAP,
-    ).collect()
-    assert len(full) == len(incremental)
-    for row in full:
-        assert bytes(row["bits"]) == bytes(incremental[row["partition_id"]])
+    seen = _identity_pdf(range(0, 120))
+    pids = np.mod(seen["domain_hash"].to_numpy(), P)
+    full = {
+        pid: seenset.bloom_build(seen["url_hash"].to_numpy()[pids == pid], 10, capacity=CAP)[2]
+        for pid in np.unique(pids).tolist()
+    }
+    assert full.keys() == incremental.keys()
+    for pid, bits in full.items():
+        assert bits == bytes(incremental[pid])
 
 
 def test_cache_invalidation_on_round_overwrite(spark, state):
