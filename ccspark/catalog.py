@@ -251,7 +251,6 @@ class IcebergCheckpoint:
         from .seenstore import ManifestLocation
 
         files: dict = {}
-        rounds: dict = {}
         for name in self.STATE_TABLES:
             t = self._qualified(name)
             cache = self._files.setdefault(name, {})
@@ -292,12 +291,9 @@ class IcebergCheckpoint:
             if cache:
                 self._files_synced[name] = max(max(cache), synced)
             for rd, pids in cache.items():
-                rounds.setdefault(name, set()).add(rd)
                 for pid, sig in pids.items():
                     files[(name, rd, pid)] = sig
-        return ManifestLocation(
-            key=f"iceberg:{self.catalog}.{self.namespace}", files=files, rounds=rounds
-        )
+        return ManifestLocation(key=f"iceberg:{self.catalog}.{self.namespace}", files=files)
 
     # -- manifest -----------------------------------------------------------
 

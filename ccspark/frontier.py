@@ -428,9 +428,7 @@ class CrawlFrontier:
                 self.cfg.num_partitions,
                 self.cfg.filter_kind,
                 self.cfg.buckets_per_element,
-                capacity=self.cfg.capacity_per_partition
-                if self.cfg.filter_kind == "bloom"
-                else None,
+                capacity=self.cfg.capacity_per_partition,
             ),
             "filters",
             0,
@@ -622,7 +620,7 @@ class CrawlFrontier:
             cfg.num_partitions,
             kind=cfg.filter_kind,
             buckets_per_element=cfg.buckets_per_element,
-            capacity=cfg.capacity_per_partition if cfg.filter_kind == "bloom" else None,
+            capacity=cfg.capacity_per_partition,
         )
 
     def _expand_dedup(self, frontier: DataFrame, scheduled: DataFrame, round_no: int) -> DataFrame:

@@ -31,40 +31,6 @@ from .. import hashing, urls
 # ---------------------------------------------------------------------------
 
 
-@pandas_udf(StringType())
-def canonicalize_url(s: pd.Series) -> pd.Series:
-    """Canonical URL (reference URLUtils.canonicalizeURL semantics);
-    null for invalid URLs."""
-    return urls.canonicalize_batch(s)
-
-
-# The canonicalization kernels are pure functions, but they are marked
-# non-deterministic so Catalyst cannot push a filter on their output
-# below the projection and DUPLICATE the evaluation (two ArrowEvalPython
-# nodes for one UDF call — the round-6 q_urlfp_dedup/_identify plans
-# paid the kernel twice per row; spark_optimization_guide §4.4).
-canonicalize_url = canonicalize_url.asNondeterministic()
-
-
-_URLFP_SCHEMA = StructType(
-    [
-        StructField("domain_hash", LongType()),
-        StructField("url_hash", LongType()),
-        StructField("root_domain_hash", LongType()),
-        StructField("valid", BooleanType()),
-    ]
-)
-
-
-@pandas_udf(_URLFP_SCHEMA)
-def urlfp(canonical: pd.Series) -> pd.DataFrame:
-    """URLFPV2 struct from a canonical URL (URLUtils.getURLFPV2FromCanonicalURL)."""
-    return urls.urlfp_batch(canonical)
-
-
-urlfp = urlfp.asNondeterministic()  # see canonicalize_url note
-
-
 _CANON_FP_SCHEMA = StructType(
     [
         StructField("canonical_url", StringType()),
@@ -79,11 +45,11 @@ _CANON_FP_SCHEMA = StructType(
 
 @pandas_udf(_CANON_FP_SCHEMA)
 def canonical_urlfp(raw: pd.Series) -> pd.DataFrame:
-    """Fused canonicalize + URLFPV2 in ONE Arrow pass — half the
-    JVM↔Python traffic of chaining the two UDFs; use this in hot paths.
-    The byte-matrix kernel's host byproduct (== fastGetHostFromURL of
-    the canonical URL) also rides along, so callers that need the host
-    skip the url_host re-extraction hop entirely."""
+    """Canonical URL (null for invalid URLs) + URLFPV2 in ONE Arrow
+    pass — the engine's only URL-identity UDF.  The byte-matrix
+    kernel's host byproduct (== fastGetHostFromURL of the canonical
+    URL) also rides along, so callers that need the host skip the
+    url_host re-extraction hop entirely."""
     canon, hosts = urls.canonicalize_batch_with_host(raw)
     fp = urls.urlfp_batch(canon, hosts=hosts)
     fp.insert(0, "canonical_url", canon)
@@ -91,7 +57,12 @@ def canonical_urlfp(raw: pd.Series) -> pd.DataFrame:
     return fp
 
 
-canonical_urlfp = canonical_urlfp.asNondeterministic()  # see canonicalize_url note
+# The canonicalization kernel is a pure function, but it is marked
+# non-deterministic so Catalyst cannot push a filter on its output below
+# the projection and DUPLICATE the evaluation (two ArrowEvalPython nodes
+# for one UDF call — the round-6 q_urlfp_dedup/_identify plans paid the
+# kernel twice per row; spark_optimization_guide §4.4).
+canonical_urlfp = canonical_urlfp.asNondeterministic()
 
 
 @pandas_udf(StringType())
@@ -136,22 +107,9 @@ def hamming_distance(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def partition_id_for(col: Column, num_partitions: int) -> Column:
-    """Stable hash-range partition id: pmod(hash, P) on an int64 column.
-
-    This is the engine's explicit partitioning key (SURVEY.md §4): the
-    seen-set, frontier and lineage tables all share it so probe/build
-    never reshuffle."""
-    return F.pmod(col, F.lit(num_partitions)).cast("int")
-
-
 # ---------------------------------------------------------------------------
 # DataFrame transformers
 # ---------------------------------------------------------------------------
-
-
-def with_canonical(df: DataFrame, url_col: str = "url", out_col: str = "canonical_url") -> DataFrame:
-    return df.withColumn(out_col, canonicalize_url(F.col(url_col)))
 
 
 def with_canonical_urlfp(df: DataFrame, url_col: str = "url", with_host: bool = False) -> DataFrame:
@@ -171,23 +129,3 @@ def with_canonical_urlfp(df: DataFrame, url_col: str = "url", with_host: bool = 
     if with_host:
         df = df.withColumn("host", F.col("_cfp.host"))
     return df.drop("_cfp")
-
-
-def with_urlfp(
-    df: DataFrame,
-    canonical_col: str = "canonical_url",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Attach URLFPV2 columns (domain_hash, url_hash, root_domain_hash,
-    url_valid) and optionally the explicit partition id."""
-    df = df.withColumn("_fp", urlfp(F.col(canonical_col)))
-    df = (
-        df.withColumn("domain_hash", F.col("_fp.domain_hash"))
-        .withColumn("url_hash", F.col("_fp.url_hash"))
-        .withColumn("root_domain_hash", F.col("_fp.root_domain_hash"))
-        .withColumn("url_valid", F.col("_fp.valid"))
-        .drop("_fp")
-    )
-    if num_partitions is not None:
-        df = df.withColumn("partition_id", partition_id_for(F.col("domain_hash"), num_partitions))
-    return df

@@ -92,17 +92,6 @@ ACCEPT_OTHER = "ACCEPT_OTHER"
 REJECT = "REJECT"
 
 
-def truncate_mime_type(content_type: str | None) -> str:
-    """MimeTypeFilter.truncateMimeType (:186-198).  Java's Pattern has no
-    DOTALL, so an embedded newline fails the full match → NO_TYPE."""
-    if content_type is None:
-        return NO_TYPE
-    m = _TRUNCATION_JAVA_RE.fullmatch(content_type)
-    if m is None:
-        return NO_TYPE
-    return m.group(2)
-
-
 def _html_or_text_from_parts(sub: str) -> str | None:
     m = _LEFT_RIGHT_RE.fullmatch(sub)
     if m is None:

@@ -291,10 +291,9 @@ def gate_new_storage(
     after dedup_by_identity's Exchange by partition_id → a task touches
     ~1 partition); correctness holds for any distribution.
 
-    ``root`` is any seenstore state location: a filesystem path, an
-    FSLocation (object store), or a ManifestLocation (catalog-metadata
-    file lists — the Iceberg backend); the gate itself is
-    location-agnostic.
+    ``root`` is either seenstore state location: a filesystem path (the
+    parquet backend) or a ManifestLocation (catalog-metadata file lists
+    — the Iceberg backend); the gate itself is location-agnostic.
 
     The decision is expressed as a BOOLEAN Arrow UDF over just
     (domain_hash, url_hash) rather than a mapInPandas over whole rows:
@@ -364,8 +363,15 @@ def update_filters_storage(
     mapInPandas) rather than a groupBy: a 32-row shuffle looks tiny to
     AQE, which would coalesce it to ONE post-shuffle partition and run
     every blob update serially (observed 11 s → 47 s per round on the
-    10^8 endurance run before this fix)."""
-    assert kind in ("bloom", "cuckoo")
+    10^8 endurance run before this fix).
+
+    Raises ValueError for an unknown ``kind`` and for a bloom update
+    without ``capacity`` (the first round builds its empty bitset from
+    it); cuckoo ignores ``capacity``."""
+    if kind not in ("bloom", "cuckoo"):
+        raise ValueError(f"filter kind must be 'bloom' or 'cuckoo', got {kind!r}")
+    if kind == "bloom" and not capacity:
+        raise ValueError(f"a bloom filter update needs a positive capacity, got {capacity!r}")
     skeleton = spark.range(0, num_partitions, 1, num_partitions).select(
         F.col("id").cast("int").alias("partition_id")
     )
@@ -376,7 +382,6 @@ def update_filters_storage(
         if kind == "bloom":
             prev = seenstore.filter_blob(root, pid, round_no - 1)
             if prev is None:
-                assert capacity, "first bloom update needs capacity"
                 k, m, bits = bloom_build(np.array([], dtype=np.int64), buckets_per_element, capacity)
                 prev = ("bloom", k, m, 0, bits)
             _kind, k, m, n_prev, bits = prev

@@ -17,21 +17,21 @@ crawl history between rounds either; each shard's worker owns its
 hash-range files.
 
 STATE LOCATIONS — every public function takes a ``loc`` that is one of
+the two the checkpoint backends produce:
 
-* a plain ``str`` path: POSIX shared-FS root (local disk in tests,
-  NFS/Lustre/EFS on a cluster) listed with ``os`` calls — the fast
-  path for the parquet-emulation backend;
-* :class:`FSLocation`: the same ``<table>/round=k/partition_id=p``
-  layout behind a ``pyarrow.fs.FileSystem`` (S3/HDFS/GCS or any
-  custom filesystem) — object-store deployments;
-* :class:`ManifestLocation`: an explicit file manifest (path, size)
-  per (table, round, partition) produced from CATALOG metadata — the
-  Iceberg backend enumerates each round's data files from the table's
-  ``.files`` metadata (driver-side, O(delta) rows) and ships the
-  listing into the gate closures, so workers partition-prune without
-  any directory-layout assumption (ccspark.catalog.state_location).
+* a plain ``str`` path (``Checkpoint.state_location()``): POSIX
+  shared-FS root (local disk in tests, NFS/Lustre/EFS on a cluster)
+  listed with ``os`` calls;
+* :class:`ManifestLocation` (``IcebergCheckpoint.state_location()``):
+  an explicit file manifest (path, size) per (table, round, partition)
+  produced from CATALOG metadata — the Iceberg backend enumerates each
+  round's data files from the table's ``.files`` metadata
+  (driver-side, O(delta) rows) and ships the listing into the gate
+  closures, so workers partition-prune without any directory-layout
+  assumption.  Its file paths may be URIs (``s3://``, ``file://``);
+  ``pyarrow.parquet.read_table`` resolves their filesystem itself.
 
-Cache-correctness invariants (hold for all three):
+Cache-correctness invariants (hold for both):
 * cache entries are validated against a file signature
   (name, size, mtime_ns) on every access, so an overwritten round
   (kill → deterministic re-run) or dropped crash debris invalidates
@@ -50,6 +50,7 @@ import os
 from collections import OrderedDict
 
 import numpy as np
+import pyarrow.parquet as pq
 
 _PAIR_BYTES = 16  # int64 url_hash + int64 domain_hash per cached key
 
@@ -58,204 +59,30 @@ def _cache_budget() -> int:
     return int(os.environ.get("CCSPARK_SEEN_CACHE_BYTES", 1 << 30))
 
 
-# -- filesystem resolution (object-store paths) --------------------------------
-
-_FS_CACHE: dict = {}  # per-process: (scheme, authority) -> (FileSystem, keeps_authority)
-
-
-def _from_uri(path: str):
-    """pyarrow FileSystem.from_uri behind a module-level indirection
-    (the pyarrow class is an immutable extension type, unpatchable in
-    tests)."""
-    import pyarrow.fs as pafs
-
-    return pafs.FileSystem.from_uri(path)
-
-
-def _fs_for_uri(path: str):
-    """(FileSystem, fs-relative path) for a ``scheme://`` URI, cached per
-    scheme+authority so S3/HDFS clients are built once per worker.
-
-    Path-mapping caveat: ``FileSystem.from_uri`` KEEPS part of the
-    authority in the returned path for bucket-addressed stores
-    (s3://bucket/k → 'bucket/k'; credentialed s3://u:p@bucket/k also
-    → 'bucket/k') but FOLDS it into the client for host-addressed
-    ones (hdfs://nn:8020/state → '/state').  The first resolution for
-    a (scheme, authority) records the PREFIX from_uri puts before the
-    URI's path part; later paths under the same authority get the
-    same prefix — a naive keep/strip-the-authority rule mis-addresses
-    one of the conventions and the gate would silently list a
-    nonexistent path (treating the whole crawl history as unseen)."""
-    scheme, _, rest = path.partition("://")
-    authority = rest.split("/", 1)[0]
-    key = (scheme, authority)
-    hit = _FS_CACHE.get(key)
-    if hit is None:
-        fs, fs_path = _from_uri(path)
-        path_part = rest[len(authority):]  # "/a/b" or ""
-        if path_part and fs_path.endswith(path_part):
-            prefix = fs_path[: -len(path_part)]
-        elif path_part and fs_path.endswith(path_part.lstrip("/")):
-            stripped = path_part.lstrip("/")
-            prefix = fs_path[: -len(stripped)].rstrip("/")
-        elif not path_part:  # root URI (no path part): fs_path IS the prefix
-            prefix = fs_path
-        else:
-            # from_uri normalized the path (percent-escapes, duplicate
-            # or trailing slashes, '.' segments) so no prefix is
-            # provable — do NOT cache a guess (a wrong prefix would
-            # silently mis-address every later path under this
-            # authority, listing nonexistent state = full recrawl).
-            # Mark the authority unmappable: reuse the cached client but
-            # resolve every path through from_uri.
-            _FS_CACHE[key] = (fs, None)
-            return fs, fs_path
-        _FS_CACHE[key] = (fs, prefix)
-        return fs, fs_path
-    fs, prefix = hit
-    if prefix is None:  # unmappable authority: per-path resolution
-        _, fs_path = _from_uri(path)
-        return fs, fs_path
-    tail = rest[len(authority):]
-    if not tail:
-        return fs, prefix or "/"
-    base = prefix.rstrip("/")
-    return fs, base + (tail if tail.startswith("/") else "/" + tail)
-
-
-def _read_parquet(path: str, columns, fs=None):
-    import pyarrow.parquet as pq
-
-    if fs is not None:
-        return pq.read_table(path, columns=columns, filesystem=fs)
-    if "://" in path:
-        fs2, rel = _fs_for_uri(path)
-        return pq.read_table(rel, columns=columns, filesystem=fs2)
-    return pq.read_table(path, columns=columns)
-
-
-class FSLocation:
-    """State root behind a ``pyarrow.fs.FileSystem`` — same Hive layout
-    as a plain path root, listed/stat'd/read through pyarrow so the
-    state can live on S3/HDFS/GCS.  ``fs_factory`` is a picklable
-    zero-arg callable returning the FileSystem (module-level function
-    or functools.partial — it is pickled into gate closures; the built
-    filesystem itself is cached per worker process and never pickled).
-    Without a factory the filesystem is resolved from the root: a
-    ``scheme://`` URI via ``FileSystem.from_uri``, otherwise the local
-    filesystem."""
-
-    def __init__(self, root: str, fs_factory=None, key: str | None = None):
-        self.root = root.rstrip("/")
-        self.fs_factory = fs_factory
-        self.key = key if key is not None else "fs:" + self.root
-
-    def __getstate__(self):
-        d = self.__dict__.copy()
-        d.pop("_fs", None)
-        d.pop("_root_path", None)
-        return d
-
-    def _resolved(self):
-        if "_fs" not in self.__dict__:
-            import pyarrow.fs as pafs
-
-            if self.fs_factory is not None:
-                self._fs, self._root_path = self.fs_factory(), self.root
-            elif "://" in self.root:
-                self._fs, self._root_path = _fs_for_uri(self.root)
-            else:
-                self._fs, self._root_path = pafs.LocalFileSystem(), self.root
-        return self._fs, self._root_path
-
-    @staticmethod
-    def _join(*parts: str) -> str:
-        # fs-relative join tolerant of "" / "." roots (SubTree-style
-        # filesystems address paths relative to their base)
-        return "/".join(p for p in parts if p not in ("", "."))
-
-    def sig(self, table: str, round_no: int, pid: int) -> tuple:
-        import pyarrow.fs as pafs
-
-        fs, rp = self._resolved()
-        d = self._join(rp, table, f"round={round_no}", f"partition_id={pid}")
-        infos = fs.get_file_info(pafs.FileSelector(d, allow_not_found=True))
-        out = [
-            (i.path, i.size, i.mtime_ns or 0)
-            for i in infos
-            if i.type == pafs.FileType.File and i.path.endswith(".parquet")
-        ]
-        return tuple(sorted(out))
-
-    def present_rounds(self, table: str, upto_round: int) -> list[int]:
-        import pyarrow.fs as pafs
-
-        fs, rp = self._resolved()
-        infos = fs.get_file_info(pafs.FileSelector(self._join(rp, table), allow_not_found=True))
-        out = []
-        for i in infos:
-            base = i.base_name
-            if base.startswith("round="):
-                try:
-                    r = int(base.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if r <= upto_round:
-                    out.append(r)
-        return sorted(out)
-
-    def read_table(self, path: str, columns):
-        fs, _ = self._resolved()
-        return _read_parquet(path, columns, fs=fs)
-
-
-def make_subtree_fs(base: str):
-    """Picklable fs-factory building block: a SubTreeFileSystem rooted
-    at ``base`` over the local filesystem.  Use
-    ``functools.partial(make_subtree_fs, base)`` as FSLocation's
-    fs_factory — partials of this module-level function pickle into
-    gate closures cleanly (worker processes import ccspark, not the
-    caller's module)."""
-    import pyarrow.fs as pafs
-
-    return pafs.SubTreeFileSystem(base, pafs.LocalFileSystem())
-
-
 class ManifestLocation:
     """Explicit file manifest: ``files[(table, round, pid)] = ((path,
     size, mtime_ns), ...)`` — produced driver-side from catalog
     metadata (Iceberg ``.files``), shipped into gate closures.  File
-    paths are absolute (URIs allowed); each is read through the
-    filesystem its scheme resolves to (or ``fs_factory`` when given).
-    ``key`` must be STABLE across rounds (e.g. ``iceberg:cat.ns``) so
-    the per-worker incremental seen cache keeps accumulating — catalog
-    data files are immutable-by-name, so a refreshed manifest carries
-    identical signatures for unchanged rounds and the validation
-    passes without re-reads."""
+    paths are absolute (URIs allowed).  A table's present rounds are
+    the rounds that have files.  ``key`` must be STABLE across rounds
+    (e.g. ``iceberg:cat.ns``) so the per-worker incremental seen cache
+    keeps accumulating — catalog data files are immutable-by-name, so
+    a refreshed manifest carries identical signatures for unchanged
+    rounds and the validation passes without re-reads."""
 
-    def __init__(self, key: str, files: dict, rounds: dict, fs_factory=None):
+    def __init__(self, key: str, files: dict):
         self.key = key
         self.files = files
+        rounds: dict = {}
+        for table, r, _pid in files:
+            rounds.setdefault(table, set()).add(r)
         self.rounds = {t: tuple(sorted(rs)) for t, rs in rounds.items()}
-        self.fs_factory = fs_factory
-
-    def __getstate__(self):
-        d = self.__dict__.copy()
-        d.pop("_fs", None)
-        return d
 
     def sig(self, table: str, round_no: int, pid: int) -> tuple:
         return self.files.get((table, int(round_no), int(pid)), ())
 
     def present_rounds(self, table: str, upto_round: int) -> list[int]:
         return [r for r in self.rounds.get(table, ()) if r <= upto_round]
-
-    def read_table(self, path: str, columns):
-        if self.fs_factory is not None:
-            if "_fs" not in self.__dict__:
-                self._fs = self.fs_factory()
-            return _read_parquet(path, columns, fs=self._fs)
-        return _read_parquet(path, columns)
 
 
 # -- location dispatch ---------------------------------------------------------
@@ -292,17 +119,11 @@ def _sig_of(loc, table: str, round_no: int, pid: int) -> tuple:
     return loc.sig(table, round_no, pid)
 
 
-def _read_one(loc, path: str, columns):
-    if isinstance(loc, str):
-        return _read_parquet(path, columns)
-    return loc.read_table(path, columns)
-
-
-def _read_pairs(loc, sig: tuple) -> tuple[np.ndarray, np.ndarray]:
+def _read_pairs(sig: tuple) -> tuple[np.ndarray, np.ndarray]:
     """Read (url_hash, domain_hash) columns of one partition's files."""
     urls, doms = [], []
     for path, _, _ in sig:
-        t = _read_one(loc, path, ["url_hash", "domain_hash"])
+        t = pq.read_table(path, columns=["url_hash", "domain_hash"])
         urls.append(t.column("url_hash").to_numpy(zero_copy_only=False))
         doms.append(t.column("domain_hash").to_numpy(zero_copy_only=False))
     if not urls:
@@ -337,7 +158,7 @@ def _present_rounds(loc, table: str, upto_round: int) -> list[int]:
 def round_pairs(loc, pid: int, round_no: int, table: str = "processed") -> tuple[np.ndarray, np.ndarray]:
     """One round's (url_hash, domain_hash) delta for one partition —
     uncached single-directory read (the filter-update job's delta)."""
-    return _read_pairs(loc, _sig_of(loc, table, round_no, pid))
+    return _read_pairs(_sig_of(loc, table, round_no, pid))
 
 
 # -- incremental seen-set cache ------------------------------------------------
@@ -386,7 +207,7 @@ def seen_arrays(loc, pid: int, upto_round: int, table: str = "processed") -> tup
         urls, doms = [entry["url"]], [entry["dom"]]
         for r in new_rounds:
             sig = _sig_of(loc, table, r, pid)
-            u, dm = _read_pairs(loc, sig)
+            u, dm = _read_pairs(sig)
             entry["sigs"][r] = sig
             urls.append(u)
             doms.append(dm)
@@ -460,7 +281,7 @@ def filter_blob(loc, pid: int, round_no: int, table: str = "filters"):
         return cached[1]
     rows = []
     for path, _, _ in sig:
-        t = _read_one(loc, path, _FILTER_COLS)
+        t = pq.read_table(path, columns=_FILTER_COLS)
         for i in range(t.num_rows):
             rows.append(
                 (
@@ -497,4 +318,3 @@ def clear_caches() -> None:
     """Test hook: forget all worker-side state."""
     _SEEN_CACHE.clear()
     _BLOB_CACHE.clear()
-    _FS_CACHE.clear()

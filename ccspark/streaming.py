@@ -40,9 +40,8 @@ def dedup_urls_stream(pages: DataFrame, watermark: str = "10 minutes") -> DataFr
     """Canonical-identity streaming dedup: watermark on warc_ts, drop
     duplicates on (domain_hash, url_hash) — late re-discoveries of the
     same URL are suppressed within the watermark horizon."""
-    # fused canonicalize+fingerprint kernel: ONE Arrow hop per row
-    # instead of the chained canonicalize→urlfp pair, and the canonical
-    # host rides along for the downstream per-host operators
+    # fused canonicalize+fingerprint kernel: ONE Arrow hop per row, and
+    # the canonical host rides along for the downstream per-host operators
     df = CF.with_canonical_urlfp(pages, with_host=True)
     return (
         df.filter("url_valid")

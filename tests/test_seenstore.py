@@ -182,6 +182,17 @@ def test_cuckoo_storage_update_and_gate(spark, tmp_path):
     assert set(got["url_hash"]) == set(_identity_pdf(range(64, 96))["url_hash"])
 
 
+def test_update_filters_storage_rejects_bad_arguments(spark, tmp_path):
+    """Argument errors raise ValueError at call time, naming the bad
+    value — not an assert that ``python -O`` strips (an unknown kind
+    silently built cuckoo rows; a bloom update without capacity failed
+    only inside a worker)."""
+    with pytest.raises(ValueError, match="'blom'"):
+        seenset.update_filters_storage(spark, str(tmp_path), 1, P, kind="blom", capacity=CAP)
+    with pytest.raises(ValueError, match="capacity, got None"):
+        seenset.update_filters_storage(spark, str(tmp_path), 1, P, kind="bloom")
+
+
 def test_contains_handles_url_hash_collisions():
     url = np.array([5, 5, 9], dtype=np.int64)
     dom = np.array([1, 2, 3], dtype=np.int64)
@@ -199,71 +210,43 @@ def test_round_pairs_and_missing_partition(tmp_path):
     assert len(u) == 0 and len(d) == 0
 
 
-# -- state locations: pyarrow.fs + explicit manifests --------------------------
-
-
-def test_fslocation_local_matches_str_root(spark, state):
-    """The same gate through a pyarrow LocalFileSystem location must
-    produce the identical novel set (the signature protocol and layout
-    are location-invariant)."""
-    cand = _identity_pdf(range(100, 160))
-    cdf = spark.createDataFrame(cand)
-    want = seenset.gate_new_storage(cdf, state, 3, 3, P).toPandas()
-    loc = seenstore.FSLocation(state)
-    got = seenset.gate_new_storage(cdf, loc, 3, 3, P).toPandas()
-    assert set(zip(got["domain_hash"], got["url_hash"])) == set(
-        zip(want["domain_hash"], want["url_hash"])
-    )
-    assert len(got) == 40
-
-
-def test_fslocation_custom_filesystem_gate_and_filters(spark, state, tmp_path):
-    """Full storage path (gate + filter update) through a custom
-    pyarrow FileSystem (SubTreeFileSystem = mock object store with
-    fs-relative paths)."""
-    import functools
-
-    loc = seenstore.FSLocation(
-        ".",
-        fs_factory=functools.partial(seenstore.make_subtree_fs, state),
-        key="mockfs:" + state,
-    )
-    cand = _identity_pdf(range(100, 160))
-    cdf = spark.createDataFrame(cand)
-    got = seenset.gate_new_storage(cdf, loc, 3, 3, P).toPandas()
-    assert len(got) == 40
-    # filter update driven through the custom fs: delta blobs must be
-    # bit-identical to the str-root update already in `state`
-    filt = seenset.update_filters_storage(
-        spark, loc, 3, P, kind="bloom", buckets_per_element=10, capacity=CAP
-    ).collect()
-    want = {
-        r["partition_id"]: bytes(r["bits"])
-        for r in Checkpoint(state).read(spark, "filters", 3).collect()
-    }
-    assert {r["partition_id"]: bytes(r["bits"]) for r in filt} == want
+# -- state locations: explicit manifests ---------------------------------------
 
 
 def test_manifest_location_matches_str_root(spark, state):
     """An explicit file manifest (the catalog-metadata path) over the
-    same files gates identically."""
-    files, rounds = {}, {}
-    for table in ("processed", "filters"):
-        for r in seenstore._present_rounds(state, table, 3):
-            rounds.setdefault(table, set()).add(r)
-            for pid in range(P):
-                sig = seenstore._sig_of(state, table, r, pid)
-                if sig:
-                    files[(table, r, pid)] = sig
-    loc = seenstore.ManifestLocation("manifest:" + state, files, rounds)
-    cand = _identity_pdf(range(100, 160))
-    cdf = spark.createDataFrame(cand)
-    got = seenset.gate_new_storage(cdf, loc, 3, 3, P).toPandas()
-    assert len(got) == 40
-    want = seenset.gate_new_storage(cdf, state, 3, 3, P).toPandas()
-    assert set(zip(got["domain_hash"], got["url_hash"])) == set(
-        zip(want["domain_hash"], want["url_hash"])
-    )
+    same files gates and reads identically, whether it lists absolute
+    paths or ``file://`` URIs (pyarrow resolves the URI's filesystem
+    itself).  Caches are cleared per case so every read hits the files."""
+    import pathlib
+
+    cand = spark.createDataFrame(_identity_pdf(range(100, 160)))
+    want = seenset.gate_new_storage(cand, state, 3, 3, P).toPandas()
+    for to_entry in (str, lambda p: pathlib.Path(p).as_uri()):
+        files = {}
+        for table in ("processed", "filters"):
+            for r in seenstore._present_rounds(state, table, 3):
+                for pid in range(P):
+                    sig = seenstore._sig_of(state, table, r, pid)
+                    if sig:
+                        files[(table, r, pid)] = tuple((to_entry(p), sz, mt) for p, sz, mt in sig)
+        loc = seenstore.ManifestLocation("manifest:" + state, files)
+        assert loc.rounds == {"processed": (1, 2, 3), "filters": (0, 1, 2, 3)}
+        seenstore.clear_caches()
+        got = seenset.gate_new_storage(cand, loc, 3, 3, P).toPandas()
+        assert len(got) == 40
+        assert set(zip(got["domain_hash"], got["url_hash"])) == set(
+            zip(want["domain_hash"], want["url_hash"])
+        )
+        for pid in range(P):  # driver-side reads equal the plain-path reads
+            seenstore.clear_caches()
+            m_url, m_dom = seenstore.seen_arrays(loc, pid, 3)
+            m_blob = seenstore.filter_blob(loc, pid, 3)
+            seenstore.clear_caches()
+            p_url, p_dom = seenstore.seen_arrays(state, pid, 3)
+            np.testing.assert_array_equal(m_url, p_url)
+            np.testing.assert_array_equal(m_dom, p_dom)
+            assert m_blob == seenstore.filter_blob(state, pid, 3)
 
 
 def test_filter_blob_merges_multi_file_partitions(tmp_path):
@@ -316,113 +299,3 @@ def test_filter_blob_merges_multi_file_partitions(tmp_path):
     pq.write_table(t, str(d / "c.parquet"))
     with pytest.raises(AssertionError, match="unmergeable"):
         seenstore.filter_blob(str(tmp_path), 0, 1)
-
-
-def test_fs_for_uri_host_addressed_authority_folding(monkeypatch):
-    """HDFS-style filesystems fold the authority into the client
-    (from_uri('hdfs://nn:8020/state') → path '/state'); the resolver
-    must strip the authority from subsequent paths too — returning the
-    raw 'nn:8020/state' would silently list a nonexistent path and the
-    novelty gate would treat the whole crawl history as unseen."""
-    import pyarrow.fs as pafs
-
-    from ccspark import seenstore
-
-    calls = []
-
-    def fake_from_uri(path):
-        calls.append(path)
-        # emulate HadoopFileSystem: authority folded into the client,
-        # returned path is authority-less
-        rest = path.split("://", 1)[1]
-        return pafs.LocalFileSystem(), rest[len("nn:8020"):] or "/"
-
-    monkeypatch.setattr(seenstore, "_from_uri", fake_from_uri)
-    seenstore._FS_CACHE.clear()
-    fs, p1 = seenstore._fs_for_uri("fakehdfs://nn:8020/state/frontier")
-    assert p1 == "/state/frontier"
-    # cached client: a DIFFERENT path under the same authority must be
-    # authority-stripped the same way (the bug returned 'nn:8020/...')
-    fs2, p2 = seenstore._fs_for_uri("fakehdfs://nn:8020/state/filters/f.parquet")
-    assert fs2 is fs
-    assert p2 == "/state/filters/f.parquet"
-    assert len(calls) == 1  # client built once per (scheme, authority)
-    seenstore._FS_CACHE.clear()
-
-
-def test_fs_for_uri_bucket_addressed_keeps_authority(monkeypatch):
-    """S3-style filesystems keep the bucket in the path
-    (from_uri('s3://bucket/k') → path 'bucket/k'); later paths must NOT
-    be stripped."""
-    import pyarrow.fs as pafs
-
-    from ccspark import seenstore
-
-    def fake_from_uri(path):
-        rest = path.split("://", 1)[1]
-        return pafs.LocalFileSystem(), rest  # bucket kept in path
-
-    monkeypatch.setattr(seenstore, "_from_uri", fake_from_uri)
-    seenstore._FS_CACHE.clear()
-    _fs, p1 = seenstore._fs_for_uri("fakes3://bucket/state/frontier")
-    assert p1 == "bucket/state/frontier"
-    _fs2, p2 = seenstore._fs_for_uri("fakes3://bucket/state/filters/f.parquet")
-    assert p2 == "bucket/state/filters/f.parquet"
-    seenstore._FS_CACHE.clear()
-
-
-def test_fs_for_uri_credentialed_bucket_prefix(monkeypatch):
-    """Credentialed bucket URIs (s3://user:pass@bucket/k): from_uri
-    drops the userinfo but KEEPS the bucket in the path.  The recorded
-    prefix must be 'bucket', not a boolean keep/strip of the whole
-    authority (which would strip the bucket from later paths)."""
-    import pyarrow.fs as pafs
-
-    from ccspark import seenstore
-
-    def fake_from_uri(path):
-        rest = path.split("://", 1)[1]
-        authority = rest.split("/", 1)[0]
-        bucket = authority.rsplit("@", 1)[-1]
-        return pafs.LocalFileSystem(), bucket + rest[len(authority):]
-
-    monkeypatch.setattr(seenstore, "_from_uri", fake_from_uri)
-    seenstore._FS_CACHE.clear()
-    _fs, p1 = seenstore._fs_for_uri("fakes3c://u:p@bucket/state/frontier")
-    assert p1 == "bucket/state/frontier"
-    _fs2, p2 = seenstore._fs_for_uri("fakes3c://u:p@bucket/state/filters/f.parquet")
-    assert p2 == "bucket/state/filters/f.parquet"
-    seenstore._FS_CACHE.clear()
-
-
-def test_fs_for_uri_normalized_path_does_not_poison_cache(monkeypatch):
-    """ADVICE r5: when from_uri NORMALIZES the first-resolved path
-    (here: collapsing duplicate slashes) neither prefix rule can prove
-    an authority prefix — the resolver must fall back to per-path
-    from_uri resolution instead of caching a guessed prefix that would
-    silently mis-address every later path under the authority."""
-    from ccspark import seenstore
-
-    class FakeFS:
-        pass
-
-    fs = FakeFS()
-
-    def fake_from_uri(path):
-        rest = path.partition("://")[2]
-        p = "/" + rest.split("/", 1)[1]
-        while "//" in p:
-            p = p.replace("//", "/")  # normalizing store
-        return fs, p
-
-    monkeypatch.setattr(seenstore, "_from_uri", fake_from_uri)
-    seenstore._FS_CACHE.clear()
-    # first path contains a duplicate slash -> normalized -> unmappable
-    fs1, p1 = seenstore._fs_for_uri("fakefs://auth/state//frontier")
-    assert p1 == "/state/frontier"
-    # later paths must still resolve correctly (per-path from_uri),
-    # not under a guessed prefix
-    fs2, p2 = seenstore._fs_for_uri("fakefs://auth/state/filters/f.parquet")
-    assert fs2 is fs
-    assert p2 == "/state/filters/f.parquet"
-    seenstore._FS_CACHE.clear()

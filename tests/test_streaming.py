@@ -35,18 +35,13 @@ def test_streaming_dedup(spark, staged_pages):
     _drain(q)
     out = spark.sql("SELECT domain_hash, url_hash FROM dedup_t").toPandas()
     assert len(out) == len(out.drop_duplicates())  # no dup identities emitted
-    # batch semantics agree: same distinct identity count as batch path
-    import ccspark.functions as CF
-    from pyspark.sql import functions as F
+    # batch semantics agree: same distinct identity count as the pandas
+    # batch path (canonicalize_batch + urlfp_batch, not the fused UDF)
+    from ccspark import urls
 
-    batch = spark.read.parquet(staged_pages)
-    bd = (
-        CF.with_urlfp(CF.with_canonical(batch))
-        .filter("url_valid")
-        .select("domain_hash", "url_hash")
-        .distinct()
-        .count()
-    )
+    batch = spark.read.parquet(staged_pages).select("url").toPandas()
+    fp = urls.urlfp_batch(urls.canonicalize_batch(batch["url"]))
+    bd = len(fp.loc[fp["valid"], ["domain_hash", "url_hash"]].drop_duplicates())
     assert len(out) == bd
 
 

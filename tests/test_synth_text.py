@@ -75,7 +75,7 @@ def test_duplicate_groups_canonicalize_together():
 
 def test_end_to_end_urlfp_dedup(spark):
     pages = spark.createDataFrame(synth.gen_pages_pdf(np.arange(1000), n_hosts=100, seed=42))
-    df = CF.with_urlfp(CF.with_canonical(pages), num_partitions=8)
+    df = CF.with_canonical_urlfp(pages)
     total = df.count()
     valid = df.filter("url_valid").count()
     deduped = df.filter("url_valid").dropDuplicates(["domain_hash", "url_hash"]).count()
