@@ -1806,8 +1806,8 @@ def oracle_sql() -> dict[str, str]:
             "WHEN 3 THEN 'UPPER-' || source || '.Example.COM' "
             "ELSE 'x' || repeat('a', 300) || '.com' END AS host FROM documents) "
             "SELECT doc_id, host, length(host) <= 255 AND ("
-            "regexp_matches(lower(host), '^[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+$') OR ("
-            "NOT regexp_matches(lower(host), '[^0-9a-z\-\._]') "
+            r"regexp_matches(lower(host), '^[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+$') OR ("
+            r"NOT regexp_matches(lower(host), '[^0-9a-z\-\._]') "
             "AND len(string_split(lower(host), '.')) <= 128)) AS valid FROM t"
         ),
         "q_mime_filter": (

@@ -179,16 +179,6 @@ class IcebergCheckpoint:
             .drop("_ckpt_round")
         )
 
-    def has_data(self, name: str, round_no: int) -> bool:
-        """True when the round of the table holds data files (catalog
-        metadata only); an absent table or round and a zero-row round
-        write have none."""
-        t = self._qualified(name)
-        if not self.spark.catalog.tableExists(t):
-            return False
-        files = self.spark.read.table(t + ".files").filter(F.col("partition._ckpt_round") == round_no)
-        return bool(files.limit(1).collect())
-
     def read_all_rounds(
         self, spark: SparkSession, name: str, upto_round: int, schema: str | None = None
     ) -> DataFrame | None:

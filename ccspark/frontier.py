@@ -13,8 +13,8 @@ Round shape (north_rule; SURVEY.md §7 step 7):
     frontier' = gate_new_storage(dedup(frontier ∪ links)) against the
                round's filters + seen set (bloom/cuckoo + exact confirm),
                max-priority merge, optional per-host cap
-    lineage  += per-partition row (emitted / budget),
-               collected to the driver and written with pyarrow
+    lineage  += per-partition row (emitted / budget), read off the
+               processed files' Parquet footers and written with pyarrow
     checkpoint all tables, commit manifest atomically
 
 Gate once: the links gate is the only gate.  It writes frontier/round=k
@@ -34,11 +34,11 @@ Scale notes: per-host ranks come from the two-stage salted window
 mapInPandas over scheduled rows — no driver participation.  Priorities
 decay per hop (0.8) so the frontier drains.
 
-Fixed cost: each Spark job is a driver round trip, so a round runs six
-(ARCHITECTURE §1 names them; test_round_job_budget pins the count).
-Its plans run with AQE off (``adaptive_off``: AQE would submit every
-shuffle and broadcast stage as a job of its own and buys these plans
-nothing), and every checkpoint read passes its table's fixed schema
+Fixed cost: each Spark job is a driver round trip, so a round runs
+four, in order on the calling thread (ARCHITECTURE §1 names them;
+test_round_job_budget pins the count).  Its plans run with AQE off
+(``adaptive_off``: AQE would submit every shuffle and broadcast stage
+as a job of its own and buys these plans nothing), and every checkpoint read passes its table's fixed schema
 (no schema-inference job).
 
 STORAGE-PARTITIONED STATE (the 100×-scale design): every state table
@@ -63,14 +63,13 @@ from __future__ import annotations
 import contextlib
 import functools
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from . import politeness, seenset, synth
+from . import politeness, seenset, seenstore, synth
 from . import functions as CF
 
 # Fixed table schemas (DDL).  The checkpoint reads of a round and of a
@@ -118,18 +117,6 @@ def adaptive_off(spark: SparkSession):
         yield
     finally:
         spark.conf.set(_AQE, prev)
-
-
-def _cache_filled(df: DataFrame, action) -> DataFrame:
-    """``df`` cached and filled by ``action(df)``; if the action fails,
-    the cache is released before the error propagates."""
-    df = df.cache()
-    try:
-        action(df)
-    except BaseException:
-        df.unpersist()
-        raise
-    return df
 
 
 def _pid_col(num_partitions: int):
@@ -182,14 +169,19 @@ def write_processed(
     Returns the cached frame (the caller unpersists it; a failed write
     releases it here) and the scheduled-row count."""
     obs = Observation(f"proc_{round_no}")
-    processed = _cache_filled(
+    processed = (
         politeness.process_round(candidates, robots, layout_partitions=num_partitions, **politeness_kw)
         .withColumn("round", F.lit(round_no))
         .withColumn("partition_id", _pid_col(num_partitions))
         .select(*PROCESSED_COLS, "partition_id")
-        .observe(obs, F.count(F.when(F.col("host_rank").isNotNull(), F.lit(1))).alias("n_sched")),
-        lambda df: ckpt.write(df, "processed", round_no, partition_by=["partition_id"]),
+        .observe(obs, F.count(F.when(F.col("host_rank").isNotNull(), F.lit(1))).alias("n_sched"))
+        .cache()
     )
+    try:
+        ckpt.write(processed, "processed", round_no, partition_by=["partition_id"])
+    except BaseException:
+        processed.unpersist()
+        raise
     # a round Catalyst proves empty (an empty local relation) collapses
     # the plan and prunes the Observation: its row comes back field-less
     n_sched = int(obs.get["n_sched"]) if obs._jo.getRow().length() else 0
@@ -197,10 +189,12 @@ def write_processed(
 
 
 def _lineage_arrow_schema():
-    """One row per partition with scheduled rows.  ``urls_deduped`` is
-    written as 0: the round's candidates are never re-gated (they passed
-    the previous round's links gate), and the column is reserved for
-    the links gate's per-partition drop count."""
+    """One row per partition with scheduled rows; its hash range spans
+    the partition's processed rows (scheduled and robots-retired), the
+    range its footers record.  ``urls_deduped`` is written as 0: the
+    round's candidates are never re-gated (they passed the previous
+    round's links gate), and the column is reserved for the links gate's
+    per-partition drop count."""
     import pyarrow as pa
 
     return pa.schema(
@@ -216,14 +210,38 @@ def _lineage_arrow_schema():
     )
 
 
-def _lineage_agg(scheduled: DataFrame) -> DataFrame:
-    """Per-partition counts of the scheduled rows: the lineage phase's
-    input, collected on the round pool."""
-    return scheduled.groupBy("partition_id").agg(
-        F.count(F.lit(1)).alias("urls_emitted"),
-        F.min("domain_hash").alias("hash_range_start"),
-        F.max("domain_hash").alias("hash_range_end"),
-    )
+def _scheduled_by_partition(loc, round_no: int, num_partitions: int) -> dict[int, tuple[int, int, int]]:
+    """``pid → (scheduled rows, min domain_hash, max domain_hash)`` of
+    processed/round=<round_no>, for the partitions with scheduled rows,
+    read driver-side from the Parquet footers of the files ``loc`` lists
+    for each partition id (no Spark job).  Scheduled rows are the rows
+    minus the host_rank nulls (robots-retired rows); the hash range spans
+    every processed row.  A file whose footer lacks one of these
+    statistics raises ValueError naming it."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for pid in range(num_partitions):
+        n, lo, hi = 0, [], []
+        for path, _, _ in seenstore._sig_of(loc, "processed", round_no, pid):
+            md = pq.read_metadata(path)
+            names = md.schema.names
+            for rg in map(md.row_group, range(md.num_row_groups)):
+                if not rg.num_rows:
+                    continue
+                rank, dom = (
+                    rg.column(names.index(c)).statistics if c in names else None
+                    for c in ("host_rank", "domain_hash")
+                )
+                # identity tests only: pyarrow 16's Statistics == None segfaults
+                if rank is None or dom is None or not (rank.has_null_count and dom.has_min_max):
+                    raise ValueError(f"{path}: a row group lacks the host_rank null count or domain_hash min/max")
+                n += rg.num_rows - rank.null_count
+                lo.append(dom.min)
+                hi.append(dom.max)
+        if n:
+            out[pid] = (n, min(lo), max(hi))
+    return out
 
 
 def _lap(phase_s: dict, name: str, t0: float) -> float:
@@ -445,29 +463,28 @@ class CrawlFrontier:
         """Execute one crawl round (round_no = last committed round + 1);
         returns metrics.
 
-        The round is seven phases, called in this order (ARCHITECTURE §1):
-        ``_candidates`` → ``write_processed`` → ``_update_filters`` →
-        ``_expand_dedup`` → ``_write_frontier`` → ``_write_lineage`` →
-        ``_commit``.  The lineage collect and the filters write run on the
-        round's thread pool, overlapping the expansion+dedup and the
-        frontier write.
+        The round is seven phases, called in this order on the calling
+        thread (ARCHITECTURE §1): ``_candidates`` → ``write_processed`` →
+        ``_update_filters`` → ``_expand_dedup`` → ``_write_frontier`` →
+        ``_write_lineage`` → ``_commit``.
 
-        A round runs six Spark jobs, revisit rounds too (ARCHITECTURE §1):
-        the robots broadcast, the processed write (scheduled ∪
-        robots-retired, one table so the seen delta needs no write of its
-        own), the lineage collect, the filters write, the noop write that
-        fills the dedup's cache, and the frontier write.  The lineage rows
+        A round runs four Spark jobs, one after the other, revisit rounds
+        too (ARCHITECTURE §1): the robots broadcast, the processed write
+        (scheduled ∪ robots-retired, one table so the seen delta needs no
+        write of its own), the filters write and the frontier write
+        (expansion → dedup → links gate → optional cap, one plan).  The
+        lineage rows come from the processed files' Parquet footers and
         land via a driver-side pyarrow write.  The round's plans run with
         AQE off (``adaptive_off``) and its checkpoint reads pass fixed
         schemas, so neither adds jobs.  All row counts come from
         Observations attached to those same actions; no separate
         .count()/.toPandas() jobs and no post-write re-reads.  On every
         exit path the round releases the frames it cached and restores
-        the session's AQE setting, after the pool has joined.
+        the session's AQE setting.
 
         ``phase_s`` in the metrics holds the driver-side wall of four
         consecutive stretches: processed_write (from the round's start),
-        filters_write+dedup_overlap, frontier_write and lineage_write."""
+        filters_write, frontier_write and lineage_write."""
         t = time.perf_counter()
         cfg, ckpt = self.cfg, self.ckpt
         phase_s: dict[str, float] = {}
@@ -492,33 +509,15 @@ class CrawlFrontier:
             )  # fills the processed cache
             release.callback(processed.unpersist)
             t = _lap(phase_s, "processed_write", t)
-            scheduled = processed.filter(F.col("host_rank").isNotNull())
-
-            # the pool's exit (shutdown(wait=True)) joins both background
-            # jobs on EVERY path out of the round: a failure in the main
-            # thread re-raises only after the filters write has finished, so
-            # a retried round never rmtrees filters/round=k under a live
-            # writer, and no round thread outlives its round
-            with ThreadPoolExecutor(max_workers=2, thread_name_prefix="ccspark-round") as pool:
-                # lineage aggregate launched NOW: it reads only the processed
-                # cache the processed write just filled, so its tasks
-                # back-fill the stage tails of the writes below; joined
-                # before the commit
-                lineage_fut = pool.submit(_lineage_agg(scheduled).collect)
-                # the filters write gates only the links gate, not the
-                # expansion+dedup: its tasks overlap that materialization
-                filters_fut = pool.submit(
-                    ckpt.write, self._update_filters(round_no), "filters", round_no, ["partition_id"]
-                )
-                merged = self._expand_dedup(frontier, scheduled, round_no)
-                release.callback(merged.unpersist)
-                filters_fut.result()  # round-k blobs are on disk past this point
-                t = _lap(phase_s, "filters_write+dedup_overlap", t)
-                n_frontier = self._write_frontier(merged, round_no)
-                t = _lap(phase_s, "frontier_write", t)
-                self._write_lineage(lineage_fut.result(), round_no)
-                _lap(phase_s, "lineage_write", t)
-                self._commit(round_no, n_scheduled, n_frontier)
+            loc = ckpt.state_location()  # re-read: covers the just-written processed delta
+            self._update_filters(loc, round_no)
+            t = _lap(phase_s, "filters_write", t)
+            merged = self._expand_dedup(frontier, processed.filter(F.col("host_rank").isNotNull()), round_no)
+            n_frontier = self._write_frontier(merged, round_no)
+            t = _lap(phase_s, "frontier_write", t)
+            self._write_lineage(loc, round_no)
+            _lap(phase_s, "lineage_write", t)
+            self._commit(round_no, n_scheduled, n_frontier)
         return {
             "round": round_no,
             "candidates": n_candidates,
@@ -546,7 +545,7 @@ class CrawlFrontier:
         spark, cfg, ckpt = self.spark, self.cfg, self.ckpt
         # layout check before the round writes anything: a catalog table
         # without the partition_id layout raises here
-        ckpt.state_location()
+        loc = ckpt.state_location()
         manifest = ckpt.read_manifest()
         last = None if manifest is None else int(manifest["round"])
         prev = round_no - 1
@@ -559,25 +558,21 @@ class CrawlFrontier:
             )
         n_candidates = int(manifest["frontier_size"])
 
-        # revisit injection (recrawl): the round processed revisit_after
-        # rounds ago re-enters the candidate stream with decayed priority,
-        # under the same politeness as everything else.  Empty rounds
-        # write no processed data; a source that has data but fails to
+        # revisit injection (recrawl): the scheduled rows of the round
+        # processed revisit_after rounds ago re-enter the candidate stream
+        # with decayed priority, under the same politeness as everything
+        # else.  Its footers say whether it has any (no job); with none,
+        # an all-empty round takes the copy-forward path (an empty
+        # LocalRelation would collapse the plan and prune the
+        # Observations).  A source with scheduled rows that fails to
         # read fails the round
         revisit_src = None
         if cfg.revisit_after and round_no > cfg.revisit_after:
             src_round = round_no - cfg.revisit_after
-            if ckpt.has_data("processed", src_round):
+            if _scheduled_by_partition(loc, src_round, cfg.num_partitions):
                 revisit_src = ckpt.read(spark, "processed", src_round, PROCESSED_SCHEMA + _PID_SCHEMA).filter(
                     F.col("host_rank").isNotNull()
                 )
-        # cheap probe (tiny job, only on drained rounds): a source with
-        # zero scheduled rows means nothing to revisit either — an
-        # all-empty round must take the copy-forward path (an empty
-        # LocalRelation collapses the plan and prunes the CollectMetrics
-        # nodes the Observations hang off)
-        if n_candidates == 0 and revisit_src is not None and revisit_src.limit(1).count() == 0:
-            revisit_src = None
         if n_candidates == 0 and revisit_src is None:
             # byte-identical driver-side copies: no Spark jobs at all
             ckpt.copy_round("frontier", prev, round_no)
@@ -603,37 +598,35 @@ class CrawlFrontier:
         # the cache up when it runs)
         return n_candidates, frontier.cache(), candidates
 
-    def _update_filters(self, round_no: int) -> DataFrame:
-        """Filters-update phase: filters/round=k = filters/round=k-1 plus
-        this round's processed delta, built before the frontier write so
+    def _update_filters(self, loc, round_no: int) -> None:
+        """Filters-update phase: writes filters/round=k = filters/round=k-1
+        plus this round's processed delta, before the frontier write so
         the links gate probes the just-augmented blobs (one seen-scan per
-        round).  The driving frame is range(P) partition ids; each task
+        round).  ``loc`` is a state location taken after the processed
+        write.  The driving frame is range(P) partition ids; each task
         reads its own previous blob and this round's delta file straight
         from their partition directories and ORs (bloom) / rebuilds
         (cuckoo) — the filter state and the crawl history never enter an
-        Exchange.  ``run_round`` writes it on the round pool."""
+        Exchange."""
         cfg = self.cfg
-        return seenset.update_filters_storage(
+        filters = seenset.update_filters_storage(
             self.spark,
-            self.ckpt.state_location(),  # re-read: covers the just-written processed delta
+            loc,
             round_no,
             cfg.num_partitions,
             kind=cfg.filter_kind,
             buckets_per_element=cfg.buckets_per_element,
             capacity=cfg.capacity_per_partition,
         )
+        self.ckpt.write(filters, "filters", round_no, partition_by=["partition_id"])
 
     def _expand_dedup(self, frontier: DataFrame, scheduled: DataFrame, round_no: int) -> DataFrame:
         """Link expansion + dedup phase: the scheduled rows' out-links —
         from the pluggable real pipeline (``expand_fn`` → raw urls → the
         fused identity kernel) or the deterministic fetch simulation
         (``_expand_ident``) — unioned with the frontier and max-priority
-        deduped by identity in ONE shuffle.  Materialized now, cached and
-        filled by a noop write: it does not depend on the filters state,
-        so its job runs while the pool writes the filters.  Unlike a
-        localCheckpoint, the cache is released by ``unpersist`` (the
-        caller does) and is recomputed from its lineage if an executor
-        holding its blocks is lost."""
+        deduped by identity in ONE shuffle.  Returns the plan: it runs
+        in the frontier write's job, under the links gate."""
         cfg = self.cfg
         if self.expand_fn is not None:
             links_raw = CF.with_canonical_urlfp(self.expand_fn(scheduled))
@@ -651,13 +644,12 @@ class CrawlFrontier:
             .withColumn("discovered_round", F.lit(round_no))
             .select(*FRONTIER_COLS)
         )
-        return _cache_filled(
-            dedup_by_identity(frontier.unionByName(links), cfg.num_partitions),
-            lambda df: df.write.format("noop").mode("overwrite").save(),
-        )
+        return dedup_by_identity(frontier.unionByName(links), cfg.num_partitions)
 
     def _write_frontier(self, merged: DataFrame, round_no: int) -> int:
         """Links gate + frontier write phase; returns the frontier size.
+        One job: the expansion and dedup plan ``merged`` runs under the
+        gate, the optional per-host cap and the write.
 
         Dedup first, gate after: the identity dedup's one Exchange (by
         partition_id) lands rows clustered the way the storage gate wants
@@ -684,23 +676,24 @@ class CrawlFrontier:
         self.ckpt.write(gated, "frontier", round_no, partition_by=["partition_id"])
         return int(obs.get["n"])
 
-    def _write_lineage(self, rows: list, round_no: int) -> None:
-        """Lineage phase: the per-partition commit record.  ``rows`` is
-        the collected ``_lineage_agg``; its ~P rows are written
-        driver-side with pyarrow (no committer job)."""
+    def _write_lineage(self, loc, round_no: int) -> None:
+        """Lineage phase: the per-partition commit record, read from the
+        footers of processed/round=k through ``loc`` (the state location
+        the filters phase used); its ~P rows are written driver-side with
+        pyarrow (no job)."""
         schema = _lineage_arrow_schema()
         pdf = pd.DataFrame(
             [
                 {
                     "round": round_no,
-                    "partition_id": r["partition_id"],
-                    "hash_range_start": r["hash_range_start"],
-                    "hash_range_end": r["hash_range_end"],
-                    "urls_emitted": r["urls_emitted"],
+                    "partition_id": pid,
+                    "hash_range_start": lo,
+                    "hash_range_end": hi,
+                    "urls_emitted": n,
                     "urls_deduped": 0,  # reserved: see _lineage_arrow_schema
-                    "fetch_budget_consumed": r["urls_emitted"],
+                    "fetch_budget_consumed": n,
                 }
-                for r in sorted(rows, key=lambda r: r["partition_id"])
+                for pid, (n, lo, hi) in _scheduled_by_partition(loc, round_no, self.cfg.num_partitions).items()
             ],
             columns=schema.names,
         )

@@ -84,6 +84,62 @@ def test_lineage_consistency(spark, crawl):
         assert agg["b"] == m["scheduled"]
 
 
+@pytest.mark.parametrize("backend", ["parquet", "iceberg_stub"])
+def test_lineage_matches_processed_rows(spark, tmp_path, monkeypatch, backend):
+    """The lineage read off the processed files' footers holds one row per
+    partition with scheduled rows; its hash range is the min/max
+    domain_hash of that partition's processed rows (scheduled and
+    robots-retired) and both counts are its scheduled rows."""
+    if backend == "iceberg_stub":
+        from iceberg_stub import install
+
+        install(monkeypatch, spark, "stubcat")
+        where = "iceberg:stubcat.lineage"
+    else:
+        where = str(tmp_path / "lineage")
+    fr = CrawlFrontier(spark, where, _cfg())
+    metrics = fr.run(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED), ROUNDS)
+    for m in metrics:
+        k = m["round"]
+        proc = fr.ckpt.read(spark, "processed", k).toPandas()
+        assert proc["host_rank"].isna().any()  # robots-retired rows are in the range
+        per = proc.assign(sched=proc["host_rank"].notna()).groupby("partition_id")
+        exp = {
+            (int(pid), int(g["domain_hash"].min()), int(g["domain_hash"].max()), n, 0, n)
+            for pid, g in per
+            if (n := int(g["sched"].sum()))
+        }
+        got = {
+            tuple(int(x) for x in r)
+            for r in fr.ckpt.read(spark, "lineage", k)
+            .select(
+                "partition_id", "hash_range_start", "hash_range_end",
+                "urls_emitted", "urls_deduped", "fetch_budget_consumed",
+            )
+            .collect()
+        }
+        assert got == exp
+        assert sum(e[3] for e in exp) == m["scheduled"]
+
+
+def test_lineage_without_footer_statistics_raises(tmp_path):
+    """A processed file whose footer carries no statistics fails the
+    lineage read with an error naming the file, instead of a guess."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ccspark.frontier import _scheduled_by_partition
+
+    d = tmp_path / "processed" / "round=1" / "partition_id=3"
+    d.mkdir(parents=True)
+    table = pa.table({"host_rank": pa.array([1, None], pa.int32()), "domain_hash": pa.array([7, 3], pa.int64())})
+    pq.write_table(table, d / "part-00000.parquet")
+    assert _scheduled_by_partition(str(tmp_path), 1, 4) == {3: (1, 3, 7)}
+    pq.write_table(table, d / "part-00000.parquet", write_statistics=False)
+    with pytest.raises(ValueError, match="part-00000.parquet"):
+        _scheduled_by_partition(str(tmp_path), 1, 4)
+
+
 def test_budget_respected(spark, crawl):
     ckpt, _ = crawl
     fr = CrawlFrontier(spark, ckpt)
@@ -235,8 +291,8 @@ def _fail_next(monkeypatch, phase) -> list:
 
 
 def _fail_next_filters_write(monkeypatch, fr) -> list:
-    """Make the next filters write raise inside the write itself, on the
-    thread that runs it; returns the names of the threads it failed on."""
+    """Make the next filters write raise inside the write itself; returns
+    the threads it failed on."""
     import threading
 
     real_write = fr.ckpt.write
@@ -244,37 +300,12 @@ def _fail_next_filters_write(monkeypatch, fr) -> list:
 
     def _write(df, name, round_no, partition_by=None):
         if name == "filters" and not failed_on:
-            failed_on.append(threading.current_thread().name)
+            failed_on.append(threading.current_thread())
             raise RuntimeError("injected filters_write failure")
         return real_write(df, name, round_no, partition_by)
 
     monkeypatch.setattr(fr.ckpt, "write", _write)
     return failed_on
-
-
-def test_failed_round_joins_threads_and_resumes(spark, tmp_path, monkeypatch):
-    """A failure inside round 2, raised while the overlapped lineage and
-    filters writes run on the round's thread pool, must join those
-    threads before it propagates; resuming must then reproduce the
-    replay oracle exactly."""
-    import threading
-
-    ckpt = str(tmp_path / "ckpt_fail")
-    fr = CrawlFrontier(spark, ckpt, _cfg())
-    fr.run(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED), 1)
-
-    failed = _fail_next(monkeypatch, "_expand_dedup")
-    with pytest.raises(RuntimeError, match="injected _expand_dedup failure"):
-        fr.run(None, ROUNDS - 1)
-    assert failed
-    assert not [t.name for t in threading.enumerate() if t.name.startswith("ccspark-round")]
-    assert fr.ckpt.last_committed_round() == 1
-
-    fr.run(None, ROUNDS - 1)
-    got_trace, got_seen = _spark_trace(spark, ckpt, ROUNDS)
-    exp_trace, exp_seen = replay(UNIVERSE, N_HOSTS, SEED, ROUNDS, BUDGET, ROUND_MS, LINKS)
-    assert got_trace == exp_trace
-    assert got_seen == exp_seen
 
 
 def test_revisit_scheduling(spark, tmp_path):
@@ -572,7 +603,7 @@ _GATE_ONCE_CASES = {
     ),
 }
 # fault-injection resume matrix: round 2 fails at each phase boundary, or
-# inside the filters write on the round pool; the crawl then resumes
+# inside the filters write; the crawl then resumes
 _FAIL_CASES = {"fail_at_" + p.lstrip("_"): p for p in _PHASES}
 _FAIL_CASES["fail_in_filters_write"] = "filters_write"
 _GATE_ONCE_CASES.update({case: ({}, ROUNDS, False) for case in _FAIL_CASES})
@@ -589,8 +620,9 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, sp
     per-host cap, which only evicts) and the empty-round copy-forward;
     revisits join after the gate and never land in the frontier.  The
     crawl must also equal the replay oracle, which computes novelty on
-    its own.  A failed round leaves the session's AQE setting, cache and
-    persistent RDDs as they were before it."""
+    its own.  A failed round raises on the calling thread and leaves the
+    live threads, the session's AQE setting, cache and persistent RDDs as
+    they were before it."""
     from ccspark import seenset
 
     overrides, rounds, empty_robots = _GATE_ONCE_CASES[case]
@@ -617,7 +649,7 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, sp
 
         phase = _FAIL_CASES[case]
         fr.run(seeds, 1, on_round=on_round)
-        state = spark_state()
+        state, threads = spark_state(), set(threading.enumerate())
         if phase == "filters_write":
             failed = _fail_next_filters_write(monkeypatch, fr)
         else:
@@ -626,9 +658,9 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, sp
             fr.run(None, rounds - 1, on_round=on_round)
         assert failed
         if phase == "filters_write":
-            assert failed[0].startswith("ccspark-round")  # raised on the round pool
+            assert failed == [threading.current_thread()]  # raised on the calling thread
         assert fr.ckpt.last_committed_round() == 1
-        assert not [t.name for t in threading.enumerate() if t.name.startswith("ccspark-round")]
+        assert set(threading.enumerate()) == threads
         assert spark_state() == state
         fr.run(None, rounds - 1, on_round=on_round)
     else:
@@ -692,11 +724,11 @@ def test_one_gate_call_per_round(spark, tmp_path, monkeypatch):
 
 def test_round_job_budget(spark, tmp_path, last_job_id, spark_state):
     """A steady round (2) and a revisit round (4, revisit_after=3) each
-    run six Spark jobs on the parquet backend, read from the status
-    store: the robots broadcast, the processed write, the lineage
-    collect, the filters write, the dedup's cache-filling noop write and
-    the frontier write (ARCHITECTURE §1).  Every round leaves the
-    session's AQE setting and cache as it found them."""
+    run four Spark jobs on the parquet backend, read from the status
+    store: the robots broadcast, the processed write, the filters write
+    and the frontier write (ARCHITECTURE §1).  The lineage and the
+    revisit probe read Parquet footers and launch none.  Every round
+    leaves the session's AQE setting and cache as it found them."""
     cfg = _cfg()
     cfg.revisit_after = 3
     fr = CrawlFrontier(spark, str(tmp_path / "budget"), cfg)
@@ -707,7 +739,7 @@ def test_round_job_budget(spark, tmp_path, last_job_id, spark_state):
         fr.run_round(r)
         jobs[r] = last_job_id() - j0
         assert spark_state() == state
-    assert (jobs[2], jobs[4]) == (6, 6), jobs
+    assert (jobs[2], jobs[4]) == (4, 4), jobs
 
 
 def test_bootstrap_runs_one_job(spark, tmp_path, last_job_id, spark_state):

@@ -29,3 +29,19 @@ def test_zip_importable(tmp_path):
     )
     assert res.returncode == 0, res.stderr
     assert "zip-ok" in res.stdout
+
+
+def test_sources_compile_without_warnings():
+    """Every engine, entry-point and job source compiles with warnings as
+    errors: an invalid escape sequence in a plain string literal warns
+    today and is rejected by later Pythons."""
+    import warnings
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    files = sorted(root.glob("ccspark/**/*.py")) + [root / "__spark_entry__.py"] + sorted(root.glob("jobs/*.py"))
+    assert len(files) > 30
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for f in files:
+            compile(f.read_text(encoding="utf-8"), str(f), "exec")
