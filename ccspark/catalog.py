@@ -142,33 +142,12 @@ class IcebergCheckpoint:
         self._files_dirty.setdefault(name, set()).add(int(round_no))
         return t
 
-    def write_pdf(self, pdf: pd.DataFrame, name: str, round_no: int, arrow_schema=None, partition_col=None) -> str:
+    def write_pdf(self, pdf: pd.DataFrame, name: str, round_no: int, arrow_schema) -> str:
         """``arrow_schema`` pins the physical column types (createDataFrame
-        alone would infer long for int32 columns like partition_id /
-        hash_count, breaking type parity with Spark-written rounds —
-        the type parity that filter_arrow_schema
-        documents).  ``partition_col`` becomes an Iceberg partition
-        transform at table creation (exactly like ``partition_by`` on a
-        Spark write), so driver-built tables land with the same
-        per-(round, partition) file layout state_location() enumerates
-        for the worker-side storage gate."""
-        if arrow_schema is not None:
-            df = self.spark.createDataFrame(pdf, schema=_arrow_to_spark_ddl(arrow_schema))
-        else:
-            df = self.spark.createDataFrame(pdf)
-        return self.write(
-            df, name, round_no, partition_by=[partition_col] if partition_col else None
-        )
-
-    def copy_round(self, name: str, from_round: int, to_round: int) -> str:
-        t = self._qualified(name)
-        self.spark.sql(
-            f"INSERT OVERWRITE {t} PARTITION (_ckpt_round = {int(to_round)}) "
-            f"SELECT * EXCEPT (_ckpt_round) FROM {t} "
-            f"WHERE _ckpt_round = {int(from_round)}"
-        )
-        self._files_dirty.setdefault(name, set()).add(int(to_round))
-        return t
+        alone would infer long for int32 columns like round /
+        partition_id, breaking type parity with Spark-written rounds)."""
+        df = self.spark.createDataFrame(pdf, schema=_arrow_to_spark_ddl(arrow_schema))
+        return self.write(df, name, round_no)
 
     def read(self, spark: SparkSession, name: str, round_no: int, schema: str | None = None) -> DataFrame:
         """One round of a table; ``schema`` is ignored, the catalog
@@ -228,7 +207,7 @@ class IcebergCheckpoint:
         table.
 
         Incremental: only rounds newer than the last sync (plus rounds
-        this object rewrote — write/copy/resume-delete mark them dirty)
+        this object rewrote — write and resume-delete mark them dirty)
         are re-queried, so the per-round metadata cost is O(delta
         files), not O(history).  Iceberg data files are immutable by
         name, so (path, size) is a sound cache signature and a stable

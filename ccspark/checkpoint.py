@@ -97,18 +97,13 @@ class Checkpoint:
         w.parquet(path)
         return path
 
-    def write_pdf(self, pdf, name: str, round_no: int, arrow_schema=None, partition_col: str | None = None) -> str:
-        """Driver-side write for driver-built tables (initial filter
-        blobs, per-round lineage rows) — plain pyarrow, NO Spark job.
-        The frontier's per-round fixed cost is the action count; tables
-        whose data already lives on the driver shouldn't spend one.
+    def write_pdf(self, pdf, name: str, round_no: int, arrow_schema) -> str:
+        """Driver-side write for driver-built tables (the per-round
+        lineage rows) — plain pyarrow, NO Spark job.  The frontier's
+        per-round fixed cost is the action count; tables whose data
+        already lives on the driver shouldn't spend one.
         ``arrow_schema`` pins exact physical types so Spark reads them
-        back type-identical to a Spark-written table.  With
-        ``partition_col`` the rows are laid out Hive-style
-        (``<col>=<v>/part-00000.parquet``, column dropped from the
-        files) — indistinguishable from a Spark partitionBy write, so
-        the worker-side partition-pruned readers (seenstore) and Spark
-        scans see one layout."""
+        back type-identical to a Spark-written table."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -116,32 +111,9 @@ class Checkpoint:
         if os.path.exists(path):
             shutil.rmtree(path)
         os.makedirs(path)
-        if partition_col is None:
-            table = pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-            pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-            return path
-        file_schema = None
-        if arrow_schema is not None:
-            file_schema = pa.schema([f for f in arrow_schema if f.name != partition_col])
-        for v, part in pdf.groupby(partition_col, sort=True):
-            d = os.path.join(path, f"{partition_col}={v}")
-            os.makedirs(d)
-            table = pa.Table.from_pandas(
-                part.drop(columns=[partition_col]), schema=file_schema, preserve_index=False
-            )
-            pq.write_table(table, os.path.join(d, "part-00000.parquet"))
+        table = pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
+        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
         return path
-
-    def copy_round(self, name: str, from_round: int, to_round: int) -> str:
-        """Carry a table unchanged into a new round (driver-side copy —
-        no Spark job; used when a round provably leaves a table
-        identical, e.g. filters on an empty frontier)."""
-        src = self.table_dir(name, from_round)
-        dst = self.table_dir(name, to_round)
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        shutil.copytree(src, dst)
-        return dst
 
     def read(self, spark: SparkSession, name: str, round_no: int, schema: str | None = None) -> DataFrame:
         """One round of a table.  ``schema`` (DDL, partition columns

@@ -263,10 +263,7 @@ class FrontierConfig:
         round_duration_ms: int = politeness.DEFAULT_ROUND_MS,
         n_salts: int = 16,
         filter_kind: str = "bloom",
-        buckets_per_element: int = 10,
-        capacity_per_partition: int | None = None,
         max_frontier_per_host: int | None = None,
-        broadcast_robots: bool | None = None,
         revisit_after: int | None = None,
         revisit_decay: float = 0.5,
     ):
@@ -279,7 +276,8 @@ class FrontierConfig:
         self.round_duration_ms = round_duration_ms
         self.n_salts = n_salts
         self.filter_kind = filter_kind
-        self.buckets_per_element = buckets_per_element
+        # bloom bits per key: k = 7 hash functions, ~0.8% false positives
+        self.buckets_per_element = 10
         # per-host frontier cap: a hot host's queue is priority-evicted
         # down to this size each round (None = unbounded); evicted URLs
         # stay rediscoverable through future links
@@ -288,9 +286,7 @@ class FrontierConfig:
         # at web scale (10^8+ hosts) the rules won't fit an executor —
         # auto-switch to the shuffle join (the gate keys on host, so the
         # politeness windows reuse the same clustering)
-        self.broadcast_robots = (
-            broadcast_robots if broadcast_robots is not None else self.n_hosts <= 2_000_000
-        )
+        self.broadcast_robots = self.n_hosts <= 2_000_000
         # revisit scheduling (recrawl): URLs scheduled in round r re-enter
         # the candidate stream at round r + revisit_after with decayed
         # priority.  No gate runs on the candidates: revisits are in the
@@ -301,9 +297,7 @@ class FrontierConfig:
         self.revisit_after = revisit_after
         self.revisit_decay = revisit_decay
         # fixed bloom capacity → per-round delta build + bitwise-OR merge
-        self.capacity_per_partition = capacity_per_partition or max(
-            4 * universe_n // num_partitions, 1024
-        )
+        self.capacity_per_partition = max(4 * universe_n // num_partitions, 1024)
 
 
 def expand_links_pdf(url_hashes: np.ndarray, cfg: FrontierConfig) -> pd.DataFrame:
@@ -433,31 +427,16 @@ class CrawlFrontier:
         ONE Spark job: the identified-seeds write, run with AQE off
         (``adaptive_off``, so the dedup's shuffle stage is not a job of
         its own), with the row count read off an Observation instead of
-        a second (full-recompute) count job.  The empty filter table is
-        deterministic driver-side data — written with pyarrow directly,
-        no job; the seen set starts absent (read_all_rounds returns None
-        for round 0)."""
+        a second (full-recompute) count job.  Round 0 writes the frontier
+        only: round 1's filters update starts every partition from the
+        empty bitset (``update_filters_storage`` finds no round-0 blob),
+        and the seen set starts absent (read_all_rounds returns None for
+        round 0)."""
         obs = Observation("bootstrap_n")
         frontier = self._identify(seeds, 0).observe(obs, F.count(F.lit(1)).alias("n"))
         with adaptive_off(self.spark):
             self.ckpt.write(frontier, "frontier", 0, partition_by=["partition_id"])
-        self.ckpt.write_pdf(
-            seenset.empty_filters_pdf(
-                self.cfg.num_partitions,
-                self.cfg.filter_kind,
-                self.cfg.buckets_per_element,
-                capacity=self.cfg.capacity_per_partition,
-            ),
-            "filters",
-            0,
-            arrow_schema=seenset.filter_arrow_schema(),
-            partition_col="partition_id",
-        )
-        self.ckpt.commit_round(
-            0,
-            {"frontier": "round=0", "filters": "round=0"},
-            extra={"frontier_size": int(obs.get["n"])},
-        )
+        self.ckpt.commit_round(0, {"frontier": "round=0"}, extra={"frontier_size": int(obs.get["n"])})
 
     def run_round(self, round_no: int) -> dict:
         """Execute one crawl round (round_no = last committed round + 1);
@@ -491,10 +470,7 @@ class CrawlFrontier:
         # ``release`` unpersists the cached frames last-cached first, so
         # no frame is released before one cached over it
         with adaptive_off(self.spark), contextlib.ExitStack() as release:
-            cand = self._candidates(round_no)
-            if cand is None:  # empty round, already carried forward and committed
-                return {"round": round_no, "candidates": 0, "scheduled": 0, "frontier_size": 0, "phase_s": {}}
-            n_candidates, frontier, candidates = cand
+            n_candidates, frontier, candidates = self._candidates(round_no)
             release.callback(frontier.unpersist)
             processed, n_scheduled = write_processed(
                 ckpt,
@@ -528,16 +504,16 @@ class CrawlFrontier:
 
     # -- round phases -----------------------------------------------------
 
-    def _candidates(self, round_no: int) -> tuple[int, DataFrame, DataFrame] | None:
+    def _candidates(self, round_no: int) -> tuple[int, DataFrame, DataFrame]:
         """Candidates phase: frontier/round=k-1 ∪ the due revisits.
 
         Returns ``(n_candidates, frontier, candidates)`` with the frontier
         cached (it feeds both the processed write and the next-frontier
-        dedup), or None for an empty round: no frontier and nothing to
-        revisit, which this phase carries forward and commits with no
-        Spark job.  The frontier is not re-gated: round k-1's links gate
-        wrote it against filters/round=k-1 and the seen set through k-1,
-        so every row is novel (the gate-once invariant, ARCHITECTURE §1).
+        dedup).  A drained round (no frontier, nothing to revisit) runs
+        the same phases over empty frames and commits all four tables.
+        The frontier is not re-gated: round k-1's links gate wrote it
+        against filters/round=k-1 and the seen set through k-1, so every
+        row is novel (the gate-once invariant, ARCHITECTURE §1).
         Its size comes from the last manifest, which is why round k must
         follow committed round k-1.  Both reads pass their table's fixed
         schema: no schema-inference job, and a drained frontier (a round
@@ -561,11 +537,8 @@ class CrawlFrontier:
         # revisit injection (recrawl): the scheduled rows of the round
         # processed revisit_after rounds ago re-enter the candidate stream
         # with decayed priority, under the same politeness as everything
-        # else.  Its footers say whether it has any (no job); with none,
-        # an all-empty round takes the copy-forward path (an empty
-        # LocalRelation would collapse the plan and prune the
-        # Observations).  A source with scheduled rows that fails to
-        # read fails the round
+        # else.  Its footers say whether it has any (no job).  A source
+        # with scheduled rows that fails to read fails the round
         revisit_src = None
         if cfg.revisit_after and round_no > cfg.revisit_after:
             src_round = round_no - cfg.revisit_after
@@ -573,12 +546,6 @@ class CrawlFrontier:
                 revisit_src = ckpt.read(spark, "processed", src_round, PROCESSED_SCHEMA + _PID_SCHEMA).filter(
                     F.col("host_rank").isNotNull()
                 )
-        if n_candidates == 0 and revisit_src is None:
-            # byte-identical driver-side copies: no Spark jobs at all
-            ckpt.copy_round("frontier", prev, round_no)
-            ckpt.copy_round("filters", prev, round_no)
-            ckpt.commit_round(round_no, {"empty": "true"}, extra={"frontier_size": 0})
-            return None
         frontier = ckpt.read(spark, "frontier", prev, FRONTIER_SCHEMA + _PID_SCHEMA).select(*FRONTIER_COLS)
         candidates = frontier
         if revisit_src is not None:

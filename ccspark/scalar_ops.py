@@ -1,6 +1,7 @@
 """Small scalar operators completing the reference's function surface
-(SURVEY.md §2.1 S11, §2.2 P6/P7/P10/P11/P14) — pure Catalyst where
-possible.
+(SURVEY.md §2.1 S11, §2.2 P6/P11/P14) — pure Catalyst where possible.
+MIME classification (P7) lives in ``mime`` and the Content-Type parse
+(P10) in ``httpheaders``, both reference-exact ports.
 """
 
 from __future__ import annotations
@@ -26,34 +27,6 @@ def is_valid_domain(host: Column) -> Column:
             (~lower.rlike(_INVALID_DOMAIN_RE))
             & (F.size(F.split(lower, r"\.")) <= 128)
         )
-    )
-
-
-# --- P7: MIME classification (MimeTypeFilter.java:10-942) -----------------
-
-_TEXT_SUBTYPES = "plain|html|xml|json|css|csv|javascript|x-javascript|rtf|sgml"
-_TEXT_TYPE_RE = rf"^text/.*|^application/(xml|json|javascript|x-javascript|xhtml\+xml|rss\+xml|atom\+xml)\b.*"
-_HTML_TYPE_RE = r"^text/html\b.*|^application/xhtml\+xml\b.*"
-
-
-def is_text_type(mime: Column) -> Column:
-    return F.lower(F.trim(mime)).rlike(_TEXT_TYPE_RE)
-
-
-def is_html_type(mime: Column) -> Column:
-    return F.lower(F.trim(mime)).rlike(_HTML_TYPE_RE)
-
-
-# --- P10: Content-Type header parse (HttpHeaderUtils.java:22-166) ---------
-
-
-def parse_content_type(header: Column) -> Column:
-    """``text/html; charset=utf-8`` → struct(content_type, charset)."""
-    ct = F.lower(F.trim(F.regexp_extract(header, r"^\s*([^;]+)", 1)))
-    cs = F.lower(F.regexp_extract(F.lower(header), r"charset\s*=\s*\"?([a-z0-9_\-]+)", 1))
-    return F.struct(
-        ct.alias("content_type"),
-        F.when(cs == "", F.lit(None).cast("string")).otherwise(cs).alias("charset"),
     )
 
 

@@ -44,24 +44,6 @@ FILTER_SCHEMA = (
 )
 
 
-def filter_arrow_schema():
-    """pyarrow schema physically identical to FILTER_SCHEMA, so a
-    driver-side pyarrow write reads back indistinguishable from a
-    Spark-written filter table."""
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("partition_id", pa.int32()),
-            ("kind", pa.string()),
-            ("hash_count", pa.int32()),
-            ("num_buckets", pa.int64()),
-            ("n_keys", pa.int64()),
-            ("bits", pa.binary()),
-        ]
-    )
-
-
 def compute_best_k(buckets_per_element: int) -> int:
     if buckets_per_element >= len(_OPT_K):
         return _OPT_K[-1]
@@ -246,23 +228,6 @@ def cuckoo_probe(keys: np.ndarray, slots: int, nb: int, bits: bytes) -> np.ndarr
 # ---------------------------------------------------------------------------
 
 
-def empty_filters_pdf(
-    num_partitions: int, kind: str = "bloom", buckets_per_element: int = 10, capacity: int | None = None
-) -> pd.DataFrame:
-    """Deterministic empty filter table built driver-side (no Spark job)
-    — bootstrap uses this instead of running a build over zero rows."""
-    rows = []
-    for pid in range(num_partitions):
-        if kind == "bloom":
-            k, m, bits = bloom_build(np.array([], dtype=np.int64), buckets_per_element, capacity)
-        else:
-            k, m, bits = cuckoo_build(np.array([], dtype=np.int64))
-        rows.append((pid, kind, k, m, 0, bits))
-    return pd.DataFrame(
-        rows, columns=["partition_id", "kind", "hash_count", "num_buckets", "n_keys", "bits"]
-    )
-
-
 def gate_new_storage(
     candidates: DataFrame,
     root,
@@ -277,9 +242,16 @@ def gate_new_storage(
     Both state tables are written Hive-partitioned by
     ``pmod(domain_hash, P)`` (frontier.py), so for each batch the
     worker loads exactly the touched partitions' filter blob
-    (seenstore.filter_blob) and — only when the bloom flags suspects —
-    that partition's seen identities (seenstore.seen_arrays, an
-    incremental per-worker cache that reads one delta file per round).
+    (seenstore.filter_blob) and, for each (batch, partition) in which
+    any key is a suspect (the filter says "maybe seen"), that
+    partition's seen identities (seenstore.seen_arrays, an incremental
+    per-worker cache that reads one delta file per round).  The filter
+    rarely spares that load: at 10 bits/key its false-positive rate is
+    about 0.8%, so a (batch, partition) of more than ~500 keys almost
+    always holds a false positive, and keys that really were seen are
+    suspects too (crawlbench measured 38% of a round's links as true
+    suspects).  What the filter does decide is which keys the exact
+    confirm looks up.
     This replaces the r3 cogroup gate, whose state side re-shuffled the
     FULL crawl history every round (the one remaining 100×-scale
     shuffle).  Semantics are exactly ``candidates ∖ seen``: the

@@ -330,9 +330,7 @@ def canonicalize_matrix(
     return handled, canon, hosts
 
 
-def canonicalize_batch_kernel(
-    urls_series: pd.Series, strip_www: bool = True
-) -> tuple[pd.Series, pd.Series]:
+def canonicalize_batch_kernel(urls_series: pd.Series) -> tuple[pd.Series, pd.Series]:
     """Batch canonicalization: byte-matrix fast path + scalar residue.
 
     Returns (canonical, host) — host is None where canonical is None.
@@ -354,7 +352,7 @@ def canonicalize_batch_kernel(
         count=n,
     )
     idx_el = np.flatnonzero(eligible)
-    if strip_www and len(idx_el):
+    if len(idx_el):
         # chunked: the matrix pass allocates ~25 n×L temporaries; sizing
         # n so they stay LLC-resident cuts DRAM traffic ~4× — the
         # resource K parallel workers actually contend on (the N→4N
@@ -372,7 +370,7 @@ def canonicalize_batch_kernel(
         rest = idx_el
     rest = np.concatenate([rest, np.flatnonzero(~eligible)])
     for i in rest:
-        c = U.canonicalize_url(vals[i], strip_www)
+        c = U.canonicalize_url(vals[i])
         out[i] = c
         out_host[i] = U.fast_get_host(c) if c is not None else None
     return (

@@ -560,24 +560,22 @@ def canonicalize_url(url: str | None, strip_www: bool = True) -> str | None:
     return session_id_normalize("".join(out))
 
 
-def canonicalize_batch(urls: pd.Series, strip_www: bool = True) -> pd.Series:
+def canonicalize_batch(urls: pd.Series) -> pd.Series:
     """Vectorized canonicalization via the numpy byte-matrix kernel
     (ccspark.urlkernel), per-string scalar residue for rows the kernel
     routes out."""
     from . import urlkernel
 
-    canon, _hosts = urlkernel.canonicalize_batch_kernel(urls.astype("object"), strip_www)
+    canon, _hosts = urlkernel.canonicalize_batch_kernel(urls.astype("object"))
     return canon
 
 
-def canonicalize_batch_with_host(
-    urls: pd.Series, strip_www: bool = True
-) -> tuple[pd.Series, pd.Series]:
+def canonicalize_batch_with_host(urls: pd.Series) -> tuple[pd.Series, pd.Series]:
     """Kernel canonicalization returning (canonical, host) — the host
     byproduct lets fused fingerprint paths skip re-extraction."""
     from . import urlkernel
 
-    return urlkernel.canonicalize_batch_kernel(urls.astype("object"), strip_www)
+    return urlkernel.canonicalize_batch_kernel(urls.astype("object"))
 
 
 _FAST_HOST_RE = re.compile(r"^[^:]*:/*(?:[^/\\?;#@]*@)?([^/?;#:]*)")

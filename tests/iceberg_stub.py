@@ -12,9 +12,8 @@ IcebergCheckpoint with the stub routing
 * ``df.writeTo(t).partitionedBy(...).create() / .overwrite(cond) /
   .append()`` — snapshot-commit table mutations (overwrite evaluates
   the real Column predicate through Spark, not a re-implementation);
-* ``spark.sql``: CREATE NAMESPACE, INSERT OVERWRITE ... PARTITION,
-  DELETE FROM ... WHERE, SHOW TABLES IN — the three statement shapes
-  the backend generates;
+* ``spark.sql``: CREATE NAMESPACE, DELETE FROM ... WHERE, SHOW
+  TABLES IN — the three statement shapes the backend generates;
 * ``spark.read.table`` / ``spark.catalog.tableExists``, including the
   ``<table>.files`` METADATA table — the per-snapshot data-file
   manifest (file_path, file_size_in_bytes, partition struct) that
@@ -235,10 +234,6 @@ class _StubWriterV2:
 _SQL_NS = re.compile(r"CREATE NAMESPACE IF NOT EXISTS (\S+)")
 _SQL_SHOW = re.compile(r"SHOW TABLES IN (\S+)")
 _SQL_DELETE = re.compile(r"DELETE FROM (\S+) WHERE _ckpt_round > (\d+)")
-_SQL_COPY = re.compile(
-    r"INSERT OVERWRITE (\S+) PARTITION \(_ckpt_round = (\d+)\) "
-    r"SELECT \* EXCEPT \(_ckpt_round\) FROM (\S+) WHERE _ckpt_round = (\d+)"
-)
 
 
 def install(monkeypatch, spark, catalog_name: str, warehouse: str | None = None) -> StubCatalog:
@@ -292,30 +287,6 @@ def install(monkeypatch, spark, catalog_name: str, warehouse: str | None = None)
                 )
             }
             st.commit(cur.filter(keep), manifest)
-            cat.persist_meta(m.group(1), st)
-            return None
-        m = _SQL_COPY.match(query)
-        if m and cat.owns(m.group(1)):
-            st = cat.tables[m.group(1)]
-            cur = st.current
-            src = cur.filter(pa.compute.equal(cur.column("_ckpt_round"), int(m.group(4))))
-            dst_round = int(m.group(2))
-            idx = src.schema.get_field_index("_ckpt_round")
-            src = src.set_column(
-                idx,
-                src.schema.field(idx),
-                pa.array([dst_round] * len(src), type=src.schema.field(idx).type),
-            )
-            rest = cur.filter(
-                pa.compute.not_equal(cur.column("_ckpt_round"), dst_round)
-            )
-            manifest = {
-                p: e
-                for p, e in st.current_manifest.items()
-                if e["partition"].get("_ckpt_round") != dst_round
-            }
-            manifest.update(cat.write_data_files(m.group(1), st, src))
-            st.commit(pa.concat_tables([rest, src]), manifest)
             cat.persist_meta(m.group(1), st)
             return None
         return orig_sql(self, query, *a, **kw)

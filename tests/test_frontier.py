@@ -596,8 +596,8 @@ _GATE_ONCE_CASES = {
     "cuckoo": ({"filter_kind": "cuckoo"}, ROUNDS, False),
     "per_host_cap": ({"max_frontier_per_host": 5}, ROUNDS, False),
     "revisit": ({"revisit_after": 2}, 4, False),
-    # links_per_fetch=0 drains after round 1: rounds 2 and 4 copy the
-    # frontier forward, rounds 3 and 5 are recrawl-only
+    # links_per_fetch=0 drains after round 1: rounds 2 and 4 are drained
+    # (the four phases over empty frames), rounds 3 and 5 recrawl-only
     "drained_recrawl": (
         {"revisit_after": 2, "links_per_fetch": 0, "default_budget": 500}, 5, True
     ),
@@ -615,14 +615,14 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, sp
     """The gate-once invariant: every committed frontier/round=k already
     excludes everything filters/round=k and the seen set through k
     know, so re-gating it (what a round-start novelty gate would do at
-    round k+1) keeps every row.  Holds for the four ways a frontier
-    table is written: bootstrap, the links gate (with the optional
-    per-host cap, which only evicts) and the empty-round copy-forward;
-    revisits join after the gate and never land in the frontier.  The
-    crawl must also equal the replay oracle, which computes novelty on
-    its own.  A failed round raises on the calling thread and leaves the
-    live threads, the session's AQE setting, cache and persistent RDDs as
-    they were before it."""
+    round k+1) keeps every row.  Holds for the three ways a frontier
+    table is written: bootstrap, the links gate and the optional
+    per-host cap after it, which only evicts; a drained round writes
+    through the links gate too.  Revisits join after the gate and never
+    land in the frontier.  The crawl must also equal the replay oracle,
+    which computes novelty on its own.  A failed round raises on the
+    calling thread and leaves the live threads, the session's AQE
+    setting, cache and persistent RDDs as they were before it."""
     from ccspark import seenset
 
     overrides, rounds, empty_robots = _GATE_ONCE_CASES[case]
@@ -697,7 +697,7 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, sp
 
 
 def test_one_gate_call_per_round(spark, tmp_path, monkeypatch):
-    """Each URL identity is gated once: a non-empty round runs the
+    """Each URL identity is gated once: every round runs the
     storage gate exactly once (the links gate), never again over the
     frontier it reads."""
     from ccspark import seenset
@@ -740,6 +740,29 @@ def test_round_job_budget(spark, tmp_path, last_job_id, spark_state):
         jobs[r] = last_job_id() - j0
         assert spark_state() == state
     assert (jobs[2], jobs[4]) == (4, 4), jobs
+
+
+def test_drained_round_runs_four_phases(spark, tmp_path, last_job_id, spark_state):
+    """A drained round (no frontier, no due revisit) takes the one round
+    path: four Spark jobs on the parquet backend, the four phase walls,
+    and a manifest listing all four tables.  links_per_fetch=0 with a
+    budget above the seed count drains the frontier after round 1."""
+    cfg = _cfg()
+    cfg.links_per_fetch = 0
+    cfg.default_budget = 500
+    fr = CrawlFrontier(spark, str(tmp_path / "drained"), cfg, robots_df=spark.createDataFrame([], _EMPTY_ROBOTS))
+    fr.bootstrap(synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED))
+    assert fr.run_round(1)["frontier_size"] == 0
+    state, j0 = spark_state(), last_job_id()
+    m = fr.run_round(2)
+    assert last_job_id() - j0 == 4
+    assert spark_state() == state
+    assert (m["candidates"], m["scheduled"], m["frontier_size"]) == (0, 0, 0)
+    assert set(m["phase_s"]) == {"processed_write", "filters_write", "frontier_write", "lineage_write"}
+    assert fr.ckpt.read_manifest()["tables"] == {
+        t: "round=2" for t in ("frontier", "filters", "processed", "lineage")
+    }
+    assert fr.ckpt.read(spark, "lineage", 2).count() == 0
 
 
 def test_bootstrap_runs_one_job(spark, tmp_path, last_job_id, spark_state):

@@ -6,12 +6,14 @@ the real backend cannot execute (tests/test_frontier.py gates on
 iceberg_available and skips).  These tests close the semantic gap: the
 ENTIRE crawl-frontier loop runs over IcebergCheckpoint with the catalog
 surface emulated — writerV2 create/overwrite/append as snapshot
-commits, the INSERT OVERWRITE / DELETE / SHOW TABLES statements, table
-reads — and the results must be identical to the parquet-emulation
-backend on the same seeds.  Snapshot history makes time-travel
+commits, the DELETE / SHOW TABLES statements, table reads — and the
+results must be identical to the parquet-emulation backend on the same
+seeds.  Snapshot history makes time-travel
 assertions possible: an overwritten round's previous state remains
 readable at the prior snapshot.
 """
+
+import json
 
 import numpy as np
 import pytest
@@ -100,7 +102,7 @@ def test_drained_recrawl_over_stub_catalog(spark, monkeypatch):
     CollectMetrics would hang Observation.get if the gate were
     observed.  links_per_fetch=0 drains after the seed crawl; cycles
     must keep scheduling."""
-    install(monkeypatch, spark, "stubcat")
+    cat = install(monkeypatch, spark, "stubcat")
     cfg = _cfg()
     cfg.links_per_fetch = 0
     cfg.default_budget = 500
@@ -118,6 +120,13 @@ def test_drained_recrawl_over_stub_catalog(spark, monkeypatch):
     assert sched[0] > 0 and sched[1] == 0  # drained after the full seed round
     assert sched[2] == sched[0]  # recrawl cycle re-schedules the full set
     assert sched[3] == 0 and sched[4] == sched[0]
+    # every committed round k >= 1, the drained ones included, lists all
+    # four tables
+    commits = cat.tables["stubcat.recrawl._manifest"].current.to_pylist()
+    assert sorted(c["round"] for c in commits) == [0, 1, 2, 3, 4, 5]
+    for c in commits:
+        want = ("frontier", "filters", "processed", "lineage") if c["round"] else ("frontier",)
+        assert json.loads(c["tables"]) == {t: f"round={c['round']}" for t in want}
 
 
 def test_snapshot_time_travel_on_round_overwrite(spark, monkeypatch):
@@ -140,14 +149,9 @@ def test_snapshot_time_travel_on_round_overwrite(spark, monkeypatch):
     assert sorted(prev["v"].unique()) == ["v1"] and len(prev) == 10
 
 
-def test_copy_round_and_manifest(spark, monkeypatch):
-    cat = install(monkeypatch, spark, "stubcat")
+def test_commit_round_manifest(spark, monkeypatch):
+    install(monkeypatch, spark, "stubcat")
     ck = make_checkpoint(spark, "iceberg:stubcat.cp")
-    df = spark.range(7).select(F.col("id").alias("k"))
-    ck.write(df, "t", 2)
-    ck.copy_round("t", 2, 3)
-    got = ck.read(spark, "t", 3).toPandas()
-    assert sorted(got["k"]) == list(range(7))
     # commit twice; latest round wins on read-back
     ck.commit_round(2, {"t": "r2"}, extra={"frontier_size": 7})
     ck.commit_round(3, {"t": "r3"}, extra={"frontier_size": 9})
@@ -157,32 +161,31 @@ def test_copy_round_and_manifest(spark, monkeypatch):
 
 
 def test_write_pdf_pins_physical_types(spark, monkeypatch):
-    """The ADVICE r3 fix: driver-built filter tables must read back with
-    the same physical types as Spark-written rounds (int32 stays int)."""
-    from ccspark import seenset
+    """Driver-built tables (the lineage rows) must read back with the
+    same physical types as Spark-written rounds (int32 stays int)."""
+    import pandas as pd
 
-    cat = install(monkeypatch, spark, "stubcat")
+    from ccspark.frontier import _lineage_arrow_schema
+
+    install(monkeypatch, spark, "stubcat")
     ck = make_checkpoint(spark, "iceberg:stubcat.ty")
-    pdf = seenset.empty_filters_pdf(4, "bloom", 10, capacity=256)
-    ck.write_pdf(pdf, "filters", 0, arrow_schema=seenset.filter_arrow_schema())
-    got = ck.read(spark, "filters", 0)
-    types = dict(got.dtypes)
+    schema = _lineage_arrow_schema()
+    pdf = pd.DataFrame([dict.fromkeys(schema.names, 1)], columns=schema.names)
+    ck.write_pdf(pdf, "lineage", 1, arrow_schema=schema)
+    types = dict(ck.read(spark, "lineage", 1).dtypes)
+    assert types["round"] == "int"
     assert types["partition_id"] == "int"
-    assert types["hash_count"] == "int"
-    assert types["num_buckets"] == "bigint"
-    assert types["bits"] == "binary"
+    assert types["hash_range_start"] == "bigint"
+    assert types["urls_emitted"] == "bigint"
 
 
 def test_legacy_layout_state_table_raises(spark, monkeypatch):
     """A state table without the partition_id partition transform gives
     the storage gate nothing to prune on: state_location() must fail
     with a fix-it error naming the table, not degrade silently."""
-    from ccspark import seenset
-
     install(monkeypatch, spark, "stubcat")
     ck = make_checkpoint(spark, "iceberg:stubcat.legacy")
-    pdf = seenset.empty_filters_pdf(4, "bloom", 10, capacity=256)
-    ck.write_pdf(pdf, "filters", 0, arrow_schema=seenset.filter_arrow_schema())
+    ck.write(spark.range(4).select(F.col("id").cast("int").alias("partition_id")), "filters", 1)
     with pytest.raises(ValueError, match=r'stubcat\.legacy\.filters.*partition_by=\["partition_id"\]'):
         ck.state_location()
 
@@ -208,7 +211,7 @@ def test_catalog_backend_takes_storage_gate(spark, monkeypatch):
     assert loc.key == "iceberg:stubcat.zx"
     # every committed round of both state tables is enumerated, with
     # per-partition file lists carrying (path, size) signatures
-    assert set(loc.rounds["filters"]) == {0, 1, 2}
+    assert set(loc.rounds["filters"]) == {1, 2}
     assert set(loc.rounds["processed"]) == {1, 2}
     sig = loc.sig("filters", 2, 0)
     assert sig and all(sz > 0 for _, sz, _ in sig)

@@ -1,6 +1,6 @@
-"""Seen-set tests: reference bloom semantics, cuckoo variant and the
-driver-side empty filter table.  The storage gate is covered by
-test_seenstore.py and the frontier replay tests."""
+"""Seen-set tests: reference bloom semantics and the cuckoo variant.
+The storage gate is covered by test_seenstore.py and the frontier
+replay tests."""
 
 import numpy as np
 
@@ -34,20 +34,3 @@ def test_cuckoo_membership():
     other = rng.randint(-(2**62), 2**62, size=20000).astype(np.int64)
     other = other[~np.isin(other, keys)]
     assert seenset.cuckoo_probe(other, slots, nb, bits).mean() < 0.01
-
-
-def test_empty_filters_pdf_matches_zero_build(spark):
-    from ccspark import seenset
-
-    pdf = seenset.empty_filters_pdf(4, "bloom", 10, capacity=4096)
-    assert len(pdf) == 4
-    assert (pdf["n_keys"] == 0).all()
-    k, m, bits = seenset.bloom_build(__import__("numpy").array([], dtype="int64"), 10)
-    assert (pdf["hash_count"] == seenset.compute_best_k(10)).all()
-    assert all(b == bytes(len(b)) for b in pdf["bits"])
-    # probe over an empty filter says "not seen" for everything
-    import numpy as np
-    row = pdf.iloc[0]
-    assert not seenset.bloom_probe(
-        np.array([1, 2, 3], dtype=np.int64), int(row["hash_count"]), int(row["num_buckets"]), row["bits"]
-    ).any()

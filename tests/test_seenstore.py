@@ -42,13 +42,6 @@ def state(spark, tmp_path):
     """3 rounds of processed identities + bloom filters updated per round."""
     seenstore.clear_caches()
     ckpt = Checkpoint(str(tmp_path))
-    ckpt.write_pdf(
-        seenset.empty_filters_pdf(P, "bloom", 10, capacity=CAP),
-        "filters",
-        0,
-        arrow_schema=seenset.filter_arrow_schema(),
-        partition_col="partition_id",
-    )
     rounds = {1: range(0, 50), 2: range(50, 90), 3: range(90, 120)}
     for r, ids in rounds.items():
         _write_round(spark, ckpt, _identity_pdf(ids), r)
@@ -164,13 +157,6 @@ def test_seen_cache_lru_eviction_under_budget(spark, state, monkeypatch):
 def test_cuckoo_storage_update_and_gate(spark, tmp_path):
     seenstore.clear_caches()
     ckpt = Checkpoint(str(tmp_path))
-    ckpt.write_pdf(
-        seenset.empty_filters_pdf(P, "cuckoo", 10),
-        "filters",
-        0,
-        arrow_schema=seenset.filter_arrow_schema(),
-        partition_col="partition_id",
-    )
     _write_round(spark, ckpt, _identity_pdf(range(0, 64)), 1)
     filt = seenset.update_filters_storage(spark, str(tmp_path), 1, P, kind="cuckoo")
     ckpt.write(filt, "filters", 1, partition_by=["partition_id"])
@@ -231,7 +217,7 @@ def test_manifest_location_matches_str_root(spark, state):
                     if sig:
                         files[(table, r, pid)] = tuple((to_entry(p), sz, mt) for p, sz, mt in sig)
         loc = seenstore.ManifestLocation("manifest:" + state, files)
-        assert loc.rounds == {"processed": (1, 2, 3), "filters": (0, 1, 2, 3)}
+        assert loc.rounds == {"processed": (1, 2, 3), "filters": (1, 2, 3)}
         seenstore.clear_caches()
         got = seenset.gate_new_storage(cand, loc, 3, 3, P).toPandas()
         assert len(got) == 40
