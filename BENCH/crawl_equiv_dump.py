@@ -10,9 +10,9 @@ seed 42) on a local[4] session in the checkout it is started from,
 calling ``run_round`` per round.  Writes the per-round metrics (with
 ``phase_s`` kept apart, since it is a wall time), the lineage rows,
 sha256 digests of the scheduled trace, the seen set, every committed
-frontier and every round k >= 1 filter table (bits included), and the
-last manifest without its timestamp.  Two dumps
-from two checkouts compare with ``==`` on every key but ``phase_s``.
+frontier and every committed processed round, and the last manifest
+without its timestamp.  Two dumps from two checkouts compare with
+``==`` on every key but ``phase_s``.
 """
 
 import glob
@@ -68,13 +68,13 @@ def main(out_path: str) -> None:
         for k in range(ROUNDS + 1)
         if glob.glob(f"{ckpt}/frontier/round={k}/**/*.parquet", recursive=True)
     }
-    # round k >= 1 filter bytes, per partition (round 0 is compared apart:
-    # a checkout may or may not write one)
-    filters = {
+    processed = {
         k: _sha(sorted(
-            (r["partition_id"], r["kind"], r["hash_count"], r["num_buckets"], r["n_keys"],
-             hashlib.sha256(r["bits"]).hexdigest())
-            for r in fr.ckpt.read(spark, "filters", k).collect()
+            (tuple(x) for x in fr.ckpt.read(spark, "processed", k)
+             .select("round", "host", "host_rank", "canonical_url", "domain_hash", "url_hash", "priority",
+                     "partition_id")
+             .collect()),
+            key=repr,  # host_rank is NULL on robots-retired rows
         ))
         for k in range(1, ROUNDS + 1)
     }
@@ -89,7 +89,7 @@ def main(out_path: str) -> None:
         "seen_n": len(seen),
         "seen_sha": _sha(seen),
         "frontier_sha": frontiers,
-        "filters_sha": filters,
+        "processed_sha": processed,
         "manifest": manifest,
     }
     with open(out_path, "w") as fh:

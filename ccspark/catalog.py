@@ -99,8 +99,8 @@ def make_checkpoint(spark: SparkSession, location: str):
 class IcebergCheckpoint:
     """Checkpoint interface over an Iceberg catalog namespace."""
 
-    # tables the storage-partitioned gate reads worker-side (seenstore)
-    STATE_TABLES = ("processed", "filters")
+    # the table the storage-partitioned gate reads worker-side (seenstore)
+    STATE_TABLES = ("processed",)
 
     def __init__(self, spark: SparkSession, catalog: str, namespace: str):
         self.spark = spark
@@ -198,7 +198,7 @@ class IcebergCheckpoint:
     # -- storage-partitioned gate support ------------------------------------
 
     def state_location(self):
-        """Enumerate the state tables' live data files from catalog
+        """Enumerate the state table's live data files from catalog
         metadata (the Iceberg ``.files`` metadata table) into a
         seenstore.ManifestLocation, so the frontier's zero-exchange
         storage gate works on the catalog backend exactly as on a
@@ -214,6 +214,7 @@ class IcebergCheckpoint:
         ``key`` lets seenstore's per-worker incremental seen cache keep
         accumulating across rounds.
 
+        One ``.files`` metadata query per call (the processed table's).
         Raises ValueError when an existing state table is not
         partitioned by partition_id: the storage gate has no layout to
         prune on, and there is no other gate."""

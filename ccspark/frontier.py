@@ -11,16 +11,17 @@ Round shape (north_rule; SURVEY.md §7 step 7):
     scheduled ──deterministic fetch simulation──▶ discovered links
     seen     = processed identities across rounds (derived, not stored)
     frontier' = gate_new_storage(dedup(frontier ∪ links)) against the
-               round's filters + seen set (bloom/cuckoo + exact confirm),
+               seen set through this round (exact sorted-array lookup),
                max-priority merge, optional per-host cap
     lineage  += per-partition row (emitted / budget), read off the
                processed files' Parquet footers and written with pyarrow
     checkpoint all tables, commit manifest atomically
 
 Gate once: the links gate is the only gate.  It writes frontier/round=k
-against filters/round=k and the seen set through k, and round k+1
-reads that table as its candidates without re-gating them — they are
-novel by construction (ARCHITECTURE §1 lists the write paths).
+against the seen set through k — a pure function of identity and the
+seen set — and round k+1 reads that table as its candidates without
+re-gating them: they are novel by construction (ARCHITECTURE §1 lists
+the write paths).
 
 Determinism: every ordering is total — (priority DESC, domain_hash,
 url_hash) — so the scheduled trace is invariant to partition count and
@@ -35,20 +36,20 @@ mapInPandas over scheduled rows — no driver participation.  Priorities
 decay per hop (0.8) so the frontier drains.
 
 Fixed cost: each Spark job is a driver round trip, so a round runs
-four, in order on the calling thread (ARCHITECTURE §1 names them;
+three, in order on the calling thread (ARCHITECTURE §1 names them;
 test_round_job_budget pins the count).  Its plans run with AQE off
 (``adaptive_off``: AQE would submit every shuffle and broadcast stage
 as a job of its own and buys these plans nothing), and every checkpoint read passes its table's fixed schema
 (no schema-inference job).
 
 STORAGE-PARTITIONED STATE (the 100×-scale design): every state table
-(frontier, processed, filters) is written Hive-partitioned by
+(frontier, processed) is written Hive-partitioned by
 ``partition_id = pmod(domain_hash, P)`` — one file per partition per
-round — and the links gate and the per-round filter update read their
-state WORKER-SIDE with partition pruning (seenstore.py).  The crawl
-history and the filter blobs therefore never enter a Spark Exchange:
-per round the only shuffles are delta-sized (politeness windows, the
-next-frontier identity dedup, the optional per-host cap).  The r3
+round — and the links gate reads the seen set WORKER-SIDE with
+partition pruning (seenstore.py).  The crawl history therefore never
+enters a Spark Exchange: per round the only shuffles are delta-sized
+(politeness windows, the next-frontier identity dedup, the optional
+per-host cap).  The r3
 design re-shuffled the full seen set into the gate every round (cogroup
 state side + the links anti-join) — at 10^10 URLs that one
 history-sized shuffle per round dominates everything; here it is gone,
@@ -262,7 +263,6 @@ class FrontierConfig:
         default_budget: int = politeness.DEFAULT_BUDGET,
         round_duration_ms: int = politeness.DEFAULT_ROUND_MS,
         n_salts: int = 16,
-        filter_kind: str = "bloom",
         max_frontier_per_host: int | None = None,
         revisit_after: int | None = None,
         revisit_decay: float = 0.5,
@@ -275,8 +275,9 @@ class FrontierConfig:
         self.default_budget = default_budget
         self.round_duration_ms = round_duration_ms
         self.n_salts = n_salts
-        self.filter_kind = filter_kind
-        # bloom bits per key: k = 7 hash functions, ~0.8% false positives
+        # bloom bits per key (k = 7 hash functions, ~0.8% false
+        # positives): the round builds no filter (its links gate is
+        # exact); crawlbench's traced ledger sizes its bloom build by it
         self.buckets_per_element = 10
         # per-host frontier cap: a hot host's queue is priority-evicted
         # down to this size each round (None = unbounded); evicted URLs
@@ -285,7 +286,8 @@ class FrontierConfig:
         # robots rules ride a broadcast join while the table is small;
         # at web scale (10^8+ hosts) the rules won't fit an executor —
         # auto-switch to the shuffle join (the gate keys on host, so the
-        # politeness windows reuse the same clustering)
+        # politeness windows reuse the same clustering); the processed
+        # write and crawlbench's politeness layer read it
         self.broadcast_robots = self.n_hosts <= 2_000_000
         # revisit scheduling (recrawl): URLs scheduled in round r re-enter
         # the candidate stream at round r + revisit_after with decayed
@@ -296,8 +298,6 @@ class FrontierConfig:
         # round is re-offered exactly once).  None = no recrawl.
         self.revisit_after = revisit_after
         self.revisit_decay = revisit_decay
-        # fixed bloom capacity → per-round delta build + bitwise-OR merge
-        self.capacity_per_partition = max(4 * universe_n // num_partitions, 1024)
 
 
 def expand_links_pdf(url_hashes: np.ndarray, cfg: FrontierConfig) -> pd.DataFrame:
@@ -428,10 +428,8 @@ class CrawlFrontier:
         (``adaptive_off``, so the dedup's shuffle stage is not a job of
         its own), with the row count read off an Observation instead of
         a second (full-recompute) count job.  Round 0 writes the frontier
-        only: round 1's filters update starts every partition from the
-        empty bitset (``update_filters_storage`` finds no round-0 blob),
-        and the seen set starts absent (read_all_rounds returns None for
-        round 0)."""
+        only: the seen set starts absent (read_all_rounds returns None
+        for round 0)."""
         obs = Observation("bootstrap_n")
         frontier = self._identify(seeds, 0).observe(obs, F.count(F.lit(1)).alias("n"))
         with adaptive_off(self.spark):
@@ -442,16 +440,16 @@ class CrawlFrontier:
         """Execute one crawl round (round_no = last committed round + 1);
         returns metrics.
 
-        The round is seven phases, called in this order on the calling
+        The round is six phases, called in this order on the calling
         thread (ARCHITECTURE §1): ``_candidates`` → ``write_processed`` →
-        ``_update_filters`` → ``_expand_dedup`` → ``_write_frontier`` →
-        ``_write_lineage`` → ``_commit``.
+        ``_expand_dedup`` → ``_write_frontier`` → ``_write_lineage`` →
+        ``_commit``.
 
-        A round runs four Spark jobs, one after the other, revisit rounds
+        A round runs three Spark jobs, one after the other, revisit rounds
         too (ARCHITECTURE §1): the robots broadcast, the processed write
         (scheduled ∪ robots-retired, one table so the seen delta needs no
-        write of its own), the filters write and the frontier write
-        (expansion → dedup → links gate → optional cap, one plan).  The
+        write of its own) and the frontier write (expansion → dedup →
+        exact links gate → optional cap, one plan).  The
         lineage rows come from the processed files' Parquet footers and
         land via a driver-side pyarrow write.  The round's plans run with
         AQE off (``adaptive_off``) and its checkpoint reads pass fixed
@@ -461,9 +459,11 @@ class CrawlFrontier:
         exit path the round releases the frames it cached and restores
         the session's AQE setting.
 
-        ``phase_s`` in the metrics holds the driver-side wall of four
+        ``phase_s`` in the metrics holds the driver-side wall of three
         consecutive stretches: processed_write (from the round's start),
-        filters_write, frontier_write and lineage_write."""
+        frontier_write and lineage_write.  The round takes the state
+        location twice: once for ``_candidates``' layout check, and once
+        after the processed write for the links gate and the lineage."""
         t = time.perf_counter()
         cfg, ckpt = self.cfg, self.ckpt
         phase_s: dict[str, float] = {}
@@ -486,10 +486,8 @@ class CrawlFrontier:
             release.callback(processed.unpersist)
             t = _lap(phase_s, "processed_write", t)
             loc = ckpt.state_location()  # re-read: covers the just-written processed delta
-            self._update_filters(loc, round_no)
-            t = _lap(phase_s, "filters_write", t)
             merged = self._expand_dedup(frontier, processed.filter(F.col("host_rank").isNotNull()), round_no)
-            n_frontier = self._write_frontier(merged, round_no)
+            n_frontier = self._write_frontier(merged, loc, round_no)
             t = _lap(phase_s, "frontier_write", t)
             self._write_lineage(loc, round_no)
             _lap(phase_s, "lineage_write", t)
@@ -510,10 +508,10 @@ class CrawlFrontier:
         Returns ``(n_candidates, frontier, candidates)`` with the frontier
         cached (it feeds both the processed write and the next-frontier
         dedup).  A drained round (no frontier, nothing to revisit) runs
-        the same phases over empty frames and commits all four tables.
+        the same phases over empty frames and commits all three tables.
         The frontier is not re-gated: round k-1's links gate wrote it
-        against filters/round=k-1 and the seen set through k-1, so every
-        row is novel (the gate-once invariant, ARCHITECTURE §1).
+        against the seen set through k-1, so every row is novel (the
+        gate-once invariant, ARCHITECTURE §1).
         Its size comes from the last manifest, which is why round k must
         follow committed round k-1.  Both reads pass their table's fixed
         schema: no schema-inference job, and a drained frontier (a round
@@ -530,7 +528,7 @@ class CrawlFrontier:
             expected = "a bootstrap (round 0)" if last is None else f"round {last + 1}"
             raise ValueError(
                 f"round {round_no} cannot follow {after}; expected {expected}: a round "
-                "reads the frontier, filters and frontier_size of the round before it"
+                "reads the frontier and frontier_size of the round before it"
             )
         n_candidates = int(manifest["frontier_size"])
 
@@ -565,28 +563,6 @@ class CrawlFrontier:
         # the cache up when it runs)
         return n_candidates, frontier.cache(), candidates
 
-    def _update_filters(self, loc, round_no: int) -> None:
-        """Filters-update phase: writes filters/round=k = filters/round=k-1
-        plus this round's processed delta, before the frontier write so
-        the links gate probes the just-augmented blobs (one seen-scan per
-        round).  ``loc`` is a state location taken after the processed
-        write.  The driving frame is range(P) partition ids; each task
-        reads its own previous blob and this round's delta file straight
-        from their partition directories and ORs (bloom) / rebuilds
-        (cuckoo) — the filter state and the crawl history never enter an
-        Exchange."""
-        cfg = self.cfg
-        filters = seenset.update_filters_storage(
-            self.spark,
-            loc,
-            round_no,
-            cfg.num_partitions,
-            kind=cfg.filter_kind,
-            buckets_per_element=cfg.buckets_per_element,
-            capacity=cfg.capacity_per_partition,
-        )
-        self.ckpt.write(filters, "filters", round_no, partition_by=["partition_id"])
-
     def _expand_dedup(self, frontier: DataFrame, scheduled: DataFrame, round_no: int) -> DataFrame:
         """Link expansion + dedup phase: the scheduled rows' out-links —
         from the pluggable real pipeline (``expand_fn`` → raw urls → the
@@ -613,24 +589,24 @@ class CrawlFrontier:
         )
         return dedup_by_identity(frontier.unionByName(links), cfg.num_partitions)
 
-    def _write_frontier(self, merged: DataFrame, round_no: int) -> int:
+    def _write_frontier(self, merged: DataFrame, loc, round_no: int) -> int:
         """Links gate + frontier write phase; returns the frontier size.
         One job: the expansion and dedup plan ``merged`` runs under the
         gate, the optional per-host cap and the write.
 
         Dedup first, gate after: the identity dedup's one Exchange (by
         partition_id) lands rows clustered the way the storage gate wants
-        them, so the deduped frontier ∪ links is gated against the round-k
-        filters with no extra shuffle.  Those filters contain the
-        processed delta, so the gate itself retires just-processed
-        frontier rows.  Equivalence with gating links and anti-joining
-        the delta before the dedup: an identity is either seen through
-        round k (all its rows dropped in both shapes) or unseen (all
-        kept), so the rows feeding the max-priority merge are unchanged."""
+        them, so the deduped frontier ∪ links is gated against the seen
+        set through round k with no extra shuffle.  ``loc`` is the state
+        location taken after the processed write, so that seen set holds
+        the round's processed delta and the gate itself retires
+        just-processed frontier rows.  Equivalence with gating links and
+        anti-joining the delta before the dedup: an identity is either
+        seen through round k (all its rows dropped in both shapes) or
+        unseen (all kept), so the rows feeding the max-priority merge are
+        unchanged."""
         cfg = self.cfg
-        gated = seenset.gate_new_storage(
-            merged, self.ckpt.state_location(), round_no, round_no, cfg.num_partitions
-        )  # re-read location: probes the just-written round-k blobs
+        gated = seenset.gate_new_storage(merged, loc, round_no, cfg.num_partitions)
         if cfg.max_frontier_per_host is not None:
             # priority-evict hot hosts' queues (domain_hash is the host
             # fingerprint — no string work); deterministic total order,
@@ -646,7 +622,7 @@ class CrawlFrontier:
     def _write_lineage(self, loc, round_no: int) -> None:
         """Lineage phase: the per-partition commit record, read from the
         footers of processed/round=k through ``loc`` (the state location
-        the filters phase used); its ~P rows are written driver-side with
+        the links gate used); its ~P rows are written driver-side with
         pyarrow (no job)."""
         schema = _lineage_arrow_schema()
         pdf = pd.DataFrame(
@@ -667,10 +643,10 @@ class CrawlFrontier:
         self.ckpt.write_pdf(pdf, "lineage", round_no, arrow_schema=schema)
 
     def _commit(self, round_no: int, n_scheduled: int, n_frontier: int) -> None:
-        """Commit phase: publish the round's four tables atomically."""
+        """Commit phase: publish the round's three tables atomically."""
         self.ckpt.commit_round(
             round_no,
-            {t: f"round={round_no}" for t in ("frontier", "filters", "processed", "lineage")},
+            {t: f"round={round_no}" for t in ("frontier", "processed", "lineage")},
             extra={"scheduled": n_scheduled, "frontier_size": n_frontier},
         )
 

@@ -7,7 +7,7 @@ from the round's own pieces:
              → identified-candidates parquet (frontier-shaped rows)
     stored   → frontier.dedup_by_identity (one Exchange, by partition_id)
              → seenset.gate_new_storage against a pre-seeded crawl state
-               (bloom pre-filter + exact confirm, worker-side)
+               (exact seen-array lookup, worker-side)
              → politeness.process_round (robots gate + crawl-delay
                budget + salted per-host priority rank)
              → scheduled parquet
@@ -16,7 +16,7 @@ The schedule plan runs under ``frontier.adaptive_off``, as a round's
 plans do, so it is the same plan shape the loop runs: the loop's links
 gate is dedup → gate, its processed phase is process_round.  What the
 unit leaves out is the loop's per-round bookkeeping (link expansion,
-filter update, lineage, manifest), so its wall time is dominated by the
+lineage, manifest), so its wall time is dominated by the
 per-URL compute at any scale; the scaling criterion (N → 4N executors
 at ≥0.8 efficiency) is evidenced on it.
 """
@@ -79,9 +79,8 @@ def identified_candidates(spark: SparkSession, universe_n: int, n_hosts: int | N
 
 def _seed_state(spark: SparkSession, state: str, universe_n: int, n_hosts: int, seed: int, num_partitions: int) -> None:
     """A crawl state at ``state`` whose round 1 disposed of every 10th id
-    of the universe: their identities as ``processed/round=1`` and the
-    bloom filters over them as ``filters/round=1``, written by the
-    round's own writers."""
+    of the universe: their identities as ``processed/round=1``, laid out
+    as the round's processed write lays them out."""
     seen = (
         _identified(spark.range(0, universe_n, 10), n_hosts, seed)
         .filter("url_valid")
@@ -89,12 +88,7 @@ def _seed_state(spark: SparkSession, state: str, universe_n: int, n_hosts: int, 
         .withColumn("partition_id", _pid_col(num_partitions))
         .repartition(num_partitions, "partition_id")
     )
-    ckpt = Checkpoint(state)
-    ckpt.write(seen, "processed", 1, partition_by=["partition_id"])
-    filters = seenset.update_filters_storage(
-        spark, state, 1, num_partitions, capacity=max(universe_n // num_partitions, 1024)
-    )
-    ckpt.write(filters, "filters", 1, partition_by=["partition_id"])
+    Checkpoint(state).write(seen, "processed", 1, partition_by=["partition_id"])
 
 
 def run_schedule_bench(
@@ -129,7 +123,7 @@ def run_schedule_bench(
             num_partitions,
         )
         if with_seen_filter:
-            cand = seenset.gate_new_storage(cand, state, 1, 1, num_partitions)
+            cand = seenset.gate_new_storage(cand, state, 1, num_partitions)
         politeness.process_round(
             cand, robots, default_budget=50, n_salts=8, layout_partitions=num_partitions
         ).filter(F.col("host_rank").isNotNull()).select(*_SCHEDULE_COLS).write.mode(

@@ -1,26 +1,27 @@
-"""Partitioned URL-seen set: bloom filter (reference-exact buckets) and
-cuckoo filter variant, built and probed with Arrow UDFs.
+"""Partitioned URL-seen set: an exact storage gate over the crawl's
+seen identities, plus the bloom filter (reference-exact buckets) and
+cuckoo filter kernels.
 
 Design (SURVEY.md §2.3 H4/H5, §4):
 
 * The seen-set key is URLFPV2: exact membership is the composite
-  ``(domain_hash, url_hash)`` (protocol.jr:131-132 ``[key]`` fields);
-  the probabilistic pre-filter hashes ``url_hash`` (the fp64 of the full
-  canonical URL) as the reference's long-key bloom path
+  ``(domain_hash, url_hash)`` (protocol.jr:131-132 ``[key]`` fields).
+* The crawl frontier gates worker-side over storage-partitioned state
+  (``gate_new_storage`` via seenstore, one hash-range partition
+  ``pmod(domain_hash, P)`` at a time): a binary search of every key in
+  its partition's sorted seen arrays (seenstore.seen_arrays +
+  seenstore.contains — the H5 LongOpenHashSet's exact answer).  No
+  Exchange on any state table, and no probabilistic pre-screen: with
+  ~38% of a round's links truly seen, a filter would send nearly every
+  (batch, partition) to the exact arrays anyway.
+* The bloom kernels hash ``url_hash`` (the fp64 of the full canonical
+  URL) as the reference's long-key bloom path
   (BloomFilter.add(long) → Filter.getHashBuckets(long),
-  Filter.java:85-104).
-* One filter per hash-range partition ``pmod(domain_hash, P)``.  The
-  crawl frontier gates and updates filters worker-side over
-  storage-partitioned state (``gate_new_storage`` /
-  ``update_filters_storage`` via seenstore) — no Exchange on any state
-  table.
-* Bloom sizing matches BloomCalculations (computeBestK table :37-41,
-  bitset size ``n*bucketsPerElement+20`` rounded up to a 64-bit word
-  like java.util.BitSet) so false-positive *behavior* equals the
-  reference for the same parameters.
-* The probabilistic filter only pre-screens: the gate's suspects are
-  confirmed exactly against their partition's seen identities
-  (seenstore.seen_arrays + seenstore.contains — the H5 LongOpenHashSet).
+  Filter.java:85-104), sized as BloomCalculations (computeBestK table
+  :37-41, bitset size ``n*bucketsPerElement+20`` rounded up to a 64-bit
+  word like java.util.BitSet), so false-positive *behavior* equals the
+  reference for the same parameters.  They are the reference-exact
+  ports the golden vectors check; no loop builds a filter table.
 
 The cuckoo variant (north_star) keeps the same table shape; 16-bit
 fingerprints, 4-slot buckets, partial-key cuckoo hashing.
@@ -37,12 +38,6 @@ from . import hashing
 
 # BloomCalculations.optKPerBuckets (BloomCalculations.java:37-41)
 _OPT_K = [1, 1, 1, 2, 3, 3, 4, 5, 5, 6, 7, 8, 8, 8, 8, 8]
-
-FILTER_SCHEMA = (
-    "partition_id int, kind string, hash_count int, num_buckets long, "
-    "n_keys long, bits binary"
-)
-
 
 def compute_best_k(buckets_per_element: int) -> int:
     if buckets_per_element >= len(_OPT_K):
@@ -61,26 +56,15 @@ def bitset_size(num_elements: int, buckets_per_element: int) -> int:
 # ---------------------------------------------------------------------------
 
 
-def _bloom_add(words: np.ndarray, keys: np.ndarray, k: int, m: int) -> None:
-    """Set the k bucket bits of every key in the bitset ``words``."""
+def bloom_build(keys: np.ndarray, buckets_per_element: int = 10) -> tuple[int, int, bytes]:
+    """Build one bloom bitset over int64 keys → (k, m, bits), sized for
+    ``len(keys)`` elements (BloomFilter(numElements, bucketsPerElement))."""
+    k = compute_best_k(buckets_per_element)
+    m = bitset_size(max(len(keys), 1), buckets_per_element)
+    words = np.zeros(m // 64, dtype=np.uint64)
     if len(keys):
         idx = hashing.bloom_buckets_long(np.asarray(keys, dtype=np.int64), k, m).ravel()
         np.bitwise_or.at(words, idx >> 6, np.uint64(1) << (idx & 63).astype(np.uint64))
-
-
-def bloom_build(
-    keys: np.ndarray, buckets_per_element: int = 10, capacity: int | None = None
-) -> tuple[int, int, bytes]:
-    """Build one bloom bitset over int64 keys → (k, m, bits).
-
-    ``capacity`` fixes the bitset size to ``bitset_size(capacity, b)``
-    whatever the key count, so filters built over different key sets
-    are bitwise-OR mergeable (the per-round delta update)."""
-    n = capacity if capacity is not None else max(len(keys), 1)
-    k = compute_best_k(buckets_per_element)
-    m = bitset_size(n, buckets_per_element)
-    words = np.zeros(m // 64, dtype=np.uint64)
-    _bloom_add(words, keys, k, m)
     return k, m, words.tobytes()
 
 
@@ -231,32 +215,29 @@ def cuckoo_probe(keys: np.ndarray, slots: int, nb: int, bits: bytes) -> np.ndarr
 def gate_new_storage(
     candidates: DataFrame,
     root,
-    filters_round: int,
     seen_upto: int,
     num_partitions: int,
 ) -> DataFrame:
-    """Shuffle-free novelty gate over STORAGE-partitioned state: probe +
-    exact confirm in one map stage, with zero Exchange anywhere — not
-    on the candidates, not on the filters, not on the seen history.
+    """Shuffle-free exact novelty gate over STORAGE-partitioned state:
+    ``candidates ∖ seen`` through round ``seen_upto`` in one map stage,
+    with zero Exchange anywhere — not on the candidates, not on the
+    seen history.
 
-    Both state tables are written Hive-partitioned by
-    ``pmod(domain_hash, P)`` (frontier.py), so for each batch the
-    worker loads exactly the touched partitions' filter blob
-    (seenstore.filter_blob) and, for each (batch, partition) in which
-    any key is a suspect (the filter says "maybe seen"), that
-    partition's seen identities (seenstore.seen_arrays, an incremental
-    per-worker cache that reads one delta file per round).  The filter
-    rarely spares that load: at 10 bits/key its false-positive rate is
-    about 0.8%, so a (batch, partition) of more than ~500 keys almost
-    always holds a false positive, and keys that really were seen are
-    suspects too (crawlbench measured 38% of a round's links as true
-    suspects).  What the filter does decide is which keys the exact
-    confirm looks up.
+    The processed table is written Hive-partitioned by
+    ``pmod(domain_hash, P)`` (frontier.py), so for each (batch,
+    partition) the worker loads exactly that partition's seen
+    identities (seenstore.seen_arrays, an incremental per-worker cache
+    that reads one delta file per round) and looks every key up with
+    seenstore.contains (a binary search on the sorted url_hash array,
+    then the domain_hash check).  There is no filter pre-screen: a
+    filter pays only while true positives are rare, and crawlbench
+    measured 38% of a round's links as truly seen, so nearly every
+    (batch, partition) would load its seen arrays anyway; up to ~125k
+    seen keys per partition the exact lookup over every key is also
+    faster than probe + confirm (BENCH/exact_gate_micro.json).
     This replaces the r3 cogroup gate, whose state side re-shuffled the
     FULL crawl history every round (the one remaining 100×-scale
-    shuffle).  Semantics are exactly ``candidates ∖ seen``: the
-    probabilistic filter only routes around the exact confirm, and
-    bloom/cuckoo filters here have no false negatives.
+    shuffle).
 
     Efficiency wants candidates physically clustered by partition_id
     (the frontier table is written that way, and the links gate runs
@@ -290,90 +271,9 @@ def gate_new_storage(
         keep = np.ones(n, dtype=bool)
         for pid in np.unique(pids):
             sel = np.flatnonzero(pids == pid)
-            blob = seenstore.filter_blob(root, int(pid), filters_round)
-            if blob is None:
-                continue  # no filter state for this partition: all new
-            kind, k, m, _nk, bits = blob
-            if kind == "bloom":
-                maybe = bloom_probe(keys[sel], k, m, bits)
-            else:
-                maybe = cuckoo_probe(keys[sel], k, m, bits)
-            if not maybe.any():
-                continue
-            sus = sel[maybe]
             u_s, d_s = seenstore.seen_arrays(root, int(pid), seen_upto)
-            if len(u_s) == 0:
-                continue  # filter false positives only (round 1)
-            dup = seenstore.contains(u_s, d_s, keys[sus], dom[sus])
-            keep[sus[dup]] = False
+            keep[sel] = ~seenstore.contains(u_s, d_s, keys[sel], dom[sel])
         return pd.Series(keep, index=dom_s.index)
 
     gate = _is_new.asNondeterministic()
     return candidates.filter(gate(F.col("domain_hash"), F.col("url_hash")))
-
-
-def update_filters_storage(
-    spark,
-    root,
-    round_no: int,
-    num_partitions: int,
-    kind: str = "bloom",
-    buckets_per_element: int = 10,
-    capacity: int | None = None,
-) -> DataFrame:
-    """Per-round filter update with the state kept OUT of the shuffle:
-    the driving frame is just ``range(P)`` partition ids; each task
-    loads its previous blob and this round's seen delta straight from
-    their partition directories (seenstore) and emits the new blob.
-
-    bloom → incremental OR of the delta keys into the previous bitset;
-    cuckoo → rebuild over the partition's full seen set (cuckoo tables
-    are not OR-mergeable), still without any Exchange — the history is
-    read from the same per-worker incremental cache the gate uses.
-
-    The skeleton is a range with EXPLICIT partitioning (one id per task,
-    mapInPandas) rather than a groupBy: a 32-row shuffle looks tiny to
-    AQE, which would coalesce it to ONE post-shuffle partition and run
-    every blob update serially (observed 11 s → 47 s per round on the
-    10^8 endurance run before this fix).
-
-    Raises ValueError for an unknown ``kind`` and for a bloom update
-    without ``capacity`` (the first round builds its empty bitset from
-    it); cuckoo ignores ``capacity``."""
-    if kind not in ("bloom", "cuckoo"):
-        raise ValueError(f"filter kind must be 'bloom' or 'cuckoo', got {kind!r}")
-    if kind == "bloom" and not capacity:
-        raise ValueError(f"a bloom filter update needs a positive capacity, got {capacity!r}")
-    skeleton = spark.range(0, num_partitions, 1, num_partitions).select(
-        F.col("id").cast("int").alias("partition_id")
-    )
-
-    def _update(pid: int) -> pd.DataFrame:
-        from . import seenstore
-
-        if kind == "bloom":
-            prev = seenstore.filter_blob(root, pid, round_no - 1)
-            if prev is None:
-                k, m, bits = bloom_build(np.array([], dtype=np.int64), buckets_per_element, capacity)
-                prev = ("bloom", k, m, 0, bits)
-            _kind, k, m, n_prev, bits = prev
-            words = np.frombuffer(bits, dtype=np.uint64).copy()
-            delta_u, _ = seenstore.round_pairs(root, pid, round_no)
-            keys = np.unique(delta_u)
-            _bloom_add(words, keys, k, m)
-            row = (pid, "bloom", k, m, n_prev + len(keys), words.tobytes())
-        else:
-            u_s, _ = seenstore.seen_arrays(root, pid, round_no)
-            k, m, bits = cuckoo_build(np.unique(u_s))
-            row = (pid, "cuckoo", k, m, len(u_s), bits)
-        return pd.DataFrame(
-            [row],
-            columns=["partition_id", "kind", "hash_count", "num_buckets", "n_keys", "bits"],
-        )
-
-    def _update_iter(batches):
-        for pdf in batches:
-            for pid in pdf["partition_id"]:
-                yield _update(int(pid))
-
-    return skeleton.mapInPandas(_update_iter, schema=FILTER_SCHEMA)

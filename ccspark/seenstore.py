@@ -5,8 +5,8 @@ The frontier writes its state tables Hive-partitioned by
 ``partition_id = pmod(domain_hash, P)`` (one file per partition per
 round, see frontier.py), so the Python worker handling partition ``p``
 reads exactly ``<table>/round=<k>/partition_id=<p>/*.parquet`` — a
-manual storage-partitioned join: the seen-set and the filter blobs are
-NEVER carried through a Spark Exchange.  An incremental per-worker
+manual storage-partitioned join: the seen set is NEVER carried through
+a Spark Exchange.  An incremental per-worker
 cache turns the per-round read volume from O(history) to O(delta):
 each round appends one file per partition, and only that file is read
 and merged into the cached sorted key arrays.
@@ -157,7 +157,9 @@ def _present_rounds(loc, table: str, upto_round: int) -> list[int]:
 
 def round_pairs(loc, pid: int, round_no: int, table: str = "processed") -> tuple[np.ndarray, np.ndarray]:
     """One round's (url_hash, domain_hash) delta for one partition —
-    uncached single-directory read (the filter-update job's delta)."""
+    uncached single-directory read.  No loop calls it; it stays for
+    crawlbench's traced ledger, which times a bloom build over each
+    partition's last delta."""
     return _read_pairs(_sig_of(loc, table, round_no, pid))
 
 
@@ -250,35 +252,30 @@ def contains(url_sorted: np.ndarray, dom_aligned: np.ndarray, q_url: np.ndarray,
     return hit
 
 
-# -- filter-blob cache ---------------------------------------------------------
-
-# (loc_key, table, pid, round) -> (sig, (kind, hash_count, num_buckets, n_keys, bits))
-_BLOB_CACHE: OrderedDict = OrderedDict()
-_BLOB_CACHE_MAX = 256
+# -- filter-blob reads ---------------------------------------------------------
 
 _FILTER_COLS = ["kind", "hash_count", "num_buckets", "n_keys", "bits"]
 
 
 def filter_blob(loc, pid: int, round_no: int, table: str = "filters"):
     """One partition's filter row at one round, read straight from its
-    partition files (partition-pruned; no Spark scan).  Returns
-    (kind, hash_count, num_buckets, n_keys, bits) or None when the
-    partition has no files.
+    partition files (partition-pruned; no Spark scan, no cache).
+    Returns (kind, hash_count, num_buckets, n_keys, bits) or None when
+    the partition has no files.
+
+    No loop writes a filters table (the links gate is exact); this
+    reader stays for crawlbench's traced ledger, which probes the last
+    committed blobs and skips every partition this returns None for.
 
     EVERY listed file is read: a writer that splits a partition across
     files (possible on a real catalog backend) must not silently drop
     part of the filter — a bloom filter missing bits would produce
-    false negatives, breaking the gate's exactness.  Multiple bloom
-    rows of identical geometry are OR-merged (the no-false-negative-
-    safe union); anything else is a layout violation and raises."""
+    false negatives.  Multiple bloom rows of identical geometry are
+    OR-merged (the no-false-negative-safe union); anything else is a
+    layout violation and raises."""
     sig = _sig_of(loc, table, round_no, pid)
     if not sig:
         return None
-    key = (_loc_key(loc), table, pid, round_no)
-    cached = _BLOB_CACHE.get(key)
-    if cached is not None and cached[0] == sig:
-        _BLOB_CACHE.move_to_end(key)
-        return cached[1]
     rows = []
     for path, _, _ in sig:
         t = pq.read_table(path, columns=_FILTER_COLS)
@@ -295,26 +292,20 @@ def filter_blob(loc, pid: int, round_no: int, table: str = "filters"):
     if not rows:
         return None
     if len(rows) == 1:
-        row = rows[0]
-    else:
-        kinds = {r[0] for r in rows}
-        geoms = {(r[1], r[2]) for r in rows}
-        if kinds != {"bloom"} or len(geoms) != 1:
-            raise AssertionError(
-                f"filter partition {pid} round {round_no}: {len(rows)} rows "
-                f"(kinds={kinds}, geometries={geoms}) — unmergeable filter layout"
-            )
-        acc = np.zeros(rows[0][2] // 64, dtype=np.uint64)
-        for r in rows:
-            acc |= np.frombuffer(r[4], dtype=np.uint64)
-        row = ("bloom", rows[0][1], rows[0][2], sum(r[3] for r in rows), acc.tobytes())
-    _BLOB_CACHE[key] = (sig, row)
-    while len(_BLOB_CACHE) > _BLOB_CACHE_MAX:
-        _BLOB_CACHE.popitem(last=False)
-    return row
+        return rows[0]
+    kinds = {r[0] for r in rows}
+    geoms = {(r[1], r[2]) for r in rows}
+    if kinds != {"bloom"} or len(geoms) != 1:
+        raise AssertionError(
+            f"filter partition {pid} round {round_no}: {len(rows)} rows "
+            f"(kinds={kinds}, geometries={geoms}) — unmergeable filter layout"
+        )
+    acc = np.zeros(rows[0][2] // 64, dtype=np.uint64)
+    for r in rows:
+        acc |= np.frombuffer(r[4], dtype=np.uint64)
+    return ("bloom", rows[0][1], rows[0][2], sum(r[3] for r in rows), acc.tobytes())
 
 
 def clear_caches() -> None:
     """Test hook: forget all worker-side state."""
     _SEEN_CACHE.clear()
-    _BLOB_CACHE.clear()

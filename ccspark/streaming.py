@@ -8,8 +8,8 @@ made idempotent exactly like the batch seen-set: ``dropDuplicates`` on
 the URLFPV2 composite key under a watermark, mirroring H4/H5.  The
 streaming frontier makes the batch loop's seen-set decision with the
 batch loop's gate: every micro-batch passes ``seenset.gate_new_storage``
-(bloom pre-screen + exact confirm) against the stream's own processed
-and filters tables; there is no other gate.
+(an exact lookup in the sorted seen arrays) against the stream's own
+processed table; there is no other gate.
 """
 
 from __future__ import annotations
@@ -158,15 +158,6 @@ def streaming_frontier(
     )
 
 
-# Bloom capacity (keys per partition) of the stream's first filter
-# blobs; later batches OR into the blob they inherit, which carries its
-# own (k, m), so this fixes the geometry for the stream's life.  It only
-# sets the false-positive rate, i.e. how many candidates reach the exact
-# confirm: the gate stays exact at any fill.  2^16 keys at 10 bits per
-# key is an 80 KiB blob per partition.
-STREAM_BLOOM_CAPACITY = 1 << 16
-
-
 def frontier_process_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -177,17 +168,17 @@ def frontier_process_batch(
 ) -> None:
     """One micro-batch of the streaming frontier, from the batch round's
     pieces: identify (∪ the last committed carry-over) →
-    ``dedup_by_identity`` → ``gate_new_storage`` against the last
-    committed filters and processed rounds → ``write_processed`` (the
-    batch round's processed-write phase; the seen delta) → filters
-    update → carry-over write (allowed-but-over-budget rows re-enter the
-    next trigger, as the batch loop's leftovers stay in its frontier) →
-    one manifest commit.
+    ``dedup_by_identity`` → ``gate_new_storage`` against the committed
+    processed rounds → ``write_processed`` (the batch round's
+    processed-write phase; the seen delta) → carry-over write
+    (allowed-but-over-budget rows re-enter the next trigger, as the
+    batch loop's leftovers stay in its frontier) → one manifest commit.
 
     Exactly-once: a committed batch is skipped; a retried batch reads
     only committed state and overwrites its own partial rounds with
-    identical output.  Batch ids run 0, 1, 2, ... (the filter update ORs
-    into the previous batch's blobs); any other id raises ValueError.
+    identical output.  Batch ids run 0, 1, 2, ... (a batch reads the
+    carry-over and the seen set of the batch before it); any other id
+    raises ValueError.
     The partition count P is the default parallelism at batch 0, kept in
     the manifest for the life of the stream.
 
@@ -209,7 +200,7 @@ def frontier_process_batch(
         prev = "an empty checkpoint" if last is None else f"committed batch {last}"
         raise ValueError(
             f"micro-batch {batch_id} cannot follow {prev} in {out_dir}; expected "
-            f"batch {expected}: the filter update ORs into the previous batch's blobs"
+            f"batch {expected}: a batch reads the carry-over and seen set of the batch before it"
         )
     P = spark.sparkContext.defaultParallelism if last is None else int(manifest["num_partitions"])
 
@@ -228,7 +219,7 @@ def frontier_process_batch(
         # rows partition-clustered, and the gate reads committed state only
         novel = dedup_by_identity(ident, P)
         if last is not None:
-            novel = seenset.gate_new_storage(novel, ckpt.state_location(), last, last, P)
+            novel = seenset.gate_new_storage(novel, ckpt.state_location(), last, P)
         novel = novel.cache()
         release.callback(novel.unpersist)
 
@@ -236,16 +227,12 @@ def frontier_process_batch(
             ckpt, novel, robots, batch_id, P, default_budget=default_budget, n_salts=n_salts
         )
         release.callback(processed.unpersist)
-        filters = seenset.update_filters_storage(
-            spark, ckpt.state_location(), batch_id, P, capacity=STREAM_BLOOM_CAPACITY
-        )  # re-read location: covers the just-written processed delta
-        ckpt.write(filters, "filters", batch_id, partition_by=["partition_id"])
         leftover = novel.join(
             processed.select("domain_hash", "url_hash"), ["domain_hash", "url_hash"], "left_anti"
         ).select(*FRONTIER_COLS)
         ckpt.write(leftover, "carryover", batch_id)
         ckpt.commit_round(
             batch_id,
-            {t: f"round={batch_id}" for t in ("processed", "filters", "carryover")},
+            {t: f"round={batch_id}" for t in ("processed", "carryover")},
             extra={"scheduled": n_sched, "num_partitions": P},
         )

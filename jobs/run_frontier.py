@@ -38,7 +38,6 @@ def main() -> int:
     ap.add_argument("--round-ms", type=int, default=60_000)
     ap.add_argument("--links", type=int, default=3, help="links discovered per fetch")
     ap.add_argument("--salts", type=int, default=16)
-    ap.add_argument("--filter", choices=["bloom", "cuckoo"], default="bloom")
     ap.add_argument("--max-per-host", type=int, default=None,
                     help="frontier cap per host (priority eviction)")
     ap.add_argument("--revisit-after", type=int, default=None,
@@ -93,7 +92,6 @@ def main() -> int:
         default_budget=args.budget,
         round_duration_ms=args.round_ms,
         n_salts=args.salts,
-        filter_kind=args.filter,
         max_frontier_per_host=args.max_per_host,
         revisit_after=args.revisit_after,
         revisit_decay=args.revisit_decay,

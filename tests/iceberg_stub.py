@@ -20,7 +20,8 @@ IcebergCheckpoint with the stub routing
   state_location() enumerates for the zero-exchange storage gate.
 
 Tables are stored as pyarrow Tables (exact physical types — the int32
-vs long parity the filters table depends on survives the round-trip)
+vs long parity of the partition_id and round columns survives the
+round-trip)
 AND as real parquet data files under a warehouse directory, split by
 the table's partition spec like Iceberg writes them — one immutable
 uniquely-named file per partition value per commit, dropped from the

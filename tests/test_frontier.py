@@ -262,7 +262,6 @@ def test_frontier_against_iceberg_catalog(tmp_path):
 _PHASES = (
     "_candidates",
     "write_processed",
-    "_update_filters",
     "_expand_dedup",
     "_write_frontier",
     "_write_lineage",
@@ -290,18 +289,18 @@ def _fail_next(monkeypatch, phase) -> list:
     return failed
 
 
-def _fail_next_filters_write(monkeypatch, fr) -> list:
-    """Make the next filters write raise inside the write itself; returns
-    the threads it failed on."""
+def _fail_next_frontier_write(monkeypatch, fr) -> list:
+    """Make the next frontier write raise inside the write itself (after
+    the round's processed write); returns the threads it failed on."""
     import threading
 
     real_write = fr.ckpt.write
     failed_on = []
 
     def _write(df, name, round_no, partition_by=None):
-        if name == "filters" and not failed_on:
+        if name == "frontier" and not failed_on:
             failed_on.append(threading.current_thread())
-            raise RuntimeError("injected filters_write failure")
+            raise RuntimeError("injected frontier_write failure")
         return real_write(df, name, round_no, partition_by)
 
     monkeypatch.setattr(fr.ckpt, "write", _write)
@@ -508,33 +507,6 @@ def test_frontier_per_host_cap(spark, tmp_path):
     assert ta == tb and len(ta) > 0
 
 
-def test_cuckoo_filter_kind_trace_equals_bloom(spark, tmp_path, crawl):
-    """filter_kind='cuckoo' (per-round rebuild + the FUSED cogroup
-    novelty gate, since no broadcast_bytes hint exists for cuckoo) must
-    produce the identical schedule trace and seen set as the bloom run
-    — both are pre-filters with exact confirmation."""
-    ckpt_k = str(tmp_path / "ckpt_cuckoo")
-    cfg = FrontierConfig(
-        num_partitions=8,
-        universe_n=UNIVERSE,
-        n_hosts=N_HOSTS,
-        seed=SEED,
-        links_per_fetch=LINKS,
-        default_budget=BUDGET,
-        round_duration_ms=ROUND_MS,
-        n_salts=4,
-        filter_kind="cuckoo",
-    )
-    fr = CrawlFrontier(spark, ckpt_k, cfg)
-    seeds = synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED)
-    fr.run(seeds, ROUNDS)
-    trace_k, seen_k = _spark_trace(spark, ckpt_k, ROUNDS)
-    ckpt_a, _ = crawl
-    trace_a, seen_a = _spark_trace(spark, ckpt_a, ROUNDS)
-    assert trace_k == trace_a
-    assert seen_k == seen_a
-
-
 def test_frontier_with_real_link_extraction(spark, tmp_path):
     """expand_fn plugs a REAL render→extract→resolve pipeline into the
     crawl loop: each scheduled URL 'fetches' a synthesized HTML page
@@ -592,20 +564,19 @@ _EMPTY_ROBOTS = (
 # name → (FrontierConfig overrides, rounds, run with an empty robots table)
 _GATE_ONCE_CASES = {
     "bootstrap": ({}, 0, False),
-    "bloom": ({}, ROUNDS, False),
-    "cuckoo": ({"filter_kind": "cuckoo"}, ROUNDS, False),
+    "bloom": ({}, ROUNDS, False),  # the default config
     "per_host_cap": ({"max_frontier_per_host": 5}, ROUNDS, False),
     "revisit": ({"revisit_after": 2}, 4, False),
     # links_per_fetch=0 drains after round 1: rounds 2 and 4 are drained
-    # (the four phases over empty frames), rounds 3 and 5 recrawl-only
+    # (the round phases over empty frames), rounds 3 and 5 recrawl-only
     "drained_recrawl": (
         {"revisit_after": 2, "links_per_fetch": 0, "default_budget": 500}, 5, True
     ),
 }
 # fault-injection resume matrix: round 2 fails at each phase boundary, or
-# inside the filters write; the crawl then resumes
+# inside the frontier write; the crawl then resumes
 _FAIL_CASES = {"fail_at_" + p.lstrip("_"): p for p in _PHASES}
-_FAIL_CASES["fail_in_filters_write"] = "filters_write"
+_FAIL_CASES["fail_in_frontier_write"] = "frontier_write"
 _GATE_ONCE_CASES.update({case: ({}, ROUNDS, False) for case in _FAIL_CASES})
 
 
@@ -613,8 +584,7 @@ _GATE_ONCE_CASES.update({case: ({}, ROUNDS, False) for case in _FAIL_CASES})
 @pytest.mark.parametrize("case", sorted(_GATE_ONCE_CASES))
 def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, spark_state, case, backend):
     """The gate-once invariant: every committed frontier/round=k already
-    excludes everything filters/round=k and the seen set through k
-    know, so re-gating it (what a round-start novelty gate would do at
+    excludes the seen set through k, so re-gating it (what a round-start novelty gate would do at
     round k+1) keeps every row.  Holds for the three ways a frontier
     table is written: bootstrap, the links gate and the optional
     per-host cap after it, which only evicts; a drained round writes
@@ -650,14 +620,14 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, sp
         phase = _FAIL_CASES[case]
         fr.run(seeds, 1, on_round=on_round)
         state, threads = spark_state(), set(threading.enumerate())
-        if phase == "filters_write":
-            failed = _fail_next_filters_write(monkeypatch, fr)
+        if phase == "frontier_write":
+            failed = _fail_next_frontier_write(monkeypatch, fr)
         else:
             failed = _fail_next(monkeypatch, phase)
         with pytest.raises(RuntimeError, match=f"injected {phase} failure"):
             fr.run(None, rounds - 1, on_round=on_round)
         assert failed
-        if phase == "filters_write":
+        if phase == "frontier_write":
             assert failed == [threading.current_thread()]  # raised on the calling thread
         assert fr.ckpt.last_committed_round() == 1
         assert set(threading.enumerate()) == threads
@@ -675,7 +645,7 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, sp
         frame = fr.ckpt.read(spark, "frontier", k)
         n = frame.count()
         assert n > 0
-        kept = seenset.gate_new_storage(frame, loc, k, k, cfg.num_partitions).count()
+        kept = seenset.gate_new_storage(frame, loc, k, cfg.num_partitions).count()
         assert kept == n, f"round {k}: re-gating dropped {n - kept} of {n} frontier rows"
 
     exp_trace, exp_seen = replay(
@@ -706,7 +676,7 @@ def test_one_gate_call_per_round(spark, tmp_path, monkeypatch):
     calls = []
 
     def _counting_gate(*args, **kwargs):
-        calls.append(args[2:4])  # (filters_round, seen_upto)
+        calls.append(args[2])  # seen_upto
         return real_gate(*args, **kwargs)
 
     monkeypatch.setattr(seenset, "gate_new_storage", _counting_gate)
@@ -718,15 +688,15 @@ def test_one_gate_call_per_round(spark, tmp_path, monkeypatch):
         on_round=lambda m: per_round.append(list(calls)),
     )
     assert all(m["candidates"] > 0 for m in metrics)
-    assert per_round == [[(1, 1)], [(1, 1), (2, 2)]]
+    assert per_round == [[1], [1, 2]]
     assert all("novel" not in m for m in metrics)
 
 
 def test_round_job_budget(spark, tmp_path, last_job_id, spark_state):
     """A steady round (2) and a revisit round (4, revisit_after=3) each
-    run four Spark jobs on the parquet backend, read from the status
-    store: the robots broadcast, the processed write, the filters write
-    and the frontier write (ARCHITECTURE §1).  The lineage and the
+    run three Spark jobs on the parquet backend, read from the status
+    store: the robots broadcast, the processed write and the frontier
+    write (ARCHITECTURE §1).  The lineage and the
     revisit probe read Parquet footers and launch none.  Every round
     leaves the session's AQE setting and cache as it found them."""
     cfg = _cfg()
@@ -739,13 +709,13 @@ def test_round_job_budget(spark, tmp_path, last_job_id, spark_state):
         fr.run_round(r)
         jobs[r] = last_job_id() - j0
         assert spark_state() == state
-    assert (jobs[2], jobs[4]) == (4, 4), jobs
+    assert (jobs[2], jobs[4]) == (3, 3), jobs
 
 
-def test_drained_round_runs_four_phases(spark, tmp_path, last_job_id, spark_state):
+def test_drained_round_runs_three_phases(spark, tmp_path, last_job_id, spark_state):
     """A drained round (no frontier, no due revisit) takes the one round
-    path: four Spark jobs on the parquet backend, the four phase walls,
-    and a manifest listing all four tables.  links_per_fetch=0 with a
+    path: three Spark jobs on the parquet backend, the three phase walls,
+    and a manifest listing all three tables.  links_per_fetch=0 with a
     budget above the seed count drains the frontier after round 1."""
     cfg = _cfg()
     cfg.links_per_fetch = 0
@@ -755,12 +725,12 @@ def test_drained_round_runs_four_phases(spark, tmp_path, last_job_id, spark_stat
     assert fr.run_round(1)["frontier_size"] == 0
     state, j0 = spark_state(), last_job_id()
     m = fr.run_round(2)
-    assert last_job_id() - j0 == 4
+    assert last_job_id() - j0 == 3
     assert spark_state() == state
     assert (m["candidates"], m["scheduled"], m["frontier_size"]) == (0, 0, 0)
-    assert set(m["phase_s"]) == {"processed_write", "filters_write", "frontier_write", "lineage_write"}
+    assert set(m["phase_s"]) == {"processed_write", "frontier_write", "lineage_write"}
     assert fr.ckpt.read_manifest()["tables"] == {
-        t: "round=2" for t in ("frontier", "filters", "processed", "lineage")
+        t: "round=2" for t in ("frontier", "processed", "lineage")
     }
     assert fr.ckpt.read(spark, "lineage", 2).count() == 0
 

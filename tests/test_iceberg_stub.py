@@ -121,11 +121,11 @@ def test_drained_recrawl_over_stub_catalog(spark, monkeypatch):
     assert sched[2] == sched[0]  # recrawl cycle re-schedules the full set
     assert sched[3] == 0 and sched[4] == sched[0]
     # every committed round k >= 1, the drained ones included, lists all
-    # four tables
+    # three tables
     commits = cat.tables["stubcat.recrawl._manifest"].current.to_pylist()
     assert sorted(c["round"] for c in commits) == [0, 1, 2, 3, 4, 5]
     for c in commits:
-        want = ("frontier", "filters", "processed", "lineage") if c["round"] else ("frontier",)
+        want = ("frontier", "processed", "lineage") if c["round"] else ("frontier",)
         assert json.loads(c["tables"]) == {t: f"round={c['round']}" for t in want}
 
 
@@ -185,8 +185,8 @@ def test_legacy_layout_state_table_raises(spark, monkeypatch):
     with a fix-it error naming the table, not degrade silently."""
     install(monkeypatch, spark, "stubcat")
     ck = make_checkpoint(spark, "iceberg:stubcat.legacy")
-    ck.write(spark.range(4).select(F.col("id").cast("int").alias("partition_id")), "filters", 1)
-    with pytest.raises(ValueError, match=r'stubcat\.legacy\.filters.*partition_by=\["partition_id"\]'):
+    ck.write(spark.range(4).select(F.col("id").cast("int").alias("partition_id")), "processed", 1)
+    with pytest.raises(ValueError, match=r'stubcat\.legacy\.processed.*partition_by=\["partition_id"\]'):
         ck.state_location()
 
 
@@ -209,11 +209,11 @@ def test_catalog_backend_takes_storage_gate(spark, monkeypatch):
     loc = fr.ckpt.state_location()
     assert isinstance(loc, ManifestLocation)
     assert loc.key == "iceberg:stubcat.zx"
-    # every committed round of both state tables is enumerated, with
+    # every committed round of the state table is enumerated, with
     # per-partition file lists carrying (path, size) signatures
-    assert set(loc.rounds["filters"]) == {1, 2}
+    assert set(loc.rounds) == {"processed"}
     assert set(loc.rounds["processed"]) == {1, 2}
-    sig = loc.sig("filters", 2, 0)
+    sig = loc.sig("processed", 2, 0)
     assert sig and all(sz > 0 for _, sz, _ in sig)
 
 

@@ -1,6 +1,6 @@
-"""Storage-partitioned seen-set machinery: gate_new_storage /
-update_filters_storage semantics over Hive-partitioned state dirs, and
-seenstore's incremental cache (signature invalidation on overwrite)."""
+"""Storage-partitioned seen-set machinery: gate_new_storage semantics
+over Hive-partitioned state dirs, and seenstore's incremental cache
+(signature invalidation on overwrite)."""
 
 import os
 
@@ -13,7 +13,6 @@ from ccspark import seenset, seenstore
 from ccspark.checkpoint import Checkpoint
 
 P = 4
-CAP = 256
 
 
 def _identity_pdf(ids):
@@ -39,16 +38,12 @@ def _write_round(spark, ckpt, pdf, round_no):
 
 @pytest.fixture()
 def state(spark, tmp_path):
-    """3 rounds of processed identities + bloom filters updated per round."""
+    """3 rounds of processed identities."""
     seenstore.clear_caches()
     ckpt = Checkpoint(str(tmp_path))
     rounds = {1: range(0, 50), 2: range(50, 90), 3: range(90, 120)}
     for r, ids in rounds.items():
         _write_round(spark, ckpt, _identity_pdf(ids), r)
-        filt = seenset.update_filters_storage(
-            spark, str(tmp_path), r, P, kind="bloom", buckets_per_element=10, capacity=CAP
-        )
-        ckpt.write(filt, "filters", r, partition_by=["partition_id"])
     return str(tmp_path)
 
 
@@ -56,7 +51,7 @@ def test_gate_matches_exact_set_difference(spark, state):
     seen = _identity_pdf(range(0, 120))
     cand = _identity_pdf(range(100, 160))  # 20 seen, 40 new
     cdf = spark.createDataFrame(cand)
-    got = seenset.gate_new_storage(cdf, state, 3, 3, P).toPandas()
+    got = seenset.gate_new_storage(cdf, state, 3, P).toPandas()
     seen_keys = set(zip(seen["domain_hash"], seen["url_hash"]))
     exp = {
         (d, u) for d, u in zip(cand["domain_hash"], cand["url_hash"])
@@ -69,44 +64,22 @@ def test_gate_at_earlier_round_sees_less_history(spark, state):
     cand = _identity_pdf(range(60, 100))  # rounds 2/3 territory
     cdf = spark.createDataFrame(cand)
     # at round horizon 1, only ids 0..49 are seen → everything here is new
-    got1 = seenset.gate_new_storage(cdf, state, 1, 1, P).toPandas()
+    got1 = seenset.gate_new_storage(cdf, state, 1, P).toPandas()
     assert len(got1) == 40
     # at horizon 2, ids 60..89 are seen
-    got2 = seenset.gate_new_storage(cdf, state, 2, 2, P).toPandas()
+    got2 = seenset.gate_new_storage(cdf, state, 2, P).toPandas()
     assert len(got2) == 10
-
-
-def test_update_filters_storage_equals_full_rebuild(spark, state):
-    """OR of per-round delta blooms == one fixed-capacity bloom_build
-    per partition over the union (bit-identical)."""
-    incremental = {
-        r["partition_id"]: r["bits"]
-        for r in Checkpoint(state).read(spark, "filters", 3).collect()
-    }
-    seen = _identity_pdf(range(0, 120))
-    pids = np.mod(seen["domain_hash"].to_numpy(), P)
-    full = {
-        pid: seenset.bloom_build(seen["url_hash"].to_numpy()[pids == pid], 10, capacity=CAP)[2]
-        for pid in np.unique(pids).tolist()
-    }
-    assert full.keys() == incremental.keys()
-    for pid, bits in full.items():
-        assert bits == bytes(incremental[pid])
 
 
 def test_cache_invalidation_on_round_overwrite(spark, state):
     cand = _identity_pdf(range(90, 130))
     cdf = spark.createDataFrame(cand)
-    before = seenset.gate_new_storage(cdf, state, 3, 3, P).toPandas()
+    before = seenset.gate_new_storage(cdf, state, 3, P).toPandas()
     assert len(before) == 10  # 90..119 seen
     # deterministic re-run rewrote round 3 with a DIFFERENT id set
     ckpt = Checkpoint(state)
     _write_round(spark, ckpt, _identity_pdf(range(200, 230)), 3)
-    filt = seenset.update_filters_storage(
-        spark, state, 3, P, kind="bloom", buckets_per_element=10, capacity=CAP
-    )
-    ckpt.write(filt, "filters", 3, partition_by=["partition_id"])
-    after = seenset.gate_new_storage(cdf, state, 3, 3, P).toPandas()
+    after = seenset.gate_new_storage(cdf, state, 3, P).toPandas()
     assert len(after) == 40  # 90..119 no longer in history
 
 
@@ -124,7 +97,7 @@ def test_seen_cache_lru_eviction_under_budget(spark, state, monkeypatch):
         cold[pid] = seenstore.seen_arrays(state, pid, 3)
         assert len(cold[pid][0]) > 0
     cand = spark.createDataFrame(_identity_pdf(range(100, 160)))
-    unbounded = seenset.gate_new_storage(cand, state, 3, 3, P).toPandas()
+    unbounded = seenset.gate_new_storage(cand, state, 3, P).toPandas()
 
     seenstore.clear_caches()
     monkeypatch.setenv("CCSPARK_SEEN_CACHE_BYTES", "1")
@@ -145,38 +118,13 @@ def test_seen_cache_lru_eviction_under_budget(spark, state, monkeypatch):
         return pd.Series([seenstore._cache_budget()] * len(x))
 
     assert spark.range(1).select(_worker_budget("id")).first()[0] == 1
-    bounded = seenset.gate_new_storage(cand, state, 3, 3, P).toPandas()
+    bounded = seenset.gate_new_storage(cand, state, 3, P).toPandas()
     key = ["domain_hash", "url_hash"]
     assert len(bounded) == len(unbounded) == 40
     pd.testing.assert_frame_equal(
         bounded.sort_values(key).reset_index(drop=True),
         unbounded.sort_values(key).reset_index(drop=True),
     )
-
-
-def test_cuckoo_storage_update_and_gate(spark, tmp_path):
-    seenstore.clear_caches()
-    ckpt = Checkpoint(str(tmp_path))
-    _write_round(spark, ckpt, _identity_pdf(range(0, 64)), 1)
-    filt = seenset.update_filters_storage(spark, str(tmp_path), 1, P, kind="cuckoo")
-    ckpt.write(filt, "filters", 1, partition_by=["partition_id"])
-    cand = _identity_pdf(range(32, 96))
-    got = seenset.gate_new_storage(
-        spark.createDataFrame(cand), str(tmp_path), 1, 1, P
-    ).toPandas()
-    assert len(got) == 32
-    assert set(got["url_hash"]) == set(_identity_pdf(range(64, 96))["url_hash"])
-
-
-def test_update_filters_storage_rejects_bad_arguments(spark, tmp_path):
-    """Argument errors raise ValueError at call time, naming the bad
-    value — not an assert that ``python -O`` strips (an unknown kind
-    silently built cuckoo rows; a bloom update without capacity failed
-    only inside a worker)."""
-    with pytest.raises(ValueError, match="'blom'"):
-        seenset.update_filters_storage(spark, str(tmp_path), 1, P, kind="blom", capacity=CAP)
-    with pytest.raises(ValueError, match="capacity, got None"):
-        seenset.update_filters_storage(spark, str(tmp_path), 1, P, kind="bloom")
 
 
 def test_contains_handles_url_hash_collisions():
@@ -207,19 +155,18 @@ def test_manifest_location_matches_str_root(spark, state):
     import pathlib
 
     cand = spark.createDataFrame(_identity_pdf(range(100, 160)))
-    want = seenset.gate_new_storage(cand, state, 3, 3, P).toPandas()
+    want = seenset.gate_new_storage(cand, state, 3, P).toPandas()
     for to_entry in (str, lambda p: pathlib.Path(p).as_uri()):
         files = {}
-        for table in ("processed", "filters"):
-            for r in seenstore._present_rounds(state, table, 3):
-                for pid in range(P):
-                    sig = seenstore._sig_of(state, table, r, pid)
-                    if sig:
-                        files[(table, r, pid)] = tuple((to_entry(p), sz, mt) for p, sz, mt in sig)
+        for r in seenstore._present_rounds(state, "processed", 3):
+            for pid in range(P):
+                sig = seenstore._sig_of(state, "processed", r, pid)
+                if sig:
+                    files[("processed", r, pid)] = tuple((to_entry(p), sz, mt) for p, sz, mt in sig)
         loc = seenstore.ManifestLocation("manifest:" + state, files)
-        assert loc.rounds == {"processed": (1, 2, 3), "filters": (1, 2, 3)}
+        assert loc.rounds == {"processed": (1, 2, 3)}
         seenstore.clear_caches()
-        got = seenset.gate_new_storage(cand, loc, 3, 3, P).toPandas()
+        got = seenset.gate_new_storage(cand, loc, 3, P).toPandas()
         assert len(got) == 40
         assert set(zip(got["domain_hash"], got["url_hash"])) == set(
             zip(want["domain_hash"], want["url_hash"])
@@ -227,12 +174,10 @@ def test_manifest_location_matches_str_root(spark, state):
         for pid in range(P):  # driver-side reads equal the plain-path reads
             seenstore.clear_caches()
             m_url, m_dom = seenstore.seen_arrays(loc, pid, 3)
-            m_blob = seenstore.filter_blob(loc, pid, 3)
             seenstore.clear_caches()
             p_url, p_dom = seenstore.seen_arrays(state, pid, 3)
             np.testing.assert_array_equal(m_url, p_url)
             np.testing.assert_array_equal(m_dom, p_dom)
-            assert m_blob == seenstore.filter_blob(state, pid, 3)
 
 
 def test_filter_blob_merges_multi_file_partitions(tmp_path):

@@ -283,9 +283,9 @@ def test_streaming_frontier_exactly_once(spark, tmp_path, monkeypatch, spark_sta
 
 
 def test_streaming_frontier_batch_id_guard(spark, tmp_path):
-    """Batch ids must run 0, 1, 2, ... (the filter update ORs into the
-    previous batch's blobs): a gap raises, a redelivered committed
-    batch is a no-op, and an empty batch still commits."""
+    """Batch ids must run 0, 1, 2, ... (a batch reads the carry-over and
+    the seen set of the batch before it): a gap raises, a redelivered
+    committed batch is a no-op, and an empty batch still commits."""
     import pandas as pd
 
     from ccspark import streaming as ST
@@ -352,7 +352,7 @@ def test_streaming_frontier_constant_jobs_per_batch(spark, tmp_path, monkeypatch
     real_gate = seenset.gate_new_storage
 
     def counting_gate(*a, **k):
-        gate_calls.append(a[2:4])
+        gate_calls.append(a[2])  # seen_upto
         return real_gate(*a, **k)
 
     monkeypatch.setattr(seenset, "gate_new_storage", counting_gate)
@@ -370,7 +370,7 @@ def test_streaming_frontier_constant_jobs_per_batch(spark, tmp_path, monkeypatch
         jobs.append(last_job_id() - j0)
         assert spark_state() == state
     assert len(set(jobs[1:])) == 1, jobs
-    assert gate_calls == [(b - 1, b - 1) for b in range(1, 5)]
+    assert gate_calls == [b - 1 for b in range(1, 5)]
 
 
 def test_streaming_frontier_over_iceberg_stub(spark, tmp_path, monkeypatch):
