@@ -6,15 +6,17 @@ vs change, over the same candidate drops.
         [--batches 8] [--urls 3000] [--hosts 40] [--runs 2] --out BENCH/streaming_gate_jobs.json
 
 Every run is a fresh process inside one checkout (``--worker``).  It
-starts a local[4] session and feeds ``streaming.frontier_process_batch``
-``--batches`` micro-batches read from parquet drops: ``--urls``
-synthetic candidate URLs on ``--hosts`` hosts each, half of them
-repeats of the previous batch, under the synthetic robots table.  Per
-batch it records the Spark jobs launched (read from the status store)
-and the wall time.  It also records a sha256 digest of the scheduled
-``(canonical_url, round)`` set, read from the checkpoint's
-``scheduled`` table where the checkout writes one, else from the
-``processed`` rows that carry a host rank.  Runs alternate sides, the
+starts a local[4] session and feeds that checkout's per-batch entry
+point, ``streaming.frontier_process_batch``, ``--batches`` micro-batches
+read from parquet drops: ``--urls`` synthetic candidate URLs on
+``--hosts`` hosts each, half of them repeats of the previous batch,
+under the synthetic robots table.  Per batch it records the Spark jobs
+launched (read from the status store) and the wall time.  It also
+records a sha256 digest of the scheduled ``(canonical_url, batch
+index)`` set, read from the ``processed`` rows that carry a host rank.
+A checkout may commit batch b as any round b + offset (the offset is
+the last committed round minus the last batch index), so the digest
+does not depend on the round numbering.  Runs alternate sides, the
 parent first in even-numbered runs.
 """
 
@@ -73,11 +75,11 @@ def worker(batches: int, urls: int, hosts: int) -> dict:
             wall.append(round(time.perf_counter() - t0, 3))
             jobs.append(last_job_id() - j0)
         ckpt = make_checkpoint(spark, out)
-        table = "scheduled" if "scheduled" in ckpt.read_manifest()["tables"] else "processed"
+        offset = ckpt.last_committed_round() - (batches - 1)
         pairs = []
         for b in range(batches):
-            rows = ckpt.read(spark, table, b).filter(F.col("host_rank").isNotNull()).select("canonical_url")
-            pairs += [f"{r['canonical_url']}\t{b}" for r in rows.collect()]
+            rows = ckpt.read(spark, "processed", b + offset).filter(F.col("host_rank").isNotNull())
+            pairs += [f"{r['canonical_url']}\t{b}" for r in rows.select("canonical_url").collect()]
     spark.stop()
     return {
         "jobs": jobs,
@@ -105,7 +107,7 @@ def main() -> int:
     ap.add_argument("--batches", type=int, default=8)
     ap.add_argument("--urls", type=int, default=3000)
     ap.add_argument("--hosts", type=int, default=40)
-    ap.add_argument("--runs", type=int, default=2)
+    ap.add_argument("--runs", type=int, default=2, help="runs per side")
     ap.add_argument("--out")
     ap.add_argument("--worker", action="store_true", help=argparse.SUPPRESS)
     args = ap.parse_args()

@@ -73,15 +73,14 @@ from pyspark.sql import functions as F
 from . import politeness, seenset, seenstore, synth
 from . import functions as CF
 
-# Fixed table schemas (DDL).  The checkpoint reads of a round and of a
-# micro-batch pass them, so none of them launches a schema-inference job.
+# Fixed table schemas (DDL).  The checkpoint reads of a round pass them,
+# so none of them launches a schema-inference job.
 FRONTIER_SCHEMA = (
     "url string, canonical_url string, domain_hash long, url_hash long, "
     "root_domain_hash long, priority double, discovered_round int"
 )
-# the processed table (scheduled ∪ robots-retired rows) of the batch
-# round and of the streaming micro-batch; root_domain_hash keeps its rows
-# frontier-shaped (the revisit source)
+# the processed table (scheduled ∪ robots-retired rows) of a round;
+# root_domain_hash keeps its rows frontier-shaped (the revisit source)
 PROCESSED_SCHEMA = (
     "round int, host string, host_rank int, url string, canonical_url string, "
     "domain_hash long, url_hash long, root_domain_hash long, priority double"
@@ -106,12 +105,12 @@ _AQE = "spark.sql.adaptive.enabled"
 @contextlib.contextmanager
 def adaptive_off(spark: SparkSession):
     """Run the block with AQE off on ``spark``; the caller's setting is
-    restored on every exit path.  A round's (and a micro-batch's) plans
-    gain nothing from AQE: the one join (robots) carries a broadcast
-    hint, per-host skew is salted, and every layout exchange is an
-    explicit repartition(P), which AQE does not coalesce.  With AQE on,
-    each shuffle and broadcast stage runs as a Spark job of its own and
-    the plan is re-optimized after it (ARCHITECTURE §2)."""
+    restored on every exit path.  A round's plans gain nothing from AQE:
+    the one join (robots) carries a broadcast hint, per-host skew is
+    salted, and every layout exchange is an explicit repartition(P),
+    which AQE does not coalesce.  With AQE on, each shuffle and
+    broadcast stage runs as a Spark job of its own and the plan is
+    re-optimized after it (ARCHITECTURE §2)."""
     prev = spark.conf.get(_AQE)
     spark.conf.set(_AQE, "false")
     try:
@@ -150,43 +149,6 @@ def dedup_by_identity(df: DataFrame, num_partitions: int) -> DataFrame:
         )
         .select(*FRONTIER_COLS_PID)
     )
-
-
-def write_processed(
-    ckpt, candidates: DataFrame, robots: DataFrame, round_no: int, num_partitions: int, **politeness_kw
-) -> tuple[DataFrame, int]:
-    """Processed-write phase of a batch round and of a streaming
-    micro-batch: ``politeness.process_round`` (``politeness_kw`` are its
-    budget/salt/broadcast arguments) → ``round`` column →
-    ``PROCESSED_COLS`` + ``partition_id`` → scheduled-count Observation
-    → cache → ``processed/round=<round_no>`` write.
-
-    One table holds the round's scheduled rows (host_rank 1..budget) and
-    its robots-retired rows (host_rank NULL, so the frontier drains of
-    them), which makes the seen delta just its identity columns.  No
-    layout Exchange: process_round's final rank already hash-partitions
-    by pmod(domain_hash, P), so the Hive-partitioned write produces one
-    file per partition — the layout every storage-gate read prunes on.
-    Returns the cached frame (the caller unpersists it; a failed write
-    releases it here) and the scheduled-row count."""
-    obs = Observation(f"proc_{round_no}")
-    processed = (
-        politeness.process_round(candidates, robots, layout_partitions=num_partitions, **politeness_kw)
-        .withColumn("round", F.lit(round_no))
-        .withColumn("partition_id", _pid_col(num_partitions))
-        .select(*PROCESSED_COLS, "partition_id")
-        .observe(obs, F.count(F.when(F.col("host_rank").isNotNull(), F.lit(1))).alias("n_sched"))
-        .cache()
-    )
-    try:
-        ckpt.write(processed, "processed", round_no, partition_by=["partition_id"])
-    except BaseException:
-        processed.unpersist()
-        raise
-    # a round Catalyst proves empty (an empty local relation) collapses
-    # the plan and prunes the Observation: its row comes back field-less
-    n_sched = int(obs.get["n_sched"]) if obs._jo.getRow().length() else 0
-    return processed, n_sched
 
 
 def _lineage_arrow_schema():
@@ -385,14 +347,13 @@ class CrawlFrontier:
 
     def _identify(self, raw: DataFrame, round_no: int) -> DataFrame:
         """raw(url, priority) → frontier rows (canonical identity, valid
-        only, max-priority dedup), partition-clustered for the
-        one-file-per-partition checkpoint layout."""
-        df = (
+        only), not yet deduped."""
+        return (
             CF.with_canonical_urlfp(raw)
             .filter("url_valid")
             .withColumn("discovered_round", F.lit(round_no))
+            .select(*FRONTIER_COLS)
         )
-        return dedup_by_identity(df, self.cfg.num_partitions)
 
     def _robots(self) -> DataFrame:
         # memoized: the rules table is immutable across rounds — rebuilding
@@ -429,19 +390,29 @@ class CrawlFrontier:
         its own), with the row count read off an Observation instead of
         a second (full-recompute) count job.  Round 0 writes the frontier
         only: the seen set starts absent (read_all_rounds returns None
-        for round 0)."""
+        for round 0).  The manifest records the partition count P, which
+        every later round of the crawl must run with."""
+        P = self.cfg.num_partitions
         obs = Observation("bootstrap_n")
-        frontier = self._identify(seeds, 0).observe(obs, F.count(F.lit(1)).alias("n"))
+        frontier = dedup_by_identity(self._identify(seeds, 0), P).observe(obs, F.count(F.lit(1)).alias("n"))
         with adaptive_off(self.spark):
             self.ckpt.write(frontier, "frontier", 0, partition_by=["partition_id"])
-        self.ckpt.commit_round(0, {"frontier": "round=0"}, extra={"frontier_size": int(obs.get["n"])})
+        self.ckpt.commit_round(
+            0, {"frontier": "round=0"}, extra={"frontier_size": int(obs.get["n"]), "num_partitions": P}
+        )
 
-    def run_round(self, round_no: int) -> dict:
+    def run_round(self, round_no: int, injected: DataFrame | None = None) -> dict:
         """Execute one crawl round (round_no = last committed round + 1);
         returns metrics.
 
+        ``injected`` (url, priority) rows join the round's candidates: a
+        streaming micro-batch b is round b+1 with its rows injected
+        (streaming.frontier_process_batch).  They may hold seen or
+        repeated URLs, so ``_candidates`` dedups them with the frontier
+        and gates the result against the seen set through round k-1.
+
         The round is six phases, called in this order on the calling
-        thread (ARCHITECTURE §1): ``_candidates`` → ``write_processed`` →
+        thread (ARCHITECTURE §1): ``_candidates`` → ``_write_processed`` →
         ``_expand_dedup`` → ``_write_frontier`` → ``_write_lineage`` →
         ``_commit``.
 
@@ -470,19 +441,9 @@ class CrawlFrontier:
         # ``release`` unpersists the cached frames last-cached first, so
         # no frame is released before one cached over it
         with adaptive_off(self.spark), contextlib.ExitStack() as release:
-            n_candidates, frontier, candidates = self._candidates(round_no)
+            n_candidates, frontier, candidates = self._candidates(round_no, injected)
             release.callback(frontier.unpersist)
-            processed, n_scheduled = write_processed(
-                ckpt,
-                candidates,
-                self._robots(),
-                round_no,
-                cfg.num_partitions,
-                default_budget=cfg.default_budget,
-                round_duration_ms=cfg.round_duration_ms,
-                n_salts=cfg.n_salts,
-                broadcast_robots=cfg.broadcast_robots,
-            )  # fills the processed cache
+            processed, n_scheduled = self._write_processed(candidates, round_no)  # fills the processed cache
             release.callback(processed.unpersist)
             t = _lap(phase_s, "processed_write", t)
             loc = ckpt.state_location()  # re-read: covers the just-written processed delta
@@ -502,8 +463,9 @@ class CrawlFrontier:
 
     # -- round phases -----------------------------------------------------
 
-    def _candidates(self, round_no: int) -> tuple[int, DataFrame, DataFrame]:
-        """Candidates phase: frontier/round=k-1 ∪ the due revisits.
+    def _candidates(self, round_no: int, injected: DataFrame | None) -> tuple[int, DataFrame, DataFrame]:
+        """Candidates phase: frontier/round=k-1 (∪ injected rows) ∪ the
+        due revisits.
 
         Returns ``(n_candidates, frontier, candidates)`` with the frontier
         cached (it feeds both the processed write and the next-frontier
@@ -511,12 +473,20 @@ class CrawlFrontier:
         the same phases over empty frames and commits all three tables.
         The frontier is not re-gated: round k-1's links gate wrote it
         against the seen set through k-1, so every row is novel (the
-        gate-once invariant, ARCHITECTURE §1).
-        Its size comes from the last manifest, which is why round k must
-        follow committed round k-1.  Both reads pass their table's fixed
-        schema: no schema-inference job, and a drained frontier (a round
-        directory without data files) reads as an empty frame."""
+        gate-once invariant, ARCHITECTURE §1).  Injected rows are not:
+        the cached frame is then ``gate_new_storage(dedup_by_identity(
+        frontier ∪ identified rows), seen through k-1)``, dedup first so
+        a URL in both merges to its max priority, gate after (the links
+        gate's shape).  ``n_candidates`` counts the frontier rows only.
+        Their count comes from the last manifest, which is why round k
+        must follow committed round k-1, with the partition count the
+        crawl was bootstrapped with (the state tables and the gate's
+        pruning are laid out by pmod(domain_hash, P)).  Both reads pass
+        their table's fixed schema: no schema-inference job, and a
+        drained frontier (a round directory without data files) reads as
+        an empty frame."""
         spark, cfg, ckpt = self.spark, self.cfg, self.ckpt
+        P = cfg.num_partitions
         # layout check before the round writes anything: a catalog table
         # without the partition_id layout raises here
         loc = ckpt.state_location()
@@ -530,6 +500,11 @@ class CrawlFrontier:
                 f"round {round_no} cannot follow {after}; expected {expected}: a round "
                 "reads the frontier and frontier_size of the round before it"
             )
+        if int(manifest["num_partitions"]) != P:
+            raise ValueError(
+                f"round {round_no} runs with num_partitions={P}, but the crawl's state is "
+                f"laid out by num_partitions={manifest['num_partitions']}: resume with that count"
+            )
         n_candidates = int(manifest["frontier_size"])
 
         # revisit injection (recrawl): the scheduled rows of the round
@@ -540,11 +515,14 @@ class CrawlFrontier:
         revisit_src = None
         if cfg.revisit_after and round_no > cfg.revisit_after:
             src_round = round_no - cfg.revisit_after
-            if _scheduled_by_partition(loc, src_round, cfg.num_partitions):
+            if _scheduled_by_partition(loc, src_round, P):
                 revisit_src = ckpt.read(spark, "processed", src_round, PROCESSED_SCHEMA + _PID_SCHEMA).filter(
                     F.col("host_rank").isNotNull()
                 )
         frontier = ckpt.read(spark, "frontier", prev, FRONTIER_SCHEMA + _PID_SCHEMA).select(*FRONTIER_COLS)
+        if injected is not None:
+            merged = dedup_by_identity(frontier.unionByName(self._identify(injected, round_no)), P)
+            frontier = seenset.gate_new_storage(merged, loc, prev, P).select(*FRONTIER_COLS)
         candidates = frontier
         if revisit_src is not None:
             candidates = frontier.unionByName(
@@ -562,6 +540,49 @@ class CrawlFrontier:
         # run_round releases it from here on (the candidates plan picks
         # the cache up when it runs)
         return n_candidates, frontier.cache(), candidates
+
+    def _write_processed(self, candidates: DataFrame, round_no: int) -> tuple[DataFrame, int]:
+        """Processed-write phase: ``politeness.process_round`` under the
+        config's budget, salts and robots join → ``round`` column →
+        ``PROCESSED_COLS`` + ``partition_id`` → scheduled-count
+        Observation → cache → ``processed/round=<round_no>`` write.
+
+        One table holds the round's scheduled rows (host_rank 1..budget)
+        and its robots-retired rows (host_rank NULL, so the frontier
+        drains of them), which makes the seen delta just its identity
+        columns.  No layout Exchange: process_round's final rank already
+        hash-partitions by pmod(domain_hash, P), so the Hive-partitioned
+        write produces one file per partition — the layout every
+        storage-gate read prunes on.  Returns the cached frame (the
+        caller unpersists it; a failed write releases it here) and the
+        scheduled-row count."""
+        cfg = self.cfg
+        obs = Observation(f"proc_{round_no}")
+        processed = (
+            politeness.process_round(
+                candidates,
+                self._robots(),
+                default_budget=cfg.default_budget,
+                round_duration_ms=cfg.round_duration_ms,
+                n_salts=cfg.n_salts,
+                broadcast_robots=cfg.broadcast_robots,
+                layout_partitions=cfg.num_partitions,
+            )
+            .withColumn("round", F.lit(round_no))
+            .withColumn("partition_id", _pid_col(cfg.num_partitions))
+            .select(*PROCESSED_COLS, "partition_id")
+            .observe(obs, F.count(F.when(F.col("host_rank").isNotNull(), F.lit(1))).alias("n_sched"))
+            .cache()
+        )
+        try:
+            self.ckpt.write(processed, "processed", round_no, partition_by=["partition_id"])
+        except BaseException:
+            processed.unpersist()
+            raise
+        # a round Catalyst proves empty (an empty local relation) collapses
+        # the plan and prunes the Observation: its row comes back field-less
+        n_sched = int(obs.get["n_sched"]) if obs._jo.getRow().length() else 0
+        return processed, n_sched
 
     def _expand_dedup(self, frontier: DataFrame, scheduled: DataFrame, round_no: int) -> DataFrame:
         """Link expansion + dedup phase: the scheduled rows' out-links —
@@ -647,7 +668,11 @@ class CrawlFrontier:
         self.ckpt.commit_round(
             round_no,
             {t: f"round={round_no}" for t in ("frontier", "processed", "lineage")},
-            extra={"scheduled": n_scheduled, "frontier_size": n_frontier},
+            extra={
+                "scheduled": n_scheduled,
+                "frontier_size": n_frontier,
+                "num_partitions": self.cfg.num_partitions,
+            },
         )
 
     def run(self, seeds: DataFrame | None, num_rounds: int, on_round=None) -> list[dict]:

@@ -6,15 +6,14 @@ The reference is batch-only over immutable archives (SURVEY.md §2.7);
 the crawl loop becomes micro-batches here.  Late/re-discovered URLs are
 made idempotent exactly like the batch seen-set: ``dropDuplicates`` on
 the URLFPV2 composite key under a watermark, mirroring H4/H5.  The
-streaming frontier makes the batch loop's seen-set decision with the
-batch loop's gate: every micro-batch passes ``seenset.gate_new_storage``
-(an exact lookup in the sorted seen arrays) against the stream's own
-processed table; there is no other gate.
+streaming frontier is the batch loop itself: micro-batch b runs crawl
+round b+1 (``CrawlFrontier.run_round``) with the batch's rows injected
+as candidates, so it makes the batch loop's seen-set decision with the
+batch loop's gate, tables and manifest.
 """
 
 from __future__ import annotations
 
-import contextlib
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -166,73 +165,30 @@ def frontier_process_batch(
     default_budget: int = 10,
     n_salts: int = 8,
 ) -> None:
-    """One micro-batch of the streaming frontier, from the batch round's
-    pieces: identify (∪ the last committed carry-over) →
-    ``dedup_by_identity`` → ``gate_new_storage`` against the committed
-    processed rounds → ``write_processed`` (the batch round's
-    processed-write phase; the seen delta) → carry-over write
-    (allowed-but-over-budget rows re-enter the next trigger, as the
-    batch loop's leftovers stay in its frontier) → one manifest commit.
+    """One micro-batch of the streaming frontier: micro-batch b is crawl
+    round b+1 with the batch's rows injected as candidates
+    (``CrawlFrontier.run_round(b + 1, injected=batch_df)``, no link
+    expansion).  Allowed-but-over-budget rows stay in the round's
+    frontier table and compete again in the next batch.
 
-    Exactly-once: a committed batch is skipped; a retried batch reads
-    only committed state and overwrites its own partial rounds with
-    identical output.  Batch ids run 0, 1, 2, ... (a batch reads the
-    carry-over and the seen set of the batch before it); any other id
-    raises ValueError.
-    The partition count P is the default parallelism at batch 0, kept in
-    the manifest for the life of the stream.
-
-    Like a batch round, the micro-batch runs with AQE off
-    (``frontier.adaptive_off``), reads its carry-over with the frontier's
-    fixed schema, and releases the frames it cached on every exit path."""
-    from . import seenset
+    Exactly-once: a batch whose round is committed is skipped; a retried
+    batch reruns its round, which overwrites its own partial tables with
+    identical output.  Batch 0 first bootstraps an empty round 0; any
+    other batch must follow the batch before it (``run_round`` raises
+    ValueError otherwise, before it writes anything).  The partition
+    count is the default parallelism at batch 0, kept in the manifest
+    for the life of the stream."""
     from .catalog import make_checkpoint
-    from .frontier import FRONTIER_COLS, FRONTIER_SCHEMA, adaptive_off, dedup_by_identity, write_processed
+    from .frontier import CrawlFrontier, FrontierConfig
 
     spark = batch_df.sparkSession
     ckpt = make_checkpoint(spark, out_dir)
     manifest = ckpt.read_manifest()
-    last = None if manifest is None else int(manifest["round"])
-    if last is not None and last >= batch_id:
+    if manifest is not None and int(manifest["round"]) > batch_id:
         return  # redelivered committed batch → exactly-once skip
-    expected = 0 if last is None else last + 1
-    if batch_id != expected:
-        prev = "an empty checkpoint" if last is None else f"committed batch {last}"
-        raise ValueError(
-            f"micro-batch {batch_id} cannot follow {prev} in {out_dir}; expected "
-            f"batch {expected}: a batch reads the carry-over and seen set of the batch before it"
-        )
-    P = spark.sparkContext.defaultParallelism if last is None else int(manifest["num_partitions"])
-
-    # ``release`` unpersists processed before novel, the frame it was
-    # cached over
-    with adaptive_off(spark), contextlib.ExitStack() as release:
-        ident = (
-            CF.with_canonical_urlfp(batch_df)
-            .filter("url_valid")
-            .withColumn("discovered_round", F.lit(batch_id))
-            .select(*FRONTIER_COLS)
-        )
-        if last is not None:
-            ident = ident.unionByName(ckpt.read(spark, "carryover", last, FRONTIER_SCHEMA))
-        # dedup first, gate after (the links gate's shape): the dedup lands
-        # rows partition-clustered, and the gate reads committed state only
-        novel = dedup_by_identity(ident, P)
-        if last is not None:
-            novel = seenset.gate_new_storage(novel, ckpt.state_location(), last, P)
-        novel = novel.cache()
-        release.callback(novel.unpersist)
-
-        processed, n_sched = write_processed(
-            ckpt, novel, robots, batch_id, P, default_budget=default_budget, n_salts=n_salts
-        )
-        release.callback(processed.unpersist)
-        leftover = novel.join(
-            processed.select("domain_hash", "url_hash"), ["domain_hash", "url_hash"], "left_anti"
-        ).select(*FRONTIER_COLS)
-        ckpt.write(leftover, "carryover", batch_id)
-        ckpt.commit_round(
-            batch_id,
-            {t: f"round={batch_id}" for t in ("processed", "carryover")},
-            extra={"scheduled": n_sched, "num_partitions": P},
-        )
+    P = spark.sparkContext.defaultParallelism if manifest is None else int(manifest["num_partitions"])
+    cfg = FrontierConfig(num_partitions=P, links_per_fetch=0, default_budget=default_budget, n_salts=n_salts)
+    fr = CrawlFrontier(spark, out_dir, cfg, checkpoint=ckpt, robots_df=robots)
+    if manifest is None and batch_id == 0:
+        fr.bootstrap(spark.createDataFrame([], "url string, priority double"))
+    fr.run_round(batch_id + 1, injected=batch_df)

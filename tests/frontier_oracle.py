@@ -58,6 +58,7 @@ def replay(
     revisit_decay=0.5,
     robots=None,
     max_frontier_per_host=None,
+    injected=None,
 ):
     """Returns (trace, seen): trace = set of (round, host, host_rank,
     canonical_url); seen = set of (domain_hash, url_hash).
@@ -67,7 +68,10 @@ def replay(
     priority, competing under the same robots/budget politeness.
     ``max_frontier_per_host`` mirrors the FrontierConfig cap: each
     host's next-frontier queue keeps its first rows in the frontier
-    total order (priority DESC, domain_hash, url_hash)."""
+    total order (priority DESC, domain_hash, url_hash).
+    ``injected`` maps a round to (urls, priorities) joining its
+    candidates, as ``run_round(k, injected=...)``: merged into the
+    frontier by identity, then gated against the seen set like it."""
     import pandas as pd
 
     # seeds: ids % 23 == 0, urls + priorities as in synth.gen_seeds
@@ -91,7 +95,8 @@ def replay(
     last_sched_round = 0
 
     for rnd in range(1, num_rounds + 1):
-        novel = {k: v for k, v in frontier.items() if k not in seen}
+        pool = _identify(*(injected or {}).get(rnd, ([], [])), rnd, frontier=dict(frontier))
+        novel = {k: v for k, v in pool.items() if k not in seen}
         candidates = dict(novel)
         if revisit_after and rnd - revisit_after >= 1:
             # revisit injection: seen identities by design, so they are

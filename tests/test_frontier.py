@@ -257,11 +257,10 @@ def test_frontier_against_iceberg_catalog(tmp_path):
         pass  # session shared-ish; leave running
 
 
-# the round phases in call order (CrawlFrontier methods, except the
-# module-level write_processed shared with the streaming micro-batch)
+# the round phases in call order (CrawlFrontier methods)
 _PHASES = (
     "_candidates",
-    "write_processed",
+    "_write_processed",
     "_expand_dedup",
     "_write_frontier",
     "_write_lineage",
@@ -273,10 +272,7 @@ def _fail_next(monkeypatch, phase) -> list:
     """Make the next call of round phase ``phase`` raise before it runs
     (a failure at the boundary just before that phase); later calls
     pass.  Returns a list that is non-empty once the failure fired."""
-    import ccspark.frontier as frontier_mod
-
-    owner = frontier_mod if phase == "write_processed" else CrawlFrontier
-    real = getattr(owner, phase)
+    real = getattr(CrawlFrontier, phase)
     failed = []
 
     def _fail_once(*args, **kwargs):
@@ -285,7 +281,7 @@ def _fail_next(monkeypatch, phase) -> list:
             raise RuntimeError(f"injected {phase} failure")
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(owner, phase, _fail_once)
+    monkeypatch.setattr(CrawlFrontier, phase, _fail_once)
     return failed
 
 
@@ -424,6 +420,40 @@ def test_run_round_out_of_order_raises(spark, tmp_path):
     assert not any(os.path.exists(fr.ckpt.table_dir(t, 3)) for t in os.listdir(ckpt))
     with pytest.raises(ValueError, match="round 1 cannot follow an empty checkpoint"):
         CrawlFrontier(spark, str(tmp_path / "ckpt_empty"), _cfg()).run_round(1)
+
+
+@pytest.mark.parametrize("backend", ["parquet", "iceberg_stub"])
+def test_resume_with_other_partition_count_raises(spark, tmp_path, monkeypatch, backend):
+    """The state tables and the links gate's partition pruning are laid
+    out by pmod(domain_hash, P), so a crawl resumed with another P would
+    look seen URLs up in the wrong partitions and schedule them again.
+    The manifest records P; the resumed round raises ValueError naming
+    both counts before it writes anything, and the crawl resumes with
+    its own P."""
+    if backend == "iceberg_stub":
+        from iceberg_stub import install
+
+        install(monkeypatch, spark, "stubcat")
+        where = "iceberg:stubcat.repartition"
+    else:
+        where = str(tmp_path / "repartition")
+    seeds = synth.gen_seeds(spark, UNIVERSE, N_HOSTS, SEED)
+    CrawlFrontier(spark, where, _cfg(num_partitions=4)).run(seeds, 2)
+    other = CrawlFrontier(spark, where, _cfg(num_partitions=3))
+    before = other.ckpt.read_manifest()
+
+    def no_write(*a, **k):
+        raise AssertionError("the resumed round wrote before its partition-count check")
+
+    for method in ("write", "write_pdf", "commit_round"):
+        monkeypatch.setattr(other.ckpt, method, no_write)
+    with pytest.raises(ValueError, match="num_partitions=3.*num_partitions=4"):
+        other.run(None, 2)
+    assert other.ckpt.read_manifest() == before and before["num_partitions"] == 4
+    fr = CrawlFrontier(spark, where, _cfg(num_partitions=4))
+    fr.run(None, 1)
+    trace = fr.read_trace(ROUNDS).select("domain_hash", "url_hash")
+    assert trace.count() == trace.distinct().count()
 
 
 def test_drained_frontier_recrawl_matches_oracle(spark, tmp_path):
@@ -572,7 +602,22 @@ _GATE_ONCE_CASES = {
     "drained_recrawl": (
         {"revisit_after": 2, "links_per_fetch": 0, "default_budget": 500}, 5, True
     ),
+    # every round injects rows (a streaming micro-batch's shape): seeds,
+    # seen after round 1, and new pages
+    "injected": ({}, ROUNDS, False),
 }
+
+
+def _injected_pdf(k):
+    import pandas as pd
+
+    ids = np.concatenate([np.arange(0, UNIVERSE, 92), np.arange(k, UNIVERSE, 97)])
+    ids = np.concatenate([ids, ids[:3]])  # repeats within the batch
+    urls, _ = synth.gen_urls_pdf(ids, N_HOSTS, SEED)
+    pri = np.arange(len(ids)) % 10 / 10.0
+    return pd.DataFrame({"url": urls.to_numpy(dtype=object), "priority": pri})
+
+
 # fault-injection resume matrix: round 2 fails at each phase boundary, or
 # inside the frontier write; the crawl then resumes
 _FAIL_CASES = {"fail_at_" + p.lstrip("_"): p for p in _PHASES}
@@ -588,8 +633,9 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, sp
     round k+1) keeps every row.  Holds for the three ways a frontier
     table is written: bootstrap, the links gate and the optional
     per-host cap after it, which only evicts; a drained round writes
-    through the links gate too.  Revisits join after the gate and never
-    land in the frontier.  The crawl must also equal the replay oracle,
+    through the links gate too, and so does a round with injected rows,
+    which are gated at k-1 as candidates.  Revisits join after the gate
+    and never land in the frontier.  The crawl must also equal the replay oracle,
     which computes novelty on its own.  A failed round raises on the
     calling thread and leaves the live threads, the session's AQE
     setting, cache and persistent RDDs as they were before it."""
@@ -633,6 +679,10 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, sp
         assert set(threading.enumerate()) == threads
         assert spark_state() == state
         fr.run(None, rounds - 1, on_round=on_round)
+    elif case == "injected":
+        fr.bootstrap(seeds)
+        for k in range(1, rounds + 1):
+            on_round(fr.run_round(k, injected=spark.createDataFrame(_injected_pdf(k))))
     else:
         fr.run(seeds, rounds, on_round=on_round)
 
@@ -648,11 +698,13 @@ def test_committed_frontier_passes_its_own_gate(spark, tmp_path, monkeypatch, sp
         kept = seenset.gate_new_storage(frame, loc, k, cfg.num_partitions).count()
         assert kept == n, f"round {k}: re-gating dropped {n - kept} of {n} frontier rows"
 
+    injected = {k: _injected_pdf(k) for k in range(1, upto + 1)} if case == "injected" else {}
     exp_trace, exp_seen = replay(
         UNIVERSE, N_HOSTS, SEED, upto, cfg.default_budget, ROUND_MS, cfg.links_per_fetch,
         revisit_after=cfg.revisit_after,
         robots={} if empty_robots else None,
         max_frontier_per_host=cfg.max_frontier_per_host,
+        injected={k: (pdf["url"].tolist(), pdf["priority"].tolist()) for k, pdf in injected.items()},
     )
     if upto == 0:
         assert not exp_trace and not exp_seen

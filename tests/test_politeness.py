@@ -188,8 +188,8 @@ def _seed_candidates(spark, n_seeds: int, n_hosts: int):
 
 
 def test_process_round_layout_equals_plain(spark):
-    """The frontier's layout_partitions form of process_round and the
-    plain form (streaming, pipeline, q_schedule_round) dispose of the
+    """The frontier's layout_partitions form of process_round (the
+    pipeline's too) and the plain form (q_schedule_round) dispose of the
     same rows: same scheduled (host, host_rank, url) and same retired
     identities, with allowed-but-over-budget rows absent from both."""
     from ccspark import synth

@@ -1,6 +1,7 @@
 """Structured Streaming tests: streaming dedup idempotence, windowed
 counts, stateful budget operator across micro-batches, and the
-streaming frontier on the storage gate."""
+streaming frontier (micro-batch b = crawl round b+1 with the batch's
+rows injected)."""
 
 import numpy as np
 import pytest
@@ -73,14 +74,16 @@ def test_stateful_budget(spark, staged_pages):
 
 
 def _scheduled(spark, out, upto):
-    """Scheduled rows of batches 0..upto: the scheduled half of the
-    processed table, the batch loop's read_trace surface."""
-    proc = Checkpoint(str(out)).read_all_rounds(spark, "processed", upto)
+    """Scheduled rows of batches 0..upto (rounds 1..upto+1): the
+    scheduled half of the processed table, the batch loop's read_trace
+    surface."""
+    proc = Checkpoint(str(out)).read_all_rounds(spark, "processed", upto + 1)
     return proc.filter(F.col("host_rank").isNotNull())
 
 
 def _scheduled_at(spark, ckpt, b):
-    return ckpt.read(spark, "processed", b).filter(F.col("host_rank").isNotNull())
+    """Scheduled rows of batch b, processed in round b+1."""
+    return ckpt.read(spark, "processed", b + 1).filter(F.col("host_rank").isNotNull())
 
 
 _ROBOTS_SCHEMA = (
@@ -143,14 +146,14 @@ def test_streaming_frontier_end_to_end(spark, tmp_path):
     got = {(r["canonical_url"], r["round"]) for r in _scheduled(spark, out, 1).collect()}
     urls = {u for u, _ in got}
     assert urls == {"http://a.com/x", "http://b.com/y", "http://b.com/z"}
-    # the repeat was NOT rescheduled in the second batch
-    assert ("http://a.com/x", 1) not in got
-    seen = Checkpoint(str(out)).read_all_rounds(spark, "processed", 1)
+    # the repeat was NOT rescheduled in the second batch (round 2)
+    assert ("http://a.com/x", 2) not in got
+    seen = Checkpoint(str(out)).read_all_rounds(spark, "processed", 2)
     # scheduled (3) + robots-retired (1)
     assert seen.select("domain_hash", "url_hash").distinct().count() == 4
-    # the stream commits through the same manifest protocol as the batch loop
+    # the stream commits the batch loop's rounds: batch 1 is round 2
     m = Checkpoint(str(out)).read_manifest()
-    assert m["round"] == 1 and "processed" in m["tables"]
+    assert m["round"] == 2 and set(m["tables"]) == {"frontier", "processed", "lineage"}
 
 
 def test_streaming_frontier_restart_on_checkpoint_dir(spark, tmp_path):
@@ -185,10 +188,10 @@ def test_streaming_frontier_restart_on_checkpoint_dir(spark, tmp_path):
     with pytest.raises(TypeError, match="checkpoint_dir"):
         ST.streaming_frontier(ST.stream_candidates(spark, str(src)), robots, str(out))
     run()
-    assert Checkpoint(str(out)).last_committed_round() == 0
+    assert Checkpoint(str(out)).last_committed_round() == 1
     _drop(spark, tmp_path, src, "d3", [("http://a.com/z", 0.5, ts), ("http://b.com/y", 0.4, ts)])
     run()
-    assert Checkpoint(str(out)).last_committed_round() == 1
+    assert Checkpoint(str(out)).last_committed_round() == 2
     got = sorted(r["canonical_url"] for r in _scheduled(spark, out, 1).collect())
     assert got == ["http://a.com/x", "http://a.com/z", "http://b.com/w", "http://b.com/y"]
 
@@ -198,8 +201,9 @@ def _mk_batch(spark, rows):
 
 
 def test_streaming_frontier_overbudget_carryover(spark, tmp_path):
-    """Allowed-but-over-budget novel rows re-enter the next trigger
-    instead of being silently dropped (budget binds on host a.com)."""
+    """Allowed-but-over-budget novel rows stay in the round's frontier
+    table and re-enter the next trigger instead of being silently
+    dropped (budget binds on host a.com)."""
     import pandas as pd
 
     from ccspark import streaming as ST
@@ -212,7 +216,7 @@ def test_streaming_frontier_overbudget_carryover(spark, tmp_path):
     b0 = _mk_batch(spark, [(f"http://a.com/p{i}", 0.9 - i * 0.1, ts) for i in range(5)])
     ST.frontier_process_batch(b0, 0, robots, str(out), default_budget=2, n_salts=2)
     assert _scheduled_at(spark, ckpt, 0).count() == 2
-    carry0 = spark.read.parquet(str(out / "carryover" / "round=0"))
+    carry0 = ckpt.read(spark, "frontier", 1)
     assert carry0.count() == 3
     # next trigger brings ONE new URL; the 3 carried rows re-enter and
     # compete: 2 scheduled again (highest priority of the 4)
@@ -221,7 +225,7 @@ def test_streaming_frontier_overbudget_carryover(spark, tmp_path):
     got1 = {r["canonical_url"] for r in _scheduled_at(spark, ckpt, 1).collect()}
     # priorities: new=0.95, p2=0.7, p3=0.6, p4=0.5 → top-2
     assert got1 == {"http://a.com/new", "http://a.com/p2"}
-    carry1 = spark.read.parquet(str(out / "carryover" / "round=1"))
+    carry1 = ckpt.read(spark, "frontier", 2)
     assert {r["canonical_url"] for r in carry1.collect()} == {
         "http://a.com/p3",
         "http://a.com/p4",
@@ -231,10 +235,10 @@ def test_streaming_frontier_overbudget_carryover(spark, tmp_path):
 
 
 def test_streaming_frontier_exactly_once(spark, tmp_path, monkeypatch, spark_state):
-    """Kill mid-batch (before the commit marker), re-run → scheduled
-    output byte-identical; re-run of a COMMITTED batch is a no-op.  The
-    killed batch leaves the session's AQE setting and cache as it found
-    them."""
+    """Kill mid-batch (before its round's commit marker), re-run →
+    scheduled output byte-identical; re-run of a COMMITTED batch is a
+    no-op.  The killed batch leaves the session's AQE setting and cache
+    as it found them."""
     import pandas as pd
 
     from ccspark import streaming as ST
@@ -244,21 +248,22 @@ def test_streaming_frontier_exactly_once(spark, tmp_path, monkeypatch, spark_sta
     ts = pd.Timestamp("2024-01-01").to_pydatetime()
 
     b0 = _mk_batch(spark, [(f"http://a.com/p{i}", 0.5, ts) for i in range(4)])
-    # first attempt dies after the data writes but before the commit
+    # first attempt dies after the round's data writes but before its
+    # commit (the empty round-0 bootstrap commits)
     real_commit = Checkpoint.commit_round
     killed = []
 
-    def _commit_once(self, *args, **kwargs):
-        if not killed:
+    def _commit_once(self, round_no, *args, **kwargs):
+        if round_no == 1 and not killed:
             killed.append(True)
             raise RuntimeError("simulated kill before commit marker")
-        return real_commit(self, *args, **kwargs)
+        return real_commit(self, round_no, *args, **kwargs)
 
     monkeypatch.setattr(Checkpoint, "commit_round", _commit_once)
     state = spark_state()
     with pytest.raises(RuntimeError, match="simulated kill"):
         ST.frontier_process_batch(b0, 0, robots, str(out), default_budget=10)
-    assert Checkpoint(str(out)).last_committed_round() is None
+    assert Checkpoint(str(out)).last_committed_round() == 0
     assert spark_state() == state
 
     def read_bytes(p):
@@ -268,24 +273,28 @@ def test_streaming_frontier_exactly_once(spark, tmp_path, monkeypatch, spark_sta
         assert files
         return b"".join(open(f, "rb").read() for f in files)
 
-    partial = read_bytes(out / "processed" / "round=0")
+    partial = read_bytes(out / "processed" / "round=1")
     # retry overwrites its own partial output deterministically
     ST.frontier_process_batch(b0, 0, robots, str(out), default_budget=10)
-    assert Checkpoint(str(out)).last_committed_round() == 0
-    committed = read_bytes(out / "processed" / "round=0")
+    assert Checkpoint(str(out)).last_committed_round() == 1
+    committed = read_bytes(out / "processed" / "round=1")
     assert committed == partial  # byte-identical re-run
     assert _scheduled(spark, out, 0).count() == 4
     # spurious redelivery of the committed batch: skipped entirely
-    before = read_bytes(out / "processed" / "round=0")
+    before = read_bytes(out / "processed" / "round=1")
     ST.frontier_process_batch(b0, 0, robots, str(out), default_budget=10)
-    assert read_bytes(out / "processed" / "round=0") == before
+    assert read_bytes(out / "processed" / "round=1") == before
     assert _scheduled(spark, out, 0).count() == 4
 
 
 def test_streaming_frontier_batch_id_guard(spark, tmp_path):
-    """Batch ids must run 0, 1, 2, ... (a batch reads the carry-over and
-    the seen set of the batch before it): a gap raises, a redelivered
-    committed batch is a no-op, and an empty batch still commits."""
+    """Batch ids must run 0, 1, 2, ... (batch b is round b+1, which
+    reads the frontier and the seen set of round b): a gap raises and
+    writes nothing (no bootstrap runs before a rejected first batch), a
+    redelivered committed batch is a no-op, and an empty batch still
+    commits."""
+    import os
+
     import pandas as pd
 
     from ccspark import streaming as ST
@@ -294,25 +303,30 @@ def test_streaming_frontier_batch_id_guard(spark, tmp_path):
     robots = spark.createDataFrame([("a.com", [], None, None)], _ROBOTS_SCHEMA)
     ts = pd.Timestamp("2024-01-01").to_pydatetime()
     b = _mk_batch(spark, [("http://a.com/x", 0.5, ts)])
-    with pytest.raises(ValueError, match="micro-batch 1 cannot follow an empty checkpoint .*expected batch 0"):
+    with pytest.raises(ValueError, match="round 2 cannot follow an empty checkpoint; expected a bootstrap"):
         ST.frontier_process_batch(b, 1, robots, str(out))
     assert Checkpoint(str(out)).last_committed_round() is None
+    assert os.listdir(out) == []
     ST.frontier_process_batch(b, 0, robots, str(out))
     m0 = Checkpoint(str(out)).read_manifest()
-    with pytest.raises(ValueError, match="micro-batch 2 cannot follow committed batch 0 .*expected batch 1"):
+    tables = sorted(os.listdir(out / "processed"))
+    with pytest.raises(ValueError, match="round 3 cannot follow committed round 1; expected round 2"):
         ST.frontier_process_batch(b, 2, robots, str(out))
+    assert Checkpoint(str(out)).read_manifest() == m0
+    assert sorted(os.listdir(out / "processed")) == tables
     ST.frontier_process_batch(b, 0, robots, str(out))  # redelivery: skipped
     assert Checkpoint(str(out)).read_manifest() == m0
     ST.frontier_process_batch(_mk_batch(spark, []), 1, robots, str(out))
     m1 = Checkpoint(str(out)).read_manifest()
-    assert (m1["round"], m1["scheduled"]) == (1, 0)
+    assert (m1["round"], m1["scheduled"]) == (2, 0)
     assert m1["num_partitions"] == m0["num_partitions"] == spark.sparkContext.defaultParallelism
     assert _scheduled(spark, out, 1).count() == 1
 
 
 def test_streaming_frontier_repeats_scheduled_once(spark, tmp_path):
     """Five batches, each repeating a URL of the previous one: every
-    URL is scheduled exactly once."""
+    URL is scheduled exactly once, and each batch's lineage rows sum to
+    its scheduled count."""
     import pandas as pd
 
     from ccspark import streaming as ST
@@ -327,6 +341,10 @@ def test_streaming_frontier_repeats_scheduled_once(spark, tmp_path):
         ST.frontier_process_batch(
             _mk_batch(spark, rows), b, robots, str(out), default_budget=10, n_salts=2
         )
+        m = Checkpoint(str(out)).read_manifest()
+        lineage = Checkpoint(str(out)).read(spark, "lineage", b + 1)
+        assert m["round"] == b + 1 and m["scheduled"] == 3
+        assert lineage.agg(F.sum("urls_emitted")).first()[0] == m["scheduled"]
     sched = _scheduled(spark, out, 4)
     # 15 unique URLs scheduled exactly once each (repeats suppressed)
     assert sched.count() == 15
@@ -334,18 +352,19 @@ def test_streaming_frontier_repeats_scheduled_once(spark, tmp_path):
 
 
 def test_streaming_frontier_constant_jobs_per_batch(spark, tmp_path, monkeypatch, last_job_id, spark_state):
-    """A micro-batch's Spark job count does not grow with the stream's
-    age (batches 2-5 run the same number of jobs, read from the status
-    store), it calls the storage gate once per batch after the first,
-    it never reads a table's whole history, and it leaves the session's
-    AQE setting and cache as it found them."""
+    """A micro-batch runs a round's Spark jobs: batches 2-5 each run the
+    three of test_round_job_budget (read from the status store) at any
+    stream age.  Batch b calls the storage gate twice, at seen-through
+    b (the injected candidates) and b+1 (the links gate); it never reads
+    a table's whole history, and it leaves the session's AQE setting and
+    cache as it found them."""
     import pandas as pd
 
     from ccspark import seenset
     from ccspark import streaming as ST
 
     def no_history(*a, **k):
-        raise AssertionError("frontier_process_batch read a table's whole history")
+        raise AssertionError("a micro-batch read a table's whole history")
 
     monkeypatch.setattr(Checkpoint, "read_all_rounds", no_history)
     gate_calls = []
@@ -369,8 +388,8 @@ def test_streaming_frontier_constant_jobs_per_batch(spark, tmp_path, monkeypatch
         ST.frontier_process_batch(batch, b, robots, str(out), default_budget=5, n_salts=2)
         jobs.append(last_job_id() - j0)
         assert spark_state() == state
-    assert len(set(jobs[1:])) == 1, jobs
-    assert gate_calls == [b - 1 for b in range(1, 5)]
+    assert jobs[1:] == [3, 3, 3, 3], jobs
+    assert gate_calls == [s for b in range(5) for s in (b, b + 1)]
 
 
 def test_streaming_frontier_over_iceberg_stub(spark, tmp_path, monkeypatch):
@@ -402,4 +421,4 @@ def test_streaming_frontier_over_iceberg_stub(spark, tmp_path, monkeypatch):
         gi = {r["canonical_url"] for r in _scheduled_at(spark, ice, b).collect()}
         gp = {r["canonical_url"] for r in _scheduled_at(spark, pq, b).collect()}
         assert gi == gp
-    assert ice.last_committed_round() == 1
+    assert ice.last_committed_round() == 2
